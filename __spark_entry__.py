@@ -24,19 +24,37 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver records CORRECTNESS rows for only the first 50 registered
-# entries; registry order is ours to choose. Round-13 rotation (VERDICT
-# r12 item 5): lead with the four faces whose code changed in r12 but
-# sat OUTSIDE that round's driver window, then EVERY query path touched
-# by the r13 optimization round — the postings-guard dedup tier
-# (count-over-window caps in _bucket_pairs/_bucket_cross_pairs/
-# _dup_gram_hits, the winnow guard, persist default), the exact-selector
-# tier (grouped MAD band derivation, radius-window brackets), and the
-# codec faces whose payload path moved to the zero-copy Arrow sampler
-# or whose mp4 parse helpers changed (bytes() tags/brand/avcC) — then
-# fill the remaining slots from the designated r9 overflow block.
-# Every rotated-out query is still re-verified each round by the full
+# entries; registry order is ours to choose. The window leads with every
+# face that calls an operators.multimodal op — the whole codec tier now
+# crosses the Python-worker boundary through one shared mapInArrow helper
+# — then the faces touched by the r12/r13 rounds (the postings-guard
+# dedup tier and the exact-selector tier), then the designated r9
+# overflow block. Every rotated-out query is still re-verified by the full
 # local check_oracle sweep and the pytest oracle replicas.
 _CHECK_FIRST = [
+    # --- codec tier: every face that crosses the one mapInArrow
+    # boundary of operators/multimodal.py (_map_arrow) ---
+    "multimodal_stats",
+    "multimodal_bmp_decode_check",
+    "multimodal_png_decode_check",
+    "multimodal_gif_decode_check",
+    "multimodal_jpeg_decode_check",
+    "multimodal_jpeg_progressive_check",
+    "multimodal_mp4_meta_check",
+    "multimodal_audio_segments_check",
+    "multimodal_keyframes_check",
+    "multimodal_mp4_frame_sample_check",
+    "multimodal_mp4_sample_table_check",
+    "multimodal_video_pixels_check",
+    "multimodal_h264_meta_check",
+    "multimodal_h264_keyframes_check",
+    "multimodal_h264_pts_check",
+    "multimodal_h264_annexb_check",
+    "multimodal_resize_check",
+    "multimodal_video_frame_check",
+    "multimodal_audio_features",
+    "multimodal_frame_sample",
+    "multimodal_features_ann",
     # --- r12-touched, previously unwitnessed (VERDICT r12 item 5) ---
     "dedup_minhash",
     "dedup_ngram_jaccard",
@@ -65,26 +83,10 @@ _CHECK_FIRST = [
     "corpus_prepare_cc_best",
     "corpus_prepare_audit",
     "dedup_components",
-    # --- r13: Arrow sampler + mp4 parse-helper faces ---
-    "multimodal_frame_sample",
-    "multimodal_mp4_frame_sample_check",
-    "multimodal_video_pixels_check",
-    "multimodal_h264_keyframes_check",
-    "multimodal_video_frame_check",
-    "multimodal_mp4_meta_check",
-    "multimodal_mp4_sample_table_check",
-    "multimodal_keyframes_check",
-    "multimodal_h264_meta_check",
-    "multimodal_h264_pts_check",
-    "multimodal_audio_segments_check",
     # --- fill from the designated r9 overflow block (alphabetical) ---
     "events_interval_join_binned",
     "events_quantile_merge_check",
     "events_sliding",
-    "multimodal_audio_features",
-    "multimodal_gif_decode_check",
-    "multimodal_png_decode_check",
-    "multimodal_resize_check",
     "nation_customer_counts",
     "orders_bloom_semijoin",
     "orders_join_size_cms_check",

@@ -20,7 +20,7 @@ reference engine (Program/*.java) has no video tier at all — this
 module belongs to the beyond-reference multimodal requirement.
 
 Strictness follows house style: malformed input raises ValueError (and
-only ValueError), so ``mapInPandas`` stub fallbacks can catch narrowly.
+only ValueError), so the codec tier's stub fallbacks can catch narrowly.
 """
 
 from __future__ import annotations

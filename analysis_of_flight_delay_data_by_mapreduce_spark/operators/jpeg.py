@@ -23,7 +23,7 @@ JPEGs in the wild:
 - byte stuffing (0xFF 0x00) per T.81 §B.1.1.5.
 
 The encoder exists so fixtures can be generated deterministically inside
-``mapInPandas`` (the synthetic-asset convention of ``attach_synthetic_*``):
+the Python workers (the synthetic-asset convention of ``attach_synthetic_*``):
 it emits SOI / JFIF-APP0 / DQT / SOF0 / DHT / SOS with the Annex K
 quantization and Huffman tables, 4:4:4 or 4:2:0 chroma, and optional
 restart markers. Decode is spec-driven off the embedded tables, so the

@@ -3,7 +3,7 @@
 The engine's scale story rests on specific physical-plan shapes (SURVEY §4):
 filters and column pruning reaching the Parquet scan, partial aggregation
 before every shuffle, dimension joins broadcast, top-k as
-TakeOrderedAndProject. These helpers make those properties assertable in
+TakeOrderedAndProject. ``plan_text`` makes those properties assertable in
 tests and auditable by humans.
 """
 
@@ -16,13 +16,3 @@ def plan_text(df: DataFrame, mode: str = "formatted") -> str:
     """The physical plan as text (same output as ``df.explain(mode)``)."""
     jvm = df.sparkSession._jvm
     return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
-
-
-def assert_plan(df: DataFrame, contains: list[str], absent: list[str] = ()) -> str:
-    """Assert plan-shape substrings; returns the plan text for debugging."""
-    txt = plan_text(df)
-    for s in contains:
-        assert s in txt, f"expected {s!r} in plan:\n{txt}"
-    for s in absent:
-        assert s not in txt, f"did not expect {s!r} in plan:\n{txt}"
-    return txt

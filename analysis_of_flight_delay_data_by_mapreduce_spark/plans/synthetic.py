@@ -252,7 +252,14 @@ from ..operators.dedup import (  # noqa: E402
     ngram_jaccard_pairs,
     simhash_near_dup,
 )
-from ..operators.multimodal import attach_payload, decode_images  # noqa: E402
+from ..operators.multimodal import (  # noqa: E402
+    attach_payload,
+    attach_synthetic_bmp,
+    attach_synthetic_gif,
+    attach_synthetic_jpeg,
+    attach_synthetic_png,
+    decode_images,
+)
 from ..operators.similarity import (  # noqa: E402
     cosine_topk,
     cosine_topk_lsh,
@@ -1243,7 +1250,7 @@ def top_parts_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Multimodal plumbing: payload attach → mapInPandas decode (stub codec) →
+# Multimodal plumbing: payload attach → mapInArrow decode (stub codec) →
 # per-modality stats. Rows-only (binary digests aren't SQL-portable).
 # ---------------------------------------------------------------------------
 @register(
@@ -1271,211 +1278,89 @@ def multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REAL multimodal codec check face (VERDICT r7 item 5): stdlib-only
-# uncompressed-BMP payloads generated per doc_id, decoded by parsing
-# true header + pixel bytes (operators/multimodal.py::decode_bmp — no
-# PIL). The oracle pins the asset count and the expected invariants as
-# literals (the established check-face pattern): a broken header parse,
-# a wrong row-padding stride, or a bottom-up/top-down mixup flips
-# dims_match / size_bounds_ok to FALSE → hash red. The WAV audio twin
-# of this face is pytest-pinned (test_multimodal.py).
+# REAL image codec check faces: one deterministic image per doc_id from an
+# ``attach_synthetic_*`` fixture, decoded by the stdlib(+numpy) codecs of
+# operators/multimodal.py and operators/jpeg.py — no PIL. The oracle pins
+# the asset count and the expected invariants as literals (the established
+# check-face pattern): any header/stride/unfilter/LZW/Huffman/IDCT bug
+# that misreads the true dimensions flips dims_match (decoded dims ==
+# attach meta) or size_bounds_ok (the fixture's width/height ranges) to
+# FALSE → hash red. n_distinct pins that digests are over decoded pixel
+# CONTENT: the PNG/GIF/JPEG fixtures spell the asset id into their pixels.
 # ---------------------------------------------------------------------------
-@register(
-    "multimodal_bmp_decode_check",
-    oracle="""
+def _register_image_decode_check(
+    name: str,
+    fixture: Callable[[DataFrame, str], DataFrame],
+    width: tuple[int, int],
+    height: tuple[int, int],
+    n_distinct: bool = True,
+) -> QueryFn:
+    distinct_sql = (
+        ",\n           CAST(COUNT(*) AS BIGINT) AS n_distinct" if n_distinct else ""
+    )
+    oracle = f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_assets,
            TRUE AS dims_match,
-           TRUE AS size_bounds_ok
+           TRUE AS size_bounds_ok{distinct_sql}
     FROM documents
-    """,
-)
-def multimodal_bmp_decode_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.cache import scoped_persist
-    from ..operators.multimodal import attach_synthetic_bmp, decode_images
+    """
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    assets = scoped_persist(attach_synthetic_bmp(docs, "doc_id"))
-    dec = decode_images(assets)
-    joined = dec.join(
-        assets.select(
+    def face(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from ..operators.cache import scoped_persist
+
+        docs = _t(spark, sf_dir, "documents").select("doc_id")
+        assets = scoped_persist(fixture(docs, "doc_id"))
+        dec = decode_images(assets)
+        joined = dec.join(
+            assets.select(
+                "asset_id",
+                F.col("meta.width").alias("__mw"),
+                F.col("meta.height").alias("__mh"),
+            ),
             "asset_id",
-            F.col("meta.width").alias("__mw"),
-            F.col("meta.height").alias("__mh"),
-        ),
-        "asset_id",
-    )
-    ok = (F.col("width") == F.col("__mw")) & (F.col("height") == F.col("__mh"))
-    return joined.agg(
-        F.count(F.lit(1)).alias("n_assets"),
-        (F.sum(F.when(ok, 1).otherwise(0)) == F.count(F.lit(1))).alias(
-            "dims_match"
-        ),
-        (
-            (F.min("width") >= 5)
-            & (F.max("width") <= 21)
-            & (F.min("height") >= 3)
-            & (F.max("height") <= 13)
-        ).alias("size_bounds_ok"),
-    )
+        )
+        ok = (F.col("width") == F.col("__mw")) & (F.col("height") == F.col("__mh"))
+        aggs = [
+            F.count(F.lit(1)).alias("n_assets"),
+            (F.sum(F.when(ok, 1).otherwise(0)) == F.count(F.lit(1))).alias(
+                "dims_match"
+            ),
+            (
+                (F.min("width") >= width[0])
+                & (F.max("width") <= width[1])
+                & (F.min("height") >= height[0])
+                & (F.max("height") <= height[1])
+            ).alias("size_bounds_ok"),
+        ]
+        if n_distinct:
+            aggs.append(F.countDistinct("content_sha256").alias("n_distinct"))
+        return joined.agg(*aggs)
+
+    return register(name, oracle=oracle)(face)
 
 
-# ---------------------------------------------------------------------------
-# REAL compressed-image codec check face (VERDICT r8 item 2): stdlib
-# zlib+struct PNG payloads (RGB and RGBA alternating, scanline filters
-# cycling through all five PNG filter types) generated per doc_id,
-# decoded by CRC-validating the chunks, inflating IDAT, and reversing
-# the per-scanline filters (operators/multimodal.py::decode_png — no
-# PIL). Same contract as the BMP face: a broken chunk walk, a wrong
-# Paeth predictor, or an unfilter stride bug flips dims_match /
-# size_bounds_ok to FALSE → hash red. n_distinct pins that decoded
-# CONTENT digests are over pixels (all gradients differ by id).
-# ---------------------------------------------------------------------------
-@register(
-    "multimodal_png_decode_check",
-    oracle="""
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_assets,
-           TRUE AS dims_match,
-           TRUE AS size_bounds_ok,
-           CAST(COUNT(*) AS BIGINT) AS n_distinct
-    FROM documents
-    """,
+# uncompressed 24-bit BMP (struct header + padded bottom-up rows), the
+# first codec face; its oracle predates the n_distinct column
+multimodal_bmp_decode_check = _register_image_decode_check(
+    "multimodal_bmp_decode_check", attach_synthetic_bmp, (5, 21), (3, 13),
+    n_distinct=False,
 )
-def multimodal_png_decode_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.cache import scoped_persist
-    from ..operators.multimodal import attach_synthetic_png, decode_images
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    assets = scoped_persist(attach_synthetic_png(docs, "doc_id"))
-    dec = decode_images(assets)
-    joined = dec.join(
-        assets.select(
-            "asset_id",
-            F.col("meta.width").alias("__mw"),
-            F.col("meta.height").alias("__mh"),
-        ),
-        "asset_id",
-    )
-    ok = (F.col("width") == F.col("__mw")) & (F.col("height") == F.col("__mh"))
-    return joined.agg(
-        F.count(F.lit(1)).alias("n_assets"),
-        (F.sum(F.when(ok, 1).otherwise(0)) == F.count(F.lit(1))).alias(
-            "dims_match"
-        ),
-        (
-            (F.min("width") >= 4)
-            & (F.max("width") <= 16)
-            & (F.min("height") >= 3)
-            & (F.max("height") <= 9)
-        ).alias("size_bounds_ok"),
-        F.countDistinct("content_sha256").alias("n_distinct"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# REAL LZW-compressed GIF codec check face (r9): stdlib-only
-# single-frame palettized GIF payloads per doc_id, decoded by walking
-# the block structure and running a complete GIF-variant LZW decoder
-# (variable 3..12-bit codes, deferred clear) — no PIL. Same contract as
-# the BMP/PNG faces: a broken LZW width bump, a bad sub-block walk, or
-# a palette-mapping bug flips dims_match / size_bounds_ok to FALSE →
-# hash red; n_distinct pins that digests are over decoded RGB CONTENT
-# (the first 8 indices spell the asset id).
-# ---------------------------------------------------------------------------
-@register(
-    "multimodal_gif_decode_check",
-    oracle="""
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_assets,
-           TRUE AS dims_match,
-           TRUE AS size_bounds_ok,
-           CAST(COUNT(*) AS BIGINT) AS n_distinct
-    FROM documents
-    """,
+# zlib PNG, RGB and RGBA alternating, scanline filters cycling through all
+# five types (CRC walk, bounded inflate, Paeth unfilter)
+multimodal_png_decode_check = _register_image_decode_check(
+    "multimodal_png_decode_check", attach_synthetic_png, (4, 16), (3, 9)
 )
-def multimodal_gif_decode_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.cache import scoped_persist
-    from ..operators.multimodal import attach_synthetic_gif, decode_images
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    assets = scoped_persist(attach_synthetic_gif(docs, "doc_id"))
-    dec = decode_images(assets)
-    joined = dec.join(
-        assets.select(
-            "asset_id",
-            F.col("meta.width").alias("__mw"),
-            F.col("meta.height").alias("__mh"),
-        ),
-        "asset_id",
-    )
-    ok = (F.col("width") == F.col("__mw")) & (F.col("height") == F.col("__mh"))
-    return joined.agg(
-        F.count(F.lit(1)).alias("n_assets"),
-        (F.sum(F.when(ok, 1).otherwise(0)) == F.count(F.lit(1))).alias(
-            "dims_match"
-        ),
-        (
-            (F.min("width") >= 4)
-            & (F.max("width") <= 14)
-            & (F.min("height") >= 3)
-            & (F.max("height") <= 7)
-        ).alias("size_bounds_ok"),
-        F.countDistinct("content_sha256").alias("n_distinct"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# REAL lossy-codec check face (r10, VERDICT r9 item 4): baseline
-# sequential JPEG payloads (Annex K tables, 4:4:4 / 4:2:0 / 4:2:2
-# rotating, non-multiple-of-8 dims) generated per doc_id and decoded by a
-# complete
-# stdlib+numpy JFIF decoder — marker walk, DQT/DHT parse, Huffman entropy
-# decode, dequantize, vectorized 8×8 IDCT, chroma upsample, YCbCr→RGB
-# (operators/jpeg.py — no PIL). Same contract as the BMP/PNG/GIF faces: a
-# broken Huffman table build, a bad EOB/ZRL walk, a wrong zigzag, or an
-# MCU-pad/crop bug flips dims_match / size_bounds_ok to FALSE → hash red.
-# n_distinct pins that digests are over decoded pixel CONTENT — the
-# fixture's flat even-offset tiles make the lossy round trip bit-exact
-# (DC-only blocks under the step-16 quantizer), with the asset id spelled
-# in the first 6 tile levels.
-# ---------------------------------------------------------------------------
-@register(
-    "multimodal_jpeg_decode_check",
-    oracle="""
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_assets,
-           TRUE AS dims_match,
-           TRUE AS size_bounds_ok,
-           CAST(COUNT(*) AS BIGINT) AS n_distinct
-    FROM documents
-    """,
+# single-frame palettized GIF (block walk, variable 3..12-bit LZW with
+# deferred clear, palette mapping)
+multimodal_gif_decode_check = _register_image_decode_check(
+    "multimodal_gif_decode_check", attach_synthetic_gif, (4, 14), (3, 7)
 )
-def multimodal_jpeg_decode_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.cache import scoped_persist
-    from ..operators.multimodal import attach_synthetic_jpeg, decode_images
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    assets = scoped_persist(attach_synthetic_jpeg(docs, "doc_id"))
-    dec = decode_images(assets)
-    joined = dec.join(
-        assets.select(
-            "asset_id",
-            F.col("meta.width").alias("__mw"),
-            F.col("meta.height").alias("__mh"),
-        ),
-        "asset_id",
-    )
-    ok = (F.col("width") == F.col("__mw")) & (F.col("height") == F.col("__mh"))
-    return joined.agg(
-        F.count(F.lit(1)).alias("n_assets"),
-        (F.sum(F.when(ok, 1).otherwise(0)) == F.count(F.lit(1))).alias(
-            "dims_match"
-        ),
-        (
-            (F.min("width") >= 20)
-            & (F.max("width") <= 40)
-            & (F.min("height") >= 14)
-            & (F.max("height") <= 24)
-        ).alias("size_bounds_ok"),
-        F.countDistinct("content_sha256").alias("n_distinct"),
-    )
+# baseline sequential JPEG, 4:4:4 / 4:2:0 / 4:2:2 rotating, non-multiple-
+# of-8 dims (Huffman, dequant, IDCT, chroma upsample, MCU pad/crop); the
+# flat even-offset tiles make the lossy round trip bit-exact
+multimodal_jpeg_decode_check = _register_image_decode_check(
+    "multimodal_jpeg_decode_check", attach_synthetic_jpeg, (20, 40), (14, 24)
+)
 
 
 # ---------------------------------------------------------------------------
@@ -5727,7 +5612,7 @@ def top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Multimodal breadth: the byte-chunk frame-sampling and stub-featurizer
-# mapInPandas contracts, both hash-checked (the sha256 arithmetic is
+# mapInArrow contracts, both hash-checked (the sha256 arithmetic is
 # replicated in SQL over the ASCII corpus).
 # ---------------------------------------------------------------------------
 @register(
@@ -5753,7 +5638,7 @@ def top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explode-shaped mapInPandas (rows out > rows in): payload → sampled
+    """Explode-shaped mapInArrow (rows out > rows in): payload → sampled
     frame digests → frames-per-asset counts."""
     from ..operators.multimodal import sample_video_frames
 
@@ -5801,7 +5686,7 @@ def _mm_ann_oracle() -> str:
 def multimodal_features_ann(
     spark: SparkSession, sf_dir: str, query_vec: list[float] | None = None
 ) -> DataFrame:
-    """Composed pipeline: stub featurizer (Arrow-batched mapInPandas,
+    """Composed pipeline: stub featurizer (Arrow-batched mapInArrow,
     array<float> out) → exact cosine top-k against a *request* vector —
     the multimodal→similarity handoff a curation pipeline runs. The query
     vector is a parameter (the request supplies it); the registered default

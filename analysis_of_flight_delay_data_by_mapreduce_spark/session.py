@@ -68,43 +68,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-# Query shapes with the heaviest first-execution (Janino whole-stage-
-# codegen JIT) cost, measured at sf0.1 (BENCH_FULL.json cold map, r5):
-# the dedup tier's wide min-hash aggregates and fold-heavy band joins.
-_WARM_START_SHAPES = [
-    "q1_delay",
-    "dedup_minhash",
-    "dedup_incremental_minhash_check",
-    "dedup_embedding",
-    "dedup_ngram_jaccard_ppjoin",
-    "corpus_prepare",
-]
-
-
-def warm_start(
-    spark: SparkSession,
-    sf_dir: str = "/root/testdata/sf0.001",
-    shapes: list[str] | None = None,
-) -> float:
-    """Pre-compile the hottest generated-code shapes by replaying them at
-    a tiny scale factor; returns the wall-clock spent.
-
-    Measured honestly (r5): this RELOCATES the per-session JIT cost, it
-    does not reduce it — each generated class compiles exactly once per
-    JVM wherever it first runs (replay ~27 s at sf0.001 bought back
-    ~21 s of sf0.1 first-run time for the six shapes above). Use it only
-    where the warmup window is genuinely free: a session pool pre-warming
-    BEFORE user queries arrive, where it converts first-query latency
-    into idle-time work. Pointless (net-zero) inside a single
-    synchronous job — which is why bench.py does not call it.
-    """
-    import time
-
-    from .plans import synthetic
-
-    t0 = time.perf_counter()
-    for name in shapes or _WARM_START_SHAPES:
-        synthetic.QUERIES[name](spark, sf_dir).count()
-    return time.perf_counter() - t0

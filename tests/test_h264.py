@@ -451,7 +451,7 @@ def test_video_frame_times(spark):
 
 def test_h264_fuzz_never_wrong_only_raise():
     """House fuzz contract: strict prefixes and byte flips of NAL units
-    and containers raise ValueError only (the mapInPandas fallbacks
+    and containers raise ValueError only (the codec fallbacks
     catch nothing broader)."""
     import numpy as np
 

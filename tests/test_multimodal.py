@@ -3,6 +3,8 @@ stubs (the codec itself is a deterministic fake — see operators.multimodal).""
 
 from __future__ import annotations
 
+import pytest
+
 from analysis_of_flight_delay_data_by_mapreduce_spark.operators.multimodal import (
     FEATURE_DIM,
     attach_payload,
@@ -797,7 +799,7 @@ def test_jpeg_rejections_fall_back_to_stub():
 
 def test_jpeg_empty_sos_body_raises_valueerror_not_indexerror():
     """ADVICE r10 (medium): an SOS segment with declared length 2 (empty
-    body) must raise ValueError — the mapInPandas stub fallback catches
+    body) must raise ValueError — the codec stub fallback catches
     ONLY ValueError, so an IndexError here would kill the executor task
     on a corrupt corpus payload instead of falling back."""
     import numpy as np
@@ -1101,7 +1103,7 @@ def test_jpeg_and_mp4_truncation_fuzz_never_wrong_only_raise():
     payload either raises ValueError or (for JPEG prefixes that still
     contain a full scan — impossible for strict prefixes here) never
     returns wrong geometry. No other exception type may escape: the
-    mapInPandas dispatchers catch ValueError for the stub fallback, so
+    codec dispatchers catch ValueError for the stub fallback, so
     an IndexError/struct.error would kill the executor task instead."""
     import numpy as np
     import pytest
@@ -1202,7 +1204,7 @@ def test_jpeg_progressive_fuzz_never_wrong_only_raise():
     """The rejection contract extends to progressive streams: every
     strict prefix raises ValueError, and any single byte flip either
     still decodes or raises ValueError — never another exception type
-    (the mapInPandas stub fallback catches ValueError only)."""
+    (the codec stub fallback catches ValueError only)."""
     import numpy as np
     import pytest
 
@@ -1429,7 +1431,7 @@ def test_mp4_sample_table_fuzz_never_wrong_only_raise():
     """The r10 fuzz contract extended to the new atoms: every strict
     prefix and 200 random byte flips of a stbl-POPULATED container must
     either parse or raise ValueError — never IndexError/struct.error
-    (the mapInPandas fallback catches only ValueError)."""
+    (the codec fallback catches only ValueError)."""
     import numpy as np
     import pytest
 
@@ -1702,3 +1704,60 @@ def test_sample_video_frames_mp4_time_aligned(spark):
     df_bad = spark.createDataFrame([(8, bad)], "asset_id long, payload binary")
     got = sample_video_frames(df_bad, every_n_bytes=64).collect()
     assert len(got) == -(-len(bad) // 64)  # ceil(len/64) chunks
+
+
+#: sha256 over each ``attach_synthetic_*`` fixture's rows for the sf0.001
+#: documents, sorted by asset_id: per row the repr of (asset_id, modality,
+#: meta tuple or None) followed by the payload's own sha256.
+FIXTURE_SHA256 = {
+    "bmp": "311ba07809d93a44bbab8107f107e06863f07516b6180ee9e602b09c14e795fa",
+    "png": "b94fac607f94d91921686b3074c792c708fbdae9788c8f813e5ceaae6e5f3ebe",
+    "gif": "9c4638af3980e6453debdca513cd6a9c3ccb9c013cdb773bc39bb26368e9f2aa",
+    "jpeg": "8cf69870a382065f1ff29581f3b536da215e38d011efa4c55ef3b3b28e8a3539",
+    "progressive_jpeg": "e8328fc7829816088488b17051e32435e71a72fe8db332e9385676b9959488a8",
+    "gif_video": "4b8eb74a5b003bf8f0171ff6db35b224d42bafa316caa110225206ae78e871c7",
+    "gif_video_repeats": "9fa19c07e054984a87c4c9a7b329bebd05e9389623e14144766dc3c8e582a5e8",
+    "wav": "d939cdda49429e6e3e21dbab98e9c3f88c5078136033a33edbd688ea882d325f",
+    "wav_bursts": "2b77ca048230798da144ec1514ed2e53c2d28b6882b5ddbe7d98a2d893848ef5",
+    "mp4": "af6f6aa4a7e2cc516c3d5fcc715068f01be6d258bc825a4444fa9d5a20c74d48",
+    "mjpeg_mp4": "c1c25246e81bc1c8ec1dc35bf4dd6135ccc1d3bcb55112175870ed1bfdefccb1",
+    "h264_mp4": "3edf99e84e950cf4a26c86be1eba8cdf2ef5e4db1c6f87b249735f108bc8b1c0",
+    "h264_annexb": "8980a98bb7c26fb2e1ede989c6ffab4603be7a45a2c6e4c6cc797bfbbd74363e",
+}
+
+
+@pytest.mark.parametrize("name", sorted(FIXTURE_SHA256))
+def test_fixture_bytes_pinned(spark, name):
+    """Every synthetic fixture reproduces its pinned bytes exactly: the
+    oracle faces check decoded content, this checks the payloads and
+    metadata the fixtures emit."""
+    import hashlib
+
+    from analysis_of_flight_delay_data_by_mapreduce_spark.operators import (
+        multimodal,
+    )
+    from analysis_of_flight_delay_data_by_mapreduce_spark.sources import (
+        read_parquet_table,
+    )
+    from conftest import SF_DIR
+
+    docs = read_parquet_table(spark, SF_DIR, "documents").select("doc_id")
+    assets = getattr(multimodal, f"attach_synthetic_{name}")(docs, "doc_id")
+    h = hashlib.sha256()
+    for r in sorted(assets.collect(), key=lambda r: r.asset_id):
+        meta = tuple(r["meta"]) if "meta" in assets.columns else None
+        h.update(repr((r.asset_id, r.modality, meta)).encode())
+        h.update(hashlib.sha256(r.payload).digest())
+    assert h.hexdigest() == FIXTURE_SHA256[name]
+
+
+def test_null_payload_fails_loudly(spark):
+    """A NULL payload raises instead of decoding or sampling as empty
+    bytes (which would emit a plausible sha256(b"") digest)."""
+    assets = spark.createDataFrame(
+        [(1, "image", b"hello"), (2, "image", None)],
+        "asset_id long, modality string, payload binary",
+    )
+    for op in (sample_video_frames, decode_images):
+        with pytest.raises(Exception, match="NULL payload"):
+            op(assets).collect()

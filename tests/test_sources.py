@@ -319,12 +319,3 @@ def test_compact_parquet_stale_staging_dirs(spark, tmp_path):
     # original directory untouched
     assert len(glob.glob(f"{q}/part-*.parquet")) == 8
 
-
-def test_warm_start_replays_hot_shapes(spark):
-    """warm_start pre-compiles the registered hot shapes at tiny scale and
-    reports the time spent; subsequent same-shape runs reuse the compiled
-    classes (smoke: it runs and returns a positive duration)."""
-    from analysis_of_flight_delay_data_by_mapreduce_spark.session import warm_start
-
-    dt = warm_start(spark, "/root/testdata/sf0.001", shapes=["q1_delay"])
-    assert dt > 0

@@ -1030,7 +1030,7 @@ def test_weighted_sample_merge_conflicting_weights_deterministic(spark):
 
 
 def test_stream_h264_census_parity(spark):
-    """The H.264 metadata census (r12) is stateless mapInPandas end to
+    """The H.264 metadata census (r12) is stateless mapInArrow end to
     end (attach avc1 fixture -> avcC/SPS bit-parse -> per-sample NAL
     census), so it must run UNCHANGED on a streaming source: the
     per-(geometry, profile, keyframe-count) census of
@@ -1077,7 +1077,7 @@ def test_stream_h264_census_parity(spark):
 
 
 def test_stream_video_frame_decode_parity(spark):
-    """The multimodal codec path is stateless mapInPandas end to end
+    """The multimodal codec path is stateless mapInArrow end to end
     (attach fixture -> stbl walk -> MJPEG pixel decode -> digest), so it
     must run UNCHANGED on a streaming source: the per-corpus frame count
     and distinct decoded-pixel digest count of sample_video_frames over
