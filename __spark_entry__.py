@@ -27,9 +27,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # entries; registry order is ours to choose. The window leads with every
 # face that calls an operators.multimodal op — the whole codec tier now
 # crosses the Python-worker boundary through one shared mapInArrow helper
-# — then the faces touched by the r12/r13 rounds (the postings-guard
-# dedup tier and the exact-selector tier), then the designated r9
-# overflow block. Every rotated-out query is still re-verified by the full
+# — then embedding_label_pca, the grouped applyInPandas face, which also
+# starts Python workers, then the faces touched by the r12/r13 rounds (the
+# postings-guard dedup tier and the exact-selector tier), then the
+# designated r9 overflow block. Every rotated-out query is still re-verified by the full
 # local check_oracle sweep and the pytest oracle replicas.
 _CHECK_FIRST = [
     # --- codec tier: every face that crosses the one mapInArrow
@@ -55,6 +56,9 @@ _CHECK_FIRST = [
     "multimodal_audio_features",
     "multimodal_frame_sample",
     "multimodal_features_ann",
+    # --- grouped applyInPandas: a Python-worker face outside the codec
+    # tier (workers start from session.py's daemon module) ---
+    "embedding_label_pca",
     # --- r12-touched, previously unwitnessed (VERDICT r12 item 5) ---
     "dedup_minhash",
     "dedup_ngram_jaccard",
@@ -87,6 +91,7 @@ _CHECK_FIRST = [
     "events_interval_join_binned",
     "events_quantile_merge_check",
     "events_sliding",
+    # --- overflow (slots 51+; designated for the next window) ---
     "nation_customer_counts",
     "orders_bloom_semijoin",
     "orders_join_size_cms_check",
@@ -94,7 +99,6 @@ _CHECK_FIRST = [
     "purchase_age_salted_join",
     "q1_delay",
     "q2_late",
-    # --- overflow (slots 51+; designated for the next window) ---
     "q3_wordcount",
     "q4_repeat_visits",
     "q5_dup_dates",

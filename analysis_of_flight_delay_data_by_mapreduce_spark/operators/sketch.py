@@ -789,10 +789,10 @@ def median_mad_by_group(
         "__U", F.sum("cnt").over(wu)
     )
     # one row per group: (__g, __dhi, __dlo, __n, __m, __rank). NOT
-    # checkpointed: its only consumer is the band scan's broadcast join,
-    # and its lineage already bottoms out at the cum/med checkpoint
-    # leaves — an eager cut here would cost one more driver-synchronous
-    # job per run for no plan-size benefit.
+    # checkpointed: its only consumer is the band scan's equi-join, and
+    # its lineage already bottoms out at the cum/med checkpoint leaves —
+    # an eager cut here would cost one more driver-synchronous job per
+    # run for no plan-size benefit.
     band = (
         both.groupBy("__g", "__rank")
         .agg(
@@ -811,8 +811,10 @@ def median_mad_by_group(
     # -- pass 3: one conditional-aggregation band scan resolves every
     # group's MAD (rows with d ≤ d_lo collapse into the group's -1
     # sentinel — the in-scan c_below; the -1 group cannot cross the
-    # rank since #{d ≤ d_lo} ≤ U(d_lo) < rank)
-    scan = vals.join(F.broadcast(band), "__g").filter(
+    # rank since #{d ≤ d_lo} ≤ U(d_lo) < rank). band has one row per
+    # group, so it is a plain equi-join on the group, as in
+    # _grouped_resolve; AQE picks the strategy.
+    scan = vals.join(band, "__g").filter(
         (F.col("__x") >= F.col("__m") - F.col("__dhi"))
         & (F.col("__x") <= F.col("__m") + F.col("__dhi"))
     )

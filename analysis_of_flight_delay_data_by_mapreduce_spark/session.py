@@ -5,6 +5,17 @@ the same code scales to a real cluster: AQE for runtime re-planning (skew
 joins, partition coalescing), Arrow for any pandas-UDF path, UTC session
 timezone so timestamp semantics match external oracles (DuckDB timestamps
 are UTC-naive).
+
+Python workers start from ``worker_daemon`` instead of ``pyspark.daemon``.
+Spark puts ``pyspark.zip``, the py4j zip and the spark-core jar on the
+workers' ``PYTHONPATH``, and every Python task calls
+``importlib.invalidate_caches()``; on CPython 3.11 that re-reads every
+cached zip archive's directory, 150-350 ms of CPU per task. The daemon
+imports pyspark and py4j from the interpreter's installed packages instead.
+When they do not resolve without the archives, or the installed pyspark is
+not the version in ``pyspark.zip``, it keeps Spark's path and behaves like
+the stock daemon. The package ``__init__`` imports nothing, so pyspark is
+not loaded from the zip before the daemon fixes the path.
 """
 
 from __future__ import annotations
@@ -14,6 +25,15 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def _local_driver_memory() -> str:
+    """48g, capped at half the host's physical memory. G1 grows the heap
+    toward its maximum before it collects; with a 48g cap on a 16 GB host
+    the local driver JVM reached 15 GB resident (about 0.5 GB of it live)
+    and was OOM-killed partway through the test suite."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 << 10, phys // 2 >> 20)}m"
 
 
 def get_spark(
@@ -48,6 +68,8 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         # Arrow transfer for pandas UDF / toPandas paths.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers import pyspark from site-packages (module docstring).
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
         # DuckDB (the correctness oracle) treats timestamps as UTC-naive.
         .config("spark.sql.session.timeZone", "UTC")
         # The synthetic parquet stores TIMESTAMP(NANOS), which Spark's
@@ -62,7 +84,9 @@ def get_spark(
     if master is not None:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]").config("spark.driver.memory", "48g")
+        builder = builder.master(f"local[{cpus}]").config(
+            "spark.driver.memory", _local_driver_memory()
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -43,9 +43,10 @@ def test_oracle_match(spark, duck, name):
 
 
 @pytest.mark.parametrize("name", sorted(synthetic.QUERIES))
-def test_query_runs(spark, name):
-    df = synthetic.QUERIES[name](spark, SF_DIR)
-    assert df.count() >= 0
+def test_query_runs(name):
+    """Every registered query runs in ``test_oracle_match``, which
+    collects and hashes it; a query without an oracle fails here."""
+    assert name in synthetic.ORACLES
 
 
 def test_approx_aggregates_within_tolerance(spark):
