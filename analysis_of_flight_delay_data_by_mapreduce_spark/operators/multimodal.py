@@ -102,7 +102,8 @@ __all__ = [
 #: Output schema of decode_images (Arrow-compatible; arrays stay columnar).
 DECODED_SCHEMA = (
     "asset_id long, modality string, width int, height int, "
-    "n_bytes long, content_sha256 string"
+    "n_bytes long, content_sha256 string, "
+    f"meta {MULTIMODAL_ASSET['meta'].dataType.simpleString()}"
 )
 
 FEATURE_DIM = 16
@@ -956,18 +957,20 @@ def resize_images(assets: DataFrame, out_w: int, out_h: int) -> DataFrame:
 
 
 def decode_images(assets: DataFrame) -> DataFrame:
-    """Decode binary payloads → (dimensions, digest). Output drops the
-    payload column (decode early, project away the heavy bytes — the
-    multimodal analog of column pruning). BMP/PNG/GIF/JPEG payloads
-    decode for real (``_decode_image``); everything else takes the
-    deterministic stub path."""
+    """Decode MULTIMODAL_ASSET payloads → (dimensions, digest). Output
+    drops the payload column (decode early, project away the heavy bytes
+    — the multimodal analog of column pruning) and carries each asset's
+    ``meta`` through unchanged, so a check can compare the decoded
+    dimensions with the declared ones on the same row. BMP/PNG/GIF/JPEG
+    payloads decode for real (``_decode_image``); everything else takes
+    the deterministic stub path."""
 
-    def row(aid, modality, p):
+    def row(aid, modality, p, meta):
         w, h, sha = _decode_image(bytes(p))
-        return aid, modality, w, h, len(p), sha
+        return aid, modality, w, h, len(p), sha, meta
 
     return _map_arrow(
-        assets, ["asset_id", "modality", "payload"], row, DECODED_SCHEMA
+        assets, ["asset_id", "modality", "payload", "meta"], row, DECODED_SCHEMA
     )
 
 

@@ -31,8 +31,9 @@ Feature hashing uses md5 (not xxhash64) deliberately: the bucket
 assignment must reproduce outside the JVM — in the DuckDB oracle and in
 the pyarrow twin — and md5 is the one hash all three share bit-for-bit
 (the ``docs_hash_split`` convention). It runs once per n-gram inside a
-single whole-stage-codegen'd Project, the CSE-safe position (NEXT.md:
-the md5-in-Filter trap does not apply here).
+single whole-stage-codegen'd Project, the CSE-safe position (the
+md5-in-Filter trap, where FilterExec re-evaluates the hash per probe,
+does not apply here).
 """
 
 from __future__ import annotations

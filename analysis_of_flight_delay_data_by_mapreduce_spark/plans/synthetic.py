@@ -1284,9 +1284,10 @@ def multimodal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the asset count and the expected invariants as literals (the established
 # check-face pattern): any header/stride/unfilter/LZW/Huffman/IDCT bug
 # that misreads the true dimensions flips dims_match (decoded dims ==
-# attach meta) or size_bounds_ok (the fixture's width/height ranges) to
-# FALSE → hash red. n_distinct pins that digests are over decoded pixel
-# CONTENT: the PNG/GIF/JPEG fixtures spell the asset id into their pixels.
+# the attach meta, which decode_images carries on the same row) or
+# size_bounds_ok (the fixture's width/height ranges) to FALSE → hash red.
+# n_distinct pins that digests are over decoded pixel CONTENT: the
+# PNG/GIF/JPEG fixtures spell the asset id into their pixels.
 # ---------------------------------------------------------------------------
 def _register_image_decode_check(
     name: str,
@@ -1306,20 +1307,11 @@ def _register_image_decode_check(
     """
 
     def face(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..operators.cache import scoped_persist
-
         docs = _t(spark, sf_dir, "documents").select("doc_id")
-        assets = scoped_persist(fixture(docs, "doc_id"))
-        dec = decode_images(assets)
-        joined = dec.join(
-            assets.select(
-                "asset_id",
-                F.col("meta.width").alias("__mw"),
-                F.col("meta.height").alias("__mh"),
-            ),
-            "asset_id",
+        dec = decode_images(fixture(docs, "doc_id"))
+        ok = (F.col("width") == F.col("meta.width")) & (
+            F.col("height") == F.col("meta.height")
         )
-        ok = (F.col("width") == F.col("__mw")) & (F.col("height") == F.col("__mh"))
         aggs = [
             F.count(F.lit(1)).alias("n_assets"),
             (F.sum(F.when(ok, 1).otherwise(0)) == F.count(F.lit(1))).alias(
@@ -1334,7 +1326,7 @@ def _register_image_decode_check(
         ]
         if n_distinct:
             aggs.append(F.countDistinct("content_sha256").alias("n_distinct"))
-        return joined.agg(*aggs)
+        return dec.agg(*aggs)
 
     return register(name, oracle=oracle)(face)
 

@@ -4,6 +4,13 @@ The reference is schema-on-read: positional, untyped ``String[]`` addressed
 by ordinal (``s[2]``, ``s[8]``, ``s[16]`` — reference ``Program/Delay.java:53-56``).
 Here every input gets a named, typed ``StructType``; Catalyst then prunes and
 pushes down against real column metadata (free with Parquet).
+
+These declarations are the read path's source of truth, not documentation:
+``sources.readers`` scans every table in ``TABLES`` through its declared
+schema (no footer inference, so building a read launches no Spark job) and
+parses the CAA CSV straight into ``FLIGHT_PUNCTUALITY``. An undeclared
+table name raises. ``tests/test_sources.py`` checks each declaration
+against the footers of the test data, so generator drift fails there.
 """
 
 from __future__ import annotations
@@ -45,15 +52,6 @@ FLIGHT_PUNCTUALITY = T.StructType(
     ]
 )
 
-#: Columns of FLIGHT_PUNCTUALITY that arrive space-padded in the raw CSV and
-#: are numeric — read as string then trimmed+cast by sources.csv (the
-#: reference trims at every use site, Program/Delay.java:53-56).
-_FLIGHT_NUMERIC_COLS = {
-    f.name: f.dataType
-    for f in FLIGHT_PUNCTUALITY.fields
-    if not isinstance(f.dataType, T.StringType)
-}
-
 # Whitespace-delimited access-log triples (WebLog1/2 input;
 # Jar/…!org/leicester/WebLog1.java:28-32).
 WEBLOG = T.StructType(
@@ -67,39 +65,46 @@ WEBLOG = T.StructType(
 # Free-text corpus, one line per row (WordCount input).
 TEXT_CORPUS = T.StructType([T.StructField("line", T.StringType())])
 
-# ---------------------------------------------------------------------------
-# Driver-provided synthetic tables (TESTDATA.md). Parquet carries its own
-# schema; these are for documentation/validation and for streaming readers,
-# which require an explicit schema.
-# ---------------------------------------------------------------------------
-EVENTS = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
 
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
+def _struct(**cols: T.DataType) -> T.StructType:
+    """A nullable ``StructType`` from ``name=type`` pairs, in order."""
+    return T.StructType([T.StructField(n, t) for n, t in cols.items()])
 
-EMBEDDINGS = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ]
+
+_LONG, _INT, _DOUBLE, _STR = T.LongType(), T.IntegerType(), T.DoubleType(), T.StringType()
+#: The test data store timestamps as TIMESTAMP_NTZ micros; the readers cast
+#: them to TZ-aware TIMESTAMP (value-preserving under the UTC session TZ).
+_NTZ = T.TimestampNTZType()
+
+# ---------------------------------------------------------------------------
+# Driver-provided synthetic tables (TESTDATA.md), as their parquet footers
+# declare them.
+# ---------------------------------------------------------------------------
+REGION = _struct(r_regionkey=_INT, r_name=_STR)
+NATION = _struct(n_nationkey=_INT, n_name=_STR, n_regionkey=_INT)
+CUSTOMER = _struct(
+    c_custkey=_LONG, c_name=_STR, c_nationkey=_INT, c_acctbal=_DOUBLE,
+    c_mktsegment=_STR,
 )
+SUPPLIER = _struct(s_suppkey=_LONG, s_name=_STR, s_nationkey=_INT, s_acctbal=_DOUBLE)
+PART = _struct(
+    p_partkey=_LONG, p_name=_STR, p_brand=_STR, p_type=_STR, p_size=_INT,
+    p_retailprice=_DOUBLE,
+)
+ORDERS = _struct(
+    o_orderkey=_LONG, o_custkey=_LONG, o_orderstatus=_STR, o_totalprice=_DOUBLE,
+    o_orderdate=_NTZ, o_orderpriority=_STR,
+)
+LINEITEM = _struct(
+    l_orderkey=_LONG, l_partkey=_LONG, l_suppkey=_LONG, l_linenumber=_INT,
+    l_quantity=_DOUBLE, l_extendedprice=_DOUBLE, l_discount=_DOUBLE, l_tax=_DOUBLE,
+    l_returnflag=_STR, l_linestatus=_STR, l_shipdate=_NTZ,
+)
+EVENTS = _struct(
+    event_id=_LONG, ts=_NTZ, user_id=_LONG, event_type=_STR, value=_DOUBLE, props=_STR
+)
+DOCUMENTS = _struct(doc_id=_LONG, text=_STR, lang=_STR, source=_STR, n_chars=_LONG)
+EMBEDDINGS = _struct(vec_id=_LONG, embedding=T.ArrayType(T.FloatType()), label=_INT)
 
 # Multimodal asset table (extension tier): opaque binary payload + typed
 # metadata. No driver-side fixture exists; operators.multimodal builds these.
@@ -122,15 +127,30 @@ MULTIMODAL_ASSET = T.StructType(
     ]
 )
 
-SYNTHETIC_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+#: Every parquet table the engine reads, by name: the synthetic tables, then
+#: ``flights``, the CAA punctuality parquet the ingest writes.
+TABLES: dict[str, T.StructType] = {
+    "region": REGION,
+    "nation": NATION,
+    "customer": CUSTOMER,
+    "supplier": SUPPLIER,
+    "part": PART,
+    "orders": ORDERS,
+    "lineitem": LINEITEM,
+    "events": EVENTS,
+    "documents": DOCUMENTS,
+    "embeddings": EMBEDDINGS,
+    "flights": FLIGHT_PUNCTUALITY,
+}
+
+SYNTHETIC_TABLES = tuple(t for t in TABLES if t != "flights")
+
+
+def table_schema(name: str) -> T.StructType:
+    """The declared schema of table ``name``; ``ValueError`` if undeclared."""
+    try:
+        return TABLES[name]
+    except KeyError:
+        raise ValueError(
+            f"undeclared table {name!r}; declared: {', '.join(TABLES)}"
+        ) from None

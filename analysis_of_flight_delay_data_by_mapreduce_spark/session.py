@@ -72,9 +72,10 @@ def get_spark(
         .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
         # DuckDB (the correctness oracle) treats timestamps as UTC-naive.
         .config("spark.sql.session.timeZone", "UTC")
-        # The synthetic parquet stores TIMESTAMP(NANOS), which Spark's
-        # vectorized reader rejects; read as int64 nanos and convert in
-        # sources.readers (exact integer div — no precision loss).
+        # The test data store timestamp_ntz micros, which sources.readers
+        # reads through declared schemas. This conf only lets other
+        # parquet with TIMESTAMP(NANOS) columns read as int64 nanos
+        # instead of being rejected by the vectorized reader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         # Managed-table warehouse (bucketed tables) outside the repo tree.

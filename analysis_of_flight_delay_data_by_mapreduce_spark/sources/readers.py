@@ -17,45 +17,48 @@ from pyspark.sql import types as T
 from .. import schema as S
 
 
-#: Timestamp columns stored as TIMESTAMP(NANOS) in the synthetic parquet.
-#: Spark reads them as int64 nanos (``spark.sql.legacy.parquet.nanosAsLong``,
-#: set by session.get_spark); the reader restores TimestampType losslessly.
-_NANO_TS_COLS: dict[str, tuple[str, ...]] = {
-    "events": ("ts",),
-    "orders": ("o_orderdate",),
-    "lineitem": ("l_shipdate",),
-}
+def _as_instants(df: DataFrame, declared: T.StructType) -> DataFrame:
+    """Cast the declared TIMESTAMP_NTZ columns (the test data store
+    timestamp_ntz micros) to TZ-aware TIMESTAMP, so instant functions
+    (``unix_micros``, watermarks) work uniformly. Under the UTC session
+    TZ the cast is value-preserving."""
+    ntz = [f.name for f in declared if isinstance(f.dataType, T.TimestampNTZType)]
+    return df.withColumns({c: F.col(c).cast("timestamp") for c in ntz}) if ntz else df
 
 
 def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Primary scan path: one Parquet table from a scale-factor dir.
-
-    Nano-precision timestamp columns arrive as int64; converted with exact
-    integer division (``div`` keeps all bits — a double ``/`` would round
-    above 2^53) then ``timestamp_micros``. Pure column ops, pushdown-safe.
+    """Primary scan path: one Parquet table from a scale-factor dir, read
+    through its declared schema (``schema.TABLES``; an undeclared name
+    raises ``ValueError``). No footer inference, so building the read
+    launches no Spark job.
 
     Defensive session conf: the engine's own sessions (session.get_spark)
-    already set these, but the driver harness may hand us a bare session —
-    ``nanosAsLong`` is required to read TIMESTAMP(NANOS) parquet at all,
-    and UTC makes timestamp↔string behavior match the UTC-naive oracle.
-    Both are runtime-settable SQL confs; setting them is idempotent.
+    already pin the UTC session TZ, but the driver harness may hand us a
+    bare session, and UTC makes timestamp↔string behavior match the
+    UTC-naive oracle. It is a runtime-settable SQL conf; setting it is
+    idempotent.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    declared = S.table_schema(name)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    for c in _NANO_TS_COLS.get(name, ()):
-        if c not in df.columns:
-            continue
-        dtype = dict(df.dtypes)[c]
-        if dtype == "bigint":
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-        elif dtype == "timestamp_ntz":
-            # Generator versions vary: TIMESTAMP(NANOS)→int64 (above) or
-            # TIMESTAMP_NTZ(MICROS). Normalize to TZ-aware TIMESTAMP —
-            # value-preserving under the UTC session TZ — so downstream
-            # instant functions (unix_micros, watermarks) work uniformly.
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+    df = spark.read.schema(declared).parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _as_instants(df, declared)
+
+
+def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One declared table as a bounded file-source stream (real
+    deployments swap in Kafka or a landing directory with the same
+    downstream plan). FileStreamSource needs a directory, so the stream
+    is scoped to the table's file with a glob filter; columns are typed
+    exactly as :func:`read_parquet_table` types them."""
+    declared = S.table_schema(name)
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    stream = (
+        spark.readStream.schema(declared)
+        .format("parquet")
+        .option("pathGlobFilter", f"{name}.parquet")
+        .load(sf_dir)
+    )
+    return _as_instants(stream, declared)
 
 
 def read_synthetic(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -73,26 +76,35 @@ def read_flight_csv(spark: SparkSession, path: str) -> DataFrame:
       side effect of the ``scheduled_charter=='S'`` filter,
       ``Program/Delay.java:48-50``);
     - blank lines dropped (``s.length != 0``, ``Program/Delay.java:51``);
-    - space-padded fields trimmed then cast (the reference ``.trim()``s at
-      every use site, ``Program/Delay.java:53-56``) — so the CSV is read
-      all-string first, then trimmed+cast per the typed schema;
+    - space-padded fields trimmed (the reference ``.trim()``s at every use
+      site, ``Program/Delay.java:53-56``): the parser trims unquoted
+      whitespace and types each field straight into
+      ``FLIGHT_PUNCTUALITY``; the string columns are trimmed once more,
+      so a quoted ``" AIR "`` reads as ``AIR``;
     - quoted fields parsed with standard CSV quoting.
+
+    The parse is FAILFAST: a malformed number (``abc``, or ``1.5`` in an
+    int column) and a row with fewer or more fields than the schema raise
+    when the frame is evaluated, instead of reading as NULLs. A quoted
+    number keeps its padding (``" 109 "``) and raises too; an empty or
+    all-blank unquoted field reads as NULL.
     """
-    raw_fields = [T.StructField(f.name, T.StringType()) for f in S.FLIGHT_PUNCTUALITY]
-    raw = spark.read.csv(
+    df = spark.read.csv(
         path,
-        schema=T.StructType(raw_fields),
+        schema=S.FLIGHT_PUNCTUALITY,
         header=True,
         quote='"',
-        mode="PERMISSIVE",
+        mode="FAILFAST",
+        ignoreLeadingWhiteSpace=True,
+        ignoreTrailingWhiteSpace=True,
     )
-    cols = [
-        F.trim(F.col(f.name)).cast(f.dataType).alias(f.name)
+    strings = {
+        f.name: F.trim(f.name)
         for f in S.FLIGHT_PUNCTUALITY
-    ]
-    typed = raw.select(*cols)
-    # Blank line → all-NULL row; the reference's non-empty-row guard.
-    return typed.filter(F.col("reporting_airport").isNotNull())
+        if isinstance(f.dataType, T.StringType)
+    }
+    # An all-empty row parses to NULLs; the reference's non-empty-row guard.
+    return df.withColumns(strings).filter(F.col("reporting_airport").isNotNull())
 
 
 def read_weblog(spark: SparkSession, path: str) -> DataFrame:

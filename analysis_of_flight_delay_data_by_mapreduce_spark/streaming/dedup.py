@@ -22,12 +22,11 @@ shape so fingerprint state ages out.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.text import fingerprint
+from ..sources.readers import read_table_stream
 
 __all__ = [
     "read_documents_stream",
@@ -41,16 +40,10 @@ __all__ = [
 
 
 def read_documents_stream(spark, sf_dir: str) -> DataFrame:
-    """The documents table as a bounded file-source stream (schema from a
-    driver-side footer read, same recipe as ``windows.read_events_stream``;
-    real deployments swap in Kafka/landing-dir sources)."""
-    inferred = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    return (
-        spark.readStream.schema(inferred)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
+    """The documents table as a bounded file-source stream, typed by its
+    declared schema (same recipe as ``windows.read_events_stream``; real
+    deployments swap in Kafka/landing-dir sources)."""
+    return read_table_stream(spark, sf_dir, "documents")
 
 
 def dedup_stream_against_index(

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.readers import read_table_stream
+
 __all__ = [
     "windowed_event_counts",
     "sliding_event_counts",
@@ -97,40 +99,10 @@ def sessionized_counts(
 
 def read_events_stream(spark, sf_dir: str) -> DataFrame:
     """The events table as a bounded stream (file source; real deployments
-    swap in Kafka with the same downstream plan).
-
-    FileStreamSource needs an explicit schema, and the testdata generator
-    has shipped ``ts`` as either native TIMESTAMP(MICROS) or int64 nanos
-    across versions — so the physical ``ts`` type is detected from the
-    batch-inferred footer schema (a driver-side metadata read, no data
-    scan) and the stream schema + restore expression follow it. This keeps
-    the stream face bit-identical to ``sources.read_parquet_table``.
-    """
-    import os
-
-    from pyspark.sql import types as T
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    inferred = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    ts_is_nanos = isinstance(inferred["ts"].dataType, T.LongType)
-    # FileStreamSource requires a directory; scope it to the events file
-    # with a glob filter (a real deployment points at a landing directory).
-    stream = (
-        spark.readStream.schema(inferred)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    if ts_is_nanos:
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    # Watermarks require TZ-aware TIMESTAMP; the footer may carry
-    # TIMESTAMP_NTZ (isAdjustedToUTC=false). Under the UTC session TZ the
-    # cast is value-preserving, so the stream face stays identical to the
-    # batch face.
-    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    swap in Kafka with the same downstream plan), typed by its declared
+    schema exactly as ``sources.read_parquet_table`` types the batch face:
+    ``ts`` arrives as TZ-aware TIMESTAMP, which watermarks require."""
+    return read_table_stream(spark, sf_dir, "events")
 
 
 def run_stream_to_memory(agg: DataFrame, name: str, mode: str = "complete"):

@@ -30,6 +30,7 @@ is in BENCH_FULL.json.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import re
@@ -193,8 +194,8 @@ def main() -> None:
         # BENCH_r{N}.json) — committed each round, it lets the next
         # round's PERF compute real per-query medians, geomeans and
         # c8/c32 scaling ratios from the repo alone.
-        with open(
-            os.path.join(repo_dir, f"BENCH_FULL_{round_tag(repo_dir)}.json"), "w"
+        with open_unclaimed(
+            os.path.join(repo_dir, f"BENCH_FULL_{round_tag(repo_dir)}")
         ) as f:
             json.dump(payload, f, indent=1)
     print(json.dumps(slim_stdout_payload(payload), separators=(",", ":")))
@@ -214,7 +215,10 @@ def round_tag(repo_dir: str) -> str:
     """
     env = os.environ.get("BENCH_ROUND")
     if env:
-        n = int(env)
+        try:
+            n = int(env)
+        except ValueError:
+            raise ValueError(f"BENCH_ROUND must be an integer, got {env!r}") from None
     else:
         rounds = [0]
         for fn in os.listdir(repo_dir):
@@ -226,6 +230,18 @@ def round_tag(repo_dir: str) -> str:
     return f"r{n:02d}_c{cpus}"
 
 
+def open_unclaimed(stem: str):
+    """Open ``{stem}.json`` for writing, or ``{stem}_{k}.json`` for the
+    first free ``k >= 2`` if it exists: a stamped artifact is never
+    overwritten (``BENCH_FULL_r14_c8.json``, for one, already holds r13's
+    c8 sweep)."""
+    for k in itertools.count(1):
+        try:
+            return open(stem + (f"_{k}" if k > 1 else "") + ".json", "x")
+        except FileExistsError:
+            continue
+
+
 def wait_for_idle(
     gate: float,
     wait_max: float,
@@ -235,10 +251,10 @@ def wait_for_idle(
 ) -> tuple[float, float, float]:
     """Block (bounded) until BOTH load1 < ``gate`` and load5 <
     ``load5_gate`` → ``(load1, load5, waited_sec)``. VERDICT r10 item 6
-    introduced the load1 gate; r11's lesson (VERDICT r11 item 6 /
-    NEXT.md) is that load1 decays minutes before load5 does — a sweep
-    started ~2 min after a heavy job saw load1 1.74 but recorded 1.6-2.2×
-    phantom rows that all idle-re-measured clean. Gating on load5 too
+    introduced the load1 gate; r11's lesson (VERDICT r11 item 6) is that
+    load1 decays minutes before load5 does — a sweep started ~2 min after
+    a heavy job saw load1 1.74 but recorded 1.6-2.2× phantom rows that
+    all idle-re-measured clean. Gating on load5 too
     holds the start until the recent-history average has actually
     drained. A still-contended start after ``wait_max`` proceeds anyway
     (the driver's sweep must not hang forever); the recorded loads make

@@ -8,6 +8,8 @@ from __future__ import annotations
 import subprocess
 import sys
 
+import pytest
+
 _SCRIPT = """
 import sys
 sys.path.insert(0, "/root/repo")
@@ -268,3 +270,23 @@ def test_bench_round_tag_stamps_next_round_and_core_count(tmp_path, monkeypatch)
     # explicit override wins (ledger tooling)
     monkeypatch.setenv("BENCH_ROUND", "7")
     assert bench.round_tag(str(tmp_path)) == "r07_c32"
+
+
+def test_bench_stamped_artifact_is_never_overwritten(tmp_path, monkeypatch):
+    """A stamped sweep artifact lands in the first free ``_k`` file
+    instead of overwriting an earlier one (BENCH_FULL_r14_c8.json already
+    holds r13's c8 sweep), and a non-integer BENCH_ROUND fails loudly."""
+    import bench
+
+    earlier = tmp_path / "BENCH_FULL_r14_c8.json"
+    earlier.write_text("r13 c8 sweep")
+    for want in ("BENCH_FULL_r14_c8_2.json", "BENCH_FULL_r14_c8_3.json"):
+        with bench.open_unclaimed(str(tmp_path / "BENCH_FULL_r14_c8")) as f:
+            f.write("{}")
+        assert f.name == str(tmp_path / want)
+    assert earlier.read_text() == "r13 c8 sweep"
+    with bench.open_unclaimed(str(tmp_path / "BENCH_FULL_r15_c8")) as f:
+        assert f.name == str(tmp_path / "BENCH_FULL_r15_c8.json")
+    monkeypatch.setenv("BENCH_ROUND", "r14")
+    with pytest.raises(ValueError, match="BENCH_ROUND"):
+        bench.round_tag(str(tmp_path))

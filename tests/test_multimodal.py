@@ -45,6 +45,25 @@ def test_decode_deterministic_and_pruned(spark):
     assert 1 <= rows[1].width <= 4096 and 1 <= rows[1].height <= 4096
 
 
+def test_decode_images_carries_meta_unchanged(spark):
+    """decode_images passes each asset's meta struct through untouched
+    (a NULL meta stays NULL), for text and real-codec payloads alike."""
+    from analysis_of_flight_delay_data_by_mapreduce_spark.operators.multimodal import (
+        attach_synthetic_png,
+    )
+    from analysis_of_flight_delay_data_by_mapreduce_spark.schema import (
+        MULTIMODAL_ASSET,
+    )
+
+    ids = spark.range(0, 12).withColumnRenamed("id", "asset_id")
+    bare = spark.createDataFrame([(99, "image", b"opaque", None)], MULTIMODAL_ASSET)
+    for assets in (_assets(spark), attach_synthetic_png(ids, "asset_id"), bare):
+        want = {r.asset_id: r.meta for r in assets.collect()}
+        decoded = decode_images(assets)
+        assert decoded.schema["meta"] == MULTIMODAL_ASSET["meta"]
+        assert {r.asset_id: r.meta for r in decoded.collect()} == want
+
+
 def test_extract_features_shape(spark):
     feats = {r.asset_id: r.features for r in extract_features(_assets(spark)).collect()}
     assert all(len(v) == FEATURE_DIM for v in feats.values())
@@ -1754,9 +1773,12 @@ def test_fixture_bytes_pinned(spark, name):
 def test_null_payload_fails_loudly(spark):
     """A NULL payload raises instead of decoding or sampling as empty
     bytes (which would emit a plausible sha256(b"") digest)."""
+    from analysis_of_flight_delay_data_by_mapreduce_spark.schema import (
+        MULTIMODAL_ASSET,
+    )
+
     assets = spark.createDataFrame(
-        [(1, "image", b"hello"), (2, "image", None)],
-        "asset_id long, modality string, payload binary",
+        [(1, "image", b"hello", None), (2, "image", None, None)], MULTIMODAL_ASSET
     )
     for op in (sample_video_frames, decode_images):
         with pytest.raises(Exception, match="NULL payload"):

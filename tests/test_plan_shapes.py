@@ -367,6 +367,20 @@ def test_multimodal_attach_pipelines_single_spread_exchange(spark):
         assert m and "doc_id" in m[0] and "text" not in m[0], name
 
 
+def test_image_decode_checks_compare_meta_on_the_decoded_row(spark):
+    """The image decode checks compare decoded dims with the fixture's
+    meta that decode_images carries on the same row: no join of the
+    fixture back to its decode, no persisted fixture, and only the one
+    _spread_ids round-robin."""
+    for fmt in ("bmp", "png", "gif", "jpeg"):
+        name = f"multimodal_{fmt}_decode_check"
+        simple = plan_text(synthetic.QUERIES[name](spark, SF_DIR), "simple")
+        assert "Join" not in simple, f"{name}:\n{simple}"
+        assert "InMemoryRelation" not in simple, f"{name}:\n{simple}"
+        assert "InMemoryTableScan" not in simple, f"{name}:\n{simple}"
+        assert simple.count("RoundRobinPartitioning") == 1, f"{name}:\n{simple}"
+
+
 def test_lsh_candidate_stage_is_postings_grouped_not_self_join(spark):
     """r12: banded-LSH candidate pairs come from ONE grouped pass over the
     band entries (collect_list postings + bucket-local pair expansion),

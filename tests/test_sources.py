@@ -2,15 +2,27 @@
 
 from __future__ import annotations
 
+import glob
+import os
 import textwrap
 
+import pytest
 from pyspark.sql import functions as F
 
+from analysis_of_flight_delay_data_by_mapreduce_spark.schema import (
+    FLIGHT_PUNCTUALITY,
+    SYNTHETIC_TABLES,
+    TABLES,
+)
 from analysis_of_flight_delay_data_by_mapreduce_spark.sources import (
     read_flight_csv,
+    read_parquet_table,
     read_text_corpus,
     read_weblog,
+    write_parquet,
 )
+
+from conftest import SF_DIR
 
 _HEADER = (
     "run_date,reporting_period,reporting_airport,origin_destination_country,"
@@ -27,25 +39,113 @@ _HEADER = (
 
 
 def test_read_flight_csv_dialect(tmp_path, spark):
-    # space-padded numerics, a quoted field with a comma, and a blank line —
-    # the reference's dialect quirks (SURVEY §1.3) minus its quote-retention bug
+    # space-padded numerics, quoted fields (one with a comma, one padded
+    # inside its quotes), a blank and an all-blank line — the reference's
+    # dialect quirks (SURVEY §1.3) minus its quote-retention bug
     csv = _HEADER + "\n" + textwrap.dedent(
         """\
         05-Apr-2011 13:31,201101,BIRMINGHAM,BELGIUM,BRUSSELS,"AIR, QUOTED",A,S, 109 , 0 , 92.5 , 2.7 , 0.9 , 2.7 , 0.9 , 0 , 6.3 , 0 , 106 , 76.4 , 13.7
 
-        05-Apr-2011 13:31,201102,LEEDS,SPAIN,MADRID,PLAIN AIR,D,C, 5 , 0 , 60 , 20 , 0 , 20 , 0 , 0 , 37.2 , 0 , 5 , 60 , 13.6
+        05-Apr-2011 13:31,201102,LEEDS,SPAIN,MADRID," PLAIN AIR ",D,C, 5 , 0 , 60 , 20 , 0 , 20 , 0 , 0 , 37.2 , 0 , 5 , 60 , 13.6
         """
-    )
+    ) + "   \n"
     p = tmp_path / "flights.csv"
     p.write_text(csv)
     df = read_flight_csv(spark, str(p))
     rows = sorted(df.collect(), key=lambda r: r.reporting_period)
-    assert len(rows) == 2  # header consumed, blank line dropped
+    assert len(rows) == 2  # header consumed, blank lines dropped
     r = rows[0]
     assert r.airline_name == "AIR, QUOTED"  # quotes parsed, not retained
     assert r.number_flights_matched == 109  # padded int trimmed + cast
     assert abs(r.average_delay_mins - 6.3) < 1e-9
     assert rows[1].scheduled_charter == "C"
+    assert rows[1].airline_name == "PLAIN AIR"  # padding inside quotes trimmed
+
+
+#: One well-formed CAA row; the CSV tests below corrupt one field of it.
+_ROW = (
+    "05-Apr-2011 13:31,201101,BIRMINGHAM,BELGIUM,BRUSSELS,AIR,A,S,"
+    " 109 , 0 , 92.5 , 2.7 , 0.9 , 2.7 , 0.9 , 0 , 6.3 , 0 , 106 , 76.4 , 13.7"
+)
+
+
+def _csv(tmp_path, *lines: str) -> str:
+    p = tmp_path / "flights.csv"
+    p.write_text("\n".join([_HEADER, *lines]) + "\n")
+    return str(p)
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        _ROW.replace(" 109 ", " abc "),  # malformed int
+        _ROW.replace(" 109 ", " 1.5 "),  # fractional int
+        _ROW.replace(" 6.3 ", " x6.3 "),  # malformed double
+        _ROW.rsplit(",", 3)[0],  # short row: no NULL-padded digest
+        _ROW + ",extra",  # long row
+    ],
+    ids=["int", "fractional_int", "double", "short_row", "long_row"],
+)
+def test_read_flight_csv_fails_fast_on_malformed_rows(tmp_path, spark, bad):
+    df = read_flight_csv(spark, _csv(tmp_path, _ROW, bad))
+    with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING"):
+        df.collect()
+
+
+def _footer_dirs() -> list[str]:
+    """Every test scale factor, plus the benchmark's copy of sf0.01."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    dirs = sorted(glob.glob(os.path.join(os.path.dirname(SF_DIR), "sf*")))
+    return dirs + [os.path.join(repo, "perfbench", "data", "sf0.01")]
+
+
+@pytest.mark.parametrize("sf_dir", _footer_dirs())
+def test_declared_schemas_match_parquet_footers(spark, sf_dir):
+    """Every table is read through its declared schema, never its footer:
+    a generator that drifts (a column type, TIMESTAMP_NTZ vs NANOS) must
+    fail here, not deep inside a query."""
+    names = sorted(
+        os.path.basename(p)[: -len(".parquet")]
+        for p in glob.glob(os.path.join(sf_dir, "*.parquet"))
+    )
+    assert names and set(names) <= set(SYNTHETIC_TABLES), names
+    for name in names:
+        footer = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
+        assert footer == TABLES[name], f"{sf_dir}/{name}: {footer.simpleString()}"
+
+
+def test_flights_parquet_matches_declared_schema(spark, tmp_path):
+    """The ingest's parquet (CSV → write_parquet) carries exactly the
+    declared ``flights`` schema and reads back row-for-row through it."""
+    csv = read_flight_csv(spark, _csv(tmp_path, _ROW, _ROW.replace("201101", "201102")))
+    write_parquet(csv, str(tmp_path / "flights.parquet"))
+    assert spark.read.parquet(str(tmp_path / "flights.parquet")).schema == FLIGHT_PUNCTUALITY
+    back = read_parquet_table(spark, str(tmp_path), "flights")
+    assert back.schema == FLIGHT_PUNCTUALITY
+    assert sorted(back.collect()) == sorted(csv.collect())
+
+
+def test_read_parquet_table_builds_without_jobs(spark):
+    """Building a read launches no Spark job: the schema is declared, so
+    no footer inference runs on the driver's behalf."""
+    sc = spark.sparkContext
+    sc.setJobGroup("test-read-build", "declared-schema reads")
+    try:
+        frames = [read_parquet_table(spark, SF_DIR, t) for t in SYNTHETIC_TABLES]
+        built = list(sc.statusTracker().getJobIdsForGroup("test-read-build"))
+        frames[0].count()  # the group does see jobs: the probe is live
+        ran = list(sc.statusTracker().getJobIdsForGroup("test-read-build"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert built == []
+    assert ran
+    assert dict(frames[SYNTHETIC_TABLES.index("events")].dtypes)["ts"] == "timestamp"
+
+
+def test_read_parquet_table_rejects_undeclared_table(spark):
+    with pytest.raises(ValueError, match="undeclared table 'nope'"):
+        read_parquet_table(spark, SF_DIR, "nope")
 
 
 def test_read_weblog(tmp_path, spark):
@@ -66,12 +166,6 @@ def test_read_text_corpus(tmp_path, spark):
 
 
 def test_sink_roundtrip_parquet_partitioned(tmp_path, spark):
-    from analysis_of_flight_delay_data_by_mapreduce_spark.sources import (
-        read_parquet_table,
-        write_parquet,
-    )
-    from conftest import SF_DIR
-
     ev = read_parquet_table(spark, SF_DIR, "events").limit(200)
     out = str(tmp_path / "ev_parts")
     write_parquet(ev, out, partition_by=["event_type"])
@@ -133,11 +227,9 @@ def test_write_training_shards_layout_and_determinism(spark, tmp_path):
     written twice (id-hash, not rand)."""
     import os
 
-    from analysis_of_flight_delay_data_by_mapreduce_spark.sources import read_parquet_table
     from analysis_of_flight_delay_data_by_mapreduce_spark.sources.sinks import (
         write_training_shards,
     )
-    from conftest import SF_DIR
 
     docs = read_parquet_table(spark, SF_DIR, "documents").select("doc_id", "text")
     out1, out2 = str(tmp_path / "run1"), str(tmp_path / "run2")

@@ -52,7 +52,7 @@ def test_running_totals_match_batch(spark):
 # The transformWithStateInPandas parity test was removed with the operator
 # in round 4 (google.protobuf absent from this image -> the test was a
 # permanent skip; an assertion that never runs documents nothing). The
-# intended TWS shape is archived in NEXT.md.
+# intended TWS shape is recorded in ROADMAP.md.
 
 
 def test_sessionize_stream_matches_batch_summary(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Sync the query/oracle/test totals in README.md / COVERAGE.md / NEXT.md
+"""Sync the query/oracle/test totals in README.md / COVERAGE.md
 with the actual registry and test collection.
 
 Run after adding queries or tests: ``python tools/update_totals.py``.
@@ -45,16 +45,6 @@ def main() -> None:
             "COVERAGE.md",
             r"\*\*Totals: \d+ registered queries — \d+ DuckDB-oracle hash-checked, \d+\nrows-only by design",
             f"**Totals: {nq} registered queries — {no} DuckDB-oracle hash-checked, {nr}\nrows-only by design",
-        ),
-        (
-            "NEXT.md",
-            r"\d+ registered queries \(\d+ DuckDB\noracle-checked, \d+ rows-only",
-            f"{nq} registered queries ({no} DuckDB\noracle-checked, {nr} rows-only",
-        ),
-        (
-            "NEXT.md",
-            r"\d+ pytest cases",
-            f"{nt} pytest cases",
         ),
         (
             "README.md",
