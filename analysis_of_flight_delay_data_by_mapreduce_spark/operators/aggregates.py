@@ -108,7 +108,6 @@ def ratio_threshold(
     den: Column,
     theta: float,
     out: str = "ratio",
-    keep_ratio: bool = True,
 ) -> DataFrame:
     """The Late job's shape (SURVEY §2.3 A9): per-group ratio of sums with a
     HAVING threshold — keep groups where ``SUM(num)/SUM(den) >= theta``.
@@ -124,9 +123,7 @@ def ratio_threshold(
     ratio = F.col("__num").cast("double") / F.col("__den").cast("double")
     kept = agg.filter((F.col("__den") > 0) & (ratio >= F.lit(theta)))
     key_names = [c for c in agg.columns if not c.startswith("__")]
-    if keep_ratio:
-        return kept.select(*key_names, ratio.alias(out))
-    return kept.select(*key_names)
+    return kept.select(*key_names, ratio.alias(out))
 
 
 def token_counts(df: DataFrame, col: str | Column, out: str = "cnt") -> DataFrame:

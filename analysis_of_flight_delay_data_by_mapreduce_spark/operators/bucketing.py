@@ -15,9 +15,9 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-__all__ = ["write_bucketed", "bucketed_join_ready"]
+__all__ = ["write_bucketed"]
 
 
 def write_bucketed(
@@ -25,10 +25,8 @@ def write_bucketed(
     table: str,
     key: str,
     n_buckets: int = 8,
-    sort: bool = True,
-    mode: str = "overwrite",
 ) -> None:
-    """Persist ``df`` as a bucketed (optionally sorted) managed table.
+    """Persist ``df`` as a managed table bucketed and sorted by ``key``.
 
     Idempotent in local mode: drops any catalog entry AND a stale warehouse
     location left by a previous session (the in-memory catalog forgets
@@ -41,27 +39,5 @@ def write_bucketed(
     loc = os.path.join(wh.removeprefix("file:"), table.lower())
     if loc and os.path.exists(loc):
         shutil.rmtree(loc)
-    w = df.write.mode(mode).bucketBy(n_buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
+    df.write.mode("overwrite").bucketBy(n_buckets, key).sortBy(key).saveAsTable(table)
 
-
-def bucketed_join_ready(
-    spark: SparkSession,
-    left: str,
-    right: str,
-    key: str,
-    force_sort_merge: bool = False,
-) -> DataFrame:
-    """Join two same-bucketed tables on ``key`` — plans without Exchange.
-
-    ``force_sort_merge`` adds a MERGE hint: at test scale Catalyst would
-    otherwise broadcast the small side (also shuffle-free, and the right
-    call there); the hint exhibits the bucketed-SMJ plan that a
-    fact-to-fact join takes when neither side fits in memory.
-    """
-    lt, rt = spark.table(left), spark.table(right)
-    if force_sort_merge:
-        lt = lt.hint("merge")
-    return lt.join(rt, key)

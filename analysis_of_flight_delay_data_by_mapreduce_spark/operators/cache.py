@@ -22,7 +22,6 @@ unpersists the checkpointed RDD after GC — bounded by design.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 
 __all__ = ["scoped_persist", "release_stale", "set_scope"]
 
@@ -36,10 +35,10 @@ def set_scope(name: str) -> None:
     _SCOPE = name
 
 
-def scoped_persist(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
-    """persist() that registers the DataFrame for release when a different
-    registry query builds."""
-    df = df.persist(level) if level is not None else df.persist()
+def scoped_persist(df: DataFrame) -> DataFrame:
+    """persist() at the default storage level that registers the
+    DataFrame for release when a different registry query builds."""
+    df = df.persist()
     _LIVE.append((_SCOPE, df))
     return df
 

@@ -138,7 +138,6 @@ def _bucket_pairs(
     keys: list[str],
     id_col: str,
     max_bucket: int | None,
-    persist_entries: bool = False,
 ) -> DataFrame:
     """Distinct candidate pairs ``(id_a < id_b)`` of ids sharing a bucket
     key — the postings-list formulation of the banded LSH self-join.
@@ -161,20 +160,14 @@ def _bucket_pairs(
     the member arrays are unbounded BY SEMANTICS (the caller asked for
     every co-bucketed pair, an O(|bucket|²) output either way).
 
-    ``persist_entries`` keeps the signature/fingerprint pipeline feeding
-    ``entries`` materialized once per query scope. Default OFF (r13,
-    ADVICE r12): the guarded groupBy is the entries frame's single
-    consumer here, so persisting it is pure materialization overhead in
-    a one-shot execution — opt in only when the caller's entries
-    subtree genuinely feeds multiple consumers. (Measured at sf0.1:
-    warm/cold medians within noise either way; at 100 TB band entries
-    are content hashes a real pipeline materializes once in STORAGE,
-    not executor memory.)
+    ``entries`` is not persisted: the guarded groupBy is its single
+    consumer, so a persist would be pure materialization overhead in a
+    one-shot execution (measured at sf0.1: warm/cold medians within
+    noise either way). A caller whose entries subtree feeds several
+    consumers persists it itself.
     """
     from pyspark.sql import Window as W
 
-    if persist_entries:
-        entries = scoped_persist(entries)
     if max_bucket is not None:
         wc = F.count(F.lit(1)).over(W.partitionBy(*[F.col(k) for k in keys]))
         entries = (
@@ -824,9 +817,7 @@ def simhash_near_dup(
     ).select(id_col, "bb.band", "bb.bucket")
     # the band entries are a cheap projection of the (persisted or
     # caller-supplied) fingerprint frame — no second persist needed
-    pairs = _bucket_pairs(
-        entries, ["band", "bucket"], id_col, max_bucket, persist_entries=False
-    )
+    pairs = _bucket_pairs(entries, ["band", "bucket"], id_col, max_bucket)
     if max_hamming is None:
         return pairs
     fa = fp.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("__fa"))
@@ -1170,26 +1161,16 @@ def _dup_gram_hits(
     text_col: str,
     k: int,
     min_sites: int,
-    fingerprint: bool = False,
 ) -> DataFrame:
     """Flagged gram positions ``(id, pos)``: every site whose gram occurs
     at >= ``min_sites`` (doc, pos) sites corpus-wide — the shared front
     half of the span GROUP/PROFILE/APPLY faces (one definition, so a
     predicate change lands in all three at once).
 
-    ``fingerprint=True`` is the PB-scale shuffle-width variant (VERDICT
-    r6 item 7): the gram string is replaced by a 128-bit fingerprint —
-    the pair ``(xxhash64(0, g), xxhash64(1, g))``, i.e. Spark's
-    fixed-seed (42) xxhash64 over the two-element tuples ``(lit 0, g)``
-    and ``(lit 1, g)``, NOT a reseeded hash — applied BEFORE the
-    two gram-keyed exchanges, so the shuffle carries 16 bytes per site
-    instead of the whole k-gram (~5 words ≈ 30-60 bytes at k=5, more
-    for long-token corpora). Collision odds are ~n²/2^128 across
-    distinct grams (≈1e-18 even at 1e10 grams) — a collision could only
-    ADD a false duplicated site, never drop one. The exact-string form
-    stays the default because the DuckDB oracle replicates it; both
-    forms are asserted span-identical on the test corpus
-    (tests/test_dedup.py::test_duplicate_spans_fingerprint_parity).
+    The exchange is keyed on the exact gram string, which the DuckDB
+    oracle replicates. At petabyte scale a 128-bit hash of the gram
+    would cut the shuffle width (16 bytes per site instead of ~30-60 at
+    k=5) at collision odds ~n²/2^128; no registered query needs it.
     """
     # r13: count-over-window formulation — ONE gram-keyed exchange; the
     # >= min_sites predicate is a window count partitioned by the gram,
@@ -1205,17 +1186,7 @@ def _dup_gram_hits(
     from pyspark.sql import Window as W
 
     sites = _gram_sites(df, id_col, text_col, k)
-    if fingerprint:
-        sites = sites.select(
-            F.col(id_col),
-            "pos",
-            F.xxhash64(F.lit(0), F.col("__g")).alias("__g1"),
-            F.xxhash64(F.lit(1), F.col("__g")).alias("__g2"),
-        )
-        key = ["__g1", "__g2"]
-    else:
-        key = ["__g"]
-    wc = F.count(F.lit(1)).over(W.partitionBy(*[F.col(c) for c in key]))
+    wc = F.count(F.lit(1)).over(W.partitionBy(F.col("__g")))
     return (
         sites.withColumn("__ns", wc)
         .filter(F.col("__ns") >= min_sites)
@@ -1229,7 +1200,6 @@ def duplicate_spans(
     text_col: str,
     k: int = 5,
     min_sites: int = 2,
-    fingerprint: bool = False,
 ) -> DataFrame:
     """Exact duplicated-substring spans, the distributed face of
     suffix-array substring dedup (Lee et al. 2022, "Deduplicating
@@ -1237,14 +1207,12 @@ def duplicate_spans(
     span whose constituent word ``k``-grams ALL occur at >= ``min_sites``
     (doc, pos) sites corpus-wide.
 
-    Three bounded shuffles, never pairwise:
-    1. gram sites -> groupBy(gram) count (map-side partial agg; a gram in
-       a million docs costs one counter, not a million-squared pair set);
-    2. left-semi join of the sites against the duplicated grams (equi on
-       the gram; at petabyte scale swap the gram string for a 128-bit
-       fingerprint to cut shuffle width -- collision odds ~n^2/2^128 --
-       kept as the exact string here so the DuckDB oracle is replicable);
-    3. per-doc gaps-and-islands window (hashpartitioning by doc, no
+    Two bounded shuffles, never pairwise:
+    1. gram sites -> count over a window partitioned by the gram
+       (:func:`_dup_gram_hits`; a gram in a million docs costs one
+       counter per site, not a million-squared pair set, and no site
+       array is built);
+    2. per-doc gaps-and-islands window (hashpartitioning by doc, no
        data-wide sort): consecutive duplicated gram positions merge into
        one maximal span of ``max - min + k`` tokens.
 
@@ -1254,7 +1222,7 @@ def duplicate_spans(
     """
     from pyspark.sql import Window as W
 
-    hits = _dup_gram_hits(df, id_col, text_col, k, min_sites, fingerprint)
+    hits = _dup_gram_hits(df, id_col, text_col, k, min_sites)
     w = W.partitionBy(id_col).orderBy("pos")
     isl = hits.withColumn("__grp", F.col("pos") - F.row_number().over(w))
     return (
@@ -1273,7 +1241,6 @@ def duplicate_span_profile(
     text_col: str,
     k: int = 5,
     min_sites: int = 2,
-    fingerprint: bool = False,
 ) -> DataFrame:
     """Per-document duplication profile over :func:`duplicate_spans`'
     pipeline: ``(id, n_grams, dup_grams, n_spans, max_span_len)`` for
@@ -1293,7 +1260,7 @@ def duplicate_span_profile(
         F.col(id_col),
         F.greatest(F.size("__tk") - (k - 1), F.lit(0)).cast("long").alias("n_grams"),
     )
-    hits = _dup_gram_hits(df, id_col, text_col, k, min_sites, fingerprint)
+    hits = _dup_gram_hits(df, id_col, text_col, k, min_sites)
     w = W.partitionBy(id_col).orderBy("pos")
     isl = hits.withColumn("__grp", F.col("pos") - F.row_number().over(w))
     spans = isl.groupBy(id_col, "__grp").agg(
@@ -1323,7 +1290,6 @@ def strip_duplicate_spans(
     text_col: str,
     k: int = 5,
     min_sites: int = 2,
-    fingerprint: bool = False,
 ) -> DataFrame:
     """The APPLY face of :func:`duplicate_spans` — rewrite every document
     with its duplicated spans cut out (Lee et al. 2022 cut the
@@ -1343,7 +1309,7 @@ def strip_duplicate_spans(
     per-doc ``collect_list`` + sort — state bounded by single-document
     length, the same bound any per-doc text operator carries.
     """
-    hits = _dup_gram_hits(df, id_col, text_col, k, min_sites, fingerprint)
+    hits = _dup_gram_hits(df, id_col, text_col, k, min_sites)
     cut = hits.select(
         F.col(id_col),
         F.explode(F.sequence(F.col("pos"), F.col("pos") + F.lit(k - 1))).alias(

@@ -44,7 +44,6 @@ def pagerank_integer(
     iters: int = 5,
     damping_pct: int = 85,
     scale: int = 10**12,
-    broadcast_ranks: bool = True,
 ) -> DataFrame:
     """Fixed-iteration PageRank in EXACT integer arithmetic — the
     authority-scoring pass (Page et al. 1999; in a data pipeline:
@@ -72,11 +71,11 @@ def pagerank_integer(
     never re-shuffled — the only per-round exchange is the tiny
     post-partial-agg one on ``dst``. Lineage is linear (each rank frame
     consumed exactly once, no recompute blowup). That is the
-    nodes-fit-in-memory regime; ``broadcast_ranks=False`` is the
-    web-scale formulation — plain equi-joins, the rank vector shuffles
-    each round (bucket the edge table by ``src`` to keep its side
-    exchange-free, and checkpoint ranks every few rounds). Identical
-    output by construction (parity-tested).
+    nodes-fit-in-memory regime; past it, the web-scale formulation is
+    plain equi-joins with the rank vector shuffled each round (bucket
+    the edge table by ``src`` to keep its side exchange-free, and
+    checkpoint ranks every few rounds). The output is checked against a
+    pure-Python replica of the recurrence.
 
     Output: ``(node, rank)``, one row per node, ranks summing to ≈scale.
     """
@@ -109,8 +108,7 @@ def pagerank_integer(
             " div 100"
         ).alias("__base"),
     )
-    bc = F.broadcast if broadcast_ranks else (lambda df: df)
-    ranks = nodes.join(bc(params)).select(
+    ranks = nodes.join(F.broadcast(params)).select(
         "node", F.col("__r0").cast("bigint").alias("rank")
     )
     for _ in range(iters):
@@ -119,20 +117,19 @@ def pagerank_integer(
         # post-partial-agg shuffle per iteration instead of re-shuffling
         # |E| rows on src — both moves together measured ~10s → ~2s warm
         # at sf0.1 on the 1.2M-edge co-purchase graph). Valid while the
-        # node set fits a broadcast (here 16k); broadcast_ranks=False is
-        # the web-scale shuffle formulation.
-        share = ranks.join(bc(outdeg), "node").select(
+        # node set fits a broadcast (here 16k).
+        share = ranks.join(F.broadcast(outdeg), "node").select(
             "node",
             F.expr("rank div __outdeg").cast("bigint").alias("__share"),
         )
         contrib = (
-            e.join(bc(share), F.col("__src") == F.col("node"))
+            e.join(F.broadcast(share), F.col("__src") == F.col("node"))
             .groupBy(F.col("__dst").alias("node"))
             .agg(F.sum("__share").alias("__in"))
         )
         ranks = (
-            nodes.join(bc(contrib), "node", "left")
-            .join(bc(params))
+            nodes.join(F.broadcast(contrib), "node", "left")
+            .join(F.broadcast(params))
             .select(
                 "node",
                 (

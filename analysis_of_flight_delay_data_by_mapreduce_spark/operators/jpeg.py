@@ -13,8 +13,9 @@ JPEGs in the wild:
   (SOF0/SOF1) AND progressive (SOF2, r12 — Annex G spectral selection +
   successive approximation, EOB runs, per-scan table redefinition, the
   libjpeg interchange semantics real-world progressive files are written
-  against); arithmetic/hierarchical/lossless raise ``ValueError`` so the
-  caller's auto-detect-else-stub contract holds,
+  against); arithmetic/hierarchical/lossless raise ``ValueError``, so a
+  JPEG-signed payload outside the subset fails ``decode_images`` loudly
+  instead of getting a stub digest,
 - grayscale and 3-component YCbCr frames,
 - any sampling grid with factors in {1..4} where each component's factor
   divides the frame maximum — which includes 4:4:4, 4:2:2 and 4:2:0,
@@ -818,8 +819,8 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
     (SOF0/SOF1) and progressive (SOF2) Huffman frames are supported.
     Raises ``ValueError`` on anything outside the subset — truncation,
     arithmetic frames, 12-bit precision, bad table ids, scan overruns,
-    malformed scan scripts — so dispatchers can fall back to the stub
-    path."""
+    malformed scan scripts — and never another exception type, so
+    callers can catch it narrowly."""
     import numpy as np
 
     d = payload

@@ -29,9 +29,10 @@ sizing — is real and tested. Codecs (VERDICT r7 item 5):
   GIF, or JPEG payload for its TRUE dimensions and digests the decoded
   PIXELS; ``decode_audio`` reads the true sample rate / duration from
   WAV headers.
-- **STUBBED**: any image payload that is none of the above falls back
-  to the deterministic ``_fake_decode_image`` (the oracle face — its
-  sha256 arithmetic is replicated in SQL). The only remaining stub
+- **STUBBED**: an image payload with no BMP/PNG/GIF/JPEG signature
+  takes the deterministic ``_fake_decode_image`` (the oracle face — its
+  sha256 arithmetic is replicated in SQL); one with a signature that
+  fails to decode raises ``ValueError``. The only remaining stub
   surface is NON-MJPEG coded video samples (H.264 etc. inside mdat) —
   container metadata, sample geometry and MJPEG frames are real;
   inter-frame codecs need av/ffmpeg (re-checked absent 2026-08-16).
@@ -854,50 +855,17 @@ def _fake_decode_image(payload: bytes) -> tuple[int, int, str]:
     return w, h, digest
 
 
-def _decode_image(payload: bytes) -> tuple[int, int, str]:
-    """REAL decode when the payload is a self-consistent uncompressed
-    BMP, a valid non-interlaced 8-bit RGB/RGBA PNG, a decodable GIF, or
-    a baseline sequential JPEG (true header dimensions, digest over the
-    decoded top-down pixel bytes — i.e. over image CONTENT, invariant
-    to BMP row padding / PNG filter / JPEG entropy-coding choices);
-    deterministic fake otherwise (the oracle face — text payloads used
-    by the registered stub queries can never satisfy ``_bmp_meta``'s
-    full-consistency check or carry the PNG/GIF/JPEG signatures, so
-    their values are unchanged)."""
-    meta = _bmp_meta(payload)
-    if meta is not None:
-        w, h, pixels = decode_bmp(payload)
-        return w, h, hashlib.sha256(pixels).hexdigest()
-    if payload[: len(_PNG_SIG)] == _PNG_SIG:
-        try:
-            w, h, _, pixels = decode_png(payload)
-        except ValueError:
-            return _fake_decode_image(payload)
-        return w, h, hashlib.sha256(pixels).hexdigest()
-    if payload[:6] in _GIF_SIGS:
-        try:
-            w, h, pixels = decode_gif(payload)
-        except ValueError:
-            return _fake_decode_image(payload)
-        return w, h, hashlib.sha256(pixels).hexdigest()
-    if payload[:3] == _JPEG_SIG:
-        from .jpeg import decode_jpeg
-
-        try:
-            w, h, _, pixels = decode_jpeg(payload)
-        except ValueError:
-            return _fake_decode_image(payload)
-        return w, h, hashlib.sha256(pixels).hexdigest()
-    return _fake_decode_image(payload)
+class _NoImageSignature(ValueError):
+    """The payload carries no BMP/PNG/GIF/JPEG signature."""
 
 
 def _decode_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
     """REAL pixel decode → ``(width, height, channels, pixels)`` for any
     of the supported codecs (BMP → 3-channel BGR, PNG → 3/4-channel
     RGB(A), GIF → 3-channel RGB from the first frame, JPEG → 3-channel
-    RGB or 1-channel grayscale). Raises on payloads none of the real
-    decoders accept — a resize of opaque bytes is meaningless, so there
-    is no stub path here."""
+    RGB or 1-channel grayscale). A payload with a codec's signature that
+    the codec rejects raises its ``ValueError``; a payload with no
+    signature raises ``_NoImageSignature``."""
     meta = _bmp_meta(payload)
     if meta is not None:
         w, h, px = decode_bmp(payload)
@@ -912,7 +880,24 @@ def _decode_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
         from .jpeg import decode_jpeg
 
         return decode_jpeg(payload)
-    raise ValueError("no real decoder for payload")
+    raise _NoImageSignature("no real decoder for payload")
+
+
+def _decode_image(payload: bytes) -> tuple[int, int, str]:
+    """``(width, height, digest)`` of one image payload: true header
+    dimensions and a digest over the decoded top-down pixel bytes (i.e.
+    over image CONTENT, invariant to BMP row padding / PNG filter / JPEG
+    entropy-coding choices). A payload with no image signature takes the
+    deterministic stub (the oracle face — text payloads used by the
+    registered stub queries can never satisfy ``_bmp_meta``'s
+    full-consistency check or carry the PNG/GIF/JPEG signatures); one
+    that carries a signature but fails to decode raises ``ValueError``
+    rather than getting a plausible fake digest."""
+    try:
+        w, h, _, pixels = _decode_pixels(payload)
+    except _NoImageSignature:
+        return _fake_decode_image(payload)
+    return w, h, hashlib.sha256(pixels).hexdigest()
 
 
 def resize_nearest(
@@ -962,8 +947,9 @@ def decode_images(assets: DataFrame) -> DataFrame:
     — the multimodal analog of column pruning) and carries each asset's
     ``meta`` through unchanged, so a check can compare the decoded
     dimensions with the declared ones on the same row. BMP/PNG/GIF/JPEG
-    payloads decode for real (``_decode_image``); everything else takes
-    the deterministic stub path."""
+    payloads decode for real and a corrupt one raises ``ValueError``;
+    a payload with no image signature takes the deterministic stub path
+    (``_decode_image``)."""
 
     def row(aid, modality, p, meta):
         w, h, sha = _decode_image(bytes(p))

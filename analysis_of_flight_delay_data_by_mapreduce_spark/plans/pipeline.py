@@ -49,6 +49,19 @@ def _best_by_quality(df: DataFrame, key: str, id_col: str) -> DataFrame:
     )
 
 
+def _exact_survivors(
+    docs: DataFrame, id_col: str, text_col: str, min_quality: float
+) -> DataFrame:
+    """The shared front of the pipelines: quality gate → normalized-text
+    fingerprint → exact dedup (smallest id per ``fp`` survives), as the
+    scored rows (``quality`` and ``fp`` attached) of the survivors.
+    Callers persist it: each feeds it to several consumers."""
+    scored = quality_score(docs, text_col).filter(F.col("quality") >= min_quality)
+    scored = fingerprint(scored, text_col)
+    exact_survivors = exact_dedup(scored, ["fp"], id_col)
+    return scored.join(exact_survivors, [id_col, "fp"], "left_semi")
+
+
 def prepare_corpus(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -64,14 +77,10 @@ def prepare_corpus(
     duplicates (MinHash-LSH candidates verified at ``near_dup_jaccard`` —
     the smaller id of each verified pair survives).
     """
-    scored = quality_score(docs, text_col).filter(F.col("quality") >= min_quality)
-    scored = fingerprint(scored, text_col)
-
-    exact_survivors = exact_dedup(scored, ["fp"], id_col)
     # `kept` feeds three consumers (minhash signatures, the verify pass,
     # the final anti join) — persist so the scoring+fingerprint scan runs
     # once. Narrow columns only; at scale this is a checkpointed shard.
-    kept = scoped_persist(scored.join(exact_survivors, [id_col, "fp"], "left_semi"))
+    kept = scoped_persist(_exact_survivors(docs, id_col, text_col, min_quality))
 
     near_pairs = minhash_lsh_dedup(
         kept,
@@ -117,10 +126,7 @@ def prepare_corpus_cc(
     function is the exact-semantics correctness witness. The closure is
     the O(log n) star algorithm either way.
     """
-    scored = quality_score(docs, text_col).filter(F.col("quality") >= min_quality)
-    scored = fingerprint(scored, text_col)
-    exact_survivors = exact_dedup(scored, ["fp"], id_col)
-    kept = scoped_persist(scored.join(exact_survivors, [id_col, "fp"], "left_semi"))
+    kept = scoped_persist(_exact_survivors(docs, id_col, text_col, min_quality))
 
     pairs = ngram_jaccard_pairs(
         kept, id_col, text_col, shingle_k=3, mode="word",
@@ -199,11 +205,8 @@ def prepare_corpus_semantic(
     """
     from ..operators.dedup import semantic_dedup
 
-    scored = quality_score(docs, text_col).filter(F.col("quality") >= min_quality)
-    scored = fingerprint(scored, text_col)
-    exact_survivors = exact_dedup(scored, ["fp"], id_col)
     kept = scoped_persist(
-        scored.join(exact_survivors, [id_col, "fp"], "left_semi").select(
+        _exact_survivors(docs, id_col, text_col, min_quality).select(
             id_col, "quality"
         )
     )

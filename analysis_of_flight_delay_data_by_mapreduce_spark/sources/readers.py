@@ -134,23 +134,18 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def read_jsonl(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """JSON-lines source with an explicit schema (extension tier).
+def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """JSON-lines source read through ``schema`` (extension tier).
 
     A 100 TB pipeline NEVER lets the JSON source infer its schema — sampling
     reads the data twice and a drifting field type silently re-types the
-    whole column. Pass a ``StructType``; malformed lines land in
+    whole column — so the schema is required. Malformed lines land in
     ``_corrupt_record`` (PERMISSIVE mode) instead of failing the job, so bad
     rows are quantifiable and quarantinable downstream.
     """
-    reader = spark.read
-    if schema is not None:
-        schema = T.StructType(
-            schema.fields + [T.StructField("_corrupt_record", T.StringType())]
-        )
-        reader = reader.schema(schema)
-    return reader.option("mode", "PERMISSIVE").option(
+    schema = T.StructType(
+        schema.fields + [T.StructField("_corrupt_record", T.StringType())]
+    )
+    return spark.read.schema(schema).option("mode", "PERMISSIVE").option(
         "columnNameOfCorruptRecord", "_corrupt_record"
     ).json(path)

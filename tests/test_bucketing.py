@@ -4,7 +4,6 @@ shuffled join."""
 from __future__ import annotations
 
 from analysis_of_flight_delay_data_by_mapreduce_spark.operators.bucketing import (
-    bucketed_join_ready,
     write_bucketed,
 )
 from analysis_of_flight_delay_data_by_mapreduce_spark.plans.inspect import plan_text
@@ -24,8 +23,13 @@ def test_bucketed_join_no_shuffle(spark):
     write_bucketed(li, "li_bucketed", "okey", n_buckets=8)
     write_bucketed(orders, "orders_bucketed", "okey", n_buckets=8)
 
-    joined = bucketed_join_ready(
-        spark, "li_bucketed", "orders_bucketed", "okey", force_sort_merge=True
+    # the MERGE hint: at test scale Catalyst would otherwise broadcast the
+    # small side; the hint shows the bucketed sort-merge plan a
+    # fact-to-fact join takes when neither side fits in memory
+    joined = (
+        spark.table("li_bucketed")
+        .hint("merge")
+        .join(spark.table("orders_bucketed"), "okey")
     )
     txt = plan_text(joined, "simple")
     assert "Exchange" not in txt  # co-located buckets: zero shuffles

@@ -497,66 +497,6 @@ def test_strip_duplicate_spans_cuts_all_sites(spark):
     }
 
 
-def test_duplicate_spans_fingerprint_parity(spark):
-    """The 128-bit fingerprint variant (shuffle carries two xxhash64
-    longs instead of the gram string — the PB-scale width cut, VERDICT
-    r6 item 7) produces IDENTICAL results to the exact-string default on
-    all three span faces, over the documents test corpus plus the
-    planted fixtures."""
-    from analysis_of_flight_delay_data_by_mapreduce_spark.operators.dedup import (
-        duplicate_span_profile,
-        duplicate_spans,
-        strip_duplicate_spans,
-    )
-
-    shared = "one two three four five six seven eight"
-    planted = spark.createDataFrame(
-        [
-            (1, "aa bb " + shared + " cc"),
-            (2, shared + " zz yy xx ww"),
-            (3, "totally different words without any overlap here"),
-            (4, shared),
-        ],
-        "doc_id bigint, text string",
-    )
-    corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for docs in (planted, corpus):
-        a = sorted(map(tuple, duplicate_spans(docs, "doc_id", "text").collect()))
-        b = sorted(
-            map(
-                tuple,
-                duplicate_spans(
-                    docs, "doc_id", "text", fingerprint=True
-                ).collect(),
-            )
-        )
-        assert a == b and a  # non-empty on both fixtures
-        pa = sorted(
-            map(tuple, duplicate_span_profile(docs, "doc_id", "text").collect())
-        )
-        pb = sorted(
-            map(
-                tuple,
-                duplicate_span_profile(
-                    docs, "doc_id", "text", fingerprint=True
-                ).collect(),
-            )
-        )
-        assert pa == pb
-    sa = sorted(
-        map(tuple, strip_duplicate_spans(planted, "doc_id", "text").collect())
-    )
-    sb = sorted(
-        map(
-            tuple,
-            strip_duplicate_spans(
-                planted, "doc_id", "text", fingerprint=True
-            ).collect(),
-        )
-    )
-    assert sa == sb
-
-
 def test_tfidf_cosine_pairs_planted(spark):
     """Identical docs score exactly 1.0; docs sharing no shingle produce
     no pair; a pair sharing ~half its shingles lands strictly between."""
@@ -585,6 +525,25 @@ def test_tfidf_cosine_pairs_planted(spark):
     assert not any(4 in pair for pair in got)
 
 
+def _pagerank_replica(directed, iters, scale=10**12, damping=85):
+    """Pure-Python replica of ``pagerank_integer``'s floor-division
+    recurrence over a directed edge list."""
+    nodes = {a for a, _ in directed} | {b for _, b in directed}
+    out: dict[int, list[int]] = {}
+    for a, b in directed:
+        out.setdefault(a, []).append(b)
+    r0 = scale // len(nodes)
+    base = ((100 - damping) * r0) // 100
+    r = {v: r0 for v in nodes}
+    for _ in range(iters):
+        inm = {v: 0 for v in nodes}
+        for u, dsts in out.items():
+            for v in dsts:
+                inm[v] += r[u] // len(dsts)
+        r = {v: base + (damping * inm[v]) // 100 for v in nodes}
+    return r
+
+
 def test_pagerank_integer_matches_python_replica(spark):
     """Five integer-PageRank iterations equal a pure-Python replica of
     the same floor-division recurrence bit-for-bit, on a graph with
@@ -596,75 +555,44 @@ def test_pagerank_integer_matches_python_replica(spark):
 
     # undirected star 1-2, 1-3, 1-4 plus edge 2-3 (hub + triangle side)
     und = [(1, 2), (1, 3), (1, 4), (2, 3)]
-    edges = spark.createDataFrame(
-        [(a, b) for a, b in und] + [(b, a) for a, b in und],
-        "src long, dst long",
-    )
+    directed = und + [(b, a) for a, b in und]
+    edges = spark.createDataFrame(directed, "src long, dst long")
     got = {
         r.node: r.rank
         for r in pagerank_integer(edges, iters=5).collect()
     }
 
-    SCALE, D, IT = 10**12, 85, 5
-    adj: dict[int, list[int]] = {}
-    for a, b in und:
-        adj.setdefault(a, []).append(b)
-        adj.setdefault(b, []).append(a)
-    n = len(adj)
-    r = {v: SCALE // n for v in adj}
-    base = ((100 - D) * (SCALE // n)) // 100
-    for _ in range(IT):
-        nxt = {}
-        for v in adj:
-            inm = sum(r[u] // len(adj[u]) for u in adj if v in adj[u])
-            nxt[v] = base + (D * inm) // 100
-        r = nxt
-    assert got == r
+    assert got == _pagerank_replica(directed, 5)
     assert got[1] == max(got.values())  # the hub is the authority
-    assert abs(sum(got.values()) - SCALE) <= IT * n * 100
+    assert abs(sum(got.values()) - 10**12) <= 5 * len(got) * 100
 
     two = spark.createDataFrame([(7, 8), (8, 7)], "src long, dst long")
     pair = {r.node: r.rank for r in pagerank_integer(two, iters=3).collect()}
     assert pair[7] == pair[8]
 
 
-def test_pagerank_broadcast_and_shuffle_formulations_agree(spark):
-    """broadcast_ranks=True (nodes-fit-in-memory) and =False (web-scale
-    shuffle) are the same recurrence — identical ranks bit-for-bit."""
+def test_pagerank_integer_matches_replica_on_cycle_and_seeded_graph(spark):
+    """The recurrence holds bit-for-bit on a 4-cycle with a chord and on
+    a seeded 60-node graph with hubs, leaves and uneven degrees."""
+    import random
+
     from analysis_of_flight_delay_data_by_mapreduce_spark.operators.graph import (
         pagerank_integer,
     )
 
     und = [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3)]
-    edges = spark.createDataFrame(
-        [(a, b) for a, b in und] + [(b, a) for a, b in und],
-        "src long, dst long",
-    )
-    a = {r.node: r.rank for r in pagerank_integer(edges, iters=4).collect()}
-    b = {
-        r.node: r.rank
-        for r in pagerank_integer(edges, iters=4, broadcast_ranks=False)
-        .collect()
-    }
-    assert a == b
-
-    # and at a non-trivial graph (VERDICT r6 item 6): 60 nodes, seeded
-    # random undirected edges — hubs, leaves, uneven degrees
-    import random
+    directed = und + [(b, a) for a, b in und]
+    edges = spark.createDataFrame(directed, "src long, dst long")
+    got = {r.node: r.rank for r in pagerank_integer(edges, iters=4).collect()}
+    assert got == _pagerank_replica(directed, 4)
 
     rng = random.Random(7)
     und2 = {(rng.randrange(60), rng.randrange(60)) for _ in range(150)}
     und2 = [(x, y) for x, y in und2 if x != y]
-    big = spark.createDataFrame(
-        und2 + [(y, x) for x, y in und2], "src long, dst long"
-    ).distinct()
-    a2 = {r.node: r.rank for r in pagerank_integer(big, iters=3).collect()}
-    b2 = {
-        r.node: r.rank
-        for r in pagerank_integer(big, iters=3, broadcast_ranks=False)
-        .collect()
-    }
-    assert len(a2) >= 50 and a2 == b2
+    directed2 = sorted(set(und2) | {(y, x) for x, y in und2})
+    big = spark.createDataFrame(directed2, "src long, dst long")
+    got2 = {r.node: r.rank for r in pagerank_integer(big, iters=3).collect()}
+    assert len(got2) >= 50 and got2 == _pagerank_replica(directed2, 3)
 
 
 def test_xxh64_twin_matches_spark_expression(spark):

@@ -244,8 +244,9 @@ def test_png_known_vector_and_content_digest_invariance():
 def test_png_rejections_fall_back_to_stub():
     """A corrupted CRC, a truncated file, an IDAT that disagrees with
     the declared geometry, and an unsupported subclass (interlaced) all
-    raise in decode_png — and _decode_image routes them to the
-    deterministic stub instead of propagating."""
+    raise in decode_png — and _decode_image propagates the ValueError
+    instead of digesting them with the stub (they carry the PNG
+    signature, so a stub digest would look like a real decode)."""
     import struct
     import zlib
 
@@ -253,7 +254,6 @@ def test_png_rejections_fall_back_to_stub():
 
     from analysis_of_flight_delay_data_by_mapreduce_spark.operators.multimodal import (
         _decode_image,
-        _fake_decode_image,
         decode_png,
         encode_png,
     )
@@ -295,7 +295,8 @@ def test_png_rejections_fall_back_to_stub():
         decode_png(interlaced)
 
     for bad in (bytes(corrupt), truncated, lying, interlaced):
-        assert _decode_image(bad) == _fake_decode_image(bad)
+        with pytest.raises(ValueError):
+            _decode_image(bad)
 
 
 def test_decode_images_real_png_dimensions(spark):
@@ -445,9 +446,11 @@ def test_gif_known_vector_regression():
 
 
 def test_gif_rejections():
-    """Corrupt GIF payloads raise (and therefore fall back to the stub
-    path in _decode_image) instead of decoding garbage: bad signature,
-    truncation, interlace flag, LZW/geometry mismatch, bombs."""
+    """Corrupt GIF payloads raise instead of decoding garbage: bad
+    signature, truncation, interlace flag, LZW/geometry mismatch, bombs.
+    _decode_image propagates the raise for every payload that carries a
+    GIF signature; the bad-signature one is opaque bytes and takes the
+    stub."""
     import pytest
 
     from analysis_of_flight_delay_data_by_mapreduce_spark.operators.multimodal import (
@@ -473,7 +476,10 @@ def test_gif_rejections():
     for bad in (bad_sig, truncated, bytes(interlaced), bytes(lying)):
         with pytest.raises(ValueError):
             decode_gif(bad)
-        assert _decode_image(bad) == _fake_decode_image(bad)
+    for bad in (truncated, bytes(interlaced), bytes(lying)):
+        with pytest.raises(ValueError):
+            _decode_image(bad)
+    assert _decode_image(bad_sig) == _fake_decode_image(bad_sig)
 
     garbage_lzw = bytearray(good)
     garbage_lzw[-4] ^= 0xFF  # flip bits inside the LZW sub-block
@@ -770,11 +776,12 @@ def test_jpeg_header_only_dimensions():
 
 
 def test_jpeg_rejections_fall_back_to_stub():
-    """Out-of-subset payloads raise ValueError, and _decode_image falls
-    back to the deterministic stub: truncation, a baseline scan script
-    inside a SOF2 frame (Ss=0/Se=63 is not a valid progressive scan —
-    SOF2 itself decodes for real since r12), bad Huffman stream, missing
-    EOI, non-JPEG bytes."""
+    """Out-of-subset payloads raise ValueError: truncation, a baseline
+    scan script inside a SOF2 frame (Ss=0/Se=63 is not a valid
+    progressive scan — SOF2 itself decodes for real since r12), bad
+    Huffman stream, missing EOI, non-JPEG bytes. _decode_image
+    propagates the raise for the JPEG-signed ones; non-JPEG bytes take
+    the deterministic stub."""
     import numpy as np
     import pytest
 
@@ -801,9 +808,11 @@ def test_jpeg_rejections_fall_back_to_stub():
     for bad in (truncated, bytes(progressive), no_eoi):
         with pytest.raises(ValueError):
             decode_jpeg(bad)
-        assert _decode_image(bad) == _fake_decode_image(bad)
+        with pytest.raises(ValueError):
+            _decode_image(bad)
     with pytest.raises(ValueError):
         decode_jpeg(not_jpeg)
+    assert _decode_image(not_jpeg) == _fake_decode_image(not_jpeg)
 
     # corrupt entropy data must never decode silently to wrong geometry
     garbage = bytearray(good)
@@ -1783,3 +1792,22 @@ def test_null_payload_fails_loudly(spark):
     for op in (sample_video_frames, decode_images):
         with pytest.raises(Exception, match="NULL payload"):
             op(assets).collect()
+
+
+def test_decode_images_fails_loudly_on_corrupt_signed_payload(spark):
+    """A payload with a PNG signature that does not decode fails the
+    decode_images job instead of getting the stub's plausible digest."""
+    from analysis_of_flight_delay_data_by_mapreduce_spark.operators.multimodal import (
+        encode_png,
+    )
+    from analysis_of_flight_delay_data_by_mapreduce_spark.schema import (
+        MULTIMODAL_ASSET,
+    )
+
+    truncated = encode_png(4, 4, bytes(48), 3)[:20]
+    assets = spark.createDataFrame(
+        [(1, "image", b"hello", None), (2, "image", truncated, None)],
+        MULTIMODAL_ASSET,
+    )
+    with pytest.raises(Exception, match="ValueError"):
+        decode_images(assets).collect()

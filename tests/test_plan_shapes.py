@@ -309,8 +309,8 @@ def test_bpe_pair_counts_is_topk_not_global_sort(spark):
 
 
 def test_pagerank_broadcast_face_edge_table_exchange_free(spark):
-    """The r6 perf win as a pinned invariant (VERDICT r6 item 6): with
-    broadcast_ranks=True, each of the ``iters`` rounds broadcasts the
+    """The r6 perf win as a pinned invariant (VERDICT r6 item 6): each
+    of the ``iters`` rounds broadcasts the
     node-sized rank/degree vectors into the edge join, so the edge table
     is NEVER re-partitioned for a join — zero SortMergeJoin anywhere,
     and exactly ONE bounded Exchange per iteration (the post-partial-agg
