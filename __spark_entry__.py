@@ -25,6 +25,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # The driver records CORRECTNESS rows for only the first 50 registered
 # entries; registry order is ours to choose. The window leads with the
+# only faces that write through upsert_partitions and write_orc, then the
 # only faces of three operators that were cut down to one formulation
 # (pagerank_integer, read_jsonl, ratio_threshold), then every face that
 # calls an operators.multimodal op — the whole codec tier crosses the
@@ -35,6 +36,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # rotated-out query is still re-verified by the full local check_oracle
 # sweep and the pytest oracle replicas.
 _CHECK_FIRST = [
+    # --- the only faces that reach the partition-overwrite and ORC
+    # sinks of sources/sinks.py ---
+    "ann_ivfpq_upsert_check",
+    "orders_orc_roundtrip_check",
     # --- single-formulation operators with no other witnessed face ---
     "supplier_authority_pagerank",
     "events_jsonl_ingest_check",
@@ -91,9 +96,9 @@ _CHECK_FIRST = [
     "corpus_prepare",
     "corpus_prepare_cc",
     "corpus_prepare_cc_best",
+    # --- overflow (slots 51+; designated for the next window) ---
     "corpus_prepare_audit",
     "dedup_components",
-    # --- overflow (slots 51+; designated for the next window) ---
     "events_interval_join_binned",
     "events_quantile_merge_check",
     "events_sliding",

@@ -1777,7 +1777,10 @@ def sample_video_frames(
     bytes (no av/ffmpeg in scope). A skeleton (empty) sample table
     falls back to the r10 time-aligned approximation: a nominal 25 fps
     grid over the parsed duration, digests over even mdat byte-ranges.
-    Anything else keeps the byte-chunk STUB fallback — one digest per
+    A GIF- or ``ftyp``-signed payload, or an SOI-led MP4 sample, that
+    its parser or decoder rejects raises ``ValueError`` (no stub digest
+    for a corrupt payload, as in ``decode_images``). A payload with no
+    signature keeps the byte-chunk STUB — one digest per
     ``every_n_bytes`` chunk.
 
     ``keyframes_only`` (r12): an MP4 container that carries an ``stss``
@@ -1799,63 +1802,43 @@ def sample_video_frames(
 
     def rows(aid, raw):
         if bytes(raw[:6]) in _GIF_SIGS:
-            try:
-                frames = decode_gif_frames(bytes(raw))[2]
-            except ValueError:
-                frames = None
-            if frames is not None:
-                return [
-                    (aid, f, sha(frames[f]))
-                    for f in range(0, len(frames), every_n_frames)
-                ]
+            frames = decode_gif_frames(bytes(raw))[2]
+            return [
+                (aid, f, sha(frames[f]))
+                for f in range(0, len(frames), every_n_frames)
+            ]
         if raw[4:8] == b"ftyp":
-            # MP4: sample-table-aligned sampling (r11). A malformed
-            # container falls through to the byte-chunk stub like any
-            # other opaque payload.
-            try:
-                meta = parse_mp4_meta(raw)
-            except ValueError:
-                meta = None
-            if meta is not None:
-                try:
-                    # raises for audio-only tracks / malformed tables →
-                    # the nominal-grid fallback below
-                    st = parse_mp4_samples(raw)
-                    table, sync = st["samples"], st["sync"]
-                except ValueError:
-                    table = []
-                if table:
-                    idxs = (
-                        sync
-                        if keyframes_only and sync is not None
-                        else range(0, len(table), every_n_frames)
-                    )
-                    out = []
-                    for f in idxs:
-                        off, size, _dt = table[f]
-                        sample = raw[off : off + size]
-                        if sample[:2] == b"\xff\xd8":
-                            # MJPEG-in-MP4: digest the DECODED frame
-                            # pixels; a sample that merely looks like a
-                            # JPEG falls back to its coded bytes
-                            try:
-                                sample = decode_jpeg(bytes(sample))[3]
-                            except ValueError:
-                                pass
-                        out.append((aid, f, sha(sample)))
-                    return out
-                # skeleton stbl: the r10 time-aligned even-split
-                # approximation over the mdat stream
-                mdat = mp4_mdat_bytes(raw)
-                n_nominal = max(meta["duration_ms"] // 40, 1)
-                return [
-                    (
-                        aid, f,
-                        sha(mdat[len(mdat) * f // n_nominal
-                                 : len(mdat) * (f + 1) // n_nominal]),
-                    )
-                    for f in range(0, n_nominal, every_n_frames)
-                ]
+            # MP4: sample-table-aligned sampling (r11)
+            meta = parse_mp4_meta(raw)
+            st = parse_mp4_samples(raw)
+            table, sync = st["samples"], st["sync"]
+            if table:
+                idxs = (
+                    sync
+                    if keyframes_only and sync is not None
+                    else range(0, len(table), every_n_frames)
+                )
+                out = []
+                for f in idxs:
+                    off, size, _dt = table[f]
+                    sample = raw[off : off + size]
+                    if sample[:2] == b"\xff\xd8":
+                        # MJPEG-in-MP4: digest the DECODED frame pixels
+                        sample = decode_jpeg(bytes(sample))[3]
+                    out.append((aid, f, sha(sample)))
+                return out
+            # skeleton stbl: the r10 time-aligned even-split
+            # approximation over the mdat stream
+            mdat = mp4_mdat_bytes(raw)
+            n_nominal = max(meta["duration_ms"] // 40, 1)
+            return [
+                (
+                    aid, f,
+                    sha(mdat[len(mdat) * f // n_nominal
+                             : len(mdat) * (f + 1) // n_nominal]),
+                )
+                for f in range(0, n_nominal, every_n_frames)
+            ]
         return [
             (aid, i, sha(raw[off : off + every_n_bytes]))
             for i, off in enumerate(range(0, max(len(raw), 1), every_n_bytes))

@@ -11,37 +11,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_tsv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_tsv(df: DataFrame, path: str) -> None:
     """Tab-separated text output — the reference's output shape
     (one ``part-*`` file per reducer ≙ one per Spark task)."""
-    df.write.mode(mode).option("sep", "\t").option("header", "false").csv(path)
+    df.write.mode("overwrite").option("sep", "\t").option("header", "false").csv(path)
 
 
 def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """Columnar sink. ``partition_by`` yields hive-style directory
     partitioning so downstream scans prune (the 100 TB default)."""
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
 
 
 def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
     """ORC columnar sink — same contract as :func:`write_parquet` for
     stacks standardized on ORC (Hive/Trino interop). Spark-native format:
     predicate pushdown, column pruning, and hive partitioning all apply.
     """
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.orc(path)
@@ -53,7 +47,6 @@ def write_training_shards(
     id_col: str,
     n_shards: int = 16,
     splits: dict[str, int] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Materialize a training corpus as split/shard-partitioned parquet.
 
@@ -79,7 +72,7 @@ def write_training_shards(
     out = out.select("*", shard)
     (
         out.repartition(F.col("split"), F.col("shard"))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("split", "shard")
         .parquet(path)
     )
@@ -94,26 +87,23 @@ def upsert_partitions(
     present in ``df``, leave every other partition untouched.
 
     The standard daily-increment pattern for an append-mostly lake table
-    without a table format: ``partitionOverwriteMode=dynamic`` scopes the
-    overwrite to partitions the batch actually contains, so re-running a
-    failed day is safe (same data → same partition replaced, no dupes) and
-    backfills never touch neighboring days. At 100 TB this is the
+    without a table format: the writer's ``partitionOverwriteMode=dynamic``
+    option scopes the overwrite to partitions the batch actually
+    contains, so re-running a failed day is safe (same data → same
+    partition replaced, no dupes) and backfills never touch neighboring
+    days. The option outranks the session conf, which other queries on
+    the session keep seeing unchanged. At 100 TB this is the
     difference between rewriting one day and rewriting the table. (A real
     deployment layering ACID/concurrent writers swaps in a table format —
     Delta/Iceberg MERGE — behind this same call shape.)
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.repartition(*[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.repartition(*[F.col(c) for c in partition_cols])
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
 
 
 def compact_parquet(

@@ -5,14 +5,10 @@ documents embedded, old documents re-embedded) and the ANN index must
 absorb them WITHOUT a rebuild. Each micro-batch is assigned to the
 frozen coarse centroids, PQ-encoded against the frozen codebooks, and
 key-replacingly merged into only the cluster partitions it touches —
-``operators.similarity.upsert_ivfpq_table`` driven by ``foreachBatch``,
-the same composite-per-epoch recipe as ``streaming.dedup``.
-
-Replay safety: foreachBatch is AT-LEAST-once — a crash after the upsert
-but before the checkpoint commit replays the epoch. The upsert is
-key-replacing by ``id_col`` and rewrites whole cluster partitions, so a
-replayed epoch rewrites the same partitions with the same content:
-idempotent at the sink, no duplicate ids, exactly-once-equivalent.
+``operators.similarity.upsert_ivfpq_table`` run per epoch by
+``streaming.sinks._drain_epochs``. The upsert is key-replacing by
+``id_col`` and rewrites whole cluster partitions, so a replayed epoch
+rewrites the same partitions with the same content: no duplicate ids.
 
 Quantizer lifecycle at 100 TB: the centroids/codebooks describe the
 DISTRIBUTION, not the rows — increments reuse them; retrain only on
@@ -24,6 +20,8 @@ the batch's cluster spread, never with the index size.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from .sinks import _drain_epochs
 
 
 def run_ann_ingest_stream(
@@ -41,19 +39,15 @@ def run_ann_ingest_stream(
     key-replacing touched-cluster upsert. A re-embedded id supersedes
     its old row even when the new vector lands in a DIFFERENT coarse
     cluster (the stale row is located and relocated — the
-    ``_upsert_by_cluster`` contract). ``availableNow`` drains the
-    backlog and stops (bounded replay); the first epoch against an
-    empty ``path`` bootstraps the index."""
+    ``_upsert_by_cluster`` contract). The first non-empty epoch against
+    an empty ``path`` bootstraps the index. Epoch contract:
+    :func:`~.sinks._drain_epochs`."""
     from ..operators.similarity import upsert_ivfpq_table
 
-    def _epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        upsert_ivfpq_table(
-            batch_df, path, centroids, codebooks, id_col=id_col, vec_col=vec_col
-        )
-
-    return (
-        stream_vecs.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _drain_epochs(
+        stream_vecs,
+        checkpoint,
+        lambda b, _e: upsert_ivfpq_table(
+            b, path, centroids, codebooks, id_col=id_col, vec_col=vec_col
+        ),
     )

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..operators.text import fingerprint
 from ..sources.readers import read_table_stream
+from .sinks import _drain_epochs, _upsert_epoch
 
 __all__ = [
     "read_documents_stream",
@@ -133,26 +134,15 @@ def run_minhash_dedup_stream(
 ):
     """Drive the near-dup incremental dedup over a document stream:
     every micro-batch is filtered against the static index and the
-    survivors written to an ``epoch``-partitioned parquet sink via
-    idempotent partition overwrite. ``availableNow`` drains the backlog
-    and stops (bounded replay). foreachBatch alone is AT-LEAST-once — a
-    crash after the write but before the checkpoint commit replays the
-    epoch — so a blind append would duplicate survivors, defeating the
-    dedup; partitioning by the epoch id and overwriting exactly that
-    partition (``sources.sinks.upsert_partitions``) makes the replay
-    rewrite the same partition with the same rows: exactly-once at the
-    sink, same recipe as ``streaming.sinks``."""
-    from ..sources.sinks import upsert_partitions
-
-    def _epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        out = dedup_stream_against_index_minhash(batch_df, index_docs, **kwargs)
-        upsert_partitions(out.withColumn("epoch", F.lit(epoch_id)), out_path, ["epoch"])
-
-    return (
-        stream_docs.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    survivors written to an ``epoch``-partitioned parquet sink (a blind
+    append would duplicate survivors under epoch replay). Epoch
+    contract: :func:`~.sinks._drain_epochs`."""
+    return _drain_epochs(
+        stream_docs,
+        checkpoint,
+        lambda b, e: _upsert_epoch(
+            dedup_stream_against_index_minhash(b, index_docs, **kwargs), e, out_path
+        ),
     )
 
 
@@ -197,23 +187,18 @@ def run_semantic_dedup_stream(
     checkpoint: str,
     **kwargs,
 ):
-    """Drive the semantic incremental dedup over an embedding stream —
-    same foreachBatch/availableNow contract and epoch-partitioned
-    idempotent sink as :func:`run_minhash_dedup_stream` (blind append
-    would be at-least-once under epoch replay)."""
-    from ..sources.sinks import upsert_partitions
-
-    def _epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        out = dedup_stream_against_index_semantic(
-            batch_df, index_docs, centroids, **kwargs
-        )
-        upsert_partitions(out.withColumn("epoch", F.lit(epoch_id)), out_path, ["epoch"])
-
-    return (
-        stream_docs.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Drive the semantic incremental dedup over an embedding stream
+    into an ``epoch``-partitioned parquet sink, like
+    :func:`run_minhash_dedup_stream`. Epoch contract:
+    :func:`~.sinks._drain_epochs`."""
+    return _drain_epochs(
+        stream_docs,
+        checkpoint,
+        lambda b, e: _upsert_epoch(
+            dedup_stream_against_index_semantic(b, index_docs, centroids, **kwargs),
+            e,
+            out_path,
+        ),
     )
 
 

@@ -8,9 +8,9 @@ The per-key decision (``est >= threshold`` against the frozen grid) is
 independent of which micro-batch carried the key, so any batch split
 yields the same union of flagged keys (the parity contract the tests
 pin); ``est >= true`` makes the alerts false-negative-free with respect
-to the history. foreachBatch + availableNow + the epoch-partitioned
-idempotent sink follow the ``streaming.dedup`` recipe (a blind append
-would duplicate alerts under epoch replay).
+to the history. The epoch-partitioned idempotent sink
+(``streaming.sinks._drain_epochs``) keeps epoch replay from duplicating
+alerts.
 
 At 100 TB the grid is ~KBs (broadcast into every batch) and each batch
 pays one distinct + one grid join — the alert stream is ready before
@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .sinks import _drain_epochs, _upsert_epoch
 
 __all__ = ["run_hot_key_alert_stream"]
 
@@ -41,14 +43,11 @@ def run_hot_key_alert_stream(
     probe the batch's distinct keys against the history CMS grid at
     ``grid_path`` and upsert keys with ``est >= threshold`` (candidates
     ⊇ truly-hot — the sketch cannot miss one) into the
-    epoch-partitioned alert table. ``availableNow`` drains the backlog
-    and stops (bounded replay)."""
+    epoch-partitioned alert table. Epoch contract:
+    :func:`~.sinks._drain_epochs`."""
     from ..operators.sketch import cms_estimate
-    from ..sources.sinks import upsert_partitions
 
     def _epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         grid = batch_df.sparkSession.read.parquet(grid_path)
         probe = batch_df.select(F.col(key_col).alias("__k")).distinct()
         hot = (
@@ -56,13 +55,6 @@ def run_hot_key_alert_stream(
             .filter(F.col("est") >= threshold)
             .select(F.col("__k").alias(key_col), "est")
         )
-        upsert_partitions(
-            hot.withColumn("epoch", F.lit(epoch_id)), out_path, ["epoch"]
-        )
+        _upsert_epoch(hot, epoch_id, out_path)
 
-    return (
-        stream_df.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_epochs(stream_df, checkpoint, _epoch)

@@ -48,6 +48,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sinks import _drain_epochs
+
 __all__ = [
     "compact_sample_state",
     "latest_sample_state",
@@ -235,8 +237,8 @@ def run_weighted_sample_stream(
     overwrite. After the drain, ``latest_sample_state(spark,
     state_path)`` IS the exact A-ES selection over everything this run
     ingested — equal to the batch operator on the union (parity pinned
-    in ``tests/test_streaming.py``). ``availableNow`` drains the
-    backlog and stops (bounded replay)."""
+    in ``tests/test_streaming.py``). Epoch contract:
+    :func:`~.sinks._drain_epochs`."""
     from ..operators.selection import weighted_sample_merge, weighted_sample_topk
     from ..sources.sinks import upsert_partitions
 
@@ -244,8 +246,6 @@ def run_weighted_sample_stream(
     run_cache: list[int] = []
 
     def _epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         if not run_cache:
             run_cache.append(
@@ -269,9 +269,4 @@ def run_weighted_sample_stream(
             ["run", "epoch"],
         )
 
-    return (
-        stream_docs.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_epochs(stream_docs, checkpoint, _epoch)

@@ -7,15 +7,15 @@ to pretraining-quality documents as it lands).
 Scoring is per-document against FROZEN literals (the trained
 log-ratios), so the decision for a document never depends on which
 micro-batch carried it — any batch split yields the same union of
-selected rows (the parity contract the tests pin). foreachBatch +
-availableNow + an epoch-partitioned idempotent sink follow the
-`streaming.dedup` recipe: a blind append would duplicate selections
-under epoch replay (foreachBatch alone is at-least-once)."""
+selected rows (the parity contract the tests pin). The
+epoch-partitioned idempotent sink (``streaming.sinks._drain_epochs``)
+keeps epoch replay from duplicating selections."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .sinks import _drain_epochs, _upsert_epoch
 
 __all__ = ["run_dsir_select_stream"]
 
@@ -31,28 +31,16 @@ def run_dsir_select_stream(
 ):
     """Drive DSIR selection over a document stream: each micro-batch is
     scored against the frozen trained literals and the selected rows
-    written to an ``epoch``-partitioned parquet sink via idempotent
-    partition overwrite (exactly-once at the sink under epoch replay,
-    the ``streaming.dedup`` recipe). ``availableNow`` drains the backlog
-    and stops (bounded replay)."""
+    written to an ``epoch``-partitioned parquet sink. Epoch contract:
+    :func:`~.sinks._drain_epochs`."""
     from ..operators.selection import dsir_select
-    from ..sources.sinks import upsert_partitions
 
     def _epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # dsir_select is batch-shaped for foreachBatch: the score filter
         # sits above a per-batch aggregate, so the score is evaluated
         # once (the fold face would score every row twice under a
         # pushed-down filter — see operators.selection.dsir_scores_agg)
         out = dsir_select(batch_df, id_col, text_col, logratios, min_score)
-        upsert_partitions(
-            out.withColumn("epoch", F.lit(epoch_id)), out_path, ["epoch"]
-        )
+        _upsert_epoch(out, epoch_id, out_path)
 
-    return (
-        stream_docs.writeStream.foreachBatch(_epoch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_epochs(stream_docs, checkpoint, _epoch)

@@ -1,4 +1,5 @@
-"""Streaming sinks: exactly-once-per-partition lake writes.
+"""Streaming sinks: exactly-once-per-partition lake writes, and the one
+epoch driver every streaming face runs on.
 
 Structured Streaming's file sink is append-only; aggregation streams
 need upsert semantics. The canonical pattern is ``foreachBatch`` +
@@ -9,19 +10,67 @@ partitions with the same data instead of duplicating. Update output mode
 emits each group's complete current value, and the partition layout is
 the group key — together that makes the write idempotent at partition
 granularity without a table format. (Layering Delta/Iceberg MERGE swaps
-into the same foreachBatch slot.)
+into the same foreachBatch slot.) :func:`_drain_epochs` is that pattern,
+shared by every streaming driver in this package.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+
+from ..sources.sinks import upsert_partitions
 
 __all__ = [
     "stream_daily_type_counts_upsert",
     "stream_daily_quantile_grid_upsert",
     "stream_daily_cms_upsert",
 ]
+
+
+def _drain_epochs(
+    stream: DataFrame,
+    checkpoint: str,
+    write_batch: Callable[[DataFrame, int], None],
+) -> StreamingQuery:
+    """Start ``stream`` as a ``foreachBatch`` query that calls
+    ``write_batch(batch_df, epoch_id)`` once per non-empty micro-batch,
+    and return the started query.
+
+    Contract: ``foreachBatch`` is AT-LEAST-once — a crash after the
+    write but before the checkpoint commit replays the epoch with the
+    same rows and the same ``epoch_id``. ``write_batch`` must therefore
+    be an idempotent epoch sink: it overwrites exactly what the epoch
+    owns (an aggregation-keyed or ``epoch``-keyed partition, a
+    key-replaced cluster), so a replay rewrites the same data instead of
+    duplicating it — exactly-once at the sink. An empty micro-batch
+    writes nothing (an empty write could leave a schema-less directory
+    that the next epoch's read cannot infer). ``update`` output mode
+    emits each group's current value for an aggregating stream and is
+    append for any other. ``availableNow`` drains the backlog and stops
+    (bounded replay); a continuous deployment drops the trigger.
+    """
+
+    def _epoch(batch_df: DataFrame, epoch_id: int) -> None:
+        if not batch_df.isEmpty():
+            write_batch(batch_df, epoch_id)
+
+    return (
+        stream.writeStream.outputMode("update")
+        .foreachBatch(_epoch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _upsert_epoch(out: DataFrame, epoch_id: int, path: str) -> None:
+    """Write one epoch's rows to the ``epoch``-partitioned sink at
+    ``path``, replacing only that epoch's partition."""
+    upsert_partitions(out.withColumn("epoch", F.lit(epoch_id)), path, ["epoch"])
 
 
 def stream_daily_type_counts_upsert(
@@ -41,8 +90,6 @@ def stream_daily_type_counts_upsert(
     key equals the aggregation key, which is what makes the dynamic
     partition overwrite idempotent under replay.
     """
-    from ..sources.sinks import upsert_partitions
-
     agg = (
         events.withWatermark(ts_col, watermark)
         .groupBy(F.window(ts_col, "1 day").alias("__w"), F.col(key_col))
@@ -52,19 +99,9 @@ def stream_daily_type_counts_upsert(
         )
     )
 
-    def _upsert(batch_df: DataFrame, _epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_partitions(batch_df, path, ["day", key_col])
-
-    (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_epochs(
+        agg, checkpoint, lambda b, _e: upsert_partitions(b, path, ["day", key_col])
+    ).awaitTermination()
 
 
 def stream_daily_quantile_grid_upsert(
@@ -91,7 +128,6 @@ def stream_daily_quantile_grid_upsert(
     ``qsketch_quantiles`` over the day grids — no raw-event rescan.
     """
     from ..operators.sketch import with_qsketch_bucket
-    from ..sources.sinks import upsert_partitions
 
     cents = F.round(F.col(value_col) * 100, 0).cast("bigint")
     bucketed = with_qsketch_bucket(
@@ -104,19 +140,11 @@ def stream_daily_quantile_grid_upsert(
         .select(F.to_date(F.col("__w.start")).alias("day"), "shift", "sub", "cnt")
     )
 
-    def _upsert(batch_df: DataFrame, _epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_partitions(batch_df, path, ["day", "shift", "sub"])
-
-    (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_epochs(
+        agg,
+        checkpoint,
+        lambda b, _e: upsert_partitions(b, path, ["day", "shift", "sub"]),
+    ).awaitTermination()
 
 
 def stream_daily_cms_upsert(
@@ -147,7 +175,6 @@ def stream_daily_cms_upsert(
     """
     from ..functions import word_tokens
     from ..operators.sketch import _cell
-    from ..sources.sinks import upsert_partitions
 
     # one generator per select clause: tokens first, then the seed family
     toks = docs.select(
@@ -171,16 +198,8 @@ def stream_daily_cms_upsert(
         )
     )
 
-    def _upsert(batch_df: DataFrame, _epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_partitions(batch_df, path, ["day", "seed", "cell"])
-
-    (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_epochs(
+        agg,
+        checkpoint,
+        lambda b, _e: upsert_partitions(b, path, ["day", "seed", "cell"]),
+    ).awaitTermination()

@@ -1703,7 +1703,7 @@ def test_select_keyframes_structure_and_digests(spark):
 def test_sample_video_frames_mp4_time_aligned(spark):
     """MP4 payloads sample on the REAL parsed duration (nominal 25 fps
     grid, every 2nd point), digests cover the frame's even mdat
-    byte-range, and a malformed container falls back to byte chunks."""
+    byte-range, and a malformed container raises."""
     import hashlib
 
     from analysis_of_flight_delay_data_by_mapreduce_spark.operators.mp4 import (
@@ -1727,11 +1727,47 @@ def test_sample_video_frames_mp4_time_aligned(spark):
         lo, hi = 200 * r.frame_idx // 10, 200 * (r.frame_idx + 1) // 10
         assert r.frame_sha256 == hashlib.sha256(mdat[lo:hi]).hexdigest()
 
-    # corrupt container -> ValueError inside -> byte-chunk stub path
+    # corrupt container -> the ValueError fails the job (no stub digests)
     bad = p[: len(p) // 2]
     df_bad = spark.createDataFrame([(8, bad)], "asset_id long, payload binary")
-    got = sample_video_frames(df_bad, every_n_bytes=64).collect()
-    assert len(got) == -(-len(bad) // 64)  # ceil(len/64) chunks
+    with pytest.raises(Exception, match="ValueError"):
+        sample_video_frames(df_bad, every_n_bytes=64).collect()
+
+
+def _truncated_gif() -> bytes:
+    from analysis_of_flight_delay_data_by_mapreduce_spark.operators.multimodal import (
+        GIF_FIXTURE_PALETTE,
+        encode_gif_animated,
+    )
+
+    gif = encode_gif_animated(4, 3, GIF_FIXTURE_PALETTE, [bytes(range(12))] * 3)
+    return gif[: len(gif) // 2]
+
+
+def _mjpeg_mp4_with_corrupt_sample() -> bytes:
+    from analysis_of_flight_delay_data_by_mapreduce_spark.operators.jpeg import (
+        encode_jpeg,
+    )
+    from analysis_of_flight_delay_data_by_mapreduce_spark.operators.mp4 import (
+        encode_mp4,
+    )
+
+    good = encode_jpeg(16, 16, bytes([90]) * (16 * 16 * 3), 3)
+    bad = good[:2] + bytes(len(good) - 2)  # SOI, then no valid marker
+    return encode_mp4(120, video_size=(16, 16), video_samples=[bad, good, good])
+
+
+@pytest.mark.parametrize(
+    "payload",
+    [_truncated_gif(), _mjpeg_mp4_with_corrupt_sample()],
+    ids=["gif", "mjpeg_mp4"],
+)
+def test_sample_video_frames_raises_on_corrupt_signed_payload(spark, payload):
+    """A signed video payload that its decoder rejects fails the job
+    instead of getting the byte-chunk or coded-byte stub digests."""
+    df = spark.createDataFrame([(1, payload)], "asset_id long, payload binary")
+    with pytest.raises(Exception, match="ValueError"):
+        sample_video_frames(df).collect()
 
 
 #: sha256 over each ``attach_synthetic_*`` fixture's rows for the sf0.001

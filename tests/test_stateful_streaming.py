@@ -496,3 +496,54 @@ def test_ann_ingest_stream_kill_resume_reembed_relocates(spark, tmp_path):
     assert got.count() == emb.count()
     assert got.select("vec_id").distinct().count() == emb.count()
     assert _rows(streamed) == _rows(batch)
+
+
+def test_ann_ingest_stream_survives_empty_first_batch(spark, tmp_path):
+    """A zero-row landing file drained as the first micro-batch writes
+    nothing, so the next epoch bootstraps the index from the real rows
+    (an empty first write left a schema-less index directory the next
+    epoch could not read): the streamed index equals a one-shot
+    build_ivfpq_table."""
+    import os
+
+    from analysis_of_flight_delay_data_by_mapreduce_spark.operators.similarity import (
+        build_ivfpq_table,
+        train_ivf_centroids_parquet,
+        train_pq_codebooks_parquet,
+    )
+    from analysis_of_flight_delay_data_by_mapreduce_spark.streaming.ann import (
+        run_ann_ingest_stream,
+    )
+
+    src = f"{SF_DIR}/embeddings.parquet"
+    C = train_ivf_centroids_parquet(src, n_clusters=16, seed=42)
+    cb = train_pq_codebooks_parquet(src, m=16, ksub=16, seed=42)
+    emb = read_parquet_table(spark, SF_DIR, "embeddings")
+
+    land = tmp_path / "land"
+    emb.limit(0).coalesce(1).write.parquet(str(land))
+    empty = [f for f in os.listdir(land) if f.endswith(".parquet")]
+    assert len(empty) == 1
+    old = os.path.getmtime(land / empty[0]) - 3600  # drained first
+    os.utime(land / empty[0], (old, old))
+    emb.coalesce(1).write.mode("append").parquet(str(land))
+
+    streamed = str(tmp_path / "streamed")
+    q = run_ann_ingest_stream(
+        spark.readStream.schema(emb.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(land)),
+        streamed, C, cb, str(tmp_path / "ck"),
+    )
+    q.awaitTermination(120)
+
+    batch = str(tmp_path / "batch")
+    build_ivfpq_table(emb, batch, "vec_id", "embedding", centroids=C, codebooks=cb)
+
+    def _rows(path):
+        return {
+            (r.vec_id, tuple(r.code), r.cluster)
+            for r in spark.read.parquet(path).collect()
+        }
+
+    assert _rows(streamed) == _rows(batch)
