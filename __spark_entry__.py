@@ -29,7 +29,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # only faces of three operators that were cut down to one formulation
 # (pagerank_integer, read_jsonl, ratio_threshold), then every face that
 # calls an operators.multimodal op — the whole codec tier crosses the
-# Python-worker boundary through one shared mapInArrow helper — then
+# Python-worker boundary through one shared mapInArrow helper, once per
+# fixture → operator chain — then
 # embedding_label_pca, the grouped applyInPandas face, which also starts
 # Python workers, then the faces touched by the r12/r13 rounds (the
 # postings-guard dedup tier and the exact-selector tier). Every

@@ -496,12 +496,15 @@ def _upsert_by_cluster(assigned: DataFrame, path: str, id_col: str) -> None:
     # Bootstrap: the first increment against a not-yet-existing index is
     # just the assigned batch (ADVICE r5 — a bare read raised
     # PATH_NOT_FOUND instead of creating the table). The Hadoop FS probe
-    # works for any supported scheme, not only local paths.
+    # works for any supported scheme, not only local paths. An empty
+    # first batch writes nothing: its schema-less directory would make
+    # the next call's read fail with UNABLE_TO_INFER_SCHEMA.
     jvm = spark.sparkContext._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     if not fs.exists(hpath):
-        upsert_partitions(assigned, path, ["cluster"])
+        if not assigned.isEmpty():
+            upsert_partitions(assigned, path, ["cluster"])
         return
     touched = {int(r["cluster"]) for r in assigned.select("cluster").distinct().collect()}
     # A re-embedded vector can assign to a DIFFERENT coarse cluster than

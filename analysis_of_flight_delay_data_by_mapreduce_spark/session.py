@@ -16,6 +16,16 @@ When they do not resolve without the archives, or the installed pyspark is
 not the version in ``pyspark.zip``, it keeps Spark's path and behaves like
 the stock daemon. The package ``__init__`` imports nothing, so pyspark is
 not loaded from the zip before the daemon fixes the path.
+
+DataFrame call-site capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+PySpark wraps every Column and DataFrame op to record the Python call
+site in the JVM, about 10 py4j round trips per op (``F.col`` takes 13
+instead of 3, ``==`` 11 instead of 1), which is most of the driver-side
+time spent building a query. What is lost is the Python call site
+(file and line) in the ``== DataFrame ==`` block of Spark error
+messages, which then names a JVM frame instead; the exception class,
+its error condition and the rest of the message are unchanged.
 """
 
 from __future__ import annotations
@@ -70,6 +80,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python workers import pyspark from site-packages (module docstring).
         .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+        # No Python call-site capture per Column op (module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # DuckDB (the correctness oracle) treats timestamps as UTC-naive.
         .config("spark.sql.session.timeZone", "UTC")
         # The test data store timestamp_ntz micros, which sources.readers

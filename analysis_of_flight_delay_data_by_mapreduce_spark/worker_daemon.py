@@ -14,12 +14,22 @@ archives from ``sys.path`` and their importers from
 ``sys.path_importer_cache`` before anything imports pyspark. Otherwise the
 path stays as Spark set it. Either way it then runs the stock
 ``pyspark.daemon.manager()``.
+
+Each task also turns on TCP quick-ACK on its worker's socket. The JVM
+writes a task's header, command and input to that socket in several
+small sends and sets no ``TCP_NODELAY``, so Nagle's algorithm holds each
+send until the previous one is ACKed; the worker sends nothing back
+until it has read its input, so its kernel delays that ACK, up to 40 ms
+on Linux. Quick-ACK mode sends the ACK at once. The kernel drops out of
+that mode by itself, so it is turned on again at the start of every
+task. Unix domain sockets have no ACKs and are left alone.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import socket
 import sys
 import zipfile
 from importlib.machinery import PathFinder
@@ -86,8 +96,23 @@ def _drop_archives() -> None:
             del sys.path_importer_cache[key]
 
 
+def quick_ack(worker):
+    """``worker(sock, authenticated)`` with quick-ACK turned on for a TCP
+    ``sock`` before the task runs (module docstring)."""
+
+    def run(sock, authenticated):
+        if sock.family in (socket.AF_INET, socket.AF_INET6) and hasattr(
+            socket, "TCP_QUICKACK"
+        ):
+            sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_QUICKACK, 1)
+        return worker(sock, authenticated)
+
+    return run
+
+
 if __name__ == "__main__":
     _drop_archives()
     from pyspark import daemon
 
+    daemon.worker = quick_ack(daemon.worker)
     daemon.manager()

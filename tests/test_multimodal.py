@@ -1847,3 +1847,82 @@ def test_decode_images_fails_loudly_on_corrupt_signed_payload(spark):
     )
     with pytest.raises(Exception, match="ValueError"):
         decode_images(assets).collect()
+
+
+def _docs(spark):
+    from analysis_of_flight_delay_data_by_mapreduce_spark.sources import (
+        read_parquet_table,
+    )
+    from conftest import SF_DIR
+
+    return read_parquet_table(spark, SF_DIR, "documents").select("doc_id")
+
+
+_FIXTURE_OPS = {
+    "png_decode": ("attach_synthetic_png", "decode_images"),
+    "mp4_meta": ("attach_synthetic_mp4", "video_metadata"),
+}
+
+
+@pytest.mark.parametrize("chain", sorted(_FIXTURE_OPS))
+def test_codec_chain_crosses_into_python_once(spark, chain):
+    """A fixture → operator chain plans one MapInArrow node; over a
+    persisted fixture it plans two and reads the cache."""
+    from analysis_of_flight_delay_data_by_mapreduce_spark.operators import (
+        multimodal,
+    )
+    from analysis_of_flight_delay_data_by_mapreduce_spark.plans.inspect import (
+        plan_text,
+    )
+
+    fixture, op = (getattr(multimodal, n) for n in _FIXTURE_OPS[chain])
+    fused = plan_text(op(fixture(_docs(spark), "doc_id")), "simple")
+    assert fused.count("MapInArrow ") == 1
+
+    cached = fixture(_docs(spark), "doc_id").persist()
+    try:
+        unfused = plan_text(op(cached), "simple")
+        assert unfused.count("MapInArrow ") == 2
+        assert "InMemoryRelation" in unfused
+    finally:
+        cached.unpersist()
+
+
+@pytest.mark.parametrize("codec", ["bmp", "png", "gif", "jpeg"])
+def test_fused_decode_equals_unfused(spark, codec):
+    """decode_images over a fixture gives the same rows fused into the
+    fixture's mapInArrow as over the persisted (unfused) fixture."""
+    from analysis_of_flight_delay_data_by_mapreduce_spark.operators import (
+        multimodal,
+    )
+
+    fixture = getattr(multimodal, f"attach_synthetic_{codec}")
+    fused = decode_images(fixture(_docs(spark), "doc_id")).collect()
+    cached = fixture(_docs(spark), "doc_id").persist()
+    try:
+        unfused = decode_images(cached).collect()
+    finally:
+        cached.unpersist()
+    assert len(fused) == _docs(spark).count()
+    assert sorted(fused) == sorted(unfused)
+
+
+def test_null_payload_mid_chain_fails_loudly(spark):
+    """A first stage that emits a NULL payload makes the decoder stage
+    raise, as a NULL read from a table does."""
+    from analysis_of_flight_delay_data_by_mapreduce_spark.operators.multimodal import (
+        _map_arrow,
+    )
+    from analysis_of_flight_delay_data_by_mapreduce_spark.schema import (
+        MULTIMODAL_ASSET,
+    )
+
+    ids = spark.range(0, 4).withColumnRenamed("id", "asset_id")
+    assets = _map_arrow(
+        ids,
+        ["asset_id"],
+        lambda aid: (aid, "image", None if aid == 2 else b"hello", None),
+        MULTIMODAL_ASSET,
+    )
+    with pytest.raises(Exception, match="ValueError: 1 NULL payload"):
+        decode_images(assets).collect()

@@ -496,3 +496,33 @@ def test_upsert_ivfpq_table_touches_only_batch_clusters(spark, tmp_path):
     p2 = str(tmp_path / "fresh")
     upsert_ivfpq_table(batch, p2, C, cb, "vec_id", "embedding")
     assert spark.read.parquet(p2).count() == batch.count()
+
+
+def test_upsert_ivfpq_table_empty_first_batch(spark, tmp_path):
+    """A zero-row first increment on a fresh path writes nothing, so the
+    next increment bootstraps the index: the result equals a build over
+    the same rows."""
+    from analysis_of_flight_delay_data_by_mapreduce_spark.operators.similarity import (
+        build_ivfpq_table,
+        train_ivf_centroids_parquet,
+        train_pq_codebooks_parquet,
+        upsert_ivfpq_table,
+    )
+
+    src = f"{SF_DIR}/embeddings.parquet"
+    C = train_ivf_centroids_parquet(src, n_clusters=16, seed=42)
+    cb = train_pq_codebooks_parquet(src, m=16, ksub=16, seed=42)
+    emb = read_parquet_table(spark, SF_DIR, "embeddings")
+
+    path = str(tmp_path / "ivfpq")
+    upsert_ivfpq_table(emb.limit(0), path, C, cb, "vec_id", "embedding")
+    upsert_ivfpq_table(emb, path, C, cb, "vec_id", "embedding")
+    built = str(tmp_path / "built")
+    build_ivfpq_table(emb, built, "vec_id", "embedding", centroids=C, codebooks=cb)
+
+    def rows(p):
+        return sorted(
+            (r.vec_id, r.cluster, list(r.code)) for r in spark.read.parquet(p).collect()
+        )
+
+    assert rows(path) == rows(built)

@@ -4,12 +4,16 @@ Spark's archives (``worker_daemon``)."""
 from __future__ import annotations
 
 import os
+import socket
 import zipfile
 
 import pyarrow as pa
 import pyspark
 
-from analysis_of_flight_delay_data_by_mapreduce_spark.worker_daemon import select_path
+from analysis_of_flight_delay_data_by_mapreduce_spark.worker_daemon import (
+    quick_ack,
+    select_path,
+)
 
 
 def _spark_archive(entry: str) -> bool:
@@ -78,3 +82,30 @@ def test_select_path(tmp_path):
         path_with("other_version", ("pyspark", "4.0.0"), ("py4j", None)),
     ):
         assert select_path(path) == path
+
+
+def test_quick_ack_turned_on_before_each_task():
+    """The worker's TCP socket is in quick-ACK mode when a task starts,
+    even after the kernel left that mode; a Unix domain socket is left
+    alone."""
+    seen = []
+
+    def worker(sock, authenticated):
+        if sock.family == socket.AF_UNIX:
+            seen.append(None)
+        else:
+            seen.append(sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_QUICKACK))
+        return 0
+
+    run = quick_ack(worker)
+    with socket.create_server(("127.0.0.1", 0)) as srv:
+        with socket.create_connection(srv.getsockname()):
+            conn, _ = srv.accept()
+            with conn:
+                for _ in range(2):
+                    conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_QUICKACK, 0)
+                    assert run(conn, False) == 0
+    a, b = socket.socketpair(socket.AF_UNIX)
+    with a, b:
+        assert run(a, True) == 0
+    assert seen == [1, 1, None]
