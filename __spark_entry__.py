@@ -25,18 +25,30 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # The driver records CORRECTNESS rows for only the first 50 registered
 # entries; registry order is ours to choose. The window leads with the
-# only faces that write through upsert_partitions and write_orc, then the
+# faces whose Spark code changed last (the shared interval frame,
+# one-table LSH) and the similarity pandas-UDF faces, then the only
+# faces that write through upsert_partitions and write_orc, then the
 # only faces of three operators that were cut down to one formulation
 # (pagerank_integer, read_jsonl, ratio_threshold), then every face that
 # calls an operators.multimodal op — the whole codec tier crosses the
 # Python-worker boundary through one shared mapInArrow helper, once per
-# fixture → operator chain — then
-# embedding_label_pca, the grouped applyInPandas face, which also starts
-# Python workers, then the faces touched by the r12/r13 rounds (the
-# postings-guard dedup tier and the exact-selector tier). Every
-# rotated-out query is still re-verified by the full local check_oracle
-# sweep and the pytest oracle replicas.
+# fixture → operator chain — then embedding_label_pca, the grouped
+# applyInPandas face, which also starts Python workers, then the faces
+# touched by the r13 round (the exact-selector tier and the
+# postings-guard dedup tier). Every rotated-out query is still
+# re-verified by the full local check_oracle sweep and the pytest
+# oracle replicas.
 _CHECK_FIRST = [
+    # --- the latest Spark-side changes: both interval-join faces build
+    # one shared promo frame; one-table sign-bit LSH runs through the
+    # multi-table pandas UDF ---
+    "events_interval_join",
+    "events_interval_join_binned",
+    "ann_cosine_topk_lsh",
+    # --- pandas-UDF faces of operators/similarity.py (IVF assignment,
+    # PQ encoding): Python workers outside the codec tier ---
+    "ann_cosine_topk_ivf",
+    "embedding_pq_codes",
     # --- the only faces that reach the partition-overwrite and ORC
     # sinks of sources/sinks.py ---
     "ann_ivfpq_upsert_check",
@@ -71,13 +83,7 @@ _CHECK_FIRST = [
     # --- grouped applyInPandas: a Python-worker face outside the codec
     # tier (workers start from session.py's daemon module) ---
     "embedding_label_pca",
-    # --- r12-touched, previously unwitnessed (VERDICT r12 item 5) ---
-    "dedup_minhash",
-    "dedup_ngram_jaccard",
-    "vocab_bpe_pair_counts",
-    "events_value_mad_outliers",
     # --- r13: exact-selector tier (sketch.py) ---
-    "events_mad_outliers_by_type",
     "events_quantiles_by_type",
     "user_spend_quartiles",
     "docs_quantile_sketch_check",
@@ -98,9 +104,13 @@ _CHECK_FIRST = [
     "corpus_prepare_cc",
     "corpus_prepare_cc_best",
     # --- overflow (slots 51+; designated for the next window) ---
+    "dedup_minhash",
+    "dedup_ngram_jaccard",
+    "vocab_bpe_pair_counts",
+    "events_value_mad_outliers",
+    "events_mad_outliers_by_type",
     "corpus_prepare_audit",
     "dedup_components",
-    "events_interval_join_binned",
     "events_quantile_merge_check",
     "events_sliding",
     "nation_customer_counts",

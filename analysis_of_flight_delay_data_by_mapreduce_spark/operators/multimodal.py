@@ -54,6 +54,7 @@ Decode is per-row parallel: zero shuffle.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import struct
 import weakref
@@ -153,6 +154,13 @@ def _binary_views(col) -> list[memoryview]:
     return [mv[lo:hi] for lo, hi in zip(offs, offs[1:])]
 
 
+@functools.cache
+def _ddl_schema(ddl: str) -> StructType:
+    """``StructType.fromDDL`` once per distinct DDL string per process:
+    the parse is a JVM round trip, and the codec schemas are constants."""
+    return StructType.fromDDL(ddl)
+
+
 #: Every frame ``_map_arrow`` returned → (the projected frame its op
 #: chain reads, the chain's stages). A ``_map_arrow`` over such a frame
 #: extends the chain instead of crossing into Python a second time.
@@ -189,7 +197,7 @@ def _map_arrow(
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
+        schema = _ddl_schema(schema)
     stage = (list(cols), fn, to_arrow_schema(schema), explode)
     if df in _CHAINS and not df.is_cached:
         inp, stages = _CHAINS[df]

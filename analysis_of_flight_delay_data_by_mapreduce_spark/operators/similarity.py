@@ -97,26 +97,10 @@ def cosine_topk(
 def bucketize_hyperplane(
     df: DataFrame, vec_col: str, hyperplanes: list[list[float]], out: str = "bucket"
 ) -> DataFrame:
-    """Sign-bit LSH bucket id for each vector (one bit per hyperplane).
-
-    Implemented as a vectorized pandas UDF: one numpy matmul per Arrow
-    batch, hyperplanes captured once in the closure (broadcast with the
-    task). This is the deliberate exception to the no-UDF rule — inlining
-    ``bits × dim`` literal doubles into a Catalyst expression tree makes
-    planning+Janino compile dominate (measured ~17 s at 8×64; at a
-    realistic 16×768 it is pathological), while the matmul is microseconds
-    per batch. Per-row parallel, zero shuffle.
-    """
-    H = np.asarray(hyperplanes, dtype="float64")  # (bits, dim)
-    weights = (1 << np.arange(H.shape[0], dtype="int64")).astype("int64")
-
-    @F.pandas_udf("long")
-    def _bucket(s: pd.Series) -> pd.Series:
-        M = np.stack(s.to_numpy())  # (batch, dim)
-        bits = (M.astype("float64") @ H.T) >= 0.0
-        return pd.Series((bits @ weights).astype("int64"))
-
-    return df.withColumn(out, _bucket(F.col(vec_col)))
+    """Sign-bit LSH bucket id for each vector (one bit per hyperplane):
+    the one-table case of ``bucketize_hyperplane_tables``."""
+    tables = bucketize_hyperplane_tables(df, vec_col, hyperplanes, 1, out)
+    return tables.withColumn(out, F.col(out)[0])
 
 
 def bucketize_hyperplane_tables(
@@ -129,9 +113,13 @@ def bucketize_hyperplane_tables(
     """Multi-table sign-bit LSH: split ``hyperplanes`` into ``n_tables``
     equal groups and emit one bucket id per table (``array<long>``).
 
-    One numpy matmul per Arrow batch computes ALL tables' bits at once —
-    the multi-table generalization of ``bucketize_hyperplane`` (same
-    deliberate pandas-UDF exception; see that docstring). Per-row
+    Implemented as a vectorized pandas UDF: one numpy matmul per Arrow
+    batch computes ALL tables' bits at once, hyperplanes captured once in
+    the closure (broadcast with the task). This is the deliberate
+    exception to the no-UDF rule — inlining ``bits × dim`` literal
+    doubles into a Catalyst expression tree makes planning+Janino compile
+    dominate (measured ~17 s at 8×64; at a realistic 16×768 it is
+    pathological), while the matmul is microseconds per batch. Per-row
     parallel, zero shuffle.
     """
     H = np.asarray(hyperplanes, dtype="float64")  # (tables*bits, dim)
@@ -316,8 +304,9 @@ def assign_ivf_cluster(
     df: DataFrame, vec_col: str, centroids: list[list[float]], out: str = "cluster"
 ) -> DataFrame:
     """Nearest-centroid id per vector (vectorized pandas UDF, one matmul
-    per Arrow batch — same rationale as ``bucketize_hyperplane``). At scale
-    the table is written ``partitionBy(cluster)`` so probes prune I/O."""
+    per Arrow batch — same rationale as ``bucketize_hyperplane_tables``).
+    At scale the table is written ``partitionBy(cluster)`` so probes
+    prune I/O."""
     C = np.asarray(centroids, dtype="float64")  # (k, dim)
     C_sq = (C**2).sum(axis=1)
 

@@ -21,10 +21,23 @@ Mapping of the reference's flight semantics onto the TPC-H-ish tables
 rate ≙ price/discount columns, A/D flag ≙ ``l_linestatus``), ``events``
 stands in for the weblog (user ≙ ``user_id``, url ≙ ``event_type``,
 date ≙ ``date(ts)``), ``documents.text`` for the word-count corpus.
+
+Each oracle stage that several faces share is declared once and composed
+into their SQL. The text-pipeline CTE chains (word tokens and 3-gram
+shingles, self and increment pair counts with their Jaccard cuts, the
+quality stage, the exact-fingerprint stage, the transitive closure) live
+in the shared-fragment block after ``_WS_TOKENS_SQL``. A stage that two
+faces share sits above the first of them: ``_COSINE_Q0_CTES``,
+``_SESSION_GAP_CTES``, ``_INTERVAL_JOIN_ORACLE``, ``_AES_SAMPLE_ORACLE``.
+Constants trained from the data (IVF centroids, PQ codebooks, BM25
+statistics, BPE merges, DSIR log-ratios, label PCA, twin-rendered VALUES
+oracles) are computed once per ``sf_dir`` by a ``functools.cache`` on
+the function that computes them.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
@@ -279,6 +292,160 @@ from ..streaming.windows import windowed_event_counts  # noqa: E402
 _WS_TOKENS_SQL = r"list_filter(string_split_regex({col}, '[ \t\n\x0b\f\r]+'), t -> t <> '')"
 _EN_STOP_SQL = "[" + ", ".join(f"'{w}'" for w in text_ops.LANG_STOPWORDS["en"]) + "]"
 
+# Shared DuckDB oracle stages. Each CTE chain that more than one oracle
+# runs is declared once here and composed into those oracles; every
+# caller fills a ``{field}`` with ``.format(...)``. A chain fixes its CTE
+# names (toks, sh, sizes, inter, pairs, ...), so an oracle composing it
+# must not define those names again.
+
+# Normalized exact fingerprint (operators.text.fingerprint): md5 of the
+# lower-cased, trimmed, whitespace-collapsed text.
+_FP_MD5_SQL = r"md5(regexp_replace(trim(lower(text)), '[ \t\n\x0b\f\r]+', ' ', 'g'))"
+
+# toks(doc_id, tk): the whitespace tokens of each row of ``{src}``.
+_TOKS_CTE = f"""toks AS (
+      SELECT doc_id,
+             {_WS_TOKENS_SQL.format(col="text")} AS tk
+      FROM {{src}}
+    )"""
+
+# toks, then sh(doc_id, s): each document's DISTINCT word 3-gram
+# shingles (a document under 3 tokens is one shingle) — the shingle set
+# of ngram_jaccard_pairs(shingle_k=3, mode="word").
+_SHINGLE_CTES = (
+    _TOKS_CTE
+    + """, sh AS (
+      SELECT DISTINCT doc_id,
+             unnest(CASE WHEN len(tk) >= 3
+                    THEN list_transform(range(1, len(tk)-1),
+                         i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
+                    ELSE [array_to_string(tk, ' ')] END) AS s
+      FROM toks
+    )"""
+)
+
+# Over sh: shingle-set sizes and the shared-shingle count ``i`` of every
+# self pair id_a < id_b; _JACCARD_CUT_SQL keeps the pairs whose Jaccard
+# |A∩B| / (|A| + |B| - |A∩B|) reaches ``{threshold}``.
+_SELF_PAIR_CTES = """sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+    inter AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
+      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    )"""
+_JACCARD_CUT_SQL = """FROM inter
+    JOIN sizes sa ON id_a = sa.doc_id
+    JOIN sizes sb ON id_b = sb.doc_id
+    WHERE i / CAST(sa.sz + sb.sz - i AS DOUBLE) >= {threshold}"""
+
+# shingles of ``{src}`` → pairs(id_a, id_b) at Jaccard >= ``{threshold}``.
+_NEAR_PAIR_CTES = (
+    _SHINGLE_CTES
+    + ", "
+    + _SELF_PAIR_CTES
+    + """, pairs AS (
+      SELECT id_a, id_b
+      """
+    + _JACCARD_CUT_SQL
+    + """
+    )"""
+)
+
+# Over sh: the increment (doc_id % 5 = 4, "today's crawl") matched
+# against the history (every other doc): shared-shingle count ``i`` per
+# (new nid, old oid); _INCREMENT_CUT_SQL is the Jaccard cut.
+_INCREMENT_PAIR_CTES = """sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+    inter AS (
+      SELECT n.doc_id AS nid, o.doc_id AS oid, count(*) AS i
+      FROM sh n JOIN sh o ON n.s = o.s
+      WHERE n.doc_id % 5 = 4 AND o.doc_id % 5 <> 4
+      GROUP BY 1, 2
+    )"""
+_INCREMENT_CUT_SQL = """FROM inter
+    JOIN sizes sn ON nid = sn.doc_id
+    JOIN sizes so ON oid = so.doc_id
+    WHERE i / CAST(sn.sz + so.sz - i AS DOUBLE) >= {threshold}"""
+
+# Transitive closure of ``pairs`` (needs WITH RECURSIVE): comp(id,
+# component) labels every paired id with the min id reachable from it.
+_CLOSURE_CTES = """und AS (
+      SELECT id_a AS a, id_b AS b FROM pairs
+      UNION
+      SELECT id_b, id_a FROM pairs
+    ), reach(a, b) AS (
+      SELECT a, b FROM und
+      UNION
+      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
+    ), comp AS (
+      SELECT a AS id, LEAST(a, MIN(b)) AS component FROM reach GROUP BY a
+    )"""
+
+# C4/Gopher quality stage (operators.text.quality_score) over documents,
+# carrying the columns ``{keep}``: feats holds the raw counts, scored the
+# 6-dp quality. Per-row double arithmetic in the same operation order on
+# both engines.
+_QUALITY_FEATS_CTE = rf"""feats AS (
+      SELECT {{keep}},
+             length(text) AS n_chars,
+             CAST(len({_WS_TOKENS_SQL.format(col="text")}) AS BIGINT) AS n_tokens,
+             CAST(len(list_filter({_WS_TOKENS_SQL.format(col="text")},
+                      t -> list_contains({_EN_STOP_SQL}, lower(t)))) AS BIGINT) AS n_stop,
+             length(text) - length(regexp_replace(text, '[.,;:!?''"()]', '', 'g')) AS n_punct,
+             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit
+      FROM documents
+    )"""
+_QUALITY_CTES = (
+    _QUALITY_FEATS_CTE
+    + """, scored AS (
+      SELECT {keep},
+             round(0.4 * least(CAST(n_tokens AS DOUBLE) / 64.0, 1.0)
+                 + 0.3 * least(CASE WHEN n_tokens > 0
+                        THEN CAST(n_stop AS DOUBLE) / CAST(n_tokens AS DOUBLE)
+                        ELSE 0.0 END * 5.0, 1.0)
+                 + 0.3 * (1.0 - least(CASE WHEN n_chars > 0
+                        THEN CAST(n_punct AS DOUBLE) / CAST(n_chars AS DOUBLE)
+                        ELSE 0.0 END * 10.0
+                      + CASE WHEN n_chars > 0
+                        THEN CAST(n_digit AS DOUBLE) / CAST(n_chars AS DOUBLE)
+                        ELSE 0.0 END * 5.0, 1.0)),
+               6) AS quality
+      FROM feats
+    )"""
+)
+
+# The corpus-prep exact stage over ``scored``: quality gate at 0.4
+# (qual), fingerprint (fps, carrying ``cols``), one survivor per
+# fingerprint (keep1, the ``keep1`` SELECT) and its rows (kept).
+_MIN_ID_KEEP1 = "SELECT MIN(doc_id) AS doc_id FROM fps GROUP BY fp"
+
+
+def _exact_fp_ctes(cols: str, keep1: str) -> str:
+    kept = ", ".join(f"f.{c}" for c in cols.split(", "))
+    return f"""qual AS (
+      SELECT * FROM scored WHERE quality >= 0.4
+    ), fps AS (
+      SELECT {cols},
+             {_FP_MD5_SQL} AS fp
+      FROM qual
+    ), keep1 AS (
+      {keep1}
+    ), kept AS (
+      SELECT {kept} FROM fps f JOIN keep1 USING (doc_id)
+    )"""
+
+
+def _corpus_pair_ctes(cols: str, keep1: str) -> str:
+    """The corpus_prepare* chain up to ``pairs``: quality → exact
+    fingerprint dedup → word-3-gram Jaccard >= 0.5 pairs among the kept
+    documents."""
+    return (
+        _QUALITY_CTES.format(keep="doc_id, text")
+        + ", "
+        + _exact_fp_ctes(cols, keep1)
+        + ", "
+        + _NEAR_PAIR_CTES.format(src="kept", threshold=0.5)
+    )
+
 
 def _planes_sql(planes: list[list[float]]) -> str:
     """Render seeded hyperplanes as a DuckDB nested-list literal.
@@ -320,8 +487,8 @@ def _lsh_bucket_sql(vec_expr: str, n_bits: int, plane_offset_expr: str = "0") ->
 # ---------------------------------------------------------------------------
 @register(
     "dedup_exact",
-    oracle=r"""
-    SELECT md5(regexp_replace(trim(lower(text)), '[ \t\n\x0b\f\r]+', ' ', 'g')) AS fp,
+    oracle=f"""
+    SELECT {_FP_MD5_SQL} AS fp,
            min(doc_id) AS doc_id
     FROM documents
     GROUP BY 1
@@ -342,30 +509,11 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dedup_ngram_jaccard",
-    oracle=r"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM documents
-    ), sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(CASE WHEN len(tk) >= 3
-                    THEN list_transform(range(1, len(tk)-1),
-                         i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
-                    ELSE [array_to_string(tk, ' ')] END) AS s
-      FROM toks
-    ), sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    oracle=f"""
+    WITH {_SHINGLE_CTES.format(src="documents")}, {_SELF_PAIR_CTES}
     SELECT id_a, id_b,
            i / CAST(sa.sz + sb.sz - i AS DOUBLE) AS jaccard
-    FROM inter
-    JOIN sizes sa ON id_a = sa.doc_id
-    JOIN sizes sb ON id_b = sb.doc_id
-    WHERE i / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.3
+    {_JACCARD_CUT_SQL.format(threshold=0.3)}
     """,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -393,51 +541,40 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle is exact by construction at any SF. Recall vs the exact pair
 # set stays pinned by dedup_minhash_recall_check below.
 # ---------------------------------------------------------------------------
-_dedup_twin_cache: dict[tuple[str, str], str] = {}
-
-
+@functools.cache
 def _dedup_minhash_oracle(sf_dir: str) -> str:
-    key = ("minhash", sf_dir)
-    if key not in _dedup_twin_cache:
-        from ..operators.dedup_twin import minhash_lsh_pairs_parquet
+    from ..operators.dedup_twin import minhash_lsh_pairs_parquet
 
-        pairs = minhash_lsh_pairs_parquet(sf_dir)
-        if pairs:
-            values = ", ".join(f"({a}, {b})" for a, b in pairs)
-            sql = f"""
-            SELECT CAST(v.a AS BIGINT) AS id_a, CAST(v.b AS BIGINT) AS id_b
-            FROM (VALUES {values}) v(a, b)
-            """
-        else:
-            sql = """
-            SELECT CAST(NULL AS BIGINT) AS id_a, CAST(NULL AS BIGINT) AS id_b
-            WHERE FALSE
-            """
-        _dedup_twin_cache[key] = sql
-    return _dedup_twin_cache[key]
+    pairs = minhash_lsh_pairs_parquet(sf_dir)
+    if pairs:
+        values = ", ".join(f"({a}, {b})" for a, b in pairs)
+        return f"""
+        SELECT CAST(v.a AS BIGINT) AS id_a, CAST(v.b AS BIGINT) AS id_b
+        FROM (VALUES {values}) v(a, b)
+        """
+    return """
+    SELECT CAST(NULL AS BIGINT) AS id_a, CAST(NULL AS BIGINT) AS id_b
+    WHERE FALSE
+    """
 
 
+@functools.cache
 def _dedup_simhash_oracle(sf_dir: str) -> str:
-    key = ("simhash", sf_dir)
-    if key not in _dedup_twin_cache:
-        from ..operators.dedup_twin import simhash_pairs_parquet
+    from ..operators.dedup_twin import simhash_pairs_parquet
 
-        triples = simhash_pairs_parquet(sf_dir)
-        if triples:
-            values = ", ".join(f"({a}, {b}, {h})" for a, b, h in triples)
-            sql = f"""
-            SELECT CAST(v.a AS BIGINT) AS id_a, CAST(v.b AS BIGINT) AS id_b,
-                   CAST(v.h AS INT) AS hamming
-            FROM (VALUES {values}) v(a, b, h)
-            """
-        else:
-            sql = """
-            SELECT CAST(NULL AS BIGINT) AS id_a, CAST(NULL AS BIGINT) AS id_b,
-                   CAST(NULL AS INT) AS hamming
-            WHERE FALSE
-            """
-        _dedup_twin_cache[key] = sql
-    return _dedup_twin_cache[key]
+    triples = simhash_pairs_parquet(sf_dir)
+    if triples:
+        values = ", ".join(f"({a}, {b}, {h})" for a, b, h in triples)
+        return f"""
+        SELECT CAST(v.a AS BIGINT) AS id_a, CAST(v.b AS BIGINT) AS id_b,
+               CAST(v.h AS INT) AS hamming
+        FROM (VALUES {values}) v(a, b, h)
+        """
+    return """
+    SELECT CAST(NULL AS BIGINT) AS id_a, CAST(NULL AS BIGINT) AS id_b,
+           CAST(NULL AS INT) AS hamming
+    WHERE FALSE
+    """
 
 
 @register("dedup_minhash", oracle=_dedup_minhash_oracle)
@@ -470,29 +607,10 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dedup_minhash_recall_check",
-    oracle=r"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM documents
-    ), sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(CASE WHEN len(tk) >= 3
-                    THEN list_transform(range(1, len(tk)-1),
-                         i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
-                    ELSE [array_to_string(tk, ' ')] END) AS s
-      FROM toks
-    ), sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    oracle=f"""
+    WITH {_SHINGLE_CTES.format(src="documents")}, {_SELF_PAIR_CTES}
     SELECT CAST(COUNT(*) AS BIGINT) AS n_exact, TRUE AS recall_ok
-    FROM inter
-    JOIN sizes sa ON id_a = sa.doc_id
-    JOIN sizes sb ON id_b = sb.doc_id
-    WHERE i / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.3
+    {_JACCARD_CUT_SQL.format(threshold=0.3)}
     """,
 )
 def dedup_minhash_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -603,9 +721,9 @@ def dedup_simhash_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dedup_incremental",
-    oracle=r"""
+    oracle=f"""
     WITH fps AS (
-      SELECT doc_id, md5(regexp_replace(trim(lower(text)), '[ \t\n\x0b\f\r]+', ' ', 'g')) AS fp
+      SELECT doc_id, {_FP_MD5_SQL} AS fp
       FROM documents
     ), exact_clean AS (
       SELECT n.doc_id
@@ -613,29 +731,9 @@ def dedup_simhash_check(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE n.doc_id % 5 = 4
         AND NOT EXISTS (SELECT 1 FROM fps o
                         WHERE o.doc_id % 5 <> 4 AND o.fp = n.fp)
-    ), toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM documents
-    ), sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(CASE WHEN len(tk) >= 3
-                    THEN list_transform(range(1, len(tk)-1),
-                         i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
-                    ELSE [array_to_string(tk, ' ')] END) AS s
-      FROM toks
-    ), sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT n.doc_id AS nid, o.doc_id AS oid, count(*) AS i
-      FROM sh n JOIN sh o ON n.s = o.s
-      WHERE n.doc_id % 5 = 4 AND o.doc_id % 5 <> 4
-      GROUP BY 1, 2
-    ), near AS (
+    ), {_SHINGLE_CTES.format(src="documents")}, {_INCREMENT_PAIR_CTES}, near AS (
       SELECT DISTINCT nid
-      FROM inter
-      JOIN sizes sn ON nid = sn.doc_id
-      JOIN sizes so ON oid = so.doc_id
-      WHERE i / CAST(sn.sz + so.sz - i AS DOUBLE) >= 0.5
+      {_INCREMENT_CUT_SQL.format(threshold=0.5)}
     )
     SELECT e.doc_id FROM exact_clean e
     WHERE NOT EXISTS (SELECT 1 FROM near WHERE near.nid = e.doc_id)
@@ -674,31 +772,11 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dedup_incremental_minhash_check",
-    oracle=r"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM documents
-    ), sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(CASE WHEN len(tk) >= 3
-                    THEN list_transform(range(1, len(tk)-1),
-                         i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
-                    ELSE [array_to_string(tk, ' ')] END) AS s
-      FROM toks
-    ), sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT n.doc_id AS nid, o.doc_id AS oid, count(*) AS i
-      FROM sh n JOIN sh o ON n.s = o.s
-      WHERE n.doc_id % 5 = 4 AND o.doc_id % 5 <> 4
-      GROUP BY 1, 2
-    )
+    oracle=f"""
+    WITH {_SHINGLE_CTES.format(src="documents")}, {_INCREMENT_PAIR_CTES}
     SELECT CAST(COUNT(*) AS BIGINT) AS n_exact,
            TRUE AS subset_ok, TRUE AS recall_ok
-    FROM inter
-    JOIN sizes sn ON nid = sn.doc_id
-    JOIN sizes so ON oid = so.doc_id
-    WHERE i / CAST(sn.sz + so.sz - i AS DOUBLE) >= 0.3
+    {_INCREMENT_CUT_SQL.format(threshold=0.3)}
     """,
 )
 def dedup_incremental_minhash_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -804,12 +882,10 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Brute-force exact cosine top-k vs a query vector (vec_id 0) — the ANN
 # baseline. Scores rounded to 6 dp on BOTH engines and used as the sort key,
-# so ordering and hashes agree bit-for-bit.
+# so ordering and hashes agree bit-for-bit. ann_ivf_recall_check anchors
+# on the same scored relation.
 # ---------------------------------------------------------------------------
-@register(
-    "ann_cosine_topk",
-    oracle="""
-    WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+_COSINE_Q0_CTES = """q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
     scored AS (
       SELECT e.vec_id,
              round(
@@ -821,7 +897,13 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
                         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
                6) AS score
       FROM embeddings e, q
-    )
+    )"""
+
+
+@register(
+    "ann_cosine_topk",
+    oracle=f"""
+    WITH {_COSINE_Q0_CTES}
     SELECT vec_id, score FROM scored
     ORDER BY score DESC, vec_id ASC
     LIMIT 10
@@ -922,17 +1004,8 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "text_quality",
-    oracle=rf"""
-    WITH feats AS (
-      SELECT doc_id,
-             length(text) AS n_chars,
-             CAST(len({_WS_TOKENS_SQL.format(col="text")}) AS BIGINT) AS n_tokens,
-             CAST(len(list_filter({_WS_TOKENS_SQL.format(col="text")},
-                      t -> list_contains({_EN_STOP_SQL}, lower(t)))) AS BIGINT) AS n_stop,
-             length(text) - length(regexp_replace(text, '[.,;:!?''"()]', '', 'g')) AS n_punct,
-             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit
-      FROM documents
-    ), ratios AS (
+    oracle=f"""
+    WITH {_QUALITY_FEATS_CTE.format(keep="doc_id")}, ratios AS (
       SELECT doc_id, n_tokens,
              CASE WHEN n_tokens > 0
                   THEN CAST(n_chars - (n_tokens - 1) AS DOUBLE) / CAST(n_tokens AS DOUBLE)
@@ -981,31 +1054,8 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "docs_top_quality_per_source",
-    oracle=rf"""
-    WITH feats AS (
-      SELECT doc_id, source,
-             length(text) AS n_chars,
-             CAST(len({_WS_TOKENS_SQL.format(col="text")}) AS BIGINT) AS n_tokens,
-             CAST(len(list_filter({_WS_TOKENS_SQL.format(col="text")},
-                      t -> list_contains({_EN_STOP_SQL}, lower(t)))) AS BIGINT) AS n_stop,
-             length(text) - length(regexp_replace(text, '[.,;:!?''"()]', '', 'g')) AS n_punct,
-             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit
-      FROM documents
-    ), scored AS (
-      SELECT doc_id, source,
-             round(0.4 * least(CAST(n_tokens AS DOUBLE) / 64.0, 1.0)
-                 + 0.3 * least(CASE WHEN n_tokens > 0
-                        THEN CAST(n_stop AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-                        ELSE 0.0 END * 5.0, 1.0)
-                 + 0.3 * (1.0 - least(CASE WHEN n_chars > 0
-                        THEN CAST(n_punct AS DOUBLE) / CAST(n_chars AS DOUBLE)
-                        ELSE 0.0 END * 10.0
-                      + CASE WHEN n_chars > 0
-                        THEN CAST(n_digit AS DOUBLE) / CAST(n_chars AS DOUBLE)
-                        ELSE 0.0 END * 5.0, 1.0)),
-               6) AS quality
-      FROM feats
-    ), ranked AS (
+    oracle=f"""
+    WITH {_QUALITY_CTES.format(keep="doc_id, source")}, ranked AS (
       SELECT source, doc_id, quality,
              ROW_NUMBER() OVER (PARTITION BY source
                                 ORDER BY quality DESC, doc_id ASC) AS rk
@@ -2039,20 +2089,16 @@ def events_asof_signup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Catalyst's LEFT-TO-RIGHT fold order, so the RAW double scores match
 # bit for bit and render as exact repr literals — no rounding layer.
 # ---------------------------------------------------------------------------
+@functools.cache
 def _ann_cosine_ivf_oracle(sf_dir: str) -> str:
-    key = ("ann_ivf", sf_dir)
-    if key not in _dedup_twin_cache:
-        from ..operators.similarity import cosine_topk_ivf_parquet
+    from ..operators.similarity import cosine_topk_ivf_parquet
 
-        rows = cosine_topk_ivf_parquet(
-            os.path.join(sf_dir, "embeddings.parquet")
-        )
-        values = ", ".join(f"({i}, {s!r})" for i, s in rows)
-        _dedup_twin_cache[key] = f"""
-        SELECT CAST(v.i AS BIGINT) AS vec_id, CAST(v.s AS DOUBLE) AS score
-        FROM (VALUES {values}) v(i, s)
-        """
-    return _dedup_twin_cache[key]
+    rows = cosine_topk_ivf_parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    values = ", ".join(f"({i}, {s!r})" for i, s in rows)
+    return f"""
+    SELECT CAST(v.i AS BIGINT) AS vec_id, CAST(v.s AS DOUBLE) AS score
+    FROM (VALUES {values}) v(i, s)
+    """
 
 
 @register("ann_cosine_topk_ivf", oracle=_ann_cosine_ivf_oracle)
@@ -2095,20 +2141,8 @@ def ann_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ann_ivf_recall_check",
-    oracle="""
-    WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-    scored AS (
-      SELECT e.vec_id,
-             round(
-               list_sum(list_transform(list_zip(e.embedding, q.qv),
-                        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-               / (sqrt(list_sum(list_transform(e.embedding,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                  * sqrt(list_sum(list_transform(q.qv,
-                        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-               6) AS score
-      FROM embeddings e, q
-    ), topk AS (
+    oracle=f"""
+    WITH {_COSINE_Q0_CTES}, topk AS (
       SELECT score FROM scored ORDER BY score DESC, vec_id ASC LIMIT 10
     )
     SELECT MIN(score) AS min_exact_score, TRUE AS recall_ok, TRUE AS prune_ok
@@ -2178,6 +2212,7 @@ def ann_ivf_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   probe boundary (4th vs 5th nearest centroid) ≥ 4.5e-3;
 #   6-dp rounding-boundary distance ≥ 3.2e-10 abs vs ~1e-15 noise.
 # ---------------------------------------------------------------------------
+@functools.cache
 def _ivf_shared(sf_dir: str) -> tuple[list[list[float]], list[float], list[int]]:
     """(centroids, query_vec, probes) derived engine-independently from
     ``{sf_dir}/embeddings.parquet`` — cached per sf_dir (one bounded
@@ -2198,15 +2233,6 @@ def _ivf_shared(sf_dir: str) -> tuple[list[list[float]], list[float], list[int]]
     return C, qv, probes
 
 
-_ivf_shared_cache: dict[str, tuple] = {}
-
-
-def _ivf_shared_cached(sf_dir: str):
-    if sf_dir not in _ivf_shared_cache:
-        _ivf_shared_cache[sf_dir] = _ivf_shared(sf_dir)
-    return _ivf_shared_cache[sf_dir]
-
-
 def _cents_sql(C: list[list[float]]) -> str:
     """Centroids as a DuckDB list-of-lists double literal (repr round-trips
     each float exactly, so both engines parse the identical bit pattern)."""
@@ -2218,7 +2244,7 @@ def _cents_sql(C: list[list[float]]) -> str:
 
 
 def _ann_ivf_probe_oracle(sf_dir: str) -> str:
-    C, _qv, probes = _ivf_shared_cached(sf_dir)
+    C, _qv, probes = _ivf_shared(sf_dir)
     cents = _cents_sql(C)
     in_list = ",".join(str(p) for p in probes)
     return f"""
@@ -2252,7 +2278,7 @@ def _ann_ivf_probe_oracle(sf_dir: str) -> str:
 def ann_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import cosine_topk_ivf
 
-    C, qv, _probes = _ivf_shared_cached(sf_dir)
+    C, qv, _probes = _ivf_shared(sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     return cosine_topk_ivf(
         emb, "vec_id", "embedding", qv, C, k=10, n_probe=4, round_to=6
@@ -2275,7 +2301,7 @@ def _dedup_semantic_oracle(sf_dir: str) -> str:
     # Pair test = dot of per-row unit vectors (normalized ONCE per row),
     # mirroring semantic_dedup's Spark shape element-for-element so the
     # float op order — and therefore the hash — matches.
-    C, _qv, _probes = _ivf_shared_cached(sf_dir)
+    C, _qv, _probes = _ivf_shared(sf_dir)
     return f"""
     WITH cents AS (SELECT {_cents_sql(C)} AS C),
     v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
@@ -2308,7 +2334,7 @@ def _dedup_semantic_oracle(sf_dir: str) -> str:
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import semantic_dedup
 
-    C, _qv, _probes = _ivf_shared_cached(sf_dir)
+    C, _qv, _probes = _ivf_shared(sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     return semantic_dedup(emb, "vec_id", "embedding", C, threshold=0.35)
 
@@ -2320,7 +2346,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # literals (same margins as dedup_semantic — τ at a verified gap).
 # ---------------------------------------------------------------------------
 def _dedup_semantic_incr_oracle(sf_dir: str) -> str:
-    C, _qv, _probes = _ivf_shared_cached(sf_dir)
+    C, _qv, _probes = _ivf_shared(sf_dir)
     return f"""
     WITH cents AS (SELECT {_cents_sql(C)} AS C),
     v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
@@ -2349,7 +2375,7 @@ def _dedup_semantic_incr_oracle(sf_dir: str) -> str:
 def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import semantic_matches_between
 
-    C, _qv, _probes = _ivf_shared_cached(sf_dir)
+    C, _qv, _probes = _ivf_shared(sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     new = emb.filter(F.col("vec_id") % 5 == 4)
     old = emb.filter(F.col("vec_id") % 5 != 4)
@@ -2376,6 +2402,7 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_M, _PQ_KSUB = 16, 16
 
 
+@functools.cache
 def _pq_shared(sf_dir: str) -> tuple[list[list[list[float]]], list[float]]:
     import numpy as np
     import pyarrow.parquet as pq
@@ -2391,15 +2418,6 @@ def _pq_shared(sf_dir: str) -> tuple[list[list[list[float]]], list[float]]:
         for x in t.column("embedding")[int(np.nonzero(vid == 0)[0][0])].as_py()
     ]
     return cb, qv
-
-
-_pq_shared_cache: dict[str, tuple] = {}
-
-
-def _pq_shared_cached(sf_dir: str):
-    if sf_dir not in _pq_shared_cache:
-        _pq_shared_cache[sf_dir] = _pq_shared(sf_dir)
-    return _pq_shared_cache[sf_dir]
 
 
 def _pq_books_sql(cb: list[list[list[float]]]) -> str:
@@ -2459,7 +2477,7 @@ def _pq_assigned_sql(cb: list[list[list[float]]]) -> str:
 
 
 def _embedding_pq_codes_oracle(sf_dir: str) -> str:
-    cb, _qv = _pq_shared_cached(sf_dir)
+    cb, _qv = _pq_shared(sf_dir)
     return (
         _pq_assigned_sql(cb)
         + """
@@ -2477,7 +2495,7 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ADC query path scans ~3 TB of codes instead of the vectors."""
     from ..operators.similarity import pq_encode
 
-    cb, _qv = _pq_shared_cached(sf_dir)
+    cb, _qv = _pq_shared(sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     coded = pq_encode(emb, "embedding", cb, "__code")
     return coded.select(
@@ -2520,7 +2538,7 @@ def _pq_lut_sql(
 
 
 def _ann_pq_adc_oracle(sf_dir: str) -> str:
-    cb, qv = _pq_shared_cached(sf_dir)
+    cb, qv = _pq_shared(sf_dir)
     lut_sql, adc_terms = _pq_lut_sql(cb, qv)
     return (
         _pq_assigned_sql(cb)
@@ -2539,7 +2557,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection, no float vector read at query time."""
     from ..operators.similarity import pq_adc_topk
 
-    cb, qv = _pq_shared_cached(sf_dir)
+    cb, qv = _pq_shared(sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     return pq_adc_topk(
         emb, "vec_id", "embedding", qv, cb, k=10, round_to=6
@@ -2562,7 +2580,7 @@ def _pq_exact_d2_spark(qv: list[float]) -> F.Column:
 
 
 def _ann_pq_rerank_oracle(sf_dir: str) -> str:
-    cb, qv = _pq_shared_cached(sf_dir)
+    cb, qv = _pq_shared(sf_dir)
     lut_sql, adc_terms = _pq_lut_sql(cb, qv)
     return (
         _pq_assigned_sql(cb)
@@ -2593,7 +2611,7 @@ def ann_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors however large the table."""
     from ..operators.similarity import pq_adc_topk
 
-    cb, qv = _pq_shared_cached(sf_dir)
+    cb, qv = _pq_shared(sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     shortlist = pq_adc_topk(
         emb, "vec_id", "embedding", qv, cb, k=100, round_to=6
@@ -2634,7 +2652,7 @@ def ann_pq_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     below without an implementation bug). The exact side replicates in
     the oracle; recall_ok is asserted Spark-side like
     ann_ivf_recall_check's."""
-    cb, qv = _pq_shared_cached(sf_dir)
+    cb, qv = _pq_shared(sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     rerank = QUERIES["ann_pq_rerank_topk"](spark, sf_dir)
 
@@ -2665,12 +2683,12 @@ def ann_pq_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cell; at 16 cells × this corpus the raw-vector variant loses little
 # and keeps ONE engine-shared codebook set, so the whole pipeline stays
 # hash-checkable). Every constant is already trained: IVF centroids +
-# probe list from _ivf_shared_cached, PQ books/LUT from
-# _pq_shared_cached — both twins, both literal-rendered.
+# probe list from _ivf_shared, PQ books/LUT from
+# _pq_shared — both twins, both literal-rendered.
 # ---------------------------------------------------------------------------
 def _ann_ivfpq_oracle(sf_dir: str) -> str:
-    cb, qv = _pq_shared_cached(sf_dir)
-    C, _qv2, probes = _ivf_shared_cached(sf_dir)
+    cb, qv = _pq_shared(sf_dir)
+    C, _qv2, probes = _ivf_shared(sf_dir)
     lut_sql, adc_terms = _pq_lut_sql(cb, qv)
     in_list = ",".join(str(p) for p in probes)
     return (
@@ -2713,8 +2731,8 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~3 TB × 1/4) and exactly 50 float vectors."""
     from ..operators.similarity import assign_ivf_cluster, pq_adc_topk
 
-    cb, qv = _pq_shared_cached(sf_dir)
-    C, _qv2, probes = _ivf_shared_cached(sf_dir)
+    cb, qv = _pq_shared(sf_dir)
+    C, _qv2, probes = _ivf_shared(sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     cands = assign_ivf_cluster(emb, "embedding", C).filter(
         F.col("cluster").isin([int(p) for p in probes])
@@ -2766,8 +2784,8 @@ def _ivfpq_upsert_index(spark: SparkSession, sf_dir: str) -> str:
         return path
     shutil.rmtree(path, ignore_errors=True)
 
-    C, _qv, _probes = _ivf_shared_cached(sf_dir)
-    cb, _qv2 = _pq_shared_cached(sf_dir)
+    C, _qv, _probes = _ivf_shared(sf_dir)
+    cb, _qv2 = _pq_shared(sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     hold = F.col("vec_id") % 5 == 0
 
@@ -2801,8 +2819,8 @@ def ann_ivfpq_upsert_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     index rebuild."""
     from ..operators.similarity import query_ivfpq_table
 
-    C, _qv, _probes = _ivf_shared_cached(sf_dir)
-    cb, qv = _pq_shared_cached(sf_dir)
+    C, _qv, _probes = _ivf_shared(sf_dir)
+    cb, qv = _pq_shared(sf_dir)
     path = _ivfpq_upsert_index(spark, sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     return query_ivfpq_table(
@@ -2826,6 +2844,7 @@ _BM25_TERMS = ["spark", "window", "sort", "merge"]
 _BM25_K1, _BM25_B = 1.2, 0.75
 
 
+@functools.cache
 def _bm25_shared(sf_dir: str) -> tuple[dict[str, float], float]:
     """(idf per term, avgdl) from {sf_dir}/documents.parquet.
 
@@ -2859,17 +2878,8 @@ def _bm25_shared(sf_dir: str) -> tuple[dict[str, float], float]:
     return idf, total_len / n_docs
 
 
-_bm25_cache: dict[str, tuple] = {}
-
-
-def _bm25_shared_cached(sf_dir: str):
-    if sf_dir not in _bm25_cache:
-        _bm25_cache[sf_dir] = _bm25_shared(sf_dir)
-    return _bm25_cache[sf_dir]
-
-
 def _text_bm25_oracle(sf_dir: str) -> str:
-    idf, avgdl = _bm25_shared_cached(sf_dir)
+    idf, avgdl = _bm25_shared(sf_dir)
     k1p1 = repr(_BM25_K1 + 1.0)
     one_minus_b = repr(1.0 - _BM25_B)
     parts = []
@@ -2914,19 +2924,17 @@ def _text_bm25_oracle(sf_dir: str) -> str:
 _CMS_PROBES = ["spark", "window", "sort", "merge", "zebra", "xylophone"]
 
 
+@functools.cache
 def _tokens_cms_oracle(sf_dir: str) -> str:
-    key = ("cms_cells", sf_dir)
-    if key not in _dedup_twin_cache:
-        from ..operators.sketch import cms_token_cells_parquet
+    from ..operators.sketch import cms_token_cells_parquet
 
-        rows = cms_token_cells_parquet(sf_dir)
-        values = ", ".join(f"({s}, {c}, {n})" for s, c, n in rows)
-        _dedup_twin_cache[key] = f"""
-        SELECT CAST(v.s AS INT) AS seed, CAST(v.c AS BIGINT) AS cell,
-               CAST(v.n AS BIGINT) AS cnt
-        FROM (VALUES {values}) v(s, c, n)
-        """
-    return _dedup_twin_cache[key]
+    rows = cms_token_cells_parquet(sf_dir)
+    values = ", ".join(f"({s}, {c}, {n})" for s, c, n in rows)
+    return f"""
+    SELECT CAST(v.s AS INT) AS seed, CAST(v.c AS BIGINT) AS cell,
+           CAST(v.n AS BIGINT) AS cnt
+    FROM (VALUES {values}) v(s, c, n)
+    """
 
 
 @register("tokens_cms_sketch", oracle=_tokens_cms_oracle)
@@ -3121,17 +3129,15 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # face is bit-replicable, no measured-margin caveats.
 # ---------------------------------------------------------------------------
 _BPE_N_MERGES = 8
-_bpe_merges_cache: dict[str, list] = {}
 
 
-def _bpe_merges_cached(sf_dir: str) -> list[tuple[str, str]]:
-    if sf_dir not in _bpe_merges_cache:
-        from ..operators.text import train_bpe_merges_parquet
+@functools.cache
+def _bpe_merges(sf_dir: str) -> list[tuple[str, str]]:
+    from ..operators.text import train_bpe_merges_parquet
 
-        _bpe_merges_cache[sf_dir] = train_bpe_merges_parquet(
-            os.path.join(sf_dir, "documents.parquet"), n_merges=_BPE_N_MERGES
-        )
-    return _bpe_merges_cache[sf_dir]
+    return train_bpe_merges_parquet(
+        os.path.join(sf_dir, "documents.parquet"), n_merges=_BPE_N_MERGES
+    )
 
 
 def _sq(s: str) -> str:
@@ -3140,7 +3146,7 @@ def _sq(s: str) -> str:
 
 
 def _vocab_bpe_oracle(sf_dir: str) -> str:
-    merges = _bpe_merges_cached(sf_dir)
+    merges = _bpe_merges(sf_dir)
     applied = r"' ' || regexp_replace(tok, '(.)', '\1 ', 'g')"
     for a, b in merges:
         applied = (
@@ -3175,14 +3181,14 @@ def vocab_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import bpe_pair_counts
 
     docs = _t(spark, sf_dir, "documents")
-    return bpe_pair_counts(docs, "text", _bpe_merges_cached(sf_dir), k=20)
+    return bpe_pair_counts(docs, "text", _bpe_merges(sf_dir), k=20)
 
 
 @register("text_bm25", oracle=_text_bm25_oracle)
 def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import bm25_scores
 
-    idf, avgdl = _bm25_shared_cached(sf_dir)
+    idf, avgdl = _bm25_shared(sf_dir)
     docs = _t(spark, sf_dir, "documents")
     return bm25_scores(
         docs, "doc_id", "text", _BM25_TERMS, idf, avgdl,
@@ -3682,63 +3688,8 @@ def distinct_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "corpus_prepare",
-    oracle=rf"""
-    WITH feats AS (
-      SELECT doc_id, text,
-             length(text) AS n_chars,
-             CAST(len({_WS_TOKENS_SQL.format(col="text")}) AS BIGINT) AS n_tokens,
-             CAST(len(list_filter({_WS_TOKENS_SQL.format(col="text")},
-                      t -> list_contains({_EN_STOP_SQL}, lower(t)))) AS BIGINT) AS n_stop,
-             length(text) - length(regexp_replace(text, '[.,;:!?''"()]', '', 'g')) AS n_punct,
-             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit
-      FROM documents
-    ), scored AS (
-      SELECT doc_id, text,
-             round(0.4 * least(CAST(n_tokens AS DOUBLE) / 64.0, 1.0)
-                 + 0.3 * least(CASE WHEN n_tokens > 0
-                        THEN CAST(n_stop AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-                        ELSE 0.0 END * 5.0, 1.0)
-                 + 0.3 * (1.0 - least(CASE WHEN n_chars > 0
-                        THEN CAST(n_punct AS DOUBLE) / CAST(n_chars AS DOUBLE)
-                        ELSE 0.0 END * 10.0
-                      + CASE WHEN n_chars > 0
-                        THEN CAST(n_digit AS DOUBLE) / CAST(n_chars AS DOUBLE)
-                        ELSE 0.0 END * 5.0, 1.0)),
-               6) AS quality
-      FROM feats
-    ), qual AS (
-      SELECT * FROM scored WHERE quality >= 0.4
-    ), fps AS (
-      SELECT doc_id, text, quality,
-             md5(regexp_replace(trim(lower(text)), '[ \t\n\x0b\f\r]+', ' ', 'g')) AS fp
-      FROM qual
-    ), keep1 AS (
-      SELECT MIN(doc_id) AS doc_id FROM fps GROUP BY fp
-    ), kept AS (
-      SELECT f.doc_id, f.text, f.quality FROM fps f JOIN keep1 USING (doc_id)
-    ), toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM kept
-    ), sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(CASE WHEN len(tk) >= 3
-                    THEN list_transform(range(1, len(tk)-1),
-                         i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
-                    ELSE [array_to_string(tk, ' ')] END) AS s
-      FROM toks
-    ), sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), pairs AS (
-      SELECT id_a, id_b
-      FROM inter
-      JOIN sizes sa ON id_a = sa.doc_id
-      JOIN sizes sb ON id_b = sb.doc_id
-      WHERE i / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5
-    ), losers AS (
+    oracle=f"""
+    WITH {_corpus_pair_ctes("doc_id, text, quality", _MIN_ID_KEEP1)}, losers AS (
       SELECT DISTINCT id_b AS doc_id FROM pairs
     )
     SELECT k.doc_id, k.text, k.quality
@@ -3763,73 +3714,9 @@ def corpus_prepare(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "corpus_prepare_cc",
-    oracle=rf"""
-    WITH RECURSIVE feats AS (
-      SELECT doc_id, text,
-             length(text) AS n_chars,
-             CAST(len({_WS_TOKENS_SQL.format(col="text")}) AS BIGINT) AS n_tokens,
-             CAST(len(list_filter({_WS_TOKENS_SQL.format(col="text")},
-                      t -> list_contains({_EN_STOP_SQL}, lower(t)))) AS BIGINT) AS n_stop,
-             length(text) - length(regexp_replace(text, '[.,;:!?''"()]', '', 'g')) AS n_punct,
-             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit
-      FROM documents
-    ), scored AS (
-      SELECT doc_id, text,
-             round(0.4 * least(CAST(n_tokens AS DOUBLE) / 64.0, 1.0)
-                 + 0.3 * least(CASE WHEN n_tokens > 0
-                        THEN CAST(n_stop AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-                        ELSE 0.0 END * 5.0, 1.0)
-                 + 0.3 * (1.0 - least(CASE WHEN n_chars > 0
-                        THEN CAST(n_punct AS DOUBLE) / CAST(n_chars AS DOUBLE)
-                        ELSE 0.0 END * 10.0
-                      + CASE WHEN n_chars > 0
-                        THEN CAST(n_digit AS DOUBLE) / CAST(n_chars AS DOUBLE)
-                        ELSE 0.0 END * 5.0, 1.0)),
-               6) AS quality
-      FROM feats
-    ), qual AS (
-      SELECT * FROM scored WHERE quality >= 0.4
-    ), fps AS (
-      SELECT doc_id, text, quality,
-             md5(regexp_replace(trim(lower(text)), '[ \t\n\x0b\f\r]+', ' ', 'g')) AS fp
-      FROM qual
-    ), keep1 AS (
-      SELECT MIN(doc_id) AS doc_id FROM fps GROUP BY fp
-    ), kept AS (
-      SELECT f.doc_id, f.text, f.quality FROM fps f JOIN keep1 USING (doc_id)
-    ), toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM kept
-    ), sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(CASE WHEN len(tk) >= 3
-                    THEN list_transform(range(1, len(tk)-1),
-                         i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
-                    ELSE [array_to_string(tk, ' ')] END) AS s
-      FROM toks
-    ), sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), pairs AS (
-      SELECT id_a, id_b
-      FROM inter
-      JOIN sizes sa ON id_a = sa.doc_id
-      JOIN sizes sb ON id_b = sb.doc_id
-      WHERE i / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5
-    ), und AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION
-      SELECT id_b, id_a FROM pairs
-    ), reach(a, b) AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    ), comp AS (
-      SELECT a AS id, LEAST(a, MIN(b)) AS component FROM reach GROUP BY a
-    )
+    oracle=f"""
+    WITH RECURSIVE {_corpus_pair_ctes("doc_id, text, quality", _MIN_ID_KEEP1)},
+    {_CLOSURE_CTES}
     SELECT k.doc_id, k.text, k.quality
     FROM kept k LEFT JOIN comp c ON k.doc_id = c.id
     WHERE COALESCE(c.component, k.doc_id) = k.doc_id
@@ -3854,79 +3741,18 @@ def corpus_prepare_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tie-breaks. Spark picks via one max(struct(quality, -id)) aggregate
 # per group — no window, no whole-group sort.
 # ---------------------------------------------------------------------------
-@register(
-    "corpus_prepare_cc_best",
-    oracle=rf"""
-    WITH RECURSIVE feats AS (
-      SELECT doc_id, text,
-             length(text) AS n_chars,
-             CAST(len({_WS_TOKENS_SQL.format(col="text")}) AS BIGINT) AS n_tokens,
-             CAST(len(list_filter({_WS_TOKENS_SQL.format(col="text")},
-                      t -> list_contains({_EN_STOP_SQL}, lower(t)))) AS BIGINT) AS n_stop,
-             length(text) - length(regexp_replace(text, '[.,;:!?''"()]', '', 'g')) AS n_punct,
-             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit
-      FROM documents
-    ), scored AS (
-      SELECT doc_id, text,
-             round(0.4 * least(CAST(n_tokens AS DOUBLE) / 64.0, 1.0)
-                 + 0.3 * least(CASE WHEN n_tokens > 0
-                        THEN CAST(n_stop AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-                        ELSE 0.0 END * 5.0, 1.0)
-                 + 0.3 * (1.0 - least(CASE WHEN n_chars > 0
-                        THEN CAST(n_punct AS DOUBLE) / CAST(n_chars AS DOUBLE)
-                        ELSE 0.0 END * 10.0
-                      + CASE WHEN n_chars > 0
-                        THEN CAST(n_digit AS DOUBLE) / CAST(n_chars AS DOUBLE)
-                        ELSE 0.0 END * 5.0, 1.0)),
-               6) AS quality
-      FROM feats
-    ), qual AS (
-      SELECT * FROM scored WHERE quality >= 0.4
-    ), fps AS (
-      SELECT doc_id, text, quality,
-             md5(regexp_replace(trim(lower(text)), '[ \t\n\x0b\f\r]+', ' ', 'g')) AS fp
-      FROM qual
-    ), keep1 AS (
-      SELECT doc_id FROM (
+_BEST_QUALITY_KEEP1 = """SELECT doc_id FROM (
         SELECT doc_id,
                row_number() OVER (PARTITION BY fp
                                   ORDER BY quality DESC, doc_id) AS rn
-        FROM fps) WHERE rn = 1
-    ), kept AS (
-      SELECT f.doc_id, f.text, f.quality FROM fps f JOIN keep1 USING (doc_id)
-    ), toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM kept
-    ), sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(CASE WHEN len(tk) >= 3
-                    THEN list_transform(range(1, len(tk)-1),
-                         i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
-                    ELSE [array_to_string(tk, ' ')] END) AS s
-      FROM toks
-    ), sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), pairs AS (
-      SELECT id_a, id_b
-      FROM inter
-      JOIN sizes sa ON id_a = sa.doc_id
-      JOIN sizes sb ON id_b = sb.doc_id
-      WHERE i / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5
-    ), und AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION
-      SELECT id_b, id_a FROM pairs
-    ), reach(a, b) AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    ), comp AS (
-      SELECT a AS id, LEAST(a, MIN(b)) AS component FROM reach GROUP BY a
-    ), clus AS (
+        FROM fps) WHERE rn = 1"""
+
+
+@register(
+    "corpus_prepare_cc_best",
+    oracle=f"""
+    WITH RECURSIVE {_corpus_pair_ctes("doc_id, text, quality", _BEST_QUALITY_KEEP1)},
+    {_CLOSURE_CTES}, clus AS (
       SELECT k.doc_id, k.text, k.quality,
              COALESCE(c.component, k.doc_id) AS cluster
       FROM kept k LEFT JOIN comp c ON k.doc_id = c.id
@@ -3955,73 +3781,9 @@ def corpus_prepare_cc_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "corpus_prepare_audit",
-    oracle=rf"""
-    WITH RECURSIVE feats AS (
-      SELECT doc_id, text,
-             length(text) AS n_chars,
-             CAST(len({_WS_TOKENS_SQL.format(col="text")}) AS BIGINT) AS n_tokens,
-             CAST(len(list_filter({_WS_TOKENS_SQL.format(col="text")},
-                      t -> list_contains({_EN_STOP_SQL}, lower(t)))) AS BIGINT) AS n_stop,
-             length(text) - length(regexp_replace(text, '[.,;:!?''"()]', '', 'g')) AS n_punct,
-             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit
-      FROM documents
-    ), scored AS (
-      SELECT doc_id, text,
-             round(0.4 * least(CAST(n_tokens AS DOUBLE) / 64.0, 1.0)
-                 + 0.3 * least(CASE WHEN n_tokens > 0
-                        THEN CAST(n_stop AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-                        ELSE 0.0 END * 5.0, 1.0)
-                 + 0.3 * (1.0 - least(CASE WHEN n_chars > 0
-                        THEN CAST(n_punct AS DOUBLE) / CAST(n_chars AS DOUBLE)
-                        ELSE 0.0 END * 10.0
-                      + CASE WHEN n_chars > 0
-                        THEN CAST(n_digit AS DOUBLE) / CAST(n_chars AS DOUBLE)
-                        ELSE 0.0 END * 5.0, 1.0)),
-               6) AS quality
-      FROM feats
-    ), qual AS (
-      SELECT * FROM scored WHERE quality >= 0.4
-    ), fps AS (
-      SELECT doc_id, text,
-             md5(regexp_replace(trim(lower(text)), '[ \t\n\x0b\f\r]+', ' ', 'g')) AS fp
-      FROM qual
-    ), keep1 AS (
-      SELECT MIN(doc_id) AS doc_id FROM fps GROUP BY fp
-    ), kept AS (
-      SELECT f.doc_id, f.text FROM fps f JOIN keep1 USING (doc_id)
-    ), toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM kept
-    ), sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(CASE WHEN len(tk) >= 3
-                    THEN list_transform(range(1, len(tk)-1),
-                         i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
-                    ELSE [array_to_string(tk, ' ')] END) AS s
-      FROM toks
-    ), sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), pairs AS (
-      SELECT id_a, id_b
-      FROM inter
-      JOIN sizes sa ON id_a = sa.doc_id
-      JOIN sizes sb ON id_b = sb.doc_id
-      WHERE i / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.5
-    ), und AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION
-      SELECT id_b, id_a FROM pairs
-    ), reach(a, b) AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    ), comp AS (
-      SELECT a AS id, LEAST(a, MIN(b)) AS component FROM reach GROUP BY a
-    )
+    oracle=f"""
+    WITH RECURSIVE {_corpus_pair_ctes("doc_id, text", _MIN_ID_KEEP1)},
+    {_CLOSURE_CTES}
     SELECT s.doc_id, s.quality,
            CASE WHEN s.quality < 0.4 THEN 'low_quality'
                 WHEN k.doc_id IS NULL THEN 'exact_dup'
@@ -4048,42 +3810,10 @@ def corpus_prepare_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the whole composition value-hash-checked end-to-end.
 # ---------------------------------------------------------------------------
 def _corpus_prepare_semantic_oracle(sf_dir: str) -> str:
-    C, _qv, _probes = _ivf_shared_cached(sf_dir)
+    C, _qv, _probes = _ivf_shared(sf_dir)
     return rf"""
-    WITH feats AS (
-      SELECT doc_id, text,
-             length(text) AS n_chars,
-             CAST(len({_WS_TOKENS_SQL.format(col="text")}) AS BIGINT) AS n_tokens,
-             CAST(len(list_filter({_WS_TOKENS_SQL.format(col="text")},
-                      t -> list_contains({_EN_STOP_SQL}, lower(t)))) AS BIGINT) AS n_stop,
-             length(text) - length(regexp_replace(text, '[.,;:!?''"()]', '', 'g')) AS n_punct,
-             length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit
-      FROM documents
-    ), scored AS (
-      SELECT doc_id, text,
-             round(0.4 * least(CAST(n_tokens AS DOUBLE) / 64.0, 1.0)
-                 + 0.3 * least(CASE WHEN n_tokens > 0
-                        THEN CAST(n_stop AS DOUBLE) / CAST(n_tokens AS DOUBLE)
-                        ELSE 0.0 END * 5.0, 1.0)
-                 + 0.3 * (1.0 - least(CASE WHEN n_chars > 0
-                        THEN CAST(n_punct AS DOUBLE) / CAST(n_chars AS DOUBLE)
-                        ELSE 0.0 END * 10.0
-                      + CASE WHEN n_chars > 0
-                        THEN CAST(n_digit AS DOUBLE) / CAST(n_chars AS DOUBLE)
-                        ELSE 0.0 END * 5.0, 1.0)),
-               6) AS quality
-      FROM feats
-    ), qual AS (
-      SELECT * FROM scored WHERE quality >= 0.4
-    ), fps AS (
-      SELECT doc_id, quality,
-             md5(regexp_replace(trim(lower(text)), '[ \t\n\x0b\f\r]+', ' ', 'g')) AS fp
-      FROM qual
-    ), keep1 AS (
-      SELECT MIN(doc_id) AS doc_id FROM fps GROUP BY fp
-    ), kept AS (
-      SELECT f.doc_id, f.quality FROM fps f JOIN keep1 USING (doc_id)
-    ), cents AS (SELECT {_cents_sql(C)} AS C),
+    WITH {_QUALITY_CTES.format(keep="doc_id, text")},
+    {_exact_fp_ctes("doc_id, quality", _MIN_ID_KEEP1)}, cents AS (SELECT {_cents_sql(C)} AS C),
     v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
           FROM embeddings),
     kv AS (
@@ -4114,7 +3844,7 @@ def _corpus_prepare_semantic_oracle(sf_dir: str) -> str:
 def corpus_prepare_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pipeline import prepare_corpus_semantic
 
-    C, _qv, _probes = _ivf_shared_cached(sf_dir)
+    C, _qv, _probes = _ivf_shared(sf_dir)
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
     return prepare_corpus_semantic(
@@ -4477,8 +4207,8 @@ def docs_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "token_histogram",
-    oracle=r"""
-    SELECT (CAST(len(list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> ''))
+    oracle=rf"""
+    SELECT (CAST(len({_WS_TOKENS_SQL.format(col="text")})
             AS BIGINT) // 10) * 10 AS bin,
            COUNT(*) AS n
     FROM documents
@@ -4662,11 +4392,10 @@ def docs_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Gap-based sessionization (operators.sessions.session_summary): split each
 # user's event timeline into sessions separated by >30 min of silence.
 # Boundaries compared on exact int64 microseconds on both engines.
+# session_idx numbers each user's sessions; events_session_window groups
+# by the same index.
 # ---------------------------------------------------------------------------
-@register(
-    "events_sessionize",
-    oracle="""
-    WITH m AS (
+_SESSION_GAP_CTES = """m AS (
       SELECT user_id, ts, event_id, epoch_us(ts) AS us,
              LAG(epoch_us(ts)) OVER
                (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
@@ -4679,7 +4408,13 @@ def docs_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                AS session_idx
       FROM m
-    )
+    )"""
+
+
+@register(
+    "events_sessionize",
+    oracle=f"""
+    WITH {_SESSION_GAP_CTES}
     SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
            CAST(COUNT(*) AS BIGINT) AS n_events,
            CAST(MIN(ts) AS VARCHAR) AS start_s,
@@ -4883,36 +4618,34 @@ _PROMOS = [
     ("p3", "2024-01-10 12:00:00", "2024-01-11 00:00:00"),
     ("p4", "2024-01-20 00:00:00", "2024-01-27 00:00:00"),
 ]
-
-
-@register(
-    "events_interval_join",
-    oracle="""
+_PROMO_VALUES = ",\n             ".join(
+    f"('{p}', TIMESTAMP '{start}', TIMESTAMP '{end}')" for p, start, end in _PROMOS
+)
+# Both interval-join faces compute the same per-promo totals.
+_INTERVAL_JOIN_ORACLE = f"""
     WITH iv(promo_id, start_ts, end_ts) AS (
-      VALUES ('p1', TIMESTAMP '2024-01-02 00:00:00', TIMESTAMP '2024-01-05 00:00:00'),
-             ('p2', TIMESTAMP '2024-01-04 00:00:00', TIMESTAMP '2024-01-06 12:00:00'),
-             ('p3', TIMESTAMP '2024-01-10 12:00:00', TIMESTAMP '2024-01-11 00:00:00'),
-             ('p4', TIMESTAMP '2024-01-20 00:00:00', TIMESTAMP '2024-01-27 00:00:00')
+      VALUES {_PROMO_VALUES}
     )
     SELECT promo_id, CAST(COUNT(*) AS BIGINT) AS n_events,
            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
            CAST(SUM(CAST(ROUND(value * 100.0) AS BIGINT)) AS BIGINT) AS cents
     FROM events JOIN iv ON ts >= start_ts AND ts < end_ts
     GROUP BY promo_id
-    """,
-)
-def events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.joins import interval_join
+    """
 
-    ev = _t(spark, sf_dir, "events")
-    iv = spark.createDataFrame(
+
+def _promo_intervals(spark: SparkSession) -> DataFrame:
+    """The ``_PROMOS`` windows as (promo_id, start, end) timestamps."""
+    return spark.createDataFrame(
         _PROMOS, "promo_id string, start_s string, end_s string"
     ).select(
         "promo_id",
         F.col("start_s").cast("timestamp").alias("start"),
         F.col("end_s").cast("timestamp").alias("end"),
     )
-    j = interval_join(ev, iv, "ts")
+
+
+def _promo_totals(j: DataFrame) -> DataFrame:
     return j.groupBy("promo_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("user_id").alias("n_users"),
@@ -4920,6 +4653,17 @@ def events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cents"
         ),
     )
+
+
+@register(
+    "events_interval_join",
+    oracle=_INTERVAL_JOIN_ORACLE,
+)
+def events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.joins import interval_join
+
+    ev = _t(spark, sf_dir, "events")
+    return _promo_totals(interval_join(ev, _promo_intervals(spark), "ts"))
 
 
 # ---------------------------------------------------------------------------
@@ -4932,39 +4676,14 @@ def events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "events_interval_join_binned",
-    oracle="""
-    WITH iv(promo_id, start_ts, end_ts) AS (
-      VALUES ('p1', TIMESTAMP '2024-01-02 00:00:00', TIMESTAMP '2024-01-05 00:00:00'),
-             ('p2', TIMESTAMP '2024-01-04 00:00:00', TIMESTAMP '2024-01-06 12:00:00'),
-             ('p3', TIMESTAMP '2024-01-10 12:00:00', TIMESTAMP '2024-01-11 00:00:00'),
-             ('p4', TIMESTAMP '2024-01-20 00:00:00', TIMESTAMP '2024-01-27 00:00:00')
-    )
-    SELECT promo_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(SUM(CAST(ROUND(value * 100.0) AS BIGINT)) AS BIGINT) AS cents
-    FROM events JOIN iv ON ts >= start_ts AND ts < end_ts
-    GROUP BY promo_id
-    """,
+    oracle=_INTERVAL_JOIN_ORACLE,
 )
 def events_interval_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.joins import interval_join_binned
 
     ev = _t(spark, sf_dir, "events")
-    iv = spark.createDataFrame(
-        _PROMOS, "promo_id string, start_s string, end_s string"
-    ).select(
-        "promo_id",
-        F.col("start_s").cast("timestamp").alias("start"),
-        F.col("end_s").cast("timestamp").alias("end"),
-    )
-    j = interval_join_binned(ev, iv, "ts", bin_seconds=86400)
-    return j.groupBy("promo_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.sum(F.round(F.col("value") * F.lit(100.0), 0).cast("long")).alias(
-            "cents"
-        ),
-    )
+    j = interval_join_binned(ev, _promo_intervals(spark), "ts", bin_seconds=86400)
+    return _promo_totals(j)
 
 
 # ---------------------------------------------------------------------------
@@ -5022,21 +4741,8 @@ def purchases_asof_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "events_session_window",
-    oracle="""
-    WITH m AS (
-      SELECT user_id, ts, event_id, epoch_us(ts) AS us,
-             LAG(epoch_us(ts)) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS prev_us
-      FROM events
-    ), s AS (
-      SELECT user_id, ts, us,
-             SUM(CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                      THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS session_idx
-      FROM m
-    )
+    oracle=f"""
+    WITH {_SESSION_GAP_CTES}
     SELECT user_id,
            CAST(MIN(ts) AS VARCHAR) AS session_start_s,
            CAST(MAX(ts) + INTERVAL 30 MINUTE AS VARCHAR) AS session_end_s,
@@ -5530,40 +5236,8 @@ def events_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dedup_components",
-    oracle=r"""
-    WITH RECURSIVE toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM documents
-    ), sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(CASE WHEN len(tk) >= 3
-                    THEN list_transform(range(1, len(tk)-1),
-                         i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
-                    ELSE [array_to_string(tk, ' ')] END) AS s
-      FROM toks
-    ), sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), pairs AS (
-      SELECT id_a, id_b
-      FROM inter
-      JOIN sizes sa ON id_a = sa.doc_id
-      JOIN sizes sb ON id_b = sb.doc_id
-      WHERE i / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.3
-    ), und AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION
-      SELECT id_b, id_a FROM pairs
-    ), reach(a, b) AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    ), comp AS (
-      SELECT a AS id, LEAST(a, MIN(b)) AS component FROM reach GROUP BY a
-    )
+    oracle=f"""
+    WITH RECURSIVE {_NEAR_PAIR_CTES.format(src="documents", threshold=0.3)}, {_CLOSURE_CTES}
     SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS cluster
     FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
     """,
@@ -5710,7 +5384,7 @@ def multimodal_features_ann(
 # ---------------------------------------------------------------------------
 @register(
     "text_repetition",
-    oracle=r"""
+    oracle=rf"""
     SELECT doc_id,
            CAST(len(tk) AS BIGINT) AS n_tokens,
            round(CASE WHEN len(tk) > 0
@@ -5718,7 +5392,7 @@ def multimodal_features_ann(
                  ELSE 0.0 END, 6) AS repetition
     FROM (
       SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
+             {_WS_TOKENS_SQL.format(col="text")} AS tk
       FROM documents
     )
     """,
@@ -5751,19 +5425,8 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "text_decontaminate",
-    oracle=r"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM documents
-    ), sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(CASE WHEN len(tk) >= 3
-                    THEN list_transform(range(1, len(tk)-1),
-                         i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
-                    ELSE [array_to_string(tk, ' ')] END) AS s
-      FROM toks
-    )
+    oracle=f"""
+    WITH {_SHINGLE_CTES.format(src="documents")}
     SELECT DISTINCT t.doc_id AS contaminated_id
     FROM sh t
     WHERE t.doc_id % 97 <> 0
@@ -6187,12 +5850,8 @@ def orders_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "docs_chunk_overlap",
-    oracle=r"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM documents
-    ), spans AS (
+    oracle=rf"""
+    WITH {_TOKS_CTE.format(src="documents")}, spans AS (
       SELECT doc_id, tk,
              unnest(range(0, greatest(CAST(ceil((len(tk) - 64) / 48.0) AS INTEGER), 0) + 1))
                AS chunk_idx
@@ -6552,12 +6211,8 @@ def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "text_bigram_lm",
-    oracle=r"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM documents
-    ), bg AS (
+    oracle=rf"""
+    WITH {_TOKS_CTE.format(src="documents")}, bg AS (
       SELECT tk[i] AS w1, tk[i+1] AS w2
       FROM (SELECT tk, unnest(range(1, len(tk))) AS i FROM toks WHERE len(tk) >= 2)
     ), pair_counts AS (
@@ -6614,12 +6269,8 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "docs_lm_perplexity",
-    oracle=r"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM documents
-    ), bg AS (
+    oracle=rf"""
+    WITH {_TOKS_CTE.format(src="documents")}, bg AS (
       SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2
       FROM (SELECT doc_id, tk, unnest(range(1, len(tk))) AS i
             FROM toks WHERE len(tk) >= 2)
@@ -6701,22 +6352,20 @@ def events_trailing_7d_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # side stays live SQL. Estimate error vs exact stays pinned by
 # events_user_sketch_check (and pytest's error-bound test).
 # ---------------------------------------------------------------------------
+@functools.cache
 def _hll_rollup_oracle(sf_dir: str) -> str:
-    key = ("hll_rollup", sf_dir)
-    if key not in _dedup_twin_cache:
-        from ..operators.hll import hll_estimates_parquet
+    from ..operators.hll import hll_estimates_parquet
 
-        ests = hll_estimates_parquet(sf_dir)
-        values = ", ".join(f"('{t}', {e})" for t, e in sorted(ests.items()))
-        _dedup_twin_cache[key] = f"""
-        WITH est(event_type, approx_users) AS (VALUES {values})
-        SELECT e.event_type,
-               CAST(COUNT(DISTINCT CAST(e.ts AS DATE)) AS BIGINT) AS n_days,
-               CAST(est.approx_users AS BIGINT) AS approx_users
-        FROM events e JOIN est ON e.event_type = est.event_type
-        GROUP BY e.event_type, est.approx_users
-        """
-    return _dedup_twin_cache[key]
+    ests = hll_estimates_parquet(sf_dir)
+    values = ", ".join(f"('{t}', {e})" for t, e in sorted(ests.items()))
+    return f"""
+    WITH est(event_type, approx_users) AS (VALUES {values})
+    SELECT e.event_type,
+           CAST(COUNT(DISTINCT CAST(e.ts AS DATE)) AS BIGINT) AS n_days,
+           CAST(est.approx_users AS BIGINT) AS approx_users
+    FROM events e JOIN est ON e.event_type = est.event_type
+    GROUP BY e.event_type, est.approx_users
+    """
 
 
 @register("events_user_sketch_rollup", oracle=_hll_rollup_oracle)
@@ -6808,19 +6457,17 @@ def events_user_sketch_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@functools.cache
 def _kmv_overlap_oracle(sf_dir: str) -> str:
-    key = ("kmv_overlap", sf_dir)
-    if key not in _dedup_twin_cache:
-        from ..operators.hll import kmv_overlap_parquet
+    from ..operators.hll import kmv_overlap_parquet
 
-        trips = kmv_overlap_parquet(sf_dir)
-        values = ", ".join(f"('{a}', '{b}', {e})" for a, b, e in trips)
-        _dedup_twin_cache[key] = f"""
-        SELECT v.a AS type_a, v.b AS type_b,
-               CAST(v.e AS BIGINT) AS approx_both
-        FROM (VALUES {values}) v(a, b, e)
-        """
-    return _dedup_twin_cache[key]
+    trips = kmv_overlap_parquet(sf_dir)
+    values = ", ".join(f"('{a}', '{b}', {e})" for a, b, e in trips)
+    return f"""
+    SELECT v.a AS type_a, v.b AS type_b,
+           CAST(v.e AS BIGINT) AS approx_both
+    FROM (VALUES {values}) v(a, b, e)
+    """
 
 
 @register("events_user_overlap_sketch", oracle=_kmv_overlap_oracle)
@@ -7201,9 +6848,9 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "vocab_build",
-    oracle=r"""
+    oracle=rf"""
     WITH tok AS (
-      SELECT unnest(list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> ''))
+      SELECT unnest({_WS_TOKENS_SQL.format(col="text")})
              AS token
       FROM documents
     ), counts AS (
@@ -7293,12 +6940,8 @@ def events_value_quantile_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # duplicated grams, and a per-doc gaps-and-islands window. Pure integers
 # out -> full hash check.
 # ---------------------------------------------------------------------------
-_DUP_SPAN_CTES = r"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM documents
-    ), sh AS (
+_DUP_SPAN_CTES = rf"""
+    WITH {_TOKS_CTE.format(src="documents")}, sh AS (
       SELECT doc_id, CAST(u.i - 1 AS BIGINT) AS pos,
              array_to_string(tk[u.i : u.i + 4], ' ') AS g
       FROM toks, unnest(range(1, greatest(len(tk) - 4, 0) + 1)) AS u(i)
@@ -7522,7 +7165,7 @@ def purchase_age_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle (GROUP BY over embeddings), cross-checking group sizes too.
 # ---------------------------------------------------------------------------
 def _embedding_label_pca_oracle(sf_dir: str) -> str:
-    tw = _label_pca_cached(sf_dir)
+    tw = _label_pca(sf_dir)
     values = ", ".join(
         f"({lab}, {top!r}, {expl!r})"
         for lab, (_n, top, expl) in sorted(tw.items())
@@ -7558,24 +7201,20 @@ def embedding_label_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SAME round-6 double by 1e6 (same IEEE product), and that product sits
 # within ~1e-7 of an integer — never at the .5 boundary where Spark's
 # HALF_UP and Python's HALF_EVEN diverge.
-_label_pca_cache: dict[str, dict] = {}
+@functools.cache
+def _label_pca(sf_dir: str) -> dict[int, tuple[int, float, float]]:
+    from ..operators.similarity import label_pca_summary_parquet
 
-
-def _label_pca_cached(sf_dir: str) -> dict[int, tuple[int, float, float]]:
-    if sf_dir not in _label_pca_cache:
-        from ..operators.similarity import label_pca_summary_parquet
-
-        _label_pca_cache[sf_dir] = label_pca_summary_parquet(
-            os.path.join(sf_dir, "embeddings.parquet"),
-            label_col="label",
-            vec_col="embedding",
-            id_col="vec_id",
-        )
-    return _label_pca_cache[sf_dir]
+    return label_pca_summary_parquet(
+        os.path.join(sf_dir, "embeddings.parquet"),
+        label_col="label",
+        vec_col="embedding",
+        id_col="vec_id",
+    )
 
 
 def _embedding_label_pca_check_oracle(sf_dir: str) -> str:
-    tw = _label_pca_cached(sf_dir)
+    tw = _label_pca(sf_dir)
     values = ", ".join(
         f"({lab}, {int(round(top * 1e6))}, {int(round(expl * 1e6))})"
         for lab, (_n, top, expl) in sorted(tw.items())
@@ -7619,11 +7258,8 @@ def embedding_label_pca_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "docs_tfidf_cosine_pairs",
-    oracle=r"""
-    WITH toks AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM documents
-    ), sh AS (
+    oracle=rf"""
+    WITH {_TOKS_CTE.format(src="documents")}, sh AS (
       SELECT doc_id, unnest(CASE WHEN len(tk) >= 3
              THEN list_transform(range(1, len(tk)-1),
                   i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
@@ -7677,21 +7313,19 @@ def docs_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 _DSIR_BUCKETS = 64
 _DSIR_K = 100
-_dsir_lr_cache: dict[str, list] = {}
 
 
-def _dsir_logratios_cached(sf_dir: str) -> list[int]:
-    if sf_dir not in _dsir_lr_cache:
-        from ..operators.selection import train_dsir_logratios_parquet
+@functools.cache
+def _dsir_logratios(sf_dir: str) -> list[int]:
+    from ..operators.selection import train_dsir_logratios_parquet
 
-        _dsir_lr_cache[sf_dir] = train_dsir_logratios_parquet(
-            os.path.join(sf_dir, "documents.parquet"),
-            text_col="text",
-            target_col="lang",
-            target_value="en",
-            n_buckets=_DSIR_BUCKETS,
-        )
-    return _dsir_lr_cache[sf_dir]
+    return train_dsir_logratios_parquet(
+        os.path.join(sf_dir, "documents.parquet"),
+        text_col="text",
+        target_col="lang",
+        target_value="en",
+        n_buckets=_DSIR_BUCKETS,
+    )
 
 
 def _dsir_scored_sql(sf_dir: str, extra_cols: str = "") -> str:
@@ -7699,13 +7333,13 @@ def _dsir_scored_sql(sf_dir: str, extra_cols: str = "") -> str:
     [extra_cols,] dsir_score) — ONE definition of the feature/bucket/
     fold arithmetic so the two DSIR oracles cannot diverge from each
     other (or silently from operators/selection.py)."""
-    lr = _dsir_logratios_cached(sf_dir)
+    lr = _dsir_logratios(sf_dir)
     lr_list = "[" + ", ".join(str(int(v)) for v in lr) + "]"
     cols = f"{extra_cols}, " if extra_cols else ""
     return rf"""
     WITH toks AS (
       SELECT doc_id, {cols}
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
+             {_WS_TOKENS_SQL.format(col="text")} AS tk
       FROM documents
     ),
     feats AS (
@@ -7748,7 +7382,7 @@ def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     return dsir_importance_topk(
-        docs, "doc_id", "text", _dsir_logratios_cached(sf_dir), k=_DSIR_K
+        docs, "doc_id", "text", _dsir_logratios(sf_dir), k=_DSIR_K
     )
 
 
@@ -7761,18 +7395,14 @@ def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # All integer/string → bit-replicable.
 # ---------------------------------------------------------------------------
 def _docs_bpe_token_counts_oracle(sf_dir: str) -> str:
-    merges = _bpe_merges_cached(sf_dir)
+    merges = _bpe_merges(sf_dir)
     applied = r"' ' || regexp_replace(t, '(.)', '\1 ', 'g')"
     for a, b in merges:
         applied = (
             f"replace({applied}, ' {_sq(a)} {_sq(b)} ', ' {_sq(a)}{_sq(b)} ')"
         )
     return rf"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), t -> t <> '') AS tk
-      FROM documents
-    )
+    WITH {_TOKS_CTE.format(src="documents")}
     SELECT doc_id,
            CAST(COALESCE(list_sum(list_transform(tk,
                 t -> len(list_filter(string_split(trim({applied}), ' '),
@@ -7790,7 +7420,7 @@ def docs_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", word_tokens(F.col("text")).alias("__toks"))
     return toks.select(
         "doc_id",
-        bpe_token_count(F.col("__toks"), _bpe_merges_cached(sf_dir)).alias(
+        bpe_token_count(F.col("__toks"), _bpe_merges(sf_dir)).alias(
             "n_bpe_tokens"
         ),
     )
@@ -7974,7 +7604,7 @@ def docs_dsir_selected_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.selection import dsir_select
 
     docs = _t(spark, sf_dir, "documents")
-    sel = dsir_select(docs, "doc_id", "text", _dsir_logratios_cached(sf_dir), 1)
+    sel = dsir_select(docs, "doc_id", "text", _dsir_logratios(sf_dir), 1)
     return sel.groupBy("lang").agg(F.count(F.lit(1)).alias("n_selected"))
 
 
@@ -8574,10 +8204,10 @@ def docs_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # margin-measured), and the selection is one skew-safe topk_per_group —
 # mergeable, no global sort. Oracle replicates the exact arithmetic:
 # u = (52-bit md5 prefix + 1) / 2^52 is bit-identical in both engines.
+# docs_weighted_sample_merge_check is checked against the same direct
+# selection.
 # ---------------------------------------------------------------------------
-@register(
-    "docs_weighted_sample",
-    oracle="""
+_AES_SAMPLE_ORACLE = """
     WITH w AS (
       SELECT source, doc_id, n_chars,
              CAST(ROUND(
@@ -8596,7 +8226,12 @@ def docs_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT source, doc_id, n_chars, key_micro, CAST(rk AS BIGINT) AS rk
     FROM r WHERE rk <= 5
-    """,
+    """
+
+
+@register(
+    "docs_weighted_sample",
+    oracle=_AES_SAMPLE_ORACLE,
 )
 def docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.selection import weighted_sample_topk
@@ -8620,26 +8255,7 @@ def docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "docs_weighted_sample_merge_check",
-    oracle="""
-    WITH w AS (
-      SELECT source, doc_id, n_chars,
-             CAST(ROUND(
-               ln((CAST(CAST(('0x' || substr(md5('aes1' || CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT) AS DOUBLE) + 1.0)
-                  / 4503599627370496.0)
-               * 1000000.0 / CAST(n_chars AS DOUBLE)
-             ) AS BIGINT) AS key_micro
-      FROM documents
-      WHERE n_chars IS NOT NULL AND n_chars > 0
-    ),
-    r AS (
-      SELECT source, doc_id, n_chars, key_micro,
-             row_number() OVER (PARTITION BY source
-                                ORDER BY key_micro DESC, doc_id) AS rk
-      FROM w
-    )
-    SELECT source, doc_id, n_chars, key_micro, CAST(rk AS BIGINT) AS rk
-    FROM r WHERE rk <= 5
-    """,
+    oracle=_AES_SAMPLE_ORACLE,
 )
 def docs_weighted_sample_merge_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.selection import weighted_sample_merge, weighted_sample_topk

@@ -1926,3 +1926,23 @@ def test_null_payload_mid_chain_fails_loudly(spark):
     )
     with pytest.raises(Exception, match="ValueError: 1 NULL payload"):
         decode_images(assets).collect()
+
+
+def test_map_arrow_parses_each_ddl_schema_once(spark, monkeypatch):
+    """A second build of the same decode op parses no DDL schema string:
+    ``_map_arrow`` parses each one (a JVM round trip) once per process."""
+    from pyspark.sql.types import StructType
+
+    parse = StructType.fromDDL
+    parsed = []
+
+    def counting(ddl):
+        parsed.append(ddl)
+        return parse(ddl)
+
+    assets = _assets(spark)
+    monkeypatch.setattr(StructType, "fromDDL", staticmethod(counting))
+    decode_images(assets)
+    parsed.clear()
+    decode_images(assets)
+    assert parsed == []
