@@ -25,33 +25,55 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # The driver records CORRECTNESS rows for only the first 50 registered
 # entries; registry order is ours to choose. The window leads with the
-# faces whose Spark code changed last (the shared interval frame,
-# one-table LSH) and the similarity pandas-UDF faces, then the only
-# faces that write through upsert_partitions and write_orc, then the
-# only faces of three operators that were cut down to one formulation
-# (pagerank_integer, read_jsonl, ratio_threshold), then every face that
-# calls an operators.multimodal op — the whole codec tier crosses the
-# Python-worker boundary through one shared mapInArrow helper, once per
-# fixture → operator chain — then embedding_label_pca, the grouped
-# applyInPandas face, which also starts Python workers, then the faces
-# touched by the r13 round (the exact-selector tier and the
-# postings-guard dedup tier). Every rotated-out query is still
-# re-verified by the full local check_oracle sweep and the pytest
-# oracle replicas.
+# faces whose Spark code changed last — the exact-selector tier, which
+# now runs one set of selector stages for the grouped and whole-column
+# faces; the four dedup-closure faces (min-label connected components);
+# the five faces whose oracles replay IVF assignment from one shared
+# nearest-centroid declaration, and the faces that train or probe
+# through the shared IVF/PQ sample and probe helpers (among them
+# ann_ivfpq_upsert_check, the only face that writes through
+# upsert_partitions) — then the shared
+# interval frame and one-table LSH, the only face that writes through
+# write_orc, the only faces of three operators that were cut down to
+# one formulation (pagerank_integer, read_jsonl, ratio_threshold), then
+# every face that calls an operators.multimodal op — the whole codec
+# tier crosses the Python-worker boundary through one shared
+# mapInArrow helper, once per fixture → operator chain — then
+# embedding_label_pca, the grouped applyInPandas face, which also
+# starts Python workers. Every rotated-out query is still re-verified
+# by the full local check_oracle sweep and the pytest oracle replicas.
 _CHECK_FIRST = [
-    # --- the latest Spark-side changes: both interval-join faces build
-    # one shared promo frame; one-table sign-bit LSH runs through the
-    # multi-table pandas UDF ---
+    # --- exact selectors and the HDR grid they share (sketch.py) ---
+    "events_exact_quantiles_sketch",
+    "events_quantiles_by_type",
+    "events_value_mad_outliers",
+    "events_mad_outliers_by_type",
+    "docs_quantile_sketch",
+    "docs_quantile_sketch_check",
+    "events_quantile_merge_check",
+    # --- dedup closure (graph.py dedup_clusters, min-label) ---
+    "dedup_components",
+    "corpus_prepare_cc",
+    "corpus_prepare_cc_best",
+    "corpus_prepare_audit",
+    # --- nearest-centroid oracles and the shared IVF/PQ sample + probe
+    # helpers of operators/similarity.py (the IVF-assignment and
+    # PQ-encoding faces also cross into pandas-UDF Python workers) ---
+    "ann_ivf_probe_topk",
+    "dedup_semantic",
+    "dedup_semantic_incremental",
+    "ann_ivfpq_topk",
+    "corpus_prepare_semantic",
+    "ann_ivf_recall_check",
+    "ann_cosine_topk_ivf",
+    "embedding_pq_codes",
+    "ann_ivfpq_upsert_check",
+    # --- one shared promo frame for both interval-join faces; one-table
+    # sign-bit LSH runs through the multi-table pandas UDF ---
     "events_interval_join",
     "events_interval_join_binned",
     "ann_cosine_topk_lsh",
-    # --- pandas-UDF faces of operators/similarity.py (IVF assignment,
-    # PQ encoding): Python workers outside the codec tier ---
-    "ann_cosine_topk_ivf",
-    "embedding_pq_codes",
-    # --- the only faces that reach the partition-overwrite and ORC
-    # sinks of sources/sinks.py ---
-    "ann_ivfpq_upsert_check",
+    # --- the only face that reaches the ORC sink of sources/sinks.py ---
     "orders_orc_roundtrip_check",
     # --- single-formulation operators with no other witnessed face ---
     "supplier_authority_pagerank",
@@ -83,12 +105,10 @@ _CHECK_FIRST = [
     # --- grouped applyInPandas: a Python-worker face outside the codec
     # tier (workers start from session.py's daemon module) ---
     "embedding_label_pca",
-    # --- r13: exact-selector tier (sketch.py) ---
-    "events_quantiles_by_type",
+    # --- r13: the rest of the exact-selector tier ---
     "user_spend_quartiles",
-    "docs_quantile_sketch_check",
+    # --- overflow (slots 51+; designated for the next window) ---
     "events_value_quantile_check",
-    # --- r13: dedup postings guards (dedup.py, synthetic winnow) ---
     "dedup_simhash",
     "dedup_embedding",
     "dedup_minhash_recall_check",
@@ -101,17 +121,9 @@ _CHECK_FIRST = [
     "docs_dup_span_profile",
     "docs_dup_span_strip",
     "corpus_prepare",
-    "corpus_prepare_cc",
-    "corpus_prepare_cc_best",
-    # --- overflow (slots 51+; designated for the next window) ---
     "dedup_minhash",
     "dedup_ngram_jaccard",
     "vocab_bpe_pair_counts",
-    "events_value_mad_outliers",
-    "events_mad_outliers_by_type",
-    "corpus_prepare_audit",
-    "dedup_components",
-    "events_quantile_merge_check",
     "events_sliding",
     "nation_customer_counts",
     "orders_bloom_semijoin",

@@ -34,6 +34,7 @@ __all__ = [
     "train_ivf_centroids",
     "train_ivf_centroids_parquet",
     "assign_ivf_cluster",
+    "ivf_probes",
     "cosine_topk_ivf",
     "cosine_topk_ivf_parquet",
     "build_ann_table",
@@ -217,6 +218,67 @@ def _kmeans(X: np.ndarray, n_clusters: int, iters: int, seed: int) -> np.ndarray
     return C
 
 
+def _sample_vectors(
+    df: DataFrame, vec_col: str, sample_rows: int, id_col: str | None
+) -> np.ndarray:
+    """The Spark trainers' bounded driver-side sample as float64 rows.
+    With ``id_col``: the ``sample_rows`` SMALLEST ids
+    (``TakeOrderedAndProject`` — one distributed bottom-k,
+    layout-independent, and IDENTICAL to the selection
+    :func:`_sample_vectors_parquet` makes). Without it: a plain
+    ``limit`` — partition-order dependent across cluster layouts, fine
+    for throwaway indexes only."""
+    sel = df.select(*([id_col] if id_col else []), vec_col)
+    if id_col:
+        sel = sel.orderBy(F.col(id_col).asc()).limit(sample_rows).select(vec_col)
+    else:
+        sel = sel.limit(sample_rows)
+    return np.asarray([list(r[0]) for r in sel.collect()], dtype="float64")
+
+
+def _sample_vectors_parquet(
+    parquet_path: str, vec_col: str, id_col: str, sample_rows: int
+) -> np.ndarray:
+    """Engine-independent twin of :func:`_sample_vectors` with ``id_col``:
+    the vectors of the ``sample_rows`` smallest ids, in id order, read
+    with pyarrow. Driver memory stays bounded at any table size
+    (VERDICT r5 item 6 — materializing the FULL id column before an
+    argsort costs tens of GB at 10¹⁰ rows): a streaming bottom-k over
+    id-column batches (O(sample_rows + batch) resident) finds the
+    cutoff, then the (wide) vectors are fetched by one
+    statistics-pruned ``id <= cutoff`` filtered read — row groups whose
+    id range lies above the cutoff are never opened. Same selected rows
+    as a full argsort for unique ids."""
+    import pyarrow.dataset as pads
+
+    ds = pads.dataset(parquet_path)
+    best: np.ndarray | None = None
+    for batch in ds.scanner(columns=[id_col], batch_size=1 << 16).to_batches():
+        ids = np.asarray(batch.column(0))
+        cand = ids if best is None else np.concatenate([best, ids])
+        if cand.size > sample_rows:
+            cand = np.partition(cand, sample_rows - 1)[:sample_rows]
+        best = cand
+    cutoff = np.sort(best)[:sample_rows][-1]
+    sample = (
+        ds.to_table(columns=[id_col, vec_col], filter=pads.field(id_col) <= cutoff)
+        .sort_by(id_col)
+        .slice(0, sample_rows)
+    )
+    return np.stack(
+        [np.asarray(v, dtype="float64") for v in sample.column(vec_col).to_pylist()]
+    )
+
+
+def ivf_probes(centroids, query_vec, n_probe: int) -> list[int]:
+    """The IVF probe list: indices of the ``n_probe`` centroids nearest
+    ``query_vec`` by squared L2, nearest first (float64, numpy argsort
+    order — the one probe selection every IVF face and twin uses)."""
+    C = np.asarray(centroids, dtype="float64")
+    q = np.asarray(query_vec, dtype="float64")
+    return np.argsort(((C - q[None, :]) ** 2).sum(axis=1))[:n_probe].tolist()
+
+
 def train_ivf_centroids(
     df: DataFrame,
     vec_col: str,
@@ -234,20 +296,11 @@ def train_ivf_centroids(
     table size.
 
     Determinism (ADVICE r7): pass ``id_col`` to select the sample as the
-    ``sample_rows`` SMALLEST ids (``TakeOrderedAndProject`` — one
-    distributed bottom-k, layout-independent, and IDENTICAL to the
-    selection the :func:`train_ivf_centroids_parquet` twin makes, so
-    both trainers produce the same centroids bit-for-bit). Without
-    ``id_col`` the sample is a plain ``limit`` — partition-order
-    dependent across cluster layouts, fine for throwaway indexes only.
+    ``sample_rows`` SMALLEST ids, the selection the
+    :func:`train_ivf_centroids_parquet` twin makes, so both trainers
+    produce the same centroids bit-for-bit (:func:`_sample_vectors`).
     """
-    sel = df.select(*([id_col] if id_col else []), vec_col)
-    if id_col:
-        sel = sel.orderBy(F.col(id_col).asc()).limit(sample_rows).select(vec_col)
-    else:
-        sel = sel.limit(sample_rows)
-    sample = [list(r[0]) for r in sel.collect()]
-    X = np.asarray(sample, dtype="float64")
+    X = _sample_vectors(df, vec_col, sample_rows, id_col)
     return _kmeans(X, n_clusters, iters, seed).tolist()
 
 
@@ -268,35 +321,9 @@ def train_ivf_centroids_parquet(
     can be rendered as engine-shared SQL literals — the same trick the
     LSH hyperplanes use — which turns IVF assignment + probe + top-k into
     a fully DuckDB-replicable (hash-checkable) plan. Driver memory stays
-    bounded at any table size (VERDICT r5 item 6 — the previous form
-    materialized the FULL id column before the argsort, tens of GB at
-    10¹⁰ rows): the sample is the ``sample_rows`` SMALLEST ids, found by
-    a streaming bottom-k over id-column batches (O(sample_rows + batch)
-    resident), then the (wide) vectors are fetched by one
-    statistics-pruned ``id <= cutoff`` filtered read — row groups whose
-    id range lies above the cutoff are never opened. Same selected rows
-    as the argsort for unique ids, so the rendered literals (and every
-    hash check built on them) are unchanged.
+    bounded at any table size (:func:`_sample_vectors_parquet`).
     """
-    import pyarrow.dataset as pads
-
-    ds = pads.dataset(parquet_path)
-    best: np.ndarray | None = None
-    for batch in ds.scanner(columns=[id_col], batch_size=1 << 16).to_batches():
-        ids = np.asarray(batch.column(0))
-        cand = ids if best is None else np.concatenate([best, ids])
-        if cand.size > sample_rows:
-            cand = np.partition(cand, sample_rows - 1)[:sample_rows]
-        best = cand
-    cutoff = np.sort(best)[: sample_rows][-1]
-    sample = (
-        ds.to_table(columns=[id_col, vec_col], filter=pads.field(id_col) <= cutoff)
-        .sort_by(id_col)
-        .slice(0, sample_rows)
-    )
-    X = np.stack(
-        [np.asarray(v, dtype="float64") for v in sample.column(vec_col).to_pylist()]
-    )
+    X = _sample_vectors_parquet(parquet_path, vec_col, id_col, sample_rows)
     return _kmeans(X, n_clusters, iters, seed).tolist()
 
 
@@ -335,11 +362,8 @@ def cosine_topk_ivf(
     pruning on a cluster-partitioned table. ``round_to`` rounds before
     the top-k ordering (cross-engine tie stability, see
     ``cosine_topk_lsh``)."""
-    C = np.asarray(centroids, dtype="float64")
-    q = np.asarray(query_vec, dtype="float64")
-    probes = np.argsort(((C - q[None, :]) ** 2).sum(axis=1))[:n_probe].tolist()
     cands = assign_ivf_cluster(df, vec_col, centroids).filter(
-        F.col("cluster").isin([int(p) for p in probes])
+        F.col("cluster").isin(ivf_probes(centroids, query_vec, n_probe))
     )
     scored = cosine_scores(cands, vec_col, query_vec, out)
     if round_to is not None:
@@ -385,10 +409,7 @@ def cosine_topk_ivf_parquet(
         ),
         dtype="float64",
     )
-    qa = np.asarray(q, dtype="float64")
-    probes = set(
-        np.argsort(((C - qa[None, :]) ** 2).sum(axis=1))[:n_probe].tolist()
-    )
+    probes = set(ivf_probes(C, q, n_probe))
     M = np.stack([np.asarray(v, dtype="float32") for v in vecs]).astype(
         "float64"
     )
@@ -568,11 +589,8 @@ def query_ann_table(
 ) -> DataFrame:
     """Top-k against a ``build_ann_table`` output. The cluster IN-filter is
     a partition filter — pruned before any file is opened."""
-    C = np.asarray(centroids, dtype="float64")
-    q = np.asarray(query_vec, dtype="float64")
-    probes = np.argsort(((C - q[None, :]) ** 2).sum(axis=1))[:n_probe].tolist()
     table = spark.read.parquet(path).filter(
-        F.col("cluster").isin([int(p) for p in probes])
+        F.col("cluster").isin(ivf_probes(centroids, query_vec, n_probe))
     )
     scored = cosine_scores(table, vec_col, query_vec, out)
     return (
@@ -616,13 +634,7 @@ def train_pq_codebooks(
     without it the sample is layout-dependent). ``codebooks[j]`` holds
     ``ksub`` centroids of dimension ``d/m`` for subspace ``j`` (seeded
     ``seed + j`` so subspaces decorrelate deterministically)."""
-    sel = df.select(*([id_col] if id_col else []), vec_col)
-    if id_col:
-        sel = sel.orderBy(F.col(id_col).asc()).limit(sample_rows).select(vec_col)
-    else:
-        sel = sel.limit(sample_rows)
-    sample = [list(r[0]) for r in sel.collect()]
-    X = np.asarray(sample, dtype="float64")
+    X = _sample_vectors(df, vec_col, sample_rows, id_col)
     return _pq_fit(X, m, ksub, iters, seed)
 
 
@@ -650,31 +662,12 @@ def train_pq_codebooks_parquet(
     seed: int = 42,
 ) -> list[list[list[float]]]:
     """Engine-independent twin of :func:`train_pq_codebooks` — the same
-    bounded bottom-k-by-id sample selection as
-    :func:`train_ivf_centroids_parquet` (streaming bottom-k over the id
-    column, then one statistics-pruned filtered read), then the same
-    per-subspace k-means core. The codebooks can therefore be rendered
+    bounded bottom-k-by-id sample (:func:`_sample_vectors_parquet`) as
+    :func:`train_ivf_centroids_parquet`, then the same per-subspace
+    k-means core. The codebooks can therefore be rendered
     as engine-shared SQL literals, making encode + ADC top-k fully
     DuckDB-replicable (hash-checkable) like the IVF faces."""
-    import pyarrow.dataset as pads
-
-    ds = pads.dataset(parquet_path)
-    best: np.ndarray | None = None
-    for batch in ds.scanner(columns=[id_col], batch_size=1 << 16).to_batches():
-        ids = np.asarray(batch.column(0))
-        cand = ids if best is None else np.concatenate([best, ids])
-        if cand.size > sample_rows:
-            cand = np.partition(cand, sample_rows - 1)[:sample_rows]
-        best = cand
-    cutoff = np.sort(best)[:sample_rows][-1]
-    sample = (
-        ds.to_table(columns=[id_col, vec_col], filter=pads.field(id_col) <= cutoff)
-        .sort_by(id_col)
-        .slice(0, sample_rows)
-    )
-    X = np.stack(
-        [np.asarray(v, dtype="float64") for v in sample.column(vec_col).to_pylist()]
-    )
+    X = _sample_vectors_parquet(parquet_path, vec_col, id_col, sample_rows)
     return _pq_fit(X, m, ksub, iters, seed)
 
 
@@ -817,11 +810,8 @@ def query_ivfpq_table(
     codes (``code_col`` path — no encode, no vectors), and only the
     ``shortlist`` winners' float vectors are read from ``rerank_df`` for
     the exact squared-L2 rerank."""
-    C = np.asarray(centroids, dtype="float64")
-    q = np.asarray(query_vec, dtype="float64")
-    probes = np.argsort(((C - q[None, :]) ** 2).sum(axis=1))[:n_probe].tolist()
     codes = spark.read.parquet(path).filter(
-        F.col("cluster").isin([int(p) for p in probes])
+        F.col("cluster").isin(ivf_probes(centroids, query_vec, n_probe))
     )
     ids = pq_adc_topk(
         codes,

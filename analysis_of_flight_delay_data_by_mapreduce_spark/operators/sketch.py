@@ -1,19 +1,25 @@
-"""Count-min sketch: the mergeable frequency sketch (Cormode &
-Muthukrishnan, J. Algorithms 2005) completing the sketch tier next to
-the HLL distinct-count and theta set-algebra rollups.
+"""The sketch tier's mergeable summaries and the exact selectors they
+guide. Three parts:
 
-At 100 TB the pattern is the same as the HLL tier's: daily jobs
-materialize a tiny ``depth × width`` counter grid per partition key;
-any later window's term-frequency question is answered by summing
-sketches cell-wise (*mergeability is exact* — the grid is a linear
-projection of the data) and taking the per-term column minimum, instead
-of rescanning raw tokens. Guarantees: ``estimate ≥ true`` always (a
-deterministic invariant — counters only over-count, never under-count),
-and ``estimate ≤ true + εN`` with probability ``1 − e^{−depth}`` where
-``ε = e / width`` and ``N`` is the total item count.
-
-All hashing is JVM-side ``xxhash64(seed, item)``; the build is one
-explode + one partial-aggregated shuffle keyed on (seed, cell).
+- **Count-min grid** (Cormode & Muthukrishnan, J. Algorithms 2005): the
+  frequency sketch completing the tier next to the HLL distinct-count
+  and theta set-algebra rollups. Daily jobs materialize a tiny
+  ``depth × width`` counter grid per partition key; any later window's
+  term-frequency question is answered by summing sketches cell-wise
+  (*mergeability is exact* — the grid is a linear projection of the
+  data) and taking the per-term column minimum, instead of rescanning
+  raw tokens. Guarantees: ``estimate ≥ true`` always (counters only
+  over-count), and ``estimate ≤ true + εN`` with probability
+  ``1 − e^{−depth}`` where ``ε = e / width`` and ``N`` is the total item
+  count. All hashing is JVM-side ``xxhash64(seed, item)``; the build is
+  one explode + one partial-aggregated shuffle keyed on (seed, cell).
+- **HDR quantile grid**: log-linear integer buckets over non-negative
+  values, mergeable the same way; its cumulative walk brackets any
+  quantile within 2^-QSKETCH_PREC relative width.
+- **Exact selectors**: sketch-guided exact quantiles and median/MAD in
+  bounded passes, no global sort. Each stage is written once, keyed by
+  a list of group columns; the whole-column selectors are its no-key
+  case.
 """
 
 from __future__ import annotations
@@ -254,6 +260,17 @@ def with_qsketch_bucket(
     )
 
 
+def _qsketch_grid(df: DataFrame, value_col: str, keys: list[str]) -> DataFrame:
+    """The ``(*keys, shift, sub, cnt)`` bucket grid of a non-negative
+    integer column, NULLs dropped: one narrow projection + one
+    partial-aggregated shuffle on (keys, bucket)."""
+    return (
+        with_qsketch_bucket(df, value_col)
+        .groupBy(*keys, "shift", "sub")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
 def qsketch_build(df: DataFrame, value_col: str) -> DataFrame:
     """Sketch a non-negative integer column into the (shift, sub, cnt)
     bucket grid. One narrow projection + one partial-aggregated shuffle on
@@ -264,8 +281,7 @@ def qsketch_build(df: DataFrame, value_col: str) -> DataFrame:
     (``qsketch_merge``) — per-day sketches roll up into any window
     without rescanning, the 100 TB pattern shared with the CMS/HLL tiers.
     """
-    b = with_qsketch_bucket(df, value_col).select("shift", "sub")
-    return b.groupBy("shift", "sub").agg(F.count(F.lit(1)).alias("cnt"))
+    return _qsketch_grid(df, value_col, [])
 
 
 def qsketch_merge(*sketches: DataFrame) -> DataFrame:
@@ -277,38 +293,110 @@ def qsketch_merge(*sketches: DataFrame) -> DataFrame:
     return out.groupBy("shift", "sub").agg(F.sum("cnt").alias("cnt"))
 
 
-def _qsketch_cum(sketch: DataFrame) -> DataFrame:
-    """(__lo, __hi, cnt, __cum) per grid bucket — the cumulative walk
-    shared by the bracket estimator and the two-pass exact selector. The
-    window runs over the GRID (<= ~1k rows however large the data), so
-    its SinglePartition sort is bounded by the sketch size."""
+# ---------------------------------------------------------------------------
+# Sketch-guided EXACT selection (Munro-Paterson style: a summary narrows
+# the candidate range, a bounded second pass resolves it exactly) — no
+# global sort, no per-group sort of raw values.
+#
+# Every stage below is written ONCE, keyed by a list of group columns
+# ``keys`` over a value frame ``(*keys, __x)``; the whole-column
+# selectors are the ``keys=[]`` case. Per group (or for the whole
+# column):
+#
+# 1. Grid: the mergeable HDR grid of ``__x`` (one partial-aggregated
+#    shuffle on (keys, bucket)) and its cumulative walk, a window
+#    partitioned by the keys — each partition is ONE group's grid
+#    (<= ~1k rows regardless of data).
+# 2. Brackets: per (keys, p), the bucket holding the rank-th element
+#    AND the exact count of values below it (``c_below``) both fall out
+#    of the walk — no rescan, because the buckets partition the domain.
+# 3. Resolution: pass 2 touches ONLY rows inside their (keys, p)
+#    bracket, aggregates per distinct value, and picks the smallest
+#    value v with ``c_below + cum(v) >= rank``: the exact rank-th order
+#    statistic (1-based, duplicates counted). The resolution window runs
+#    over distinct values within ONE bucket (relative width
+#    <= 2^-QSKETCH_PREC), behind the fail-loud ``_bracket_guard``.
+# 4. MAD band (grid only, NO data scan): the deviation distribution
+#    around the median is bracketed from the SAME x-grid walked outward
+#    from the median, so no second grid over ``|x − median|`` (a full
+#    scan + shuffle) is needed.
+# 5. Band scan: ONE conditional-aggregation scan of the band resolves
+#    the MAD.
+#
+# The only physical choice that depends on the shape is how a frame
+# keyed by the groups meets the rows (``_meet``). Pure integer ranks and
+# counts throughout: every output is hash-identical to a full-sort
+# oracle by construction.
+# ---------------------------------------------------------------------------
+
+
+def _qsketch_cum(sketch: DataFrame, keys: list[str]) -> DataFrame:
+    """(*keys, __lo, __hi, cnt, __cum) per grid bucket — the cumulative
+    walk shared by the bracket estimator and the exact selectors. The
+    window runs over the GRID, partitioned by the keys, so each
+    partition's sort (a SinglePartition one when there are no keys) is
+    bounded by the sketch size, not the data."""
     from pyspark.sql import Window as W
 
     lo = F.expr("sub * shiftleft(cast(1 as bigint), shift)").cast("bigint")
     hi = F.expr(
         "(sub + 1) * shiftleft(cast(1 as bigint), shift) - 1"
     ).cast("bigint")
-    w = W.orderBy("__lo").rowsBetween(W.unboundedPreceding, W.currentRow)
+    w = W.partitionBy(*keys).orderBy("__lo").rowsBetween(
+        W.unboundedPreceding, W.currentRow
+    )
     return (
         sketch.select(
-            lo.alias("__lo"), hi.alias("__hi"), F.col("cnt").cast("bigint").alias("cnt")
+            *keys,
+            lo.alias("__lo"),
+            hi.alias("__hi"),
+            F.col("cnt").cast("bigint").alias("cnt"),
         )
         .withColumn("__cum", F.sum("cnt").over(w))
     )
 
 
-def _qsketch_ranks(cum: DataFrame, permille: list[int]) -> DataFrame:
-    """(p, __rank, __n) — the integer rank per requested permille:
-    ``(n*p + 999) div 1000``, never a float product (decimal-vs-double
-    literal typing differs across engines at ceil boundaries)."""
-    n = cum.agg(F.sum("cnt").alias("__n"))
+def _rank(p: str | int) -> Column:
+    """The integer rank of permille ``p`` (a column name or a literal)
+    among ``__n`` values: ``(n*p + 999) div 1000``, 1-based — never a
+    float product (decimal-vs-double literal typing differs across
+    engines at ceil boundaries)."""
+    return F.expr(f"(__n * {p} + 999) div 1000").cast("bigint")
+
+
+def _meet(rows: DataFrame, frame: DataFrame, keys: list[str]) -> DataFrame:
+    """Join a frame with one row per group (per group and p for the
+    brackets) onto ``rows``: an equi-join on the keys, whose strategy
+    the planner picks by size (nothing forces a broadcast of a
+    group-cardinality frame), or, with no keys, an explicit broadcast of
+    the few-row frame — a constant key in its place plans as a
+    sort-merge join that only AQE turns into a broadcast at run time."""
+    return rows.join(frame, keys) if keys else rows.join(F.broadcast(frame))
+
+
+def _brackets(cum: DataFrame, permille: list[int], keys: list[str]) -> DataFrame:
+    """Per-(keys, p) bracket rows ``(*keys, p, __rank, __n, __lo, __hi,
+    __c_below)``: the containing bucket is the unique one with
+    ``cum - cnt < rank <= cum``, and ``c_below = cum - cnt``."""
     ps = F.explode(
         F.array(*[F.lit(int(p)).cast("bigint") for p in permille])
     ).alias("p")
-    return n.select(ps, F.col("__n")).select(
-        "p",
-        F.expr("(__n * p + 999) div 1000").cast("bigint").alias("__rank"),
-        "__n",
+    ranks = (
+        cum.groupBy(*keys)
+        .agg(F.sum("cnt").alias("__n"))
+        .select(*keys, ps, "__n")
+        .select(*keys, "p", _rank("p").alias("__rank"), "__n")
+    )
+    return (
+        _meet(cum, ranks, keys)
+        .filter(
+            (F.col("__cum") >= F.col("__rank"))
+            & (F.col("__cum") - F.col("cnt") < F.col("__rank"))
+        )
+        .select(
+            *keys, "p", "__rank", "__n", "__lo", "__hi",
+            (F.col("__cum") - F.col("cnt")).alias("__c_below"),
+        )
     )
 
 
@@ -320,10 +408,11 @@ fraction of the distinct values; an adversarial distribution can still
 concentrate arbitrarily many DISTINCT values inside one bucket, and the
 resolution window would then sort them all in a single partition. The
 documented escape (re-sketch the bracket rows at a finer offset, one
-bounded pass per level) is deliberately NOT implemented — no realistic
-distribution needs it — so the selectors fail LOUDLY at this limit
-instead of silently shipping a degenerate single-partition sort. 2^22
-rows of (key, value, count) sort comfortably within one task's memory."""
+bounded pass per level, log_16 levels worst case) is deliberately NOT
+implemented — no realistic distribution needs it — so the selectors
+fail LOUDLY at this limit instead of silently shipping a degenerate
+single-partition sort. 2^22 rows of (key, value, count) sort
+comfortably within one task's memory."""
 
 
 def _bracket_guard(per_val: DataFrame, keys: list[str], limit: int) -> DataFrame:
@@ -358,138 +447,161 @@ def _bracket_guard(per_val: DataFrame, keys: list[str], limit: int) -> DataFrame
     )
 
 
-def exact_quantiles_two_pass(
-    df: DataFrame, value_col: str, permille: list[int],
-    bracket_limit: int = QSKETCH_BRACKET_LIMIT,
+def _resolve(
+    vals: DataFrame, brackets: DataFrame, keys: list[str], bracket_limit: int
 ) -> DataFrame:
-    """EXACT permille quantiles of a non-negative BIGINT column in two
-    bounded passes — no global sort, the sketch-guided selection
-    pattern (Munro-Paterson style: a summary narrows the candidate
-    range, a second pass resolves it exactly).
-
-    Pass 1 builds the mergeable HDR grid (one partial-aggregated
-    shuffle); the rank's bracket AND the exact count of values below it
-    both fall out of the grid's cumulative walk — ``c_below`` needs no
-    rescan because the buckets partition the domain. Pass 2 touches
-    ONLY rows inside the (p-specific) brackets — a broadcast range join
-    against |permille| bracket rows — aggregates per distinct value,
-    and picks the smallest value v with ``c_below + cum(v) >= rank``:
-    the exact rank-th order statistic (1-based, duplicates counted).
-
-    The per-p resolution window runs over distinct values within ONE
-    bucket (relative width <= 2^-QSKETCH_PREC); for adversarial
-    distributions where a single bucket still holds too many distinct
-    values, the escape is recursion — re-sketch the bracket rows at a
-    finer offset, one extra bounded pass per level, log_16 levels worst
-    case. Not needed at any realistic skew (a bucket is 6.25% of its
-    value's magnitude), so it is not implemented; instead a fail-loud
-    guard (``bracket_limit``, VERDICT r7 item 7) raises before the
-    resolution window would sort an over-wide bracket in one partition.
-
-    Output: ``(p, n_rows, exact_value)`` — hash-identical to a full-sort
-    oracle by construction (pure integer ranks and counts).
-    """
+    """Stage 3, pass 2: join each row to its (keys, p) brackets, keep
+    the in-bracket rows, aggregate per distinct value behind the guard,
+    and walk to the rank. Returns ``(*keys, p, __n, exact_value)``."""
     from pyspark.sql import Window as W
 
-    from .cache import scoped_persist
-
-    vals = df.filter(F.col(value_col).isNotNull()).select(
-        F.col(value_col).cast("bigint").alias("__x")
+    inside = _meet(vals, brackets, keys).filter(
+        (F.col("__x") >= F.col("__lo")) & (F.col("__x") <= F.col("__hi"))
     )
-    cum = _qsketch_cum(qsketch_build(vals, "__x"))
-    ranks = _qsketch_ranks(cum, permille)
-    brackets = scoped_persist(
-        cum.join(
-            F.broadcast(ranks),
-            (F.col("__cum") >= F.col("__rank"))
-            & (F.col("__cum") - F.col("cnt") < F.col("__rank")),
-        ).select(
-            "p",
-            "__rank",
-            "__n",
-            F.col("__lo"),
-            F.col("__hi"),
-            (F.col("__cum") - F.col("cnt")).alias("__c_below"),
-        )
-    )
-    inside = vals.join(
-        F.broadcast(brackets),
-        (F.col("__x") >= F.col("__lo")) & (F.col("__x") <= F.col("__hi")),
-    )
-    per_val = inside.groupBy("p", "__rank", "__n", "__c_below", "__x").agg(
-        F.count(F.lit(1)).alias("__k")
-    )
-    per_val = _bracket_guard(per_val, ["p"], bracket_limit)
-    w = W.partitionBy("p").orderBy("__x").rowsBetween(
+    per_val = inside.groupBy(
+        *keys, "p", "__rank", "__n", "__c_below", "__x"
+    ).agg(F.count(F.lit(1)).alias("__k"))
+    per_val = _bracket_guard(per_val, [*keys, "p"], bracket_limit)
+    w = W.partitionBy(*keys, "p").orderBy("__x").rowsBetween(
         W.unboundedPreceding, W.currentRow
     )
     resolved = per_val.withColumn("__vcum", F.sum("__k").over(w)).filter(
         F.col("__c_below") + F.col("__vcum") >= F.col("__rank")
     )
-    return (
-        resolved.groupBy("p", "__n")
-        .agg(F.min("__x").alias("exact_value"))
-        .select("p", F.col("__n").alias("n_rows"), "exact_value")
+    return resolved.groupBy(*keys, "p", "__n").agg(
+        F.min("__x").alias("exact_value")
     )
 
 
-def median_mad_two_pass(
-    vals: DataFrame, value_col: str,
-    bracket_limit: int = QSKETCH_BRACKET_LIMIT,
+def _exact_quantiles(
+    vals: DataFrame, permille: list[int], keys: list[str], bracket_limit: int
 ) -> DataFrame:
-    """Exact ``(n_rows, median, mad)`` of a non-negative BIGINT column in
-    THREE bounded passes — the median/MAD core of robust outlier
-    detection with the deviation grid ELIMINATED (VERDICT r7 item 3).
+    """Stages 1-3 for the quantile selectors. The brackets are
+    bracket-sized (groups × |permille| rows) and lazily persisted, so
+    the pass-2 join and the guard's second reference do not re-run the
+    grid + cumulative-window subtree, and building the selector runs no
+    Spark job."""
+    from .cache import scoped_persist
 
-    The naive composition runs :func:`exact_quantiles_two_pass` twice:
-    grid over x, resolve median, grid over the derived ``|x − median|``
-    column (a second full scan + shuffle), resolve MAD — four passes.
-    But the deviation distribution is fully described by the EXISTING
-    x-grid walked outward from the median: a bucket ``[lo, hi]`` lying
-    entirely inside ``[m−t, m+t]`` contributes all its rows to
-    ``#{d ≤ t}`` (lower bound L(t)); any bucket merely intersecting it
-    bounds from above (U(t)). Evaluating both at every candidate
-    deviation ``t ∈ {|edge − m|}`` (grid-sized arithmetic, no data scan)
-    yields a bracket: ``d_lo = max{t : U(t) < rank}`` (MAD > d_lo, since
-    at most U(d_lo) < rank deviations are ≤ d_lo) and ``d_hi = min{t :
-    L(t) ≥ rank}`` (MAD ≤ d_hi, since at least rank deviations are
-    ≤ d_hi; d_hi exists — the widest candidate covers every bucket).
+    cum = _qsketch_cum(_qsketch_grid(vals, "__x", keys), keys)
+    brackets = scoped_persist(_brackets(cum, permille, keys))
+    return _resolve(vals, brackets, keys, bracket_limit)
 
-    Pass 3 then resolves the MAD in ONE conditional-aggregation scan of
-    ``x ∈ [m−d_hi, m+d_hi]``: rows with ``d ≤ d_lo`` collapse into a
-    single count group (they only offset the rank — exactly the
-    ``c_below`` of the base selector, counted in-scan instead of from a
-    second grid), rows in the ``(d_lo, d_hi]`` band group by exact
-    deviation, and the cumulative walk picks the smallest band value
-    crossing the rank. Rows outside the scan have ``d > d_hi`` and
-    cannot affect ranks ≤ rank. Pure integer throughout — hash-identical
-    to a full-sort oracle by construction.
 
-    Pass ledger vs the naive form: grid(x) + resolve(median) +
-    band-scan(MAD) = 3 scans of ``vals`` and ONE bucket-key shuffle,
-    versus 4 scans and two shuffles. The band scan's groupBy state is
-    bounded by the bracket's distinct deviations (U−L gaps come from
-    ≤ 2 partially-covered buckets per side, each ≤ 2^-QSKETCH_PREC
-    relative width) — same adversarial-distribution caveat as the base
-    selector's bracket (a single degenerate bucket holding most mass
-    widens the band to that bucket's width).
+def _mad_band(cum: DataFrame, med: DataFrame, keys: list[str]) -> DataFrame:
+    """Stage 4, grid only: per group, the deviation band ``(d_lo, d_hi]``
+    that holds the MAD, joined to the median row — ``(*keys, __dhi,
+    __dlo, __rank, __n, __m)``.
 
-    ``vals`` should be persisted by the caller (it is scanned three
-    times here plus typically once more by the consumer).
-    """
+    A bucket [lo, hi] is FULLY inside [m−t, m+t] iff t ≥ r :=
+    max(hi−m, m−lo) (its full-cover radius) and OVERLAPS it iff t ≥ s :=
+    max(m−hi, lo−m, 0) (its overlap radius), so L(t) = Σ cnt[r ≤ t]
+    (a lower bound on #{d ≤ t}) and U(t) = Σ cnt[s ≤ t] (an upper bound)
+    are cumulative sums over the radius-sorted grid. d_hi = the smallest
+    full-cover radius whose L crosses the rank (MAD ≤ d_hi; it exists —
+    the widest radius covers every bucket); d_lo = the largest overlap
+    radius with U still below it (U(d_lo) < rank ⇒ #{d ≤ d_lo} < rank,
+    so MAD > d_lo — any such d_lo yields the identical MAD, it only sets
+    how many band rows collapse into the −1 sentinel). Two bounded
+    window walks and one aggregation — no self-join of the grid."""
     from pyspark.sql import Window as W
 
-    x = vals.filter(F.col(value_col).isNotNull()).select(
-        F.col(value_col).cast("bigint").alias("__x")
+    radii = _meet(cum, med, keys).select(
+        *keys,
+        "__rank",
+        F.col("cnt"),
+        F.greatest(
+            F.col("__hi") - F.col("__m"), F.col("__m") - F.col("__lo")
+        ).alias("__r"),
+        F.greatest(
+            F.col("__m") - F.col("__hi"),
+            F.col("__lo") - F.col("__m"),
+            F.lit(0).cast("bigint"),
+        ).alias("__s"),
     )
-    # r12: the grid (and the 1-row med/band frames below) are
-    # localCheckpoint'ed, not persisted — the grid subtree used to be
-    # re-INLINED at every downstream reference (the final face's
-    # formatted plan ran to ~3000 lines / 360 Exchange text nodes), and
-    # the driver re-analyzed that tree on every run. Severing lineage at
-    # the grid-sized frames (≤ ~1k rows) collapses the downstream plan
-    # to small leaf scans; the checkpointed frames rebuild from the
-    # caller-persisted ``vals`` in milliseconds.
+    wl = W.partitionBy(*keys).orderBy("__r").rangeBetween(
+        W.unboundedPreceding, W.currentRow
+    )
+    wu = W.partitionBy(*keys).orderBy("__s").rangeBetween(
+        W.unboundedPreceding, W.currentRow
+    )
+    both = radii.withColumn("__L", F.sum("cnt").over(wl)).withColumn(
+        "__U", F.sum("cnt").over(wu)
+    )
+    # NOT checkpointed: its one consumer is the band scan's join, and its
+    # lineage already bottoms out at the cum/med checkpoint leaves — an
+    # eager cut here would cost one more driver-synchronous job per run
+    # for no plan-size benefit.
+    band = both.groupBy(*keys).agg(
+        F.min(F.when(F.col("__L") >= F.col("__rank"), F.col("__r"))).alias(
+            "__dhi"
+        ),
+        F.coalesce(
+            F.max(F.when(F.col("__U") < F.col("__rank"), F.col("__s"))),
+            F.lit(-1).cast("bigint"),
+        ).alias("__dlo"),
+    )
+    return _meet(band, med, keys)
+
+
+def _band_scan(
+    vals: DataFrame, band: DataFrame, keys: list[str], bracket_limit: int
+) -> DataFrame:
+    """Stage 5: one conditional-aggregation scan of ``x ∈ [m−d_hi,
+    m+d_hi]`` resolves each group's MAD — ``(*keys, mad)``. Rows with
+    ``d ≤ d_lo`` collapse into a single −1 count group (they only offset
+    the rank — exactly the ``c_below`` of the resolution, counted
+    in-scan instead of from a second grid), rows in the band group by
+    exact deviation, and the cumulative walk picks the smallest band
+    value crossing the rank. The −1 group cannot cross it (#{d ≤ d_lo}
+    ≤ U(d_lo) < rank); rows outside the scan have d > d_hi and cannot
+    affect ranks ≤ rank. The groupBy state is bounded by the band's
+    distinct deviations (U−L gaps come from ≤ 2 partially-covered
+    buckets per side) — a single degenerate bucket holding most mass
+    widens the band to that bucket's width, hence the same guard as the
+    resolution."""
+    from pyspark.sql import Window as W
+
+    scan = _meet(vals, band, keys).filter(
+        (F.col("__x") >= F.col("__m") - F.col("__dhi"))
+        & (F.col("__x") <= F.col("__m") + F.col("__dhi"))
+    )
+    dev = F.abs(F.col("__x") - F.col("__m"))
+    per_d = scan.select(
+        *keys,
+        "__rank",
+        F.when(dev <= F.col("__dlo"), F.lit(-1))
+        .otherwise(dev)
+        .cast("bigint")
+        .alias("__d"),
+    ).groupBy(*keys, "__rank", "__d").agg(F.count(F.lit(1)).alias("__k"))
+    per_d = _bracket_guard(per_d, [*keys, "__rank"], bracket_limit)
+    w = W.partitionBy(*keys).orderBy("__d").rowsBetween(
+        W.unboundedPreceding, W.currentRow
+    )
+    return (
+        per_d.withColumn("__dc", F.sum("__k").over(w))
+        .filter(F.col("__dc") >= F.col("__rank"))
+        .groupBy(*keys)
+        .agg(F.min("__d").alias("mad"))
+    )
+
+
+def _median_mad(
+    vals: DataFrame, keys: list[str], bracket_limit: int
+) -> DataFrame:
+    """``(*keys, n_rows, median, mad)`` in THREE bounded passes over
+    ``vals``: grid + median resolution + MAD band scan, ONE bucket-key
+    shuffle — versus four scans and two shuffles for the naive form
+    (resolve the median, sketch ``|x − median|``, resolve the MAD)."""
+    # r12: the grid and the median frame are localCheckpoint'ed,
+    # not persisted — the grid subtree used to be re-INLINED at every
+    # downstream reference (the MAD face's formatted plan ran to ~3000
+    # lines / 360 Exchange text nodes), and the driver re-analyzed that
+    # tree on every run. Severing lineage at the grid-sized frames
+    # (≤ ~1k rows per group) collapses the downstream plan to small leaf
+    # scans; the checkpointed frames rebuild from the caller-persisted
+    # ``vals`` in milliseconds.
     #
     # DURABILITY (r13, VERDICT r12 item 6): localCheckpoint blocks are
     # executor-local and NON-replicated — on a real cluster an executor
@@ -505,347 +617,59 @@ def median_mad_two_pass(
     # for checkpoint() against HDFS/S3 (one-line change; the frames are
     # tiny, so the write is cheap — it is the sync latency per stage
     # that local mode has no reason to pay).
-    cum = _qsketch_cum(qsketch_build(x, "__x")).localCheckpoint(eager=True)
-
-    # -- pass 1+2: exact median from the grid (inlined two-pass selector,
-    # reusing the persisted cum grid for both the rank and the bracket)
-    ranks = _qsketch_ranks(cum, [500])
-    m_brackets = cum.join(
-        F.broadcast(ranks),
-        (F.col("__cum") >= F.col("__rank"))
-        & (F.col("__cum") - F.col("cnt") < F.col("__rank")),
-    ).select(
-        "__rank",
-        "__n",
-        "__lo",
-        "__hi",
-        (F.col("__cum") - F.col("cnt")).alias("__c_below"),
-    )
-    m_inside = x.join(
-        F.broadcast(m_brackets),
-        (F.col("__x") >= F.col("__lo")) & (F.col("__x") <= F.col("__hi")),
-    )
-    m_per_val = m_inside.groupBy("__rank", "__n", "__c_below", "__x").agg(
-        F.count(F.lit(1)).alias("__k")
-    )
-    m_per_val = _bracket_guard(m_per_val, ["__rank"], bracket_limit)
-    mw = W.orderBy("__x").rowsBetween(W.unboundedPreceding, W.currentRow)
+    grid = _qsketch_grid(vals, "__x", keys)
+    cum = _qsketch_cum(grid, keys).localCheckpoint(eager=True)
+    # The median's brackets are NOT persisted, unlike the quantile
+    # selectors': they sit under med's eager checkpoint, which computes
+    # them exactly once, so a cache there only adds cache-stage jobs to
+    # every build (13 -> 16 on events_value_mad_outliers).
     med = (
-        m_per_val.withColumn("__vcum", F.sum("__k").over(mw))
-        .filter(F.col("__c_below") + F.col("__vcum") >= F.col("__rank"))
-        .groupBy("__rank", "__n")
-        .agg(F.min("__x").alias("__m"))
-        .localCheckpoint(eager=True)
-    )  # 1 row: (__rank, __n, __m) — same rank applies to the MAD (same n)
-
-    # -- grid-only bracket derivation for the MAD (NO data scan): a
-    # bucket [lo, hi] is FULLY inside [m−t, m+t] iff t ≥ r :=
-    # max(hi−m, m−lo) (full-cover radius) and OVERLAPS it iff t ≥ s :=
-    # max(m−hi, lo−m, 0) (overlap radius), so L(t) = Σ cnt[r ≤ t] and
-    # U(t) = Σ cnt[s ≤ t] are cumulative sums over the radius-sorted
-    # grid. d_hi = the smallest full-cover radius whose L crosses the
-    # rank; d_lo = the largest overlap radius with U still below it
-    # (U(d_lo) < rank ⇒ #{d ≤ d_lo} < rank — any such d_lo yields the
-    # identical MAD; it only sets how many band rows collapse into the
-    # −1 sentinel). r13: this replaces the candidate-explode +
-    # grid-self-join L/U evaluation — two bounded window walks and one
-    # aggregation instead of a distinct, a theta-join and two
-    # aggregations (the block measured ~0.5 s of pure stage latency per
-    # warm run on the grouped face; same shape here). The single-row
-    # band is not checkpointed: its one consumer is the band scan's
-    # broadcast join and its lineage bottoms out at the cum/med leaves.
-    gm = cum.join(F.broadcast(med))
-    radii = gm.select(
-        "__rank",
-        F.col("cnt"),
-        F.greatest(
-            F.col("__hi") - F.col("__m"), F.col("__m") - F.col("__lo")
-        ).alias("__r"),
-        F.greatest(
-            F.col("__m") - F.col("__hi"),
-            F.col("__lo") - F.col("__m"),
-            F.lit(0).cast("bigint"),
-        ).alias("__s"),
-    )
-    wl = W.orderBy("__r").rangeBetween(W.unboundedPreceding, W.currentRow)
-    wu = W.orderBy("__s").rangeBetween(W.unboundedPreceding, W.currentRow)
-    both = radii.withColumn("__L", F.sum("cnt").over(wl)).withColumn(
-        "__U", F.sum("cnt").over(wu)
-    )
-    band = (
-        both.agg(
-            F.min(F.when(F.col("__L") >= F.col("__rank"), F.col("__r"))).alias(
-                "__dhi"
-            ),
-            F.coalesce(
-                F.max(F.when(F.col("__U") < F.col("__rank"), F.col("__s"))),
-                F.lit(-1).cast("bigint"),
-            ).alias("__dlo"),
-        )
-        .join(F.broadcast(med))
-    )  # 1 row: (__dhi, __dlo, __rank, __n, __m)
-
-    # -- pass 3: one conditional-aggregation scan resolves the MAD
-    scan = x.join(F.broadcast(band)).filter(
-        (F.col("__x") >= F.col("__m") - F.col("__dhi"))
-        & (F.col("__x") <= F.col("__m") + F.col("__dhi"))
-    )
-    per_d = scan.select(
-        "__rank",
-        F.when(
-            F.abs(F.col("__x") - F.col("__m")) <= F.col("__dlo"), F.lit(-1)
-        )
-        .otherwise(F.abs(F.col("__x") - F.col("__m")))
-        .cast("bigint")
-        .alias("__d"),
-    ).groupBy("__rank", "__d").agg(F.count(F.lit(1)).alias("__k"))
-    per_d = _bracket_guard(per_d, ["__rank"], bracket_limit)
-    dw = W.orderBy("__d").rowsBetween(W.unboundedPreceding, W.currentRow)
-    mad = (
-        per_d.withColumn("__dc", F.sum("__k").over(dw))
-        .filter(F.col("__dc") >= F.col("__rank"))
-        .agg(F.min("__d").alias("mad"))
-    )  # the -1 (c_below) group cannot cross the rank: #{d ≤ d_lo} < rank
-    return (
-        med.join(F.broadcast(mad))
+        _resolve(vals, _brackets(cum, [500], keys), keys, bracket_limit)
         .select(
-            F.col("__n").alias("n_rows"),
-            F.col("__m").alias("median"),
-            F.col("mad"),
-        )
-    )
-
-
-def _grouped_cum(vals: DataFrame) -> DataFrame:
-    """Per-group cumulative grid ``(__g, __lo, __hi, cnt, __cum)`` of a
-    ``(__g, __x)`` frame — the grouped analog of :func:`_qsketch_cum`.
-    One partial-aggregated shuffle on (group, bucket); the cumulative
-    window partitions by the group, so each partition is ONE group's
-    grid (≤ ~1k rows regardless of data)."""
-    from pyspark.sql import Window as W
-
-    grid = (
-        with_qsketch_bucket(vals, "__x")
-        .groupBy("__g", "shift", "sub")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    lo = F.expr("sub * shiftleft(cast(1 as bigint), shift)").cast("bigint")
-    hi = F.expr(
-        "(sub + 1) * shiftleft(cast(1 as bigint), shift) - 1"
-    ).cast("bigint")
-    w = (
-        W.partitionBy("__g")
-        .orderBy("__lo")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return grid.select(
-        "__g", lo.alias("__lo"), hi.alias("__hi"),
-        F.col("cnt").cast("bigint").alias("cnt"),
-    ).withColumn("__cum", F.sum("cnt").over(w))
-
-
-def _grouped_brackets(cum: DataFrame, permille: list[int]) -> DataFrame:
-    """Per-(group, p) bracket rows ``(__g, p, __rank, __n, __lo, __hi,
-    __c_below)`` from a grouped cumulative grid. Group-grid-sized
-    (groups × |permille| rows); checkpointed so the pass-2 join and the
-    resolution window don't re-inline (and the driver doesn't
-    re-analyze) the grid + cumulative-window subtree — see
-    :func:`median_mad_two_pass` on the lineage-cut convention and its
-    durability caveat."""
-    ps = F.explode(
-        F.array(*[F.lit(int(p)).cast("bigint") for p in permille])
-    ).alias("p")
-    ranks = (
-        cum.groupBy("__g")
-        .agg(F.sum("cnt").alias("__n"))
-        .select("__g", ps, "__n")
-        .select(
-            "__g",
-            "p",
-            F.expr("(__n * p + 999) div 1000").cast("bigint").alias("__rank"),
-            "__n",
-        )
-    )
-    return (
-        cum.join(ranks, "__g").filter(
-            (F.col("__cum") >= F.col("__rank"))
-            & (F.col("__cum") - F.col("cnt") < F.col("__rank"))
-        ).select(
-            "__g", "p", "__rank", "__n", "__lo", "__hi",
-            (F.col("__cum") - F.col("cnt")).alias("__c_below"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-
-def _grouped_resolve(
-    vals: DataFrame, brackets: DataFrame, bracket_limit: int
-) -> DataFrame:
-    """Pass-2 exact resolution of a grouped selector: equi-join the
-    ``(__g, __x)`` rows to their group's brackets (bracket range as the
-    residual), aggregate per distinct in-bracket value, and pick the
-    smallest value whose cumulative count crosses the rank. Returns
-    ``(__g, p, __n, exact_value)``."""
-    from pyspark.sql import Window as W
-
-    inside = vals.join(brackets, "__g").filter(
-        (F.col("__x") >= F.col("__lo")) & (F.col("__x") <= F.col("__hi"))
-    )
-    per_val = inside.groupBy(
-        "__g", "p", "__rank", "__n", "__c_below", "__x"
-    ).agg(F.count(F.lit(1)).alias("__k"))
-    per_val = _bracket_guard(per_val, ["__g", "p"], bracket_limit)
-    w2 = (
-        W.partitionBy("__g", "p")
-        .orderBy("__x")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    resolved = per_val.withColumn("__vcum", F.sum("__k").over(w2)).filter(
-        F.col("__c_below") + F.col("__vcum") >= F.col("__rank")
-    )
-    return resolved.groupBy("__g", "p", "__n").agg(
-        F.min("__x").alias("exact_value")
-    )
-
-
-def median_mad_by_group(
-    df: DataFrame, group_col: str, value_col: str,
-    bracket_limit: int = QSKETCH_BRACKET_LIMIT,
-) -> DataFrame:
-    """Per-GROUP exact ``(n_rows, median, mad)`` — the grouped port of
-    :func:`median_mad_two_pass`, including its grid-only MAD-bracket
-    derivation (r13, VERDICT r12 item 3): the deviation distribution of
-    each group is bracketed from that group's EXISTING x-grid walked
-    outward from its median (L/U cover bounds over bucket edges — pure
-    grid arithmetic, no data scan), and the MAD resolves in ONE
-    conditional-aggregation band scan keyed by the group. The former
-    composition re-sketched ``|x − median|`` per group — a second full
-    scan AND a second (group, bucket) partial-agg shuffle of the
-    deviation column, both now gone. Every stage is keyed by the group;
-    zero global sorts; state bounded by groups × grid (the L/U join is
-    per-group grid × candidate-edges, ≤ grid² rows per group).
-
-    Output: ``(group_col, n_rows, median, mad)`` — bit-identical to the
-    full-sort oracle (same integer rank convention per group).
-    """
-    from .cache import scoped_persist
-
-    vals = scoped_persist(
-        df.filter(F.col(value_col).isNotNull()).select(
-            F.col(group_col).alias("__g"),
-            F.col(value_col).cast("bigint").alias("__x"),
-        )
-    )
-    # checkpointed once: referenced by the median brackets AND the MAD
-    # band derivation (groups × grid rows)
-    cum = _grouped_cum(vals).localCheckpoint(eager=True)
-    med = (
-        _grouped_resolve(vals, _grouped_brackets(cum, [500]), bracket_limit)
-        .select(
-            "__g",
+            *keys,
+            _rank(500).alias("__rank"),
             "__n",
             F.col("exact_value").alias("__m"),
-            F.expr("(__n * 500 + 999) div 1000").cast("bigint").alias("__rank"),
         )
-        .localCheckpoint(eager=True)  # group-sized; cuts the selector subtree
-    )
-
-    # -- grid-only bracket derivation for the per-group MAD (NO data
-    # scan): a bucket [lo, hi] is FULLY inside [m−t, m+t] iff
-    # t ≥ r := max(hi−m, m−lo) (its full-cover radius) and OVERLAPS it
-    # iff t ≥ s := max(m−hi, lo−m, 0) (its overlap radius), so
-    # L(t) = Σ cnt[r ≤ t] and U(t) = Σ cnt[s ≤ t] are per-group
-    # cumulative sums over the radius-sorted grid. d_hi = the smallest
-    # full-cover radius whose L crosses the rank (every candidate edge
-    # deviation where L can first cross IS some bucket's r); d_lo = the
-    # largest overlap radius with U still below the rank (U(d_lo) < rank
-    # ⇒ #{d ≤ d_lo} < rank — any such d_lo yields the identical MAD,
-    # it only sets how many band rows collapse into the −1 sentinel).
-    # One exchange + two bounded window walks + one reused-partitioning
-    # aggregation — no self-join of the grid, no candidate explode.
-    from pyspark.sql import Window as W
-
-    gm = cum.join(med, "__g")
-    radii = gm.select(
-        "__g",
-        "__rank",
-        F.col("cnt"),
-        F.greatest(
-            F.col("__hi") - F.col("__m"), F.col("__m") - F.col("__lo")
-        ).alias("__r"),
-        F.greatest(
-            F.col("__m") - F.col("__hi"),
-            F.col("__lo") - F.col("__m"),
-            F.lit(0).cast("bigint"),
-        ).alias("__s"),
-    )
-    wl = W.partitionBy("__g").orderBy("__r").rangeBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    wu = W.partitionBy("__g").orderBy("__s").rangeBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    both = radii.withColumn("__L", F.sum("cnt").over(wl)).withColumn(
-        "__U", F.sum("cnt").over(wu)
-    )
-    # one row per group: (__g, __dhi, __dlo, __n, __m, __rank). NOT
-    # checkpointed: its only consumer is the band scan's equi-join, and
-    # its lineage already bottoms out at the cum/med checkpoint leaves —
-    # an eager cut here would cost one more driver-synchronous job per
-    # run for no plan-size benefit.
-    band = (
-        both.groupBy("__g", "__rank")
-        .agg(
-            F.min(
-                F.when(F.col("__L") >= F.col("__rank"), F.col("__r"))
-            ).alias("__dhi"),
-            F.coalesce(
-                F.max(F.when(F.col("__U") < F.col("__rank"), F.col("__s"))),
-                F.lit(-1).cast("bigint"),
-            ).alias("__dlo"),
-        )
-        .drop("__rank")
-        .join(med, "__g")
-    )
-
-    # -- pass 3: one conditional-aggregation band scan resolves every
-    # group's MAD (rows with d ≤ d_lo collapse into the group's -1
-    # sentinel — the in-scan c_below; the -1 group cannot cross the
-    # rank since #{d ≤ d_lo} ≤ U(d_lo) < rank). band has one row per
-    # group, so it is a plain equi-join on the group, as in
-    # _grouped_resolve; AQE picks the strategy.
-    scan = vals.join(band, "__g").filter(
-        (F.col("__x") >= F.col("__m") - F.col("__dhi"))
-        & (F.col("__x") <= F.col("__m") + F.col("__dhi"))
-    )
-    per_d = scan.select(
-        "__g",
-        "__rank",
-        F.when(
-            F.abs(F.col("__x") - F.col("__m")) <= F.col("__dlo"), F.lit(-1)
-        )
-        .otherwise(F.abs(F.col("__x") - F.col("__m")))
-        .cast("bigint")
-        .alias("__d"),
-    ).groupBy("__g", "__rank", "__d").agg(F.count(F.lit(1)).alias("__k"))
-    per_d = _bracket_guard(per_d, ["__g"], bracket_limit)
-    dw = (
-        W.partitionBy("__g")
-        .orderBy("__d")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    mad = (
-        per_d.withColumn("__dc", F.sum("__k").over(dw))
-        .filter(F.col("__dc") >= F.col("__rank"))
-        .groupBy("__g")
-        .agg(F.min("__d").alias("__mad"))
-    )
-    return med.join(mad, "__g").select(
-        F.col("__g").alias(group_col),
+        .localCheckpoint(eager=True)
+    )  # one row per group; the same rank applies to the MAD (same n)
+    mad = _band_scan(vals, _mad_band(cum, med, keys), keys, bracket_limit)
+    return _meet(med, mad, keys).select(
+        *keys,
         F.col("__n").alias("n_rows"),
         F.col("__m").alias("median"),
-        F.col("__mad").alias("mad"),
+        "mad",
     )
+
+
+def _values(df: DataFrame, value_col: str, group_col: str | None) -> DataFrame:
+    """The selectors' value frame: non-NULL values (they have no rank)
+    as BIGINT ``__x``, next to the group column as ``__g`` when there is
+    one. NULL group keys fall out at the first equi-join on ``__g``.
+    Not persisted here: the quantile selectors scan it twice and the
+    MAD selectors three times, so the caller persists ``df`` when it is
+    not cheap to re-read."""
+    group = [] if group_col is None else [F.col(group_col).alias("__g")]
+    return df.filter(F.col(value_col).isNotNull()).select(
+        *group, F.col(value_col).cast("bigint").alias("__x")
+    )
+
+
+def exact_quantiles_two_pass(
+    df: DataFrame, value_col: str, permille: list[int],
+    bracket_limit: int = QSKETCH_BRACKET_LIMIT,
+) -> DataFrame:
+    """EXACT permille quantiles of a non-negative BIGINT column in two
+    bounded passes (grid, then in-bracket resolution) — the no-key case
+    of the selector stages above; ``bracket_limit`` is the fail-loud
+    guard's width (:data:`QSKETCH_BRACKET_LIMIT`).
+
+    Output: ``(p, n_rows, exact_value)`` — the exact rank-th order
+    statistic, rank ``(n*p + 999) div 1000`` (1-based, duplicates
+    counted)."""
+    return _exact_quantiles(
+        _values(df, value_col, None), permille, [], bracket_limit
+    ).select("p", F.col("__n").alias("n_rows"), "exact_value")
 
 
 def exact_quantiles_by_group(
@@ -853,37 +677,47 @@ def exact_quantiles_by_group(
     bracket_limit: int = QSKETCH_BRACKET_LIMIT,
 ) -> DataFrame:
     """Per-GROUP exact permille quantiles — :func:`exact_quantiles_two_pass`
-    with every stage keyed by the group: per-group HDR grids (one
-    partial-aggregated shuffle on (group, bucket)), per-group cumulative
-    walks (window partitioned by group — each partition is ONE group's
-    grid, <= ~1k rows regardless of data), per-(group, p) brackets and
-    c_below from the same walk, and a pass-2 equi-join on the group with
-    the bracket range as residual — so the resolution is a hash join,
-    never a broadcast of something group-cardinality-sized. This is the
-    per-tenant / per-language percentile report at 100 TB: no global
-    sort, no per-group sort of raw values, state bounded by
-    groups × grid.
+    with every stage keyed by the group: the per-tenant / per-language
+    percentile report at 100 TB, state bounded by groups × grid.
 
     Output: ``(group_col, p, n_rows, exact_value)`` — the exact rank-th
     order statistic within each group (same integer rank convention).
-    Groups are whatever values appear; NULL values are dropped (no
-    rank), NULL group keys group together as in any groupBy.
-    """
-    from .cache import scoped_persist
-
-    vals = scoped_persist(
-        df.filter(F.col(value_col).isNotNull()).select(
-            F.col(group_col).alias("__g"),
-            F.col(value_col).cast("bigint").alias("__x"),
-        )
-    )
-    brackets = _grouped_brackets(_grouped_cum(vals), permille)
-    return _grouped_resolve(vals, brackets, bracket_limit).select(
+    Groups are whatever non-NULL keys appear."""
+    return _exact_quantiles(
+        _values(df, value_col, group_col), permille, ["__g"], bracket_limit
+    ).select(
         F.col("__g").alias(group_col),
         "p",
         F.col("__n").alias("n_rows"),
         "exact_value",
     )
+
+
+def median_mad_two_pass(
+    vals: DataFrame, value_col: str,
+    bracket_limit: int = QSKETCH_BRACKET_LIMIT,
+) -> DataFrame:
+    """Exact ``(n_rows, median, mad)`` of a non-negative BIGINT column —
+    the median/MAD core of robust outlier detection, in three bounded
+    passes with the deviation grid eliminated (VERDICT r7 item 3; the
+    no-key case of the selector stages above). ``vals`` should be
+    persisted by the caller (it is scanned three times here plus
+    typically once more by the consumer)."""
+    return _median_mad(_values(vals, value_col, None), [], bracket_limit)
+
+
+def median_mad_by_group(
+    df: DataFrame, group_col: str, value_col: str,
+    bracket_limit: int = QSKETCH_BRACKET_LIMIT,
+) -> DataFrame:
+    """Per-GROUP exact ``(group_col, n_rows, median, mad)`` —
+    :func:`median_mad_two_pass` with every stage keyed by the group
+    (r13, VERDICT r12 item 3: each group's MAD band comes from that
+    group's own x-grid; zero global sorts). ``df`` should be persisted
+    by the caller, as for the ungrouped selector."""
+    return _median_mad(
+        _values(df, value_col, group_col), ["__g"], bracket_limit
+    ).withColumnRenamed("__g", group_col)
 
 
 def qsketch_quantiles(sketch: DataFrame, permille: list[int]) -> DataFrame:
@@ -892,27 +726,13 @@ def qsketch_quantiles(sketch: DataFrame, permille: list[int]) -> DataFrame:
     element (ascending, 1-based) — emitted as ``(p, est_lo, est_hi)``
     with ``est_lo <= true_quantile <= est_hi`` a DETERMINISTIC invariant
     (the element at that rank lies inside its own bucket), and
-    ``est_hi - est_lo < est_lo / 2^PREC`` by construction.
-
-    Rank is pure integer — ``(n*p + 999) div 1000`` — never a float
-    ``q*n`` product, whose decimal-vs-double literal typing differs
-    across engines. The cumulative walk is a window over the GRID (<=
-    ~1k rows however large the data), so its SinglePartition sort is
-    bounded by the sketch size, not the data — the point of sketching.
+    ``est_hi - est_lo < est_lo / 2^PREC`` by construction. Stages 1-2 of
+    the exact selectors over a ready grid: the rank is the same pure
+    integer, and the |permille| rank rows broadcast against the tiny
+    grid.
     """
-    cum = _qsketch_cum(sketch)
-    ranks = _qsketch_ranks(cum, permille).drop("__n")
-    # ranks is |permille| rows — broadcast it against the tiny grid; the
-    # containing bucket is the unique one with cum-cnt < rank <= cum
-    return (
-        cum.join(
-            F.broadcast(ranks),
-            (F.col("__cum") >= F.col("__rank"))
-            & (F.col("__cum") - F.col("cnt") < F.col("__rank")),
-        )
-        .select(
-            F.col("p"),
-            F.col("__lo").alias("est_lo"),
-            F.col("__hi").alias("est_hi"),
-        )
+    return _brackets(_qsketch_cum(sketch, []), permille, []).select(
+        F.col("p"),
+        F.col("__lo").alias("est_lo"),
+        F.col("__hi").alias("est_hi"),
     )

@@ -124,7 +124,8 @@ def prepare_corpus_cc(
     pair stage, measured flat at the same scale points) or pass a
     ``max_doc_freq`` stop-shingle cap into the exact path; this
     function is the exact-semantics correctness witness. The closure is
-    the O(log n) star algorithm either way.
+    min-label propagation either way (``dedup_clusters``; rounds = the
+    cluster graph's diameter, ~2-3 for near-dup cliques).
     """
     kept = scoped_persist(_exact_survivors(docs, id_col, text_col, min_quality))
 

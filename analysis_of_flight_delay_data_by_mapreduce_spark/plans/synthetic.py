@@ -2150,11 +2150,10 @@ def ann_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_ivf_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     from ..operators.similarity import (
         assign_ivf_cluster,
         cosine_topk_ivf,
+        ivf_probes,
         train_ivf_centroids,
     )
 
@@ -2167,11 +2166,8 @@ def ann_ivf_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute = cosine_topk(emb, "vec_id", "embedding", qv, k=10, round_to=6)
 
     # same probe selection as cosine_topk_ivf (nearest-4 centroids)
-    C = np.asarray(centroids, dtype="float64")
-    q = np.asarray(qv, dtype="float64")
-    probes = np.argsort(((C - q[None, :]) ** 2).sum(axis=1))[:4].tolist()
     cand = assign_ivf_cluster(emb, "embedding", centroids).filter(
-        F.col("cluster").isin([int(p) for p in probes])
+        F.col("cluster").isin(ivf_probes(centroids, qv, 4))
     )
 
     overlap = brute.join(ivf.select("vec_id"), "vec_id", "left_semi").agg(
@@ -2220,17 +2216,14 @@ def _ivf_shared(sf_dir: str) -> tuple[list[list[float]], list[float], list[int]]
     import numpy as np
     import pyarrow.parquet as pq
 
-    from ..operators.similarity import train_ivf_centroids_parquet
+    from ..operators.similarity import ivf_probes, train_ivf_centroids_parquet
 
     path = f"{sf_dir.rstrip('/')}/embeddings.parquet"
     C = train_ivf_centroids_parquet(path, n_clusters=16, seed=42)
     t = pq.read_table(path, columns=["vec_id", "embedding"])
     vid = np.asarray(t.column("vec_id"))
     qv = [float(x) for x in t.column("embedding")[int(np.nonzero(vid == 0)[0][0])].as_py()]
-    Ca = np.asarray(C, dtype="float64")
-    q = np.asarray(qv, dtype="float64")
-    probes = [int(p) for p in np.argsort(((Ca - q[None, :]) ** 2).sum(axis=1))[:4]]
-    return C, qv, probes
+    return C, qv, ivf_probes(C, qv, 4)
 
 
 def _cents_sql(C: list[list[float]]) -> str:
@@ -2243,22 +2236,51 @@ def _cents_sql(C: list[list[float]]) -> str:
     )
 
 
+# Nearest trained centroid, declared once for the five oracles that
+# replay IVF assignment on the _ivf_shared literals: ``cents`` holds the
+# centroids (_cents_cte); the LATERAL ``d`` lists the squared L2 distance from the
+# row's vector ``{vec}`` (element ``{x}``, DOUBLE) to each centroid; and
+# ``cluster`` is the 0-based argmin — first minimum on ties, as numpy's
+# argmin in assign_ivf_cluster.
+_CENT_DISTS_LATERAL = """LATERAL (SELECT list_transform(cents.C, c ->
+                      list_sum(list_transform(list_zip({vec}, c),
+                        p -> ({x} - p[2]) * ({x} - p[2])))) AS dists) d"""
+_CLUSTER_SQL = "list_position(d.dists, list_min(d.dists)) - 1 AS cluster"
+_V_DOUBLE_CTE = """v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
+          FROM embeddings)"""
+# The semantic-dedup assignment over ``v``: per-row norm, unit vector
+# (normalized ONCE per row, mirroring semantic_dedup's Spark shape
+# element-for-element so the float op order — and the hash — match) and
+# nearest-centroid cluster; ``{key}`` and ``{source}`` name the row key
+# and the relation joined to ``v``.
+_UNIT_CLUSTER_SQL = f"""SELECT {{key}}, n.nrm,
+             list_transform(v.ve, x -> x / n.nrm) AS ue,
+             {_CLUSTER_SQL}
+      FROM {{source}}, cents,
+           LATERAL (SELECT sqrt(list_sum(list_transform(v.ve, x -> x*x)))
+                      AS nrm) n,
+           {_CENT_DISTS_LATERAL.format(vec="v.ve", x="p[1]")}"""
+_SEMANTIC_ASSIGNED_CTES = f"""{_V_DOUBLE_CTE},
+    assigned AS (
+      {_UNIT_CLUSTER_SQL.format(key="v.vec_id", source="v")}
+    )"""
+
+
+def _cents_cte(C: list[list[float]]) -> str:
+    return f"cents AS (SELECT {_cents_sql(C)} AS C)"
+
+
 def _ann_ivf_probe_oracle(sf_dir: str) -> str:
     C, _qv, probes = _ivf_shared(sf_dir)
-    cents = _cents_sql(C)
     in_list = ",".join(str(p) for p in probes)
     return f"""
-    WITH cents AS (SELECT {cents} AS C),
+    WITH {_cents_cte(C)},
     q AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
           FROM embeddings WHERE vec_id = 0),
     assigned AS (
-      SELECT e.vec_id, e.embedding,
-             list_position(d.dists, list_min(d.dists)) - 1 AS cluster
+      SELECT e.vec_id, e.embedding, {_CLUSTER_SQL}
       FROM embeddings e, cents,
-           LATERAL (SELECT list_transform(cents.C, c ->
-                      list_sum(list_transform(list_zip(e.embedding, c),
-                        p -> (CAST(p[1] AS DOUBLE) - p[2])
-                           * (CAST(p[1] AS DOUBLE) - p[2])))) AS dists) d
+           {_CENT_DISTS_LATERAL.format(vec="e.embedding", x="CAST(p[1] AS DOUBLE)")}
     )
     SELECT a.vec_id,
            round(
@@ -2298,25 +2320,11 @@ def ann_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (tools/measure_margins.py) vs the ~1e-12 summation-noise floor.
 # ---------------------------------------------------------------------------
 def _dedup_semantic_oracle(sf_dir: str) -> str:
-    # Pair test = dot of per-row unit vectors (normalized ONCE per row),
-    # mirroring semantic_dedup's Spark shape element-for-element so the
-    # float op order — and therefore the hash — matches.
+    # Pair test = dot of the per-row unit vectors of _UNIT_CLUSTER_SQL.
     C, _qv, _probes = _ivf_shared(sf_dir)
     return f"""
-    WITH cents AS (SELECT {_cents_sql(C)} AS C),
-    v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-          FROM embeddings),
-    assigned AS (
-      SELECT v.vec_id, n.nrm,
-             list_transform(v.ve, x -> x / n.nrm) AS ue,
-             list_position(d.dists, list_min(d.dists)) - 1 AS cluster
-      FROM v, cents,
-           LATERAL (SELECT sqrt(list_sum(list_transform(v.ve, x -> x*x)))
-                      AS nrm) n,
-           LATERAL (SELECT list_transform(cents.C, c ->
-                      list_sum(list_transform(list_zip(v.ve, c),
-                        p -> (p[1] - p[2]) * (p[1] - p[2])))) AS dists) d
-    ),
+    WITH {_cents_cte(C)},
+    {_SEMANTIC_ASSIGNED_CTES},
     dups AS (
       SELECT DISTINCT b.vec_id
       FROM assigned a JOIN assigned b
@@ -2348,20 +2356,8 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dedup_semantic_incr_oracle(sf_dir: str) -> str:
     C, _qv, _probes = _ivf_shared(sf_dir)
     return f"""
-    WITH cents AS (SELECT {_cents_sql(C)} AS C),
-    v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-          FROM embeddings),
-    assigned AS (
-      SELECT v.vec_id, n.nrm,
-             list_transform(v.ve, x -> x / n.nrm) AS ue,
-             list_position(d.dists, list_min(d.dists)) - 1 AS cluster
-      FROM v, cents,
-           LATERAL (SELECT sqrt(list_sum(list_transform(v.ve, x -> x*x)))
-                      AS nrm) n,
-           LATERAL (SELECT list_transform(cents.C, c ->
-                      list_sum(list_transform(list_zip(v.ve, c),
-                        p -> (p[1] - p[2]) * (p[1] - p[2])))) AS dists) d
-    )
+    WITH {_cents_cte(C)},
+    {_SEMANTIC_ASSIGNED_CTES}
     SELECT n.vec_id AS new_id, o.vec_id AS old_id
     FROM assigned n JOIN assigned o ON n.cluster = o.cluster
     WHERE n.vec_id % 5 = 4 AND o.vec_id % 5 <> 4
@@ -2448,8 +2444,7 @@ def _pq_assigned_sql(cb: list[list[list[float]]]) -> str:
     dsub = 64 // _PQ_M
     return f"""
     WITH books AS (SELECT {_pq_books_sql(cb)} AS B),
-    v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-          FROM embeddings),
+    {_V_DOUBLE_CTE},
     coded AS (
       SELECT v.vec_id,
              list_transform(range(1, {_PQ_M + 1}), j ->
@@ -2694,14 +2689,11 @@ def _ann_ivfpq_oracle(sf_dir: str) -> str:
     return (
         _pq_assigned_sql(cb)
         + f"""
-    , cents AS (SELECT {_cents_sql(C)} AS C),
+    , {_cents_cte(C)},
     clustered AS (
-      SELECT v.vec_id,
-             list_position(d.dists, list_min(d.dists)) - 1 AS cluster
+      SELECT v.vec_id, {_CLUSTER_SQL}
       FROM v, cents,
-           LATERAL (SELECT list_transform(cents.C, c ->
-                      list_sum(list_transform(list_zip(v.ve, c),
-                        p -> (p[1] - p[2]) * (p[1] - p[2])))) AS dists) d
+           {_CENT_DISTS_LATERAL.format(vec="v.ve", x="p[1]")}
     ),
     shortlist AS (
       SELECT p.vec_id, round({adc_terms}, 6) AS adc_dist
@@ -3412,9 +3404,12 @@ def orders_hot_custkeys_cms_check(spark: SparkSession, sf_dir: str) -> DataFrame
 # the mergeable HDR grid; the rank's bracket AND the exact
 # count-below-bracket both fall out of the grid's cumulative walk, so
 # pass 2 touches only in-bracket rows (<= 6.25% relative width) and
-# resolves the rank-th element exactly. The oracle is a FULL SORT
-# (row_number over every value) — hash equality proves the two-pass
-# selection exact, not approximate. Pure integer ranks and counts.
+# resolves the rank-th element exactly. This face, the grouped one
+# below and both median/MAD faces run the same selector stages of
+# operators.sketch (one definition, keyed by a list of group columns —
+# this is the no-key case). The oracle is a FULL SORT (row_number over
+# every value) — hash equality proves the two-pass selection exact, not
+# approximate. Pure integer ranks and counts.
 # ---------------------------------------------------------------------------
 @register(
     "events_exact_quantiles_sketch",
@@ -3442,12 +3437,13 @@ def events_exact_quantiles_sketch(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # ---------------------------------------------------------------------------
 # The GROUPED face of the two-pass exact selector: per-event_type exact
-# P50/P90 — every stage keyed by the group (per-group grids, per-group
-# cumulative walks over grid-bounded window partitions, pass-2 as a
-# hash equi-join on the group with the bracket range residual). The
-# per-tenant/per-language percentile report at 100 TB: zero global
-# sorts, zero broadcasts of group-sized frames, state = groups × grid.
-# Oracle: per-group full sort.
+# P50/P90 — the same selector stages as events_exact_quantiles_sketch
+# with the group as the key (per-group grids, per-group cumulative walks
+# over grid-bounded window partitions, pass-2 as a hash equi-join on the
+# group with the bracket range residual). The per-tenant/per-language
+# percentile report at 100 TB: zero global sorts, zero broadcasts of
+# group-sized frames, state = groups × grid. Oracle: per-group full
+# sort.
 # ---------------------------------------------------------------------------
 @register(
     "events_quantiles_by_type",
@@ -3472,23 +3468,27 @@ def events_exact_quantiles_sketch(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def events_quantiles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.cache import scoped_persist
     from ..operators.sketch import exact_quantiles_by_group
 
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull()).select(
-        "event_type",
-        F.round(F.col("value") * 100, 0).cast("bigint").alias("x"),
+    # persisted: the grid pass and the pass-2 resolution both scan it
+    ev = scoped_persist(
+        _t(spark, sf_dir, "events").filter(F.col("value").isNotNull()).select(
+            "event_type",
+            F.round(F.col("value") * 100, 0).cast("bigint").alias("x"),
+        )
     )
     return exact_quantiles_by_group(ev, "event_type", "x", [500, 900])
 
 
 # ---------------------------------------------------------------------------
-# Robust (median/MAD) outlier detection — median in two bounded passes,
-# the MAD bracket derived from the SAME x-grid (conservative full-cover/
-# any-overlap walks around the median — VERDICT r7 item 3; the former
-# second HDR grid over |x − median| cost a full scan + shuffle), MAD
-# resolved in one conditional-aggregation band scan, then one counting
-# pass — four bounded passes, one shuffle, zero global sorts, all
-# integer. The z-score face (events_value_zscore_outliers) is
+# Robust (median/MAD) outlier detection — the no-key case of the shared
+# selector stages: median in two bounded passes, the MAD bracket derived
+# from the SAME x-grid (conservative full-cover/any-overlap walks around
+# the median — VERDICT r7 item 3; the former second HDR grid over
+# |x − median| cost a full scan + shuffle), MAD resolved in one
+# conditional-aggregation band scan, then one counting pass — four
+# bounded passes, one shuffle, zero global sorts, all integer. The z-score face (events_value_zscore_outliers) is
 # mean/stddev-based and itself skewed by the outliers it hunts;
 # median/MAD is the robust production variant. Oracle recomputes via
 # full sorts.
@@ -3813,19 +3813,10 @@ def _corpus_prepare_semantic_oracle(sf_dir: str) -> str:
     C, _qv, _probes = _ivf_shared(sf_dir)
     return rf"""
     WITH {_QUALITY_CTES.format(keep="doc_id, text")},
-    {_exact_fp_ctes("doc_id, quality", _MIN_ID_KEEP1)}, cents AS (SELECT {_cents_sql(C)} AS C),
-    v AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
-          FROM embeddings),
+    {_exact_fp_ctes("doc_id, quality", _MIN_ID_KEEP1)}, {_cents_cte(C)},
+    {_V_DOUBLE_CTE},
     kv AS (
-      SELECT k.doc_id, n.nrm,
-             list_transform(v.ve, x -> x / n.nrm) AS ue,
-             list_position(d.dists, list_min(d.dists)) - 1 AS cluster
-      FROM kept k JOIN v ON k.doc_id = v.vec_id, cents,
-           LATERAL (SELECT sqrt(list_sum(list_transform(v.ve, x -> x*x)))
-                      AS nrm) n,
-           LATERAL (SELECT list_transform(cents.C, c ->
-                      list_sum(list_transform(list_zip(v.ve, c),
-                        p -> (p[1] - p[2]) * (p[1] - p[2])))) AS dists) d
+      {_UNIT_CLUSTER_SQL.format(key="k.doc_id", source="kept k JOIN v ON k.doc_id = v.vec_id")}
     ),
     dups AS (
       SELECT DISTINCT b.doc_id
@@ -8030,11 +8021,11 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # GROUPED robust (median/MAD) outlier detection — the per-tenant /
-# per-event-type production variant of events_value_mad_outliers: every
-# stage keyed by the group (per-group grids and brackets via
-# exact_quantiles_by_group), deviations derived by a hash equi-join on
-# the group (never a broadcast of group-cardinality data), and one
-# counting pass. Zero global sorts; state bounded by groups × grid.
+# per-event-type production variant of events_value_mad_outliers: the
+# same selector stages with the group as the key (per-group grids,
+# brackets and MAD bands), every frame meeting the rows by a hash
+# equi-join on the group (never a broadcast of group-cardinality data),
+# and one counting pass. Zero global sorts; state bounded by groups × grid.
 # Oracle: independent per-group full sorts.
 # ---------------------------------------------------------------------------
 @register(

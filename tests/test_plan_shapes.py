@@ -448,6 +448,22 @@ def test_mad_selector_plan_is_lineage_cut(spark):
     assert txt.count("Exchange") < 60, txt.count("Exchange")
 
 
+def test_quantile_selectors_build_without_spark_jobs(spark):
+    """Building the two exact-quantile faces runs no Spark job: their
+    brackets are lazily persisted, so every job waits for the caller's
+    action instead of blocking the driver while the query is built."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        for name in ("events_quantiles_by_type", "events_exact_quantiles_sketch"):
+            group = f"build-{name}"
+            sc.setJobGroup(group, group)
+            synthetic.QUERIES[name](spark, SF_DIR)
+            assert list(tracker.getJobIdsForGroup(group)) == [], name
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_bpe_pair_counts_aggregates_tokens_before_merges(spark):
     """r12: the BPE merge replace-chain runs once per DISTINCT token —
     the plan must show the token-count aggregation BELOW the
