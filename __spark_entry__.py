@@ -25,45 +25,54 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # The driver records CORRECTNESS rows for only the first 50 registered
 # entries; registry order is ours to choose. The window leads with the
-# faces whose Spark code changed last — the exact-selector tier, which
-# now runs one set of selector stages for the grouped and whole-column
-# faces; the four dedup-closure faces (min-label connected components);
-# the five faces whose oracles replay IVF assignment from one shared
-# nearest-centroid declaration, and the faces that train or probe
+# faces whose Spark code changed last — every dedup and corpus face,
+# whose near-duplicate stages now run once for the within-corpus and
+# the new x history shapes; the Bloom semi-join face; the two grouped
+# exact selectors, whose group-key joins became NULL-safe — then the
+# rest of the exact-selector tier, the faces that train or probe
 # through the shared IVF/PQ sample and probe helpers (among them
 # ann_ivfpq_upsert_check, the only face that writes through
-# upsert_partitions) — then the shared
-# interval frame and one-table LSH, the only face that writes through
-# write_orc, the only faces of three operators that were cut down to
-# one formulation (pagerank_integer, read_jsonl, ratio_threshold), then
-# every face that calls an operators.multimodal op — the whole codec
-# tier crosses the Python-worker boundary through one shared
-# mapInArrow helper, once per fixture → operator chain — then
-# embedding_label_pca, the grouped applyInPandas face, which also
-# starts Python workers. Every rotated-out query is still re-verified
-# by the full local check_oracle sweep and the pytest oracle replicas.
+# upsert_partitions), the shared interval frame and one-table LSH, the
+# only face that writes through write_orc, the only faces of three
+# operators that were cut down to one formulation (pagerank_integer,
+# read_jsonl, ratio_threshold), and the first twelve faces of the codec
+# tier, which crosses the Python-worker boundary through one shared
+# mapInArrow helper. Every rotated-out query is still re-verified by
+# the full local check_oracle sweep and the pytest oracle replicas.
 _CHECK_FIRST = [
-    # --- exact selectors and the HDR grid they share (sketch.py) ---
-    "events_exact_quantiles_sketch",
+    # --- dedup.py: the 14 within-corpus and 3 new x history faces, whose
+    # near-duplicate stages are written once for both shapes ---
+    "dedup_ngram_jaccard",
+    "dedup_ngram_jaccard_ppjoin",
+    "dedup_components",
+    "dedup_minhash",
+    "dedup_minhash_recall_check",
+    "dedup_simhash",
+    "dedup_simhash_check",
+    "dedup_embedding",
+    "dedup_semantic",
+    "corpus_prepare",
+    "corpus_prepare_cc",
+    "corpus_prepare_cc_best",
+    "corpus_prepare_semantic",
+    "corpus_prepare_audit",
+    "dedup_incremental",
+    "dedup_incremental_minhash_check",
+    "dedup_semantic_incremental",
+    # --- bloom.py after the md5 path's removal; the two grouped exact
+    # selectors, whose key joins are NULL-safe (sketch.py) ---
+    "orders_bloom_semijoin",
     "events_quantiles_by_type",
-    "events_value_mad_outliers",
     "events_mad_outliers_by_type",
+    # --- the rest of the exact-selector tier and the HDR grid ---
+    "events_exact_quantiles_sketch",
+    "events_value_mad_outliers",
     "docs_quantile_sketch",
     "docs_quantile_sketch_check",
     "events_quantile_merge_check",
-    # --- dedup closure (graph.py dedup_clusters, min-label) ---
-    "dedup_components",
-    "corpus_prepare_cc",
-    "corpus_prepare_cc_best",
-    "corpus_prepare_audit",
-    # --- nearest-centroid oracles and the shared IVF/PQ sample + probe
-    # helpers of operators/similarity.py (the IVF-assignment and
-    # PQ-encoding faces also cross into pandas-UDF Python workers) ---
+    # --- shared IVF/PQ sample and probe helpers of operators/similarity.py ---
     "ann_ivf_probe_topk",
-    "dedup_semantic",
-    "dedup_semantic_incremental",
     "ann_ivfpq_topk",
-    "corpus_prepare_semantic",
     "ann_ivf_recall_check",
     "ann_cosine_topk_ivf",
     "embedding_pq_codes",
@@ -79,8 +88,8 @@ _CHECK_FIRST = [
     "supplier_authority_pagerank",
     "events_jsonl_ingest_check",
     "q2_late",
-    # --- codec tier: every face that crosses the one mapInArrow
-    # boundary of operators/multimodal.py (_map_arrow) ---
+    # --- codec tier: faces that cross the one mapInArrow boundary of
+    # operators/multimodal.py (_map_arrow); the rest lead the overflow ---
     "multimodal_stats",
     "multimodal_bmp_decode_check",
     "multimodal_png_decode_check",
@@ -93,6 +102,7 @@ _CHECK_FIRST = [
     "multimodal_mp4_frame_sample_check",
     "multimodal_mp4_sample_table_check",
     "multimodal_video_pixels_check",
+    # --- overflow (slots 51+; designated for the next window) ---
     "multimodal_h264_meta_check",
     "multimodal_h264_keyframes_check",
     "multimodal_h264_pts_check",
@@ -102,31 +112,16 @@ _CHECK_FIRST = [
     "multimodal_audio_features",
     "multimodal_frame_sample",
     "multimodal_features_ann",
-    # --- grouped applyInPandas: a Python-worker face outside the codec
-    # tier (workers start from session.py's daemon module) ---
     "embedding_label_pca",
-    # --- r13: the rest of the exact-selector tier ---
     "user_spend_quartiles",
-    # --- overflow (slots 51+; designated for the next window) ---
     "events_value_quantile_check",
-    "dedup_simhash",
-    "dedup_embedding",
-    "dedup_minhash_recall_check",
-    "dedup_simhash_check",
-    "dedup_incremental_minhash_check",
-    "dedup_incremental",
     "dedup_winnow_pairs",
-    "dedup_ngram_jaccard_ppjoin",
     "docs_dup_spans",
     "docs_dup_span_profile",
     "docs_dup_span_strip",
-    "corpus_prepare",
-    "dedup_minhash",
-    "dedup_ngram_jaccard",
     "vocab_bpe_pair_counts",
     "events_sliding",
     "nation_customer_counts",
-    "orders_bloom_semijoin",
     "orders_join_size_cms_check",
     "pivot_status_revenue",
     "purchase_age_salted_join",

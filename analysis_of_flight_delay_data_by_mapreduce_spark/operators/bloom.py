@@ -2,8 +2,8 @@
 sideways-information-passing pattern).
 
 Spark's own ``InjectRuntimeFilter`` rewrites eligible join plans this way
-when statistics justify it; this module makes the pattern explicit,
-deterministic, and engine-portable. The filter targets the regime where
+when statistics justify it; this module makes the pattern explicit
+and deterministic. The filter targets the regime where
 the dim side is too large to broadcast raw (so the final semi-join must
 shuffle BOTH sides) but its Bloom filter is tiny: testing every fact row
 against the Bloom before the exchange cuts the fact-side shuffle volume
@@ -12,14 +12,16 @@ join that follows, so the operator's RESULT is exactly the plain
 semi-join's — which is what makes it hash-checkable against a Bloom-free
 DuckDB oracle).
 
-Portability: bit positions derive from **md5** of the key's decimal
-string rendering — identical in Java/Spark, DuckDB, and Python — via
-Kirsch-Mitzenmacher double hashing ``h_i = (h1 + i*h2) mod m`` with
-``h1``/``h2`` the first two 60-bit (15-hex-digit) slices of the digest.
-The exact same filter can therefore be built engine-independently (a
-pyarrow/python twin over the dim parquet, the trained-constants
-technique) and embedded in ANY plan as an ``array<bigint>`` literal — no
-join, no broadcast variable, just a pushable scalar predicate.
+Hashing: bit positions come from Kirsch-Mitzenmacher double hashing
+``h_i = (h1 + i*h2) mod m`` with ``h1``/``h2`` two independent 60-bit
+``xxhash64`` values of the normalized key — native, whole-stage-codegen
+hashes, so the k probes stay a flat scalar predicate Catalyst keeps in
+the Filter directly above the fact scan. The words are built by a tiny
+Spark job over the dim side (:func:`bloom_build_spark`) and embedded in
+the probe side's plan as an ``array<bigint>`` literal — no join, no
+broadcast variable. The filter needs no engine-independent twin: it
+never changes the operator's result, only how many fact rows reach the
+exchange.
 
 Bounds: 60-bit halves keep ``h1 + (k-1)*h2 < 2^63`` for ``k <= 7`` (no
 ANSI overflow); ``m`` must be a power of two so ``mod m`` is a bitmask.
@@ -30,27 +32,18 @@ at position ``p & 63`` (``getbit`` counts from the LSB, matching
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterable
 from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 __all__ = [
-    "bloom_build",
     "bloom_build_spark",
-    "bloom_might_contain",
     "bloom_prune",
     "bloom_params",
 ]
 
 _MAX_K = 7  # h1 + (k-1)*h2 < 2^60 * (1 + (k-1)) <= 7*2^60 < 2^63
-
-
-def _h12(key: str) -> tuple[int, int]:
-    d = hashlib.md5(key.encode("utf-8")).hexdigest()
-    return int(d[0:15], 16), int(d[15:30], 16)
 
 
 def bloom_params(n_keys: int, bits_per_key: int = 16) -> tuple[int, int]:
@@ -61,70 +54,6 @@ def bloom_params(n_keys: int, bits_per_key: int = 16) -> tuple[int, int]:
     while m < n_keys * bits_per_key:
         m *= 2
     return m, _MAX_K
-
-
-def bloom_build(keys: Iterable[object], m_bits: int, k: int = _MAX_K) -> list[int]:
-    """The filter's int64 words (signed, two's complement) — the
-    engine-independent twin. Insertion order is irrelevant (bit-OR
-    commutes), so any scan order over the dim table yields the same
-    words. Keys are rendered as ``str(key)``; the Spark predicate casts
-    its column to string, so ``1234`` and ``"1234"`` agree."""
-    if m_bits & (m_bits - 1) or m_bits < 64:
-        raise ValueError(f"m_bits must be a power of two >= 64, got {m_bits}")
-    if not 1 <= k <= _MAX_K:
-        raise ValueError(f"k must be in 1..{_MAX_K} (overflow bound), got {k}")
-    words = [0] * (m_bits // 64)
-    for key in keys:
-        h1, h2 = _h12(str(key))
-        for i in range(k):
-            p = (h1 + i * h2) % m_bits
-            words[p >> 6] |= 1 << (p & 63)
-    return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-
-
-def bloom_might_contain(
-    col: Column | str, words: list[int], m_bits: int, k: int = _MAX_K
-) -> Column:
-    """Pure-Catalyst membership test of ``col`` against a literal Bloom
-    filter: md5 once, k masked probes, k ``getbit`` word tests ANDed.
-    No UDF, no join — a scalar predicate Catalyst keeps right above the
-    scan, evaluated before any exchange."""
-    if len(words) * 64 != m_bits:
-        raise ValueError("words length inconsistent with m_bits")
-    if not 1 <= k <= _MAX_K:
-        raise ValueError(f"k must be in 1..{_MAX_K}, got {k}")
-    c = (F.col(col) if isinstance(col, str) else col).cast("string")
-    # a real array LITERAL (one constant ArrayData), not CreateArray —
-    # CreateArray would re-materialize the whole word array per row per
-    # probe (7x512 element moves/row at m=32768)
-    lw = F.lit(words).cast("array<bigint>")
-
-    def probe_all(h: Column) -> Column:
-        probes = []
-        for i in range(k):
-            p = (h["h1"] + F.lit(i) * h["h2"]).bitwiseAND(F.lit(m_bits - 1))
-            word = F.element_at(lw, F.shiftright(p, 6).cast("int") + F.lit(1))
-            probes.append(F.getbit(word, p.bitwiseAND(F.lit(63))) == 1)
-        return reduce(lambda a, b: a & b, probes)
-
-    def split_digest(d: Column) -> Column:
-        return F.struct(
-            F.conv(F.substring(d, 1, 15), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(d, 16, 15), 16, 10).cast("long").alias("h2"),
-        )
-
-    # FilterExec does NO subexpression elimination (unlike ProjectExec),
-    # so a flat `AND` of k probes would evaluate md5 2k times and conv
-    # 2k times per row — measured 14x the digest cost at k=7. Two nested
-    # 1-element-transform let-bindings (the word_shingles idiom) pin
-    # md5 to ONCE and each conv to once, while the whole test stays a
-    # single scalar predicate Catalyst keeps in the Filter above the
-    # scan, before any exchange. NOTE: higher-order functions run on the
-    # interpreted (non-codegen) path, so this costs ~10x the codegen'd
-    # flat probes — in a hot path prefer :func:`bloom_prune`, which gets
-    # both CSE and whole-stage codegen.
-    hs = F.transform(F.array(F.md5(c)), split_digest)
-    return F.element_at(F.transform(hs, probe_all), 1)
 
 
 _H_MASK = (1 << 60) - 1  # 60-bit halves keep h1 + 6*h2 < 2^63 (no ANSI overflow)
@@ -172,9 +101,7 @@ def bloom_build_spark(dim, key_col: str, m_bits: int, k: int = _MAX_K) -> list[i
     The result does NOT need an engine-independent twin (unlike IVF
     centroids / BPE merges): the Bloom filter never affects operator
     RESULTS — false positives are removed by the exact join downstream —
-    so oracles stay Bloom-free. Use the md5 variant
-    (:func:`bloom_build` + :func:`bloom_might_contain`) only when the
-    filter itself must be reproduced outside the JVM.
+    so oracles stay Bloom-free.
     """
     if m_bits & (m_bits - 1) or m_bits < 64:
         raise ValueError(f"m_bits must be a power of two >= 64, got {m_bits}")

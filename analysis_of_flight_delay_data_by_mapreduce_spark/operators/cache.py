@@ -37,7 +37,15 @@ def set_scope(name: str) -> None:
 
 def scoped_persist(df: DataFrame) -> DataFrame:
     """persist() at the default storage level that registers the
-    DataFrame for release when a different registry query builds."""
+    DataFrame for release when a different registry query builds.
+
+    A frame whose plan is already cached (a rebuild of the same query:
+    ``storageLevel`` is looked up by canonical plan) is returned as is —
+    neither persisted nor registered again, so repeated builds keep one
+    registry entry per cached plan."""
+    level = df.storageLevel
+    if level.useMemory or level.useDisk:
+        return df
     df = df.persist()
     _LIVE.append((_SCOPE, df))
     return df

@@ -18,6 +18,16 @@ posture:
 - **embedding_near_dup** — random-hyperplane LSH buckets over embeddings,
   exact cosine verification within buckets only.
 
+Self / between duality: the MinHash, semantic and exact n-gram matchers
+each answer pairs within one corpus (``minhash_lsh_dedup``,
+``semantic_dedup``, ``ngram_jaccard_pairs``) and new × history pairs for
+incremental ingest (the ``*_matches_between`` faces) from the same
+stages, each written once: band entries, candidate verify, unit vectors,
+shingle postings, stop-shingle cap, pair count and Jaccard cut. Only
+bucket pair generation has two algorithms — sorted tail slices within a
+bucket (``_bucket_pairs``) vs a per-bucket new × old product
+(``_bucket_cross_pairs``).
+
 Everything is built-in Catalyst expressions — no Python/pandas UDF in any
 hot path. Hash = ``xxhash64`` (JVM-side, whole-stage codegen).
 """
@@ -175,13 +185,11 @@ def _bucket_pairs(
             .filter((F.col("__bc") >= 2) & (F.col("__bc") <= max_bucket))
             .drop("__bc")
         )
-        posts = entries.groupBy(*[F.col(k) for k in keys]).agg(
-            F.sort_array(F.collect_list(F.col(id_col))).alias("__m")
-        )
-    else:
-        posts = entries.groupBy(*[F.col(k) for k in keys]).agg(
-            F.sort_array(F.collect_list(F.col(id_col))).alias("__m")
-        ).filter(F.size("__m") >= 2)
+    posts = entries.groupBy(*[F.col(k) for k in keys]).agg(
+        F.sort_array(F.collect_list(F.col(id_col))).alias("__m")
+    )
+    if max_bucket is None:
+        posts = posts.filter(F.size("__m") >= 2)
     return (
         _posting_tail_pairs(posts.select("__m"))
         .select(F.col("__ea").alias("id_a"), F.col("__eb").alias("id_b"))
@@ -287,9 +295,10 @@ def minhash_signatures(
 
 
 def _band_entries(
-    sig: DataFrame, id_col: str, bands: int, rows_per_band: int
+    df: DataFrame, id_col: str, text_col: str,
+    num_hashes: int, bands: int, shingle_k: int, mode: str,
 ) -> DataFrame:
-    """``(id, band, bucket)`` rows from a minhash signature frame.
+    """``(id, band, bucket)`` rows of the documents' minhash signatures.
 
     Band bucket = hash-fold over the band's slice of the signature,
     written as transform+aggregate higher-order functions. Codegen emits
@@ -298,6 +307,8 @@ def _band_entries(
     (VERDICT r3 perf finding); the fold keeps analysis and codegen O(1)
     in ``bands``. posexplode supplies the band index.
     """
+    rows_per_band = num_hashes // bands
+    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k, mode)
     return sig.select(
         F.col(id_col),
         F.posexplode(
@@ -310,6 +321,75 @@ def _band_entries(
                 ),
             )
         ).alias("band", "bucket"),
+    )
+
+
+def _jaccard(inter: str, size_a: str, size_b: str) -> Column:
+    """``|A∩B| / (|A| + |B| - |A∩B|)`` of exact int64 counts."""
+    return F.col(inter).cast("double") / (
+        F.col(size_a) + F.col(size_b) - F.col(inter)
+    ).cast("double")
+
+
+def _verify_jaccard(
+    pairs: DataFrame, ends: tuple[str, str], id_col: str, text_col: str,
+    mode: str, shingle_k: int, threshold: float,
+    docs_a: DataFrame, docs_b: DataFrame | None = None,
+) -> DataFrame:
+    """The ``ends`` pairs at exact shingle Jaccard ``>= threshold``; end
+    ``b`` names a ``docs_b`` document, or a ``docs_a`` one if it is None.
+
+    Verify ONLY the LSH candidates, pairwise: join each candidate pair
+    to the two documents' distinct-shingle arrays and compute exact
+    Jaccard with ``array_intersect`` — per-pair O(|A|+|B|) hash-set
+    work, JVM-side. Versus the previous shape (semi-join to candidate
+    docs, then the full inverted-index self-join + groupBy of
+    ngram_jaccard_pairs) this is two narrow equi-joins and a projection:
+    ~6 fewer stages, which cut the first-execution (analysis + codegen
+    JIT) cost of the whole query from ~19 s to ~5 s at sf0.1 while
+    computing the identical filtered Jaccard. At scale the joins shuffle
+    only candidate rows + the (id, shingle-array) sides — candidates are
+    a vanishing fraction of the corpus, and shingle arrays are bounded
+    by document length. Shingle arrays are built ONLY for documents
+    appearing in some candidate pair (semi-join), and that small frame
+    is persisted so the corpus scan + shingling runs once, not once per
+    join side; within one corpus both pair ends read one such frame.
+    """
+    a, b = ends
+    pairs = scoped_persist(pairs)
+
+    def shingle_sets(docs: DataFrame, ids: DataFrame) -> DataFrame:
+        return scoped_persist(
+            docs.join(ids.distinct(), id_col, "left_semi")
+            .select(
+                F.col(id_col),
+                F.array_distinct(
+                    _shingles(F.col(text_col), mode, shingle_k)
+                ).alias("__sh"),
+            )
+            .withColumn("__sz", F.size("__sh"))
+        )
+
+    ids_a = pairs.select(F.col(a).alias(id_col))
+    ids_b = pairs.select(F.col(b).alias(id_col))
+    if docs_b is None:
+        sh_a = sh_b = shingle_sets(docs_a, ids_a.union(ids_b))
+    else:
+        sh_a, sh_b = shingle_sets(docs_a, ids_a), shingle_sets(docs_b, ids_b)
+    side_a, side_b = (
+        sh.select(
+            F.col(id_col).alias(end),
+            F.col("__sh").alias("__sh" + t),
+            F.col("__sz").alias("__sz" + t),
+        )
+        for sh, end, t in ((sh_a, a, "a"), (sh_b, b, "b"))
+    )
+    return (
+        pairs.join(side_a, a)
+        .join(side_b, b)
+        .withColumn("__i", F.size(F.array_intersect("__sha", "__shb")))
+        .filter(_jaccard("__i", "__sza", "__szb") >= threshold)
+        .select(a, b)
     )
 
 
@@ -335,69 +415,45 @@ def minhash_lsh_dedup(
     hot buckets (see ``_bucket_pairs``), bounding worst-case skew.
 
     If ``verify_jaccard`` is set, candidates are verified with exact shingle
-    Jaccard (inverted-index counting, see ``ngram_jaccard_pairs``) and only
-    pairs at or above the threshold survive.
+    Jaccard (:func:`_verify_jaccard`) and only pairs at or above the
+    threshold survive.
 
     Returns ``id_a, id_b`` (``id_a < id_b``), distinct.
     """
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k, mode)
-    band_entries = _band_entries(sig, id_col, bands, rows_per_band)
-    pairs = _bucket_pairs(band_entries, ["band", "bucket"], id_col, max_bucket)
+    entries = _band_entries(df, id_col, text_col, num_hashes, bands, shingle_k, mode)
+    pairs = _bucket_pairs(entries, ["band", "bucket"], id_col, max_bucket)
     if verify_jaccard is not None:
-        # Verify ONLY the LSH candidates, pairwise: join each candidate
-        # pair to the two documents' distinct-shingle arrays and compute
-        # exact Jaccard with ``array_intersect`` — per-pair O(|A|+|B|)
-        # hash-set work, JVM-side. Versus the previous shape (semi-join
-        # to candidate docs, then the full inverted-index self-join +
-        # groupBy of ngram_jaccard_pairs) this is two narrow equi-joins
-        # and a projection: ~6 fewer stages, which cut the first-execution
-        # (analysis + codegen JIT) cost of the whole query from ~19 s to
-        # ~5 s at sf0.1 while computing the identical filtered Jaccard.
-        # At scale the joins shuffle only candidate rows + the (id,
-        # shingle-array) sides — candidates are a vanishing fraction of
-        # the corpus, and shingle arrays are bounded by document length.
-        # Shingle arrays are built ONLY for documents appearing in some
-        # candidate pair (semi-join), and that small frame is persisted so
-        # the corpus scan + shingling runs once, not once per join side.
-        pairs = scoped_persist(pairs)
-        cand_ids = (
-            pairs.select(F.col("id_a").alias(id_col))
-            .union(pairs.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        sh_docs = scoped_persist(
-            df.join(cand_ids, id_col, "left_semi")
-            .select(
-                F.col(id_col),
-                F.array_distinct(
-                    _shingles(F.col(text_col), mode, shingle_k)
-                ).alias("__sh"),
-            )
-            .withColumn("__sz", F.size("__sh"))
-        )
-        a = sh_docs.select(
-            F.col(id_col).alias("id_a"),
-            F.col("__sh").alias("__sha"),
-            F.col("__sz").alias("__sza"),
-        )
-        b = sh_docs.select(
-            F.col(id_col).alias("id_b"),
-            F.col("__sh").alias("__shb"),
-            F.col("__sz").alias("__szb"),
-        )
-        pairs = (
-            pairs.join(a, "id_a")
-            .join(b, "id_b")
-            .withColumn("__i", F.size(F.array_intersect("__sha", "__shb")))
-            .filter(
-                F.col("__i").cast("double")
-                / (F.col("__sza") + F.col("__szb") - F.col("__i")).cast("double")
-                >= verify_jaccard
-            )
-            .select("id_a", "id_b")
+        pairs = _verify_jaccard(
+            pairs, ("id_a", "id_b"), id_col, text_col, mode, shingle_k,
+            verify_jaccard, df,
         )
     return pairs
+
+
+def _unit_vectors(
+    df: DataFrame, id_col: str, vec_col: str, centroids: list[list[float]]
+) -> tuple[DataFrame, DataFrame]:
+    """The persisted nearest-centroid assignment ``(id, vec, cluster,
+    __nrm)``, and its non-zero rows with their unit vectors ``__u``.
+
+    Vectors are normalized once per row behind the persist boundary
+    (``__nrm`` is a materialized attribute, so the per-element divide
+    reads it instead of re-deriving the norm — the HOF no-CSE trap),
+    and pair cosine is then a plain dot of unit vectors. Zero vectors
+    cannot pair (their cosine is undefined — the exact formula yields
+    NULL).
+    """
+    from .similarity import assign_ivf_cluster
+
+    assigned = scoped_persist(
+        assign_ivf_cluster(df.select(id_col, vec_col), vec_col, centroids)
+        .withColumn("__nrm", l2_norm(F.col(vec_col)))
+    )
+    unit = assigned.filter(F.col("__nrm") != 0).withColumn(
+        "__u",
+        F.transform(F.col(vec_col), lambda x: x.cast("double") / F.col("__nrm")),
+    )
+    return assigned, unit
 
 
 def semantic_dedup(
@@ -425,45 +481,27 @@ def semantic_dedup(
 
     Returns the SURVIVORS: ``id_col, cluster``.
 
-    Per-pair cost is ONE array fold: vectors are normalized once per row
-    behind the persist boundary (``__nrm`` is a materialized attribute,
-    so the per-element divide reads it instead of re-deriving the norm —
-    the HOF no-CSE trap), and pair cosine is then a plain dot of unit
-    vectors. Versus cosine-per-pair (dot + two norms, with each row's
-    norm recomputed for every one of its ~|cluster| pairings) this
-    measured 2.8× faster at sf0.1. Zero vectors cannot pair (their
-    cosine is undefined — the exact formula yields NULL) but still
-    survive.
+    Per-pair cost is ONE array fold over the unit vectors of
+    :func:`_unit_vectors`. Versus cosine-per-pair (dot + two norms,
+    with each row's norm recomputed for every one of its ~|cluster|
+    pairings) this measured 2.8× faster at sf0.1. Zero vectors cannot
+    pair but still survive.
     """
-    from .similarity import assign_ivf_cluster
-
-    assigned = scoped_persist(
-        assign_ivf_cluster(df.select(id_col, vec_col), vec_col, centroids)
-        .withColumn("__nrm", l2_norm(F.col(vec_col)))
-    )
-    pair_src = assigned.filter(F.col("__nrm") != 0)
+    assigned, unit = _unit_vectors(df, id_col, vec_col, centroids)
     if max_cluster is not None:
         counts = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("__cn"))
-        pair_src = (
-            pair_src.join(
-                counts.filter(F.col("__cn") > max_cluster).select("cluster"),
-                "cluster",
-                "left_anti",
-            )
+        unit = unit.join(
+            counts.filter(F.col("__cn") > max_cluster).select("cluster"),
+            "cluster",
+            "left_anti",
         )
-    unit = pair_src.withColumn(
-        "__u",
-        F.transform(F.col(vec_col), lambda x: x.cast("double") / F.col("__nrm")),
-    )
-    a = unit.select(
-        F.col("cluster"),
-        F.col(id_col).alias("__ida"),
-        F.col("__u").alias("__ua"),
-    )
-    b = unit.select(
-        F.col("cluster"),
-        F.col(id_col).alias("__idb"),
-        F.col("__u").alias("__ub"),
+    a, b = (
+        unit.select(
+            F.col("cluster"),
+            F.col(id_col).alias("__id" + t),
+            F.col("__u").alias("__u" + t),
+        )
+        for t in ("a", "b")
     )
     dups = (
         a.join(b, "cluster")
@@ -493,30 +531,12 @@ def semantic_matches_between(
 
     Returns ``new_id, old_id`` (cosine ≥ ``threshold``).
     """
-    from .similarity import assign_ivf_cluster
-
-    def _unit_side(frame: DataFrame, alias: str, out: str) -> DataFrame:
-        # normalize once per row so the pair test is a single dot fold
-        # (see semantic_dedup); the persist boundary materializes the
-        # norm so the per-element divide doesn't re-derive it.
-        assigned = scoped_persist(
-            assign_ivf_cluster(
-                frame.select(F.col(id_col).alias(alias), F.col(vec_col).alias("__v")),
-                "__v",
-                centroids,
-            ).withColumn("__nrm", l2_norm(F.col("__v")))
+    a, b = (
+        _unit_vectors(frame, id_col, vec_col, centroids)[1].select(
+            F.col(id_col).alias(end), "cluster", F.col("__u").alias(u)
         )
-        return (
-            assigned.filter(F.col("__nrm") != 0)
-            .withColumn(
-                out,
-                F.transform(F.col("__v"), lambda x: x.cast("double") / F.col("__nrm")),
-            )
-            .select(alias, "cluster", out)
-        )
-
-    a = _unit_side(new_df, "new_id", "__ua")
-    b = _unit_side(old_df, "old_id", "__ub")
+        for frame, end, u in ((new_df, "new_id", "__ua"), (old_df, "old_id", "__ub"))
+    )
     return (
         a.join(b, "cluster")
         .filter(dot(F.col("__ua"), F.col("__ub")) >= threshold)
@@ -555,55 +575,20 @@ def minhash_matches_between(
     Returns ``new_id, old_id`` (distinct; verified when
     ``verify_jaccard`` is set).
     """
-    rows_per_band = num_hashes // bands
-    sides = []
-    for frame, alias in ((new_df, "new_id"), (old_df, "old_id")):
-        sig = minhash_signatures(
-            frame.withColumnRenamed(id_col, alias),
-            alias,
-            text_col,
-            num_hashes,
-            shingle_k,
-            mode,
+    e_new, e_old = (
+        _band_entries(
+            frame.withColumnRenamed(id_col, end), end, text_col,
+            num_hashes, bands, shingle_k, mode,
         )
-        sides.append(_band_entries(sig, alias, bands, rows_per_band))
-    e_new, e_old = sides
+        for frame, end in ((new_df, "new_id"), (old_df, "old_id"))
+    )
     pairs = _bucket_cross_pairs(
         e_new, e_old, ["band", "bucket"], "new_id", "old_id", max_bucket
     )
     if verify_jaccard is not None:
-        # Same candidate-scoped exact verify as minhash_lsh_dedup: shingle
-        # arrays built only for docs appearing in some candidate pair.
-        pairs = scoped_persist(pairs)
-        sh_sides = {}
-        for frame, alias, out in (
-            (new_df, "new_id", "__shn"),
-            (old_df, "old_id", "__sho"),
-        ):
-            cand_ids = pairs.select(alias).distinct()
-            sh_sides[alias] = scoped_persist(
-                frame.withColumnRenamed(id_col, alias)
-                .join(cand_ids, alias, "left_semi")
-                .select(
-                    alias,
-                    F.array_distinct(
-                        _shingles(F.col(text_col), mode, shingle_k)
-                    ).alias(out),
-                )
-                .withColumn(out + "_sz", F.size(out))
-            )
-        pairs = (
-            pairs.join(sh_sides["new_id"], "new_id")
-            .join(sh_sides["old_id"], "old_id")
-            .withColumn("__i", F.size(F.array_intersect("__shn", "__sho")))
-            .filter(
-                F.col("__i").cast("double")
-                / (F.col("__shn_sz") + F.col("__sho_sz") - F.col("__i")).cast(
-                    "double"
-                )
-                >= verify_jaccard
-            )
-            .select("new_id", "old_id")
+        pairs = _verify_jaccard(
+            pairs, ("new_id", "old_id"), id_col, text_col, mode, shingle_k,
+            verify_jaccard, new_df, old_df,
         )
     return pairs
 
@@ -633,16 +618,10 @@ def build_band_index(
     """
     from .bucketing import write_bucketed
 
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(
+    entries = _band_entries(
         df.withColumnRenamed(id_col, "old_id"), "old_id", text_col,
-        num_hashes, shingle_k, mode,
-    )
-    entries = (
-        _band_entries(sig, "old_id", bands, rows_per_band)
-        .withColumn("bkey", F.xxhash64("band", "bucket"))
-        .select("old_id", "bkey")
-    )
+        num_hashes, bands, shingle_k, mode,
+    ).select("old_id", F.xxhash64("band", "bucket").alias("bkey"))
     write_bucketed(entries, table, key="bkey", n_buckets=n_buckets)
 
 
@@ -672,16 +651,10 @@ def minhash_candidates_against_index(
 
     Returns distinct ``new_id, old_id`` candidates.
     """
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(
+    e_new = _band_entries(
         new_df.withColumnRenamed(id_col, "new_id"), "new_id", text_col,
-        num_hashes, shingle_k, mode,
-    )
-    e_new = (
-        _band_entries(sig, "new_id", bands, rows_per_band)
-        .withColumn("bkey", F.xxhash64("band", "bucket"))
-        .select("new_id", "bkey")
-    )
+        num_hashes, bands, shingle_k, mode,
+    ).select("new_id", F.xxhash64("band", "bucket").alias("bkey"))
     idx = spark.table(table).hint("merge")
     return e_new.join(idx, "bkey").select("new_id", "old_id").distinct()
 
@@ -833,6 +806,108 @@ def simhash_near_dup(
     )
 
 
+def _shingle_postings(
+    df: DataFrame, id_col: str, text_col: str, mode: str, shingle_k: int
+) -> DataFrame:
+    """``(id, __size, __shingle)`` per distinct shingle of each document.
+
+    Sizes are computed ONCE at the document row (array size before the
+    explode) and carried on the exploded entries, so the Jaccard
+    denominator rides the pair-count aggregation's key — the former
+    separate per-doc size aggregation AND the two post-count size joins
+    are gone (3 fewer exchanges)."""
+    return _ensure_parallelism(df, id_col).select(
+        F.col(id_col),
+        F.array_distinct(_shingles(F.col(text_col), mode, shingle_k)).alias("__sha"),
+    ).select(
+        F.col(id_col),
+        F.size("__sha").alias("__size"),
+        F.explode("__sha").alias("__shingle"),
+    )
+
+
+def _stop_shingle_cap(
+    e_a: DataFrame, id_col: str, max_doc_freq: int, e_b: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame | None]:
+    """Postings without the shingles in over ``max_doc_freq`` documents
+    of ``e_a`` ∪ ``e_b`` (symmetric filtered Jaccard), sizes re-counted.
+
+    The document-frequency cap is a count-over-window keyed on the
+    shingle (r13 — the former grouped collect_lists materialized a
+    stop-shingle's full unbounded posting array in one aggregation row
+    before the size filter dropped it; the window buffer spills
+    instead). Both consumers (sizes and pairs) read the persisted
+    filtered postings; two sides union into one side-tagged frame, one
+    window pass for both.
+    """
+    from pyspark.sql import Window as W
+
+    def tagged(e: DataFrame, side: int) -> DataFrame:
+        return e.select(F.col(id_col), "__shingle", F.lit(side).alias("__side"))
+
+    if e_b is None:
+        u = e_a.select(F.col(id_col), "__shingle")
+    else:
+        u = tagged(e_a, 0).unionAll(tagged(e_b, 1))
+    wdf = F.count(F.lit(1)).over(W.partitionBy("__shingle"))
+    filt = scoped_persist(
+        u.withColumn("__df", wdf).filter(F.col("__df") <= max_doc_freq).drop("__df")
+    )
+
+    def sized(sh: DataFrame) -> DataFrame:
+        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("__size"))
+        return sh.join(sizes, id_col)
+
+    if e_b is None:
+        return sized(filt), None
+    a, b = (
+        sized(filt.filter(F.col("__side") == side).select(id_col, "__shingle"))
+        for side in (0, 1)
+    )
+    return a, b
+
+
+def _shingle_pair_counts(
+    e_a: DataFrame, id_col: str,
+    e_b: DataFrame | None = None, ends: tuple[str, str] = ("id_a", "id_b"),
+) -> DataFrame:
+    """``(a, b, __size_a, __size_b, __inter)`` over ``e_a`` × ``e_b``, or
+    over each unordered pair of ``e_a`` once (``a < b``) if ``e_b`` is None.
+
+    Pair counting stays the inverted-index equi-join on the shingle:
+    measured against the postings-list (collect_list + pair explode)
+    formulation at sf0.1, the streamed whole-stage-codegen join wins for
+    shingle-keyed postings (warm 1.3-1.5 s vs 1.7-2.1 s — high-
+    cardinality keys with small groups, where per-group array
+    materialization costs more than the join's sort; the postings form
+    stays in _bucket_pairs for the LSH band paths, where it measured
+    0.3-0.8× — see OPTIMIZATION_r12.md)."""
+    a, b = ends
+    left = e_a.select(
+        F.col(id_col).alias(a), F.col("__size").alias("__size_a"), "__shingle"
+    )
+    right = (e_a if e_b is None else e_b).select(
+        F.col(id_col).alias(b), F.col("__size").alias("__size_b"), "__shingle"
+    )
+    pairs = left.join(right, "__shingle")
+    if e_b is None:
+        pairs = pairs.filter(F.col(a) < F.col(b))
+    return pairs.groupBy(a, b, "__size_a", "__size_b").agg(
+        F.count(F.lit(1)).alias("__inter")
+    )
+
+
+def _jaccard_cut(
+    counts: DataFrame, ends: tuple[str, str], threshold: float
+) -> DataFrame:
+    """``(a, b, jaccard)`` of the pair counts at ``jaccard >= threshold``."""
+    a, b = ends
+    ja = counts.select(
+        a, b, _jaccard("__inter", "__size_a", "__size_b").alias("jaccard")
+    )
+    return ja.filter(F.col("jaccard") >= threshold)
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -868,46 +943,7 @@ def ngram_jaccard_pairs(
 
     Returns ``id_a, id_b, jaccard``.
     """
-    # Shingle-set sizes are computed ONCE at the document row (array size
-    # before the explode) and carried on the exploded entries, so the
-    # Jaccard denominator rides the pair-count aggregation's key — the
-    # former separate per-doc size aggregation AND the two post-count
-    # size joins are gone (3 fewer exchanges). Pair counting itself
-    # stays the inverted-index equi-join: measured against the
-    # postings-list (collect_list + pair explode) formulation at sf0.1,
-    # the streamed whole-stage-codegen join wins for shingle-keyed
-    # postings (warm 1.3-1.5 s vs 1.7-2.1 s — high-cardinality keys with
-    # small groups, where per-group array materialization costs more
-    # than the join's sort; the postings form stays in _bucket_pairs for
-    # the LSH band paths, where it measured 0.3-0.8× — see
-    # OPTIMIZATION_r12.md).
-    entries = _ensure_parallelism(df, id_col).select(
-        F.col(id_col),
-        F.array_distinct(_shingles(F.col(text_col), mode, shingle_k)).alias("__sha"),
-    ).select(
-        F.col(id_col),
-        F.size("__sha").alias("__size"),
-        F.explode("__sha").alias("__shingle"),
-    )
-
-    def _sized_pair_counts(e: DataFrame) -> DataFrame:
-        left = e.select(
-            F.col(id_col).alias("id_a"),
-            F.col("__size").alias("__size_a"),
-            "__shingle",
-        )
-        right = e.select(
-            F.col(id_col).alias("id_b"),
-            F.col("__size").alias("__size_b"),
-            "__shingle",
-        )
-        return (
-            left.join(right, "__shingle")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b", "__size_a", "__size_b")
-            .agg(F.count(F.lit(1)).alias("__inter"))
-        )
-
+    entries = _shingle_postings(df, id_col, text_col, mode, shingle_k)
     if max_doc_freq is not None and prefix_filter:
         # the two prune paths are structured differently (postings-window
         # cap vs prefix candidate join) and no caller composes them;
@@ -918,26 +954,8 @@ def ngram_jaccard_pairs(
             "prefix pruning, not both"
         )
     if max_doc_freq is not None:
-        # stop-shingle mode: the document-frequency cap is a count-over-
-        # window keyed on the shingle (r13 — the former grouped
-        # collect_list materialized a stop-shingle's full unbounded
-        # posting array in one aggregation row before the size filter
-        # dropped it; the window buffer spills instead), and sizes are
-        # re-counted over the FILTERED shingle sets (the filtered-
-        # Jaccard definition) — both consumers read the persisted
-        # filtered entries.
-        from pyspark.sql import Window as W
-
-        wdf = F.count(F.lit(1)).over(W.partitionBy("__shingle"))
-        sh_f = scoped_persist(
-            entries.select(F.col(id_col), "__shingle")
-            .withColumn("__df", wdf)
-            .filter(F.col("__df") <= max_doc_freq)
-            .drop("__df")
-        )
-        sizes = sh_f.groupBy(id_col).agg(F.count(F.lit(1)).alias("__size"))
-        sized = sh_f.join(sizes, id_col)
-        ja = _sized_pair_counts(sized)
+        sized, _ = _stop_shingle_cap(entries, id_col, max_doc_freq)
+        ja = _shingle_pair_counts(sized, id_col)
     elif prefix_filter:
         from pyspark.sql import Window as W
 
@@ -957,7 +975,7 @@ def ngram_jaccard_pairs(
             F.col("__rk") <= prefix_len
         )
         cand = scoped_persist(
-            _sized_pair_counts(prefix).select("id_a", "id_b").distinct()
+            _shingle_pair_counts(prefix, id_col).select("id_a", "id_b").distinct()
         )
         cand_ids = (
             cand.select(F.col("id_a").alias(id_col))
@@ -965,20 +983,12 @@ def ngram_jaccard_pairs(
             .distinct()
         )
         sh_cand = entries.join(cand_ids, id_col, "left_semi")
-        ja = _sized_pair_counts(sh_cand).join(cand, ["id_a", "id_b"], "inner")
+        ja = _shingle_pair_counts(sh_cand, id_col).join(
+            cand, ["id_a", "id_b"], "inner"
+        )
     else:
-        ja = _sized_pair_counts(entries)
-    ja = ja.select(
-        "id_a",
-        "id_b",
-        (
-            F.col("__inter").cast("double")
-            / (F.col("__size_a") + F.col("__size_b") - F.col("__inter")).cast(
-                "double"
-            )
-        ).alias("jaccard"),
-    )
-    return ja.filter(F.col("jaccard") >= threshold)
+        ja = _shingle_pair_counts(entries, id_col)
+    return _jaccard_cut(ja, ("id_a", "id_b"), threshold)
 
 
 def embedding_near_dup(
@@ -1045,7 +1055,7 @@ def jaccard_matches_between(
     crawl increment is deduplicated against the historical index without
     ever re-pairing the historical corpus with itself.
 
-    Same inverted-index formulation as ``ngram_jaccard_pairs`` (postings
+    Same inverted-index stages as ``ngram_jaccard_pairs`` (postings
     join keyed on the shingle, exact int64 intersection counts, one float
     division), but the postings join is new×old instead of a self-join:
     candidate volume scales with the increment, not the corpus. At 100 TB
@@ -1057,87 +1067,15 @@ def jaccard_matches_between(
 
     Returns ``new_id, old_id, jaccard`` (``jaccard >= threshold``).
     """
-    # Same carried-sizes move as ngram_jaccard_pairs, two-sided: shingle-
-    # set sizes are computed at the document row and ride the exploded
-    # entries into the pair-count aggregation's key, so the former
-    # per-side size aggregations and both post-count size joins are gone.
-    # The postings join stays the new×old equi-join on the shingle (the
-    # streamed-join-vs-collect_list measurement in ngram_jaccard_pairs
-    # applies unchanged here).
-    sides = []
-    for frame, alias in ((new_df, "new_id"), (old_df, "old_id")):
-        sides.append(
-            _ensure_parallelism(frame, id_col)
-            .select(
-                F.col(id_col).alias(alias),
-                F.array_distinct(
-                    _shingles(F.col(text_col), mode, shingle_k)
-                ).alias("__sha"),
-            )
-            .select(
-                F.col(alias),
-                F.size("__sha").alias("__sz"),
-                F.explode("__sha").alias("__shingle"),
-            )
-        )
-    sh_new, sh_old = sides
-    if max_doc_freq is not None:
-        # stop-shingle cap measured over the UNION of both sides (the
-        # symmetric filtered-Jaccard definition), applied as a count-
-        # over-window on the shingle key (r13 — the former grouped
-        # collect_lists materialized a stop-shingle's full unbounded
-        # posting arrays before the size filter; the window buffer
-        # spills instead); per-side sizes re-counted over the filtered
-        # sets. Both consumers read the persisted filtered union.
-        from pyspark.sql import Window as W
-
-        u = sh_new.select(
-            "__shingle", F.col("new_id").alias("__id"), F.lit(0).alias("__side")
-        ).unionAll(
-            sh_old.select(
-                "__shingle", F.col("old_id").alias("__id"), F.lit(1).alias("__side")
-            )
-        )
-        wdf = F.count(F.lit(1)).over(W.partitionBy("__shingle"))
-        filt = scoped_persist(
-            u.withColumn("__df", wdf)
-            .filter(F.col("__df") <= max_doc_freq)
-            .drop("__df")
-        )
-        sh_new = filt.filter(F.col("__side") == 0).select(
-            "__shingle", F.col("__id").alias("new_id")
-        )
-        sh_old = filt.filter(F.col("__side") == 1).select(
-            "__shingle", F.col("__id").alias("old_id")
-        )
-        sizes_new = sh_new.groupBy("new_id").agg(
-            F.count(F.lit(1)).alias("__sz_n")
-        )
-        sizes_old = sh_old.groupBy("old_id").agg(
-            F.count(F.lit(1)).alias("__sz_o")
-        )
-        sh_new = sh_new.join(sizes_new, "new_id").withColumnRenamed(
-            "__sz_n", "__sz"
-        )
-        sh_old = sh_old.join(sizes_old, "old_id").withColumnRenamed(
-            "__sz_o", "__sz"
-        )
-    ja = (
-        sh_new.withColumnRenamed("__sz", "__size_n")
-        .join(sh_old.withColumnRenamed("__sz", "__size_o"), "__shingle")
-        .groupBy("new_id", "old_id", "__size_n", "__size_o")
-        .agg(F.count(F.lit(1)).alias("__inter"))
+    e_new, e_old = (
+        _shingle_postings(frame, id_col, text_col, mode, shingle_k)
+        for frame in (new_df, old_df)
     )
-    return ja.select(
-        "new_id",
-        "old_id",
-        (
-            F.col("__inter").cast("double")
-            / (
-                F.col("__size_n") + F.col("__size_o") - F.col("__inter")
-            ).cast("double")
-        ).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
+    if max_doc_freq is not None:
+        e_new, e_old = _stop_shingle_cap(e_new, id_col, max_doc_freq, e_old)
+    ends = ("new_id", "old_id")
+    counts = _shingle_pair_counts(e_new, id_col, e_old, ends)
+    return _jaccard_cut(counts, ends, threshold)
 
 
 def _gram_sites(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:

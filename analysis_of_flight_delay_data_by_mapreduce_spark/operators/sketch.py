@@ -644,12 +644,18 @@ def _median_mad(
 
 def _values(df: DataFrame, value_col: str, group_col: str | None) -> DataFrame:
     """The selectors' value frame: non-NULL values (they have no rank)
-    as BIGINT ``__x``, next to the group column as ``__g`` when there is
-    one. NULL group keys fall out at the first equi-join on ``__g``.
+    as BIGINT ``__x``, next to the group column wrapped as the struct
+    ``__g`` when there is one. The struct is never NULL, so a NULL group
+    key (``__g.k`` NULL) meets its own group at every equi-join on
+    ``__g``, as it does in ``groupBy``; a NULL-safe (``<=>``) join would
+    key on ``coalesce``/``isnull`` expressions that no upstream
+    partitioning satisfies, an extra Exchange per join side.
     Not persisted here: the quantile selectors scan it twice and the
     MAD selectors three times, so the caller persists ``df`` when it is
     not cheap to re-read."""
-    group = [] if group_col is None else [F.col(group_col).alias("__g")]
+    group = []
+    if group_col is not None:
+        group = [F.struct(F.col(group_col).alias("k")).alias("__g")]
     return df.filter(F.col(value_col).isNotNull()).select(
         *group, F.col(value_col).cast("bigint").alias("__x")
     )
@@ -682,11 +688,11 @@ def exact_quantiles_by_group(
 
     Output: ``(group_col, p, n_rows, exact_value)`` — the exact rank-th
     order statistic within each group (same integer rank convention).
-    Groups are whatever non-NULL keys appear."""
+    Groups are whatever keys appear, NULL included."""
     return _exact_quantiles(
         _values(df, value_col, group_col), permille, ["__g"], bracket_limit
     ).select(
-        F.col("__g").alias(group_col),
+        F.col("__g.k").alias(group_col),
         "p",
         F.col("__n").alias("n_rows"),
         "exact_value",
@@ -717,7 +723,7 @@ def median_mad_by_group(
     by the caller, as for the ungrouped selector."""
     return _median_mad(
         _values(df, value_col, group_col), ["__g"], bracket_limit
-    ).withColumnRenamed("__g", group_col)
+    ).select(F.col("__g.k").alias(group_col), "n_rows", "median", "mad")
 
 
 def qsketch_quantiles(sketch: DataFrame, permille: list[int]) -> DataFrame:

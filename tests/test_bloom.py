@@ -1,7 +1,6 @@
 """Runtime Bloom-filter pruning (operators.bloom): zero false negatives
 by construction, bounded false-positive rate, exact-result equality of
-the pruned semi-join, twin/JVM agreement for the portable md5 variant,
-and parameter validation."""
+the pruned semi-join, and parameter validation."""
 
 from __future__ import annotations
 
@@ -9,33 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from analysis_of_flight_delay_data_by_mapreduce_spark.operators.bloom import (
-    bloom_build,
     bloom_build_spark,
-    bloom_might_contain,
     bloom_params,
     bloom_prune,
 )
-
-
-def test_md5_twin_matches_jvm_predicate(spark):
-    """The python-built (engine-independent) filter and the Catalyst md5
-    predicate agree bit-for-bit: every inserted key passes, and the
-    false-positive rate on 15k disjoint keys stays under 1% (expected
-    ~6e-5 at 16 bits/key, k=7 — 1% means a broken probe)."""
-    keys = list(range(0, 3000, 3))
-    m, k = bloom_params(len(keys))
-    words = bloom_build(keys, m, k)
-    df = spark.range(0, 18000).withColumn(
-        "hit", bloom_might_contain(F.col("id"), words, m, k)
-    )
-    agg = df.groupBy(((F.col("id") % 3) == 0) & (F.col("id") < 3000)).agg(
-        F.sum(F.col("hit").cast("int")).alias("hits"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    got = {r[0]: (r.hits, r.n) for r in agg.collect()}
-    assert got[True] == (1000, 1000)  # no false negatives, ever
-    fp, n = got[False]
-    assert fp / n < 0.01
 
 
 def test_spark_built_filter_no_false_negatives_and_fp_bound(spark):
@@ -86,13 +62,16 @@ def test_bloom_prune_filters_before_any_exchange(spark):
     assert "BroadcastHashJoin" not in txt  # models non-broadcastable dim
 
 
-def test_parameter_validation():
+def test_parameter_validation(spark):
+    dim = spark.range(0, 10).withColumnRenamed("id", "key")
     with pytest.raises(ValueError):
-        bloom_build([1], 100)  # not a power of two
+        bloom_build_spark(dim, "key", 100)  # not a power of two
     with pytest.raises(ValueError):
-        bloom_build([1], 128, k=8)  # overflow bound
+        bloom_build_spark(dim, "key", 128, k=8)  # overflow bound
     with pytest.raises(ValueError):
-        bloom_might_contain(F.lit(1), [0, 0], 64)  # words/m mismatch
+        bloom_prune(dim, "key", [0, 0], 64)  # words/m mismatch
+    with pytest.raises(ValueError):
+        bloom_prune(dim, "key", [0], 64, k=8)  # overflow bound
     m, k = bloom_params(1000)
     assert m == 16384 and k == 7
 

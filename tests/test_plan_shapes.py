@@ -464,6 +464,21 @@ def test_quantile_selectors_build_without_spark_jobs(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
+def test_repeated_builds_do_not_re_persist(spark):
+    """A rebuild of the same query finds its frames already cached
+    (canonical-plan lookup) and neither persists nor registers them
+    again: the scoped-cache registry stays the size of one build."""
+    from analysis_of_flight_delay_data_by_mapreduce_spark.operators import cache
+
+    build = synthetic.QUERIES["events_quantiles_by_type"]
+    build(spark, SF_DIR)
+    live = len(cache._LIVE)
+    assert live > 0
+    build(spark, SF_DIR)
+    build(spark, SF_DIR)
+    assert len(cache._LIVE) == live
+
+
 def test_bpe_pair_counts_aggregates_tokens_before_merges(spark):
     """r12: the BPE merge replace-chain runs once per DISTINCT token —
     the plan must show the token-count aggregation BELOW the

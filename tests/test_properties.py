@@ -354,6 +354,77 @@ def test_jaccard_matches_between_matches_model(spark, new_texts, old_texts):
         assert math.isclose(got[k], v, rel_tol=1e-12)
 
 
+_HOT = "a b c a b c"
+
+
+@settings(max_examples=4, deadline=None)
+@given(
+    st.lists(st.text(alphabet="ab c", min_size=0, max_size=24), max_size=4),
+    st.lists(st.text(alphabet="ab c", min_size=0, max_size=24), max_size=4),
+)
+def test_between_matchers_equal_cross_pairs_of_self_operators(
+    spark, new_texts, old_texts
+):
+    """Self / between duality: on corpora A (new) and B (old) with
+    disjoint ids, each new × history matcher returns exactly the A × B
+    pairs of its within-corpus operator on A ∪ B, same parameters, with
+    and without its cap. One A and two B copies of a hot text make both
+    caps bite: its shingles sit in 3 documents (``max_doc_freq=2``) and
+    its band buckets hold 3 (``max_bucket=2``), so its pairs appear only
+    uncapped."""
+    from analysis_of_flight_delay_data_by_mapreduce_spark.operators.dedup import (
+        jaccard_matches_between,
+        minhash_lsh_dedup,
+        minhash_matches_between,
+        ngram_jaccard_pairs,
+    )
+
+    new_rows = list(enumerate([*new_texts, _HOT]))
+    old_rows = [(100 + i, t) for i, t in enumerate([*old_texts, _HOT, _HOT])]
+    new_df = spark.createDataFrame(new_rows, "doc_id long, text string")
+    old_df = spark.createDataFrame(old_rows, "doc_id long, text string")
+    both = new_df.unionAll(old_df)
+    new_ids = {i for i, _ in new_rows}
+    hot = (len(new_rows) - 1, old_rows[-1][0])
+
+    def cross(rows):
+        """Self pairs ``(id_a, id_b, *vals)`` that join A to B, as
+        ``{(new, old): vals}``."""
+        out = {}
+        for a, b, *vals in rows:
+            if (a in new_ids) != (b in new_ids):
+                out[(a, b) if a in new_ids else (b, a)] = tuple(vals)
+        return out
+
+    jac = dict(shingle_k=3, mode="word", threshold=0.3)
+    lsh = dict(
+        num_hashes=16, bands=8, shingle_k=3, mode="word", verify_jaccard=0.3
+    )
+    for cap in (None, 2):
+        between = {
+            (r.new_id, r.old_id): (r.jaccard,)
+            for r in jaccard_matches_between(
+                new_df, old_df, "doc_id", "text", max_doc_freq=cap, **jac
+            ).collect()
+        }
+        within = ngram_jaccard_pairs(
+            both, "doc_id", "text", max_doc_freq=cap, **jac
+        ).collect()
+        assert between == cross(within)
+        assert (hot in between) == (cap is None)
+        between = {
+            (r.new_id, r.old_id): ()
+            for r in minhash_matches_between(
+                new_df, old_df, "doc_id", "text", max_bucket=cap, **lsh
+            ).collect()
+        }
+        within = minhash_lsh_dedup(
+            both, "doc_id", "text", max_bucket=cap, **lsh
+        ).collect()
+        assert between == cross(within)
+        assert (hot in between) == (cap is None)
+
+
 @settings(max_examples=10, deadline=None)
 @given(st.lists(st.integers(0, 2**62), min_size=1, max_size=40))
 def test_qsketch_bucket_matches_python_model_high_octaves(spark, xs):

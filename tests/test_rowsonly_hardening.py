@@ -752,6 +752,34 @@ def test_median_mad_by_group_matches_per_group_sort(spark):
     assert got["b"] == (1, 5, 0)  # single-row group
 
 
+def test_grouped_selectors_keep_null_group_keys(spark):
+    """A NULL group key is a group, as in ``groupBy``: both grouped
+    selectors return it next to the non-NULL group (every join on the
+    group key is NULL-safe)."""
+    from analysis_of_flight_delay_data_by_mapreduce_spark.operators.sketch import (
+        exact_quantiles_by_group,
+        median_mad_by_group,
+    )
+
+    df = spark.createDataFrame(
+        [("a", 1), ("a", 5), (None, 3), (None, 7)], "g string, x long"
+    )
+    assert {r.g for r in df.groupBy("g").count().collect()} == {"a", None}
+    got = {
+        (r.g, r.p): (r.n_rows, r.exact_value)
+        for r in exact_quantiles_by_group(df, "g", "x", [500, 1000]).collect()
+    }
+    assert got == {
+        ("a", 500): (2, 1), ("a", 1000): (2, 5),
+        (None, 500): (2, 3), (None, 1000): (2, 7),
+    }
+    got = {
+        r.g: (r.n_rows, r.median, r.mad)
+        for r in median_mad_by_group(df, "g", "x").collect()
+    }
+    assert got == {"a": (2, 1, 0), None: (2, 3, 0)}
+
+
 def test_median_mad_two_pass_matches_full_sort_random(spark):
     """Randomized cross-check of the grid-derived MAD bracket: 20 seeded
     draws from mixed distributions (uniform, log-uniform octave spread,
