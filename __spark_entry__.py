@@ -25,23 +25,46 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # The driver records CORRECTNESS rows for only the first 50 registered
 # entries; registry order is ours to choose. The window leads with the
-# faces whose Spark code changed last — every dedup and corpus face,
-# whose near-duplicate stages now run once for the within-corpus and
-# the new x history shapes; the Bloom semi-join face; the two grouped
-# exact selectors, whose group-key joins became NULL-safe — then the
-# rest of the exact-selector tier, the faces that train or probe
-# through the shared IVF/PQ sample and probe helpers (among them
-# ann_ivfpq_upsert_check, the only face that writes through
-# upsert_partitions), the shared interval frame and one-table LSH, the
-# only face that writes through write_orc, the only faces of three
-# operators that were cut down to one formulation (pagerank_integer,
-# read_jsonl, ratio_threshold), and the first twelve faces of the codec
-# tier, which crosses the Python-worker boundary through one shared
-# mapInArrow helper. Every rotated-out query is still re-verified by
-# the full local check_oracle sweep and the pytest oracle replicas.
+# faces whose code changed last — all 21 codec faces, which cross the
+# Python-worker boundary through one shared mapInArrow helper and whose
+# GIF and JPEG containers are each parsed by one walk and written by
+# one writer; the three faces that round a double per row through
+# functions._round_half_up (q1_delay, q2_late, tpch_q1_pricing_summary)
+# — then every dedup and corpus face, whose near-duplicate stages run
+# once for the within-corpus and the new x history shapes; the Bloom
+# semi-join face; the exact-selector tier, whose grouped key joins are
+# NULL-safe; and the first face that probes through the shared IVF/PQ
+# helpers. Every rotated-out query is still re-verified by the full
+# local check_oracle sweep and the pytest oracle replicas.
 _CHECK_FIRST = [
-    # --- dedup.py: the 14 within-corpus and 3 new x history faces, whose
-    # near-duplicate stages are written once for both shapes ---
+    # --- codec tier: the one mapInArrow boundary of operators/multimodal.py,
+    # one GIF block walk and writer, one JPEG marker walk ---
+    "multimodal_stats",
+    "multimodal_bmp_decode_check",
+    "multimodal_png_decode_check",
+    "multimodal_gif_decode_check",
+    "multimodal_jpeg_decode_check",
+    "multimodal_jpeg_progressive_check",
+    "multimodal_mp4_meta_check",
+    "multimodal_audio_segments_check",
+    "multimodal_keyframes_check",
+    "multimodal_mp4_frame_sample_check",
+    "multimodal_mp4_sample_table_check",
+    "multimodal_video_pixels_check",
+    "multimodal_h264_meta_check",
+    "multimodal_h264_keyframes_check",
+    "multimodal_h264_pts_check",
+    "multimodal_h264_annexb_check",
+    "multimodal_resize_check",
+    "multimodal_video_frame_check",
+    "multimodal_audio_features",
+    "multimodal_frame_sample",
+    "multimodal_features_ann",
+    # --- per-row half-up rounding without BigDecimal ---
+    "q1_delay",
+    "q2_late",
+    "tpch_q1_pricing_summary",
+    # --- dedup.py: the 14 within-corpus and 3 new x history faces ---
     "dedup_ngram_jaccard",
     "dedup_ngram_jaccard_ppjoin",
     "dedup_components",
@@ -59,12 +82,10 @@ _CHECK_FIRST = [
     "dedup_incremental",
     "dedup_incremental_minhash_check",
     "dedup_semantic_incremental",
-    # --- bloom.py after the md5 path's removal; the two grouped exact
-    # selectors, whose key joins are NULL-safe (sketch.py) ---
+    # --- bloom.py; the exact-selector tier and the HDR grid ---
     "orders_bloom_semijoin",
     "events_quantiles_by_type",
     "events_mad_outliers_by_type",
-    # --- the rest of the exact-selector tier and the HDR grid ---
     "events_exact_quantiles_sketch",
     "events_value_mad_outliers",
     "docs_quantile_sketch",
@@ -72,46 +93,18 @@ _CHECK_FIRST = [
     "events_quantile_merge_check",
     # --- shared IVF/PQ sample and probe helpers of operators/similarity.py ---
     "ann_ivf_probe_topk",
+    # --- overflow (slots 51+; designated for the next window) ---
     "ann_ivfpq_topk",
     "ann_ivf_recall_check",
     "ann_cosine_topk_ivf",
     "embedding_pq_codes",
     "ann_ivfpq_upsert_check",
-    # --- one shared promo frame for both interval-join faces; one-table
-    # sign-bit LSH runs through the multi-table pandas UDF ---
     "events_interval_join",
     "events_interval_join_binned",
     "ann_cosine_topk_lsh",
-    # --- the only face that reaches the ORC sink of sources/sinks.py ---
     "orders_orc_roundtrip_check",
-    # --- single-formulation operators with no other witnessed face ---
     "supplier_authority_pagerank",
     "events_jsonl_ingest_check",
-    "q2_late",
-    # --- codec tier: faces that cross the one mapInArrow boundary of
-    # operators/multimodal.py (_map_arrow); the rest lead the overflow ---
-    "multimodal_stats",
-    "multimodal_bmp_decode_check",
-    "multimodal_png_decode_check",
-    "multimodal_gif_decode_check",
-    "multimodal_jpeg_decode_check",
-    "multimodal_jpeg_progressive_check",
-    "multimodal_mp4_meta_check",
-    "multimodal_audio_segments_check",
-    "multimodal_keyframes_check",
-    "multimodal_mp4_frame_sample_check",
-    "multimodal_mp4_sample_table_check",
-    "multimodal_video_pixels_check",
-    # --- overflow (slots 51+; designated for the next window) ---
-    "multimodal_h264_meta_check",
-    "multimodal_h264_keyframes_check",
-    "multimodal_h264_pts_check",
-    "multimodal_h264_annexb_check",
-    "multimodal_resize_check",
-    "multimodal_video_frame_check",
-    "multimodal_audio_features",
-    "multimodal_frame_sample",
-    "multimodal_features_ann",
     "embedding_label_pca",
     "user_spend_quartiles",
     "events_value_quantile_check",
@@ -125,7 +118,6 @@ _CHECK_FIRST = [
     "orders_join_size_cms_check",
     "pivot_status_revenue",
     "purchase_age_salted_join",
-    "q1_delay",
     "q3_wordcount",
     "q4_repeat_visits",
     "q5_dup_dates",

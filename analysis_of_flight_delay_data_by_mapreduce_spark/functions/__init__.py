@@ -37,7 +37,23 @@ def weighted_rounded(weight: Column | str, value: Column | str) -> Column:
     """
     w = F.col(weight) if isinstance(weight, str) else weight
     v = F.col(value) if isinstance(value, str) else value
-    return F.round(w * v, 0).cast("long")
+    return _round_half_up(w * v)
+
+
+def _round_half_up(x: Column) -> Column:
+    """``F.round(x, 0).cast("long")`` without a ``BigDecimal`` per row.
+
+    On a double, ``F.round`` rounds ``BigDecimal(Double.toString(x))``
+    HALF_UP (away from zero), which is exact but was a third of the CPU of
+    ``q1_delay``. ``rint`` rounds ties to even instead, and ``x - rint(x)``
+    is exact, so a tie is seen exactly and moved away from zero. The long
+    is the same for NULL and every finite double, and the cast is the
+    same, so a value outside the long range raises as before.
+    ``floor(abs(x) + 0.5)`` is not exact: the sum rounds
+    0.49999999999999994 up to 1.
+    """
+    r = F.rint(x)
+    return F.when(F.abs(x - r) == 0.5, x + F.signum(x) * 0.5).otherwise(r).cast("long")
 
 
 def safe_div(num: Column, den: Column) -> Column:

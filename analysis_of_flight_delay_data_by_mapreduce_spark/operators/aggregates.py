@@ -26,10 +26,9 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import safe_div, weighted_rounded, word_tokens
+from ..functions import _round_half_up, safe_div, weighted_rounded, word_tokens
 
 __all__ = [
-    "weighted_mean_by",
     "pivoted_weighted_mean",
     "ratio_threshold",
     "token_counts",
@@ -40,23 +39,6 @@ __all__ = [
 
 def _cols(keys: Sequence[str | Column]) -> list[Column]:
     return [F.col(k) if isinstance(k, str) else k for k in keys]
-
-
-def weighted_mean_by(
-    df: DataFrame,
-    keys: Sequence[str | Column],
-    weight: str | Column,
-    value: str | Column,
-    out: str = "wmean",
-) -> DataFrame:
-    """Flight-count-weighted mean with the reference's round-then-sum
-    semantics: ``SUM(ROUND(w*v)) / SUM(w)`` per group (SURVEY §2.3 A8,
-    ``Program/Delay.java:190``). NULL (not NaN/error) when the group weight
-    is zero (§2.7.3)."""
-    w = F.col(weight) if isinstance(weight, str) else weight
-    num = F.sum(weighted_rounded(w, value))
-    den = F.sum(F.round(w, 0).cast("long"))
-    return df.groupBy(*_cols(keys)).agg(safe_div(num, den).alias(out))
 
 
 def pivoted_weighted_mean(
@@ -85,7 +67,7 @@ def pivoted_weighted_mean(
     fl = F.col(flag) if isinstance(flag, str) else flag
     hit = fl == match
     wd = weighted_rounded(w, value)
-    wl = F.round(w, 0).cast("long")
+    wl = _round_half_up(w)
     zero = F.lit(0).cast("long")
     agg = df.groupBy(*_cols(keys)).agg(
         F.sum(F.when(hit, wd).otherwise(zero)).alias("__m_sum"),

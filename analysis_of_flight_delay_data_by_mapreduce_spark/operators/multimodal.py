@@ -10,12 +10,12 @@ sizing — is real and tested. Codecs (VERDICT r7 item 5):
   bytes), COMPRESSED non-interlaced 8-bit RGB/RGBA PNG (``encode_png``
   / ``decode_png`` via ``zlib`` + ``struct`` — chunk CRC validation,
   zlib inflate, per-scanline unfilter of all five PNG filter types
-  incl. Paeth), LZW-COMPRESSED single-frame palettized GIF
-  (``encode_gif`` / ``decode_gif`` — a complete GIF-variant LZW coder,
-  variable 3..12-bit codes, deferred clear), baseline sequential JPEG
-  (``operators.jpeg`` — full JFIF marker/DQT/DHT parse, Huffman
-  entropy decode, dequant + vectorized IDCT, 4:4:4/4:2:2/4:2:0,
-  r10), PCM WAV (``encode_wav`` / ``decode_wav`` via the stdlib
+  incl. Paeth), LZW-COMPRESSED palettized GIF, single-frame and
+  animated (``encode_gif`` / ``decode_gif`` / ``decode_gif_frames`` —
+  a complete GIF-variant LZW coder, variable 3..12-bit codes, deferred
+  clear), sequential and progressive JPEG (``operators.jpeg`` — one
+  JFIF marker walk with DQT/DHT parse, Huffman entropy decode, dequant
+  + vectorized IDCT, 4:4:4/4:2:2/4:2:0, r10), PCM WAV (``encode_wav`` / ``decode_wav`` via the stdlib
   ``wave`` module; ``decode_wav_pcm`` + ``audio_features`` compute
   exact-integer signal features from the decoded samples), and
   ISO-BMFF (MP4) container METADATA and SAMPLE TABLES
@@ -59,7 +59,7 @@ import hashlib
 import struct
 import weakref
 import zlib
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -569,14 +569,15 @@ def decode_png(payload: bytes) -> tuple[int, int, int, bytes]:
 
 
 # ---------------------------------------------------------------------------
-# REAL GIF codec (r9): single-frame palettized GIF87a/89a on nothing but
-# stdlib struct — including a complete GIF-variant LZW coder (variable
-# code width 3..12 bits, LSB-first packing, clear/EOI codes, deferred
-# clear when the table fills at 4096). The decoder validates the header,
-# walks extension blocks, rejects interlace, bounds the LZW output to
-# the declared geometry (bomb-safe), and maps indices through the
-# palette so the digest is over RGB CONTENT — palette-order/LZW-choice
-# invariant, same contract as the BMP/PNG decoders.
+# REAL GIF codec (r9): palettized GIF87a/89a, single-frame and animated,
+# on stdlib struct — a complete GIF-variant LZW coder (variable code width
+# 3..12 bits, LSB-first packing, clear/EOI codes, deferred clear when the
+# table fills at 4096). One screen writer and one image-block writer serve
+# both encoders; one block walk (``_gif_images``) serves both decoders: it
+# validates the header, skips extensions, rejects interlace, bounds the
+# LZW output to the declared geometry (bomb-safe), and maps indices
+# through the palette so the digest is over RGB CONTENT — palette-order/
+# LZW-choice invariant, same contract as the BMP/PNG decoders.
 # ---------------------------------------------------------------------------
 
 _GIF_SIGS = (b"GIF87a", b"GIF89a")
@@ -620,6 +621,10 @@ def _gif_lzw_encode(indices: bytes, mcs: int) -> bytes:
         w_str = bytes([k])
     if w_str:
         emit(table[w_str], width)
+        # the decoder inserts an entry on reading this last code and
+        # widens at a full table before it reads EOI (GIF89a Appendix F)
+        if next_code == 1 << width and width < 12:
+            width += 1
     emit(eoi, width)
     if acc_bits:
         out.append(acc & 0xFF)
@@ -676,6 +681,42 @@ def _gif_lzw_decode(data: bytes, mcs: int, max_pixels: int) -> bytes:
     return bytes(out)
 
 
+def _gif_screen(width: int, height: int, palette: bytes) -> tuple[bytearray, int, int]:
+    """Validate ``palette`` (flat RGB, 1..256 entries) and write the
+    GIF89a signature, logical screen descriptor and global color table
+    (padded to a power of two) → ``(out, n_colors, lzw_min_code_size)``."""
+    n_colors = len(palette) // 3
+    if len(palette) % 3 or not 0 < n_colors <= 256:
+        raise ValueError("gif: palette must be 1..256 flat RGB entries")
+    bits = max(1, (max(n_colors, 2) - 1).bit_length())
+    out = bytearray(b"GIF89a")
+    out += struct.pack(
+        "<HHBBB", width, height, 0x80 | ((bits - 1) << 4) | (bits - 1), 0, 0
+    )
+    out += palette + bytes(((1 << bits) * 3) - len(palette))
+    return out, n_colors, max(2, bits)
+
+
+def _gif_write_image(
+    out: bytearray, width: int, height: int, indices: bytes, n_colors: int, mcs: int
+) -> None:
+    """Append one full-frame image block: image descriptor, LZW min code
+    size, the LZW-compressed index stream in ≤255-byte sub-blocks and
+    the block terminator. Every index must reference the palette."""
+    if len(indices) != width * height:
+        raise ValueError("gif: index count != width*height")
+    if indices and max(indices) >= n_colors:
+        raise ValueError("gif: index out of palette range")
+    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, 0)
+    out.append(mcs)
+    lzw = _gif_lzw_encode(indices, mcs)
+    for i in range(0, len(lzw), 255):
+        block = lzw[i : i + 255]
+        out.append(len(block))
+        out += block
+    out.append(0)
+
+
 def encode_gif(
     width: int, height: int, palette: bytes, indices: bytes
 ) -> bytes:
@@ -684,33 +725,18 @@ def encode_gif(
     descriptor, LZW-compressed index stream in ≤255-byte sub-blocks.
     ``palette`` is flat RGB bytes (≤256 entries); every index must
     reference it."""
-    n_colors = len(palette) // 3
-    if len(palette) % 3 or not 0 < n_colors <= 256:
-        raise ValueError("gif: palette must be 1..256 flat RGB entries")
-    if len(indices) != width * height:
-        raise ValueError("gif: index count != width*height")
-    if indices and max(indices) >= n_colors:
-        raise ValueError("gif: index out of palette range")
-    bits = max(1, (max(n_colors, 2) - 1).bit_length())
-    gct = palette + bytes(((1 << bits) * 3) - len(palette))
-    mcs = max(2, bits)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", width, height, 0x80 | ((bits - 1) << 4) | (bits - 1), 0, 0)
-    out += gct
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, 0)
-    out.append(mcs)
-    lzw = _gif_lzw_encode(indices, mcs)
-    for i in range(0, len(lzw), 255):
-        block = lzw[i : i + 255]
-        out.append(len(block))
-        out += block
-    out += b"\x00\x3b"
+    out, n_colors, mcs = _gif_screen(width, height, palette)
+    _gif_write_image(out, width, height, indices, n_colors, mcs)
+    out.append(0x3B)
     return bytes(out)
 
 
-def _gif_header(payload: bytes) -> tuple[bytes | None, int]:
-    """Validate signature + logical screen descriptor; return
-    ``(global_color_table_or_None, position_after_header)``."""
+def _gif_images(payload: bytes) -> Iterator[tuple[int, int, bytes]]:
+    """The one walk over a GIF's blocks: validate the signature and
+    logical screen descriptor, then yield each image block as
+    ``(width, height, rgb_pixels)``, decoded lazily in stream order.
+    Extensions are skipped, the trailer ends the walk, any other marker
+    raises, and a stream without an image block raises."""
     if payload[:6] not in _GIF_SIGS:
         raise ValueError("not a GIF payload (bad signature)")
     if len(payload) < 13:
@@ -724,7 +750,23 @@ def _gif_header(payload: bytes) -> tuple[bytes | None, int]:
         if len(gct) != n:
             raise ValueError("gif: truncated global color table")
         pos += n
-    return gct, pos
+    n_images = 0
+    while pos < len(payload):
+        marker = payload[pos]
+        pos += 1
+        if marker == 0x3B:  # trailer
+            break
+        if marker == 0x21:  # extension: label byte + sub-blocks
+            pos += 1
+            _, pos = _gif_sub_blocks(payload, pos)
+            continue
+        if marker != 0x2C:
+            raise ValueError(f"gif: unexpected block marker 0x{marker:02x}")
+        iw, ih, pixels, pos = _gif_image_block(payload, pos, gct)
+        n_images += 1
+        yield iw, ih, pixels
+    if not n_images:
+        raise ValueError("gif: no image block")
 
 
 def _gif_sub_blocks(payload: bytes, p: int) -> tuple[bytes, int]:
@@ -793,21 +835,7 @@ def decode_gif(payload: bytes) -> tuple[int, int, bytes]:
     color table (local over global). Extension blocks are walked and
     skipped; interlace, missing color tables, out-of-palette indices,
     and streams that don't match the declared geometry all raise."""
-    gct, pos = _gif_header(payload)
-    while pos < len(payload):
-        marker = payload[pos]
-        pos += 1
-        if marker == 0x3B:  # trailer before any image
-            break
-        if marker == 0x21:  # extension: label byte + sub-blocks
-            pos += 1
-            _, pos = _gif_sub_blocks(payload, pos)
-            continue
-        if marker != 0x2C:
-            raise ValueError(f"gif: unexpected block marker 0x{marker:02x}")
-        iw, ih, pixels, _pos = _gif_image_block(payload, pos, gct)
-        return iw, ih, pixels
-    raise ValueError("gif: no image block")
+    return next(_gif_images(payload))
 
 
 def decode_gif_frames(payload: bytes) -> tuple[int, int, list[bytes]]:
@@ -815,28 +843,14 @@ def decode_gif_frames(payload: bytes) -> tuple[int, int, list[bytes]]:
     ``(width, height, [rgb_pixels_per_frame])``. All frames must share
     the full logical-screen geometry (the full-frame subclass both
     encoders here emit); mixed geometries raise."""
-    gct, pos = _gif_header(payload)
     frames: list[bytes] = []
     w = h = None
-    while pos < len(payload):
-        marker = payload[pos]
-        pos += 1
-        if marker == 0x3B:
-            break
-        if marker == 0x21:
-            pos += 1
-            _, pos = _gif_sub_blocks(payload, pos)
-            continue
-        if marker != 0x2C:
-            raise ValueError(f"gif: unexpected block marker 0x{marker:02x}")
-        iw, ih, pixels, pos = _gif_image_block(payload, pos, gct)
+    for iw, ih, pixels in _gif_images(payload):
         if w is None:
             w, h = iw, ih
         elif (iw, ih) != (w, h):
             raise ValueError("gif: frames with mixed geometries")
         frames.append(pixels)
-    if not frames:
-        raise ValueError("gif: no image block")
     return w, h, frames
 
 
@@ -851,35 +865,14 @@ def encode_gif_animated(
     then per frame a graphics-control extension (``delay_cs``
     centiseconds) + full-frame image block with its own LZW stream —
     the real container shape a frame-sampling op has to walk."""
-    n_colors = len(palette) // 3
-    if len(palette) % 3 or not 0 < n_colors <= 256:
-        raise ValueError("gif: palette must be 1..256 flat RGB entries")
+    out, n_colors, mcs = _gif_screen(width, height, palette)
     if not frames:
         raise ValueError("gif: at least one frame")
-    bits = max(1, (max(n_colors, 2) - 1).bit_length())
-    gct = palette + bytes(((1 << bits) * 3) - len(palette))
-    mcs = max(2, bits)
-    out = bytearray(b"GIF89a")
-    out += struct.pack(
-        "<HHBBB", width, height, 0x80 | ((bits - 1) << 4) | (bits - 1), 0, 0
-    )
-    out += gct
     for indices in frames:
-        if len(indices) != width * height:
-            raise ValueError("gif: frame index count != width*height")
-        if indices and max(indices) >= n_colors:
-            raise ValueError("gif: index out of palette range")
         # graphics control extension: no disposal, no transparency
         out += b"\x21\xf9\x04\x00" + struct.pack("<H", delay_cs) + b"\x00\x00"
-        out += b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, 0)
-        out.append(mcs)
-        lzw = _gif_lzw_encode(indices, mcs)
-        for i in range(0, len(lzw), 255):
-            block = lzw[i : i + 255]
-            out.append(len(block))
-            out += block
-        out += b"\x00"
-    out += b"\x3b"
+        _gif_write_image(out, width, height, indices, n_colors, mcs)
+    out.append(0x3B)
     return bytes(out)
 
 
@@ -1214,6 +1207,24 @@ def attach_synthetic_progressive_jpeg(df: DataFrame, id_col: str) -> DataFrame:
     return _attach(df, id_col, "image", "image/jpeg", gen)
 
 
+def _gif_video(aid: int, n_frames: int, r: int) -> tuple[bytes, int, int, int]:
+    """The animated-GIF fixture row of asset ``aid``: ``n_frames`` full
+    frames at 4 cs/frame, dimensions keyed off the id, frame ``f``
+    showing content index ``c = f // r`` — the asset id in its first 8
+    nibble indices, ``c`` at index 8, then a gradient seeded by id and
+    ``c`` → ``(payload, width, height, duration_ms)``."""
+    w = 4 + aid % 9
+    h = 3 + aid % 5
+    frames = [
+        _id_nibbles(aid)
+        + bytes([c % 16])
+        + bytes((i * 5 + aid + c * 3) % 16 for i in range(9, w * h))
+        for c in (f // r for f in range(n_frames))
+    ]
+    payload = encode_gif_animated(w, h, GIF_FIXTURE_PALETTE, frames, delay_cs=4)
+    return payload, w, h, n_frames * 40
+
+
 def attach_synthetic_gif_video(df: DataFrame, id_col: str) -> DataFrame:
     """Fixture attach step with REAL video-like payloads: one animated
     GIF per row — ``3 + id % 4`` full frames at 4 cs/frame, dimensions
@@ -1223,20 +1234,9 @@ def attach_synthetic_gif_video(df: DataFrame, id_col: str) -> DataFrame:
     is the true container duration (frames × 40 ms), so a frame-sample
     face can be asserted against the metadata."""
 
-    def gen(aid):
-        w = 4 + aid % 9
-        h = 3 + aid % 5
-        n_frames = 3 + aid % 4
-        frames = [
-            _id_nibbles(aid)
-            + bytes([f])
-            + bytes((i * 5 + aid + f * 3) % 16 for i in range(9, w * h))
-            for f in range(n_frames)
-        ]
-        payload = encode_gif_animated(w, h, GIF_FIXTURE_PALETTE, frames, delay_cs=4)
-        return payload, w, h, n_frames * 40
-
-    return _attach(df, id_col, "video", "image/gif", gen)
+    return _attach(
+        df, id_col, "video", "image/gif", lambda aid: _gif_video(aid, 3 + aid % 4, 1)
+    )
 
 
 #: Output schema of select_keyframes.
@@ -1279,21 +1279,9 @@ def attach_synthetic_gif_video_repeats(df: DataFrame, id_col: str) -> DataFrame:
     ``ceil(F / r)`` of them. Same id-in-nibbles content convention as
     ``attach_synthetic_gif_video``."""
 
-    def gen(aid):
-        w = 4 + aid % 9
-        h = 3 + aid % 5
-        n_frames = 4 + aid % 5
-        r = 1 + aid % 3
-        frames = [
-            _id_nibbles(aid)
-            + bytes([(f // r) % 16])
-            + bytes((i * 5 + aid + (f // r) * 3) % 16 for i in range(9, w * h))
-            for f in range(n_frames)
-        ]
-        payload = encode_gif_animated(w, h, GIF_FIXTURE_PALETTE, frames, delay_cs=4)
-        return payload, w, h, n_frames * 40
-
-    return _attach(df, id_col, "video", "image/gif", gen)
+    return _attach(
+        df, id_col, "video", "image/gif", lambda aid: _gif_video(aid, 4 + aid % 5, 1 + aid % 3)
+    )
 
 
 def attach_synthetic_wav(df: DataFrame, id_col: str, rate: int = 8000) -> DataFrame:

@@ -44,7 +44,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import weighted_rounded, word_tokens, year_of_period
+from ..functions import _round_half_up, weighted_rounded, word_tokens, year_of_period
 from ..operators.aggregates import (
     duplicate_within,
     pivoted_weighted_mean,
@@ -190,7 +190,7 @@ def q2_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         src,
         keys=["l_suppkey", "l_year"],
         num=weighted_rounded(F.col("l_quantity"), late_rate),
-        den=F.round(F.col("l_quantity"), 0).cast("long"),
+        den=_round_half_up(F.col("l_quantity")),
         theta=0.5,
         out="late_ratio",
     )
@@ -3996,7 +3996,7 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
     )
-    c = lambda e: F.round(e, 0).cast("long")  # noqa: E731
+    c = _round_half_up
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         F.sum(c(F.col("l_quantity"))).alias("sum_qty"),
         F.sum(c(F.col("l_extendedprice") * F.lit(100.0))).alias("sum_base_cents"),

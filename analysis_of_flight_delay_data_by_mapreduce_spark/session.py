@@ -15,7 +15,13 @@ imports pyspark and py4j from the interpreter's installed packages instead.
 When they do not resolve without the archives, or the installed pyspark is
 not the version in ``pyspark.zip``, it keeps Spark's path and behaves like
 the stock daemon. The package ``__init__`` imports nothing, so pyspark is
-not loaded from the zip before the daemon fixes the path.
+not loaded from the zip before the daemon fixes the path. The package's
+parent directory goes on the workers' ``PYTHONPATH``
+(``spark.executorEnv.PYTHONPATH``, ahead of any path the caller passes
+there), so the daemon and the operators' row functions import in the
+workers whatever the driver's working directory; a driver that imported
+the package through ``sys.path`` alone otherwise failed every Python
+stage with ``No module named 'analysis_of_flight_delay_data_by_mapreduce_spark'``.
 
 DataFrame call-site capture is off
 (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
@@ -35,6 +41,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _local_driver_memory() -> str:
@@ -58,6 +65,12 @@ def get_spark(
     set here is safe in both modes.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    conf = dict(extra_conf or {})
+    worker_path = os.pathsep.join(
+        p
+        for p in (_PACKAGE_PARENT, conf.pop("spark.executorEnv.PYTHONPATH", ""))
+        if p
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .config(
@@ -80,6 +93,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python workers import pyspark from site-packages (module docstring).
         .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
         # No Python call-site capture per Column op (module docstring).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # DuckDB (the correctness oracle) treats timestamps as UTC-naive.
@@ -100,7 +114,7 @@ def get_spark(
         builder = builder.master(f"local[{cpus}]").config(
             "spark.driver.memory", _local_driver_memory()
         )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

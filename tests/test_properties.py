@@ -515,3 +515,43 @@ def test_pagerank_integer_matches_replica_on_random_graphs(
                 inm[v] += share
         r = {v: base + (D * inm[v]) // 100 for v in nodes}
     assert got == r
+
+
+def test_round_half_up_equals_spark_round(spark):
+    """``functions._round_half_up`` gives the long of
+    ``F.round(x, 0).cast("long")`` for NULL, for ties and their ulp
+    neighbours, near the 2^52 / 2^53 boundaries, for random doubles of
+    every magnitude in the long range and for random bit patterns; and it
+    raises where ``F.round`` overflows the cast."""
+    import random
+    import struct
+
+    from pyspark.sql import functions as F
+
+    from analysis_of_flight_delay_data_by_mapreduce_spark.functions import (
+        _round_half_up,
+    )
+
+    xs: list[float | None] = [None, 0.0, -0.0, 0.49999999999999994, -0.49999999999999994]
+    for k in list(range(-5, 6)) + [2**20 + 3, 2**51 - 1, 2**51, 2**52 - 1, 2**52]:
+        for t in (k + 0.5, -(k + 0.5)):
+            xs += [t, math.nextafter(t, math.inf), math.nextafter(t, -math.inf)]
+    for c in (2.0**52, 2.0**53):
+        xs += [c + 0.5, c - 0.5, c + 1, c + 2, -c - 1, -(c - 0.5)]
+    rng = random.Random(20)
+    for _ in range(2000):
+        xs.append(rng.uniform(-1, 1) * 10.0 ** rng.randint(-8, 18))
+        x = struct.unpack("<d", rng.getrandbits(64).to_bytes(8, "little"))[0]
+        if math.isfinite(x) and abs(x) < 9.2e18:
+            xs.append(x)
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i long, x double")
+    rows = df.select(
+        "i", _round_half_up(F.col("x")).alias("got"), F.round("x", 0).cast("long").alias("want")
+    ).collect()
+    assert len(rows) == len(xs)
+    assert [r.i for r in rows if r.got != r.want] == []
+    for big in (9.3e18, -9.3e18, 1e300):
+        one = spark.createDataFrame([(big,)], "x double")
+        for expr in (_round_half_up(F.col("x")), F.round("x", 0).cast("long")):
+            with pytest.raises(Exception, match="CAST_OVERFLOW"):
+                one.select(expr).collect()
