@@ -44,8 +44,8 @@ def _round_half_up(x: Column) -> Column:
     """``F.round(x, 0).cast("long")`` without a ``BigDecimal`` per row.
 
     On a double, ``F.round`` rounds ``BigDecimal(Double.toString(x))``
-    HALF_UP (away from zero), which is exact but was a third of the CPU of
-    ``q1_delay``. ``rint`` rounds ties to even instead, and ``x - rint(x)``
+    HALF_UP (away from zero), which is exact but costs a third of the CPU
+    of ``q1_delay``. ``rint`` rounds ties to even instead, and ``x - rint(x)``
     is exact, so a tie is seen exactly and moved away from zero. The long
     is the same for NULL and every finite double, and the cast is the
     same, so a value outside the long range raises as before.

@@ -31,8 +31,8 @@ The encoder exists so fixtures can be generated deterministically inside
 the Python workers (the synthetic-asset convention of ``attach_synthetic_*``):
 it emits SOI / JFIF-APP0 / DQT / SOF0 or SOF2 / DHT / SOS with the Annex K
 quantization and Huffman tables, 4:4:4, 4:2:2 or 4:2:0 chroma, and
-optional restart markers. Decode is spec-driven off the embedded tables, so the
-pair is a genuine codec round trip, not a shared-constant shortcut.
+optional restart markers. Decode is spec-driven off the embedded tables,
+so the pair is a genuine codec round trip, not a shared-constant shortcut.
 
 Determinism (the oracle faces digest decoded pixel CONTENT): the DCT /
 IDCT run as fixed-shape float64 numpy matrix products and every rounding
@@ -859,6 +859,8 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
 
         if 0xE0 <= marker <= 0xEF or marker == 0xFE:
             continue  # APPn / COM
+        if marker == 0xDB and n_scans and not progressive:
+            continue  # a sequential frame dequantizes with its scan's tables
         if marker == 0xDB:  # DQT — possibly several tables
             q = 0
             while q < len(body):
@@ -1459,4 +1461,3 @@ def _decode_scan_progressive(
             eobrun = 0
 
     return scan_end
-

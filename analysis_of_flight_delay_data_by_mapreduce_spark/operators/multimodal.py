@@ -15,8 +15,9 @@ sizing — is real and tested. Codecs (VERDICT r7 item 5):
   a complete GIF-variant LZW coder, variable 3..12-bit codes, deferred
   clear), sequential and progressive JPEG (``operators.jpeg`` — one
   JFIF marker walk with DQT/DHT parse, Huffman entropy decode, dequant
-  + vectorized IDCT, 4:4:4/4:2:2/4:2:0, r10), PCM WAV (``encode_wav`` / ``decode_wav`` via the stdlib
-  ``wave`` module; ``decode_wav_pcm`` + ``audio_features`` compute
+  + vectorized IDCT, 4:4:4/4:2:2/4:2:0, r10), PCM WAV
+  (``encode_wav`` / ``decode_wav`` via the stdlib ``wave`` module;
+  ``decode_wav_pcm`` + ``audio_features`` compute
   exact-integer signal features from the decoded samples), and
   ISO-BMFF (MP4) container METADATA and SAMPLE TABLES
   (``operators.mp4`` atom walker behind ``video_metadata`` /

@@ -19,9 +19,8 @@ not loaded from the zip before the daemon fixes the path. The package's
 parent directory goes on the workers' ``PYTHONPATH``
 (``spark.executorEnv.PYTHONPATH``, ahead of any path the caller passes
 there), so the daemon and the operators' row functions import in the
-workers whatever the driver's working directory; a driver that imported
-the package through ``sys.path`` alone otherwise failed every Python
-stage with ``No module named 'analysis_of_flight_delay_data_by_mapreduce_spark'``.
+workers whatever the driver's working directory and environment, also
+when the driver found the package through ``sys.path`` alone.
 
 DataFrame call-site capture is off
 (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
@@ -67,9 +66,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     conf = dict(extra_conf or {})
     worker_path = os.pathsep.join(
-        p
-        for p in (_PACKAGE_PARENT, conf.pop("spark.executorEnv.PYTHONPATH", ""))
-        if p
+        filter(None, [_PACKAGE_PARENT, conf.pop("spark.executorEnv.PYTHONPATH", "")])
     )
     builder = (
         SparkSession.builder.appName(app_name)

@@ -435,6 +435,50 @@ def test_gif_roundtrip_property_random_palettes_and_sides():
         assert decode_gif(encode_gif(w, h, pal, idx)) == (w, h, rgb)
 
 
+#: sha256 over (asset_id, sha256(payload)) of ids 0..63, sorted by id, per
+#: fixture. The decode faces digest decoded content only, so these pin the
+#: encoders' bytes themselves.
+_FIXTURE_PAYLOAD_DIGESTS = {
+    "attach_synthetic_bmp": "b0459e72274c7396",
+    "attach_synthetic_gif": "3b4bfb23d6597c5a",
+    "attach_synthetic_gif_video": "5723c44fa2d827a7",
+    "attach_synthetic_gif_video_repeats": "51f7355f1ad1f8c3",
+    "attach_synthetic_h264_annexb": "c33575c3b77a4ee5",
+    "attach_synthetic_h264_mp4": "8639ba45de67278a",
+    "attach_synthetic_jpeg": "01d1e8153d1cee57",
+    "attach_synthetic_mjpeg_mp4": "e2ce8861261d65e4",
+    "attach_synthetic_mp4": "bc2d8e688bb56a02",
+    "attach_synthetic_png": "6d160bd204de1ed1",
+    "attach_synthetic_progressive_jpeg": "8a4c404f8fc8aaf5",
+    "attach_synthetic_wav": "ef697b5038095439",
+    "attach_synthetic_wav_bursts": "330c6dbc37478b91",
+}
+
+
+def test_fixture_payload_bytes_are_pinned(spark):
+    """Every ``attach_synthetic_*`` fixture emits the same payload bytes
+    for ids 0..63, so an encoder refactor that changes a byte (and with
+    it every digest downstream) fails here, not in a decode face."""
+    import hashlib
+
+    from analysis_of_flight_delay_data_by_mapreduce_spark.operators import (
+        multimodal as mm,
+    )
+
+    names = sorted(n for n in dir(mm) if n.startswith("attach_synthetic_"))
+    assert names == sorted(_FIXTURE_PAYLOAD_DIGESTS)
+    ids = spark.range(64).withColumnRenamed("id", "doc_id")
+    got = {}
+    for name in names:
+        rows = getattr(mm, name)(ids, "doc_id").select("asset_id", "payload")
+        h = hashlib.sha256()
+        for r in sorted(rows.collect()):
+            h.update(r.asset_id.to_bytes(8, "little"))
+            h.update(hashlib.sha256(r.payload).digest())
+        got[name] = h.hexdigest()[:16]
+    assert got == _FIXTURE_PAYLOAD_DIGESTS
+
+
 def test_gif_known_vector_regression():
     """Pin the exact encoded bytes of a tiny fixed image (header layout,
     LSB-first bit packing, code-width bump) so any codec change that
@@ -882,8 +926,9 @@ def test_jpeg_duplicate_scan_component_raises():
 
 def test_jpeg_sequential_walk_reaches_eoi():
     """The one marker walk parses what follows a sequential frame's scan
-    as it parses what precedes it: a COM segment before EOI is skipped,
-    while a second scan or an unknown marker there raises."""
+    as it parses what precedes it: a COM segment before EOI is skipped, a
+    DQT there does not change the tables the scan was coded with, and a
+    second scan or an unknown marker there raises."""
     import numpy as np
     import pytest
 
@@ -897,6 +942,8 @@ def test_jpeg_sequential_walk_reaches_eoi():
     assert good.endswith(b"\xff\xd9")
     head, scan = good[:-2], good[good.find(b"\xff\xda") : -2]
     assert decode_jpeg(head + b"\xff\xfe\x00\x04hi\xff\xd9") == decode_jpeg(good)
+    dqt = b"\xff\xdb\x00\x43\x00" + bytes([1] * 64)
+    assert decode_jpeg(head + dqt + b"\xff\xd9") == decode_jpeg(good)
     for tail in (scan, b"\xff\xc8\x00\x02"):
         with pytest.raises(ValueError):
             decode_jpeg(head + tail + b"\xff\xd9")
